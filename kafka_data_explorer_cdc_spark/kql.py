@@ -355,35 +355,12 @@ def _series_outliers(c: Column) -> Column:
     x within [q10, q90], else (x - q50) / (q90 - q10); null elements
     score null, and a degenerate fence (q90 == q10) scores 0
     everywhere. Pure JVM array expressions — sort + fold + transform,
-    no explode, no Python."""
-    c_sql = _col_sql(c)
-    if c_sql is not None:
-        try:
-            return F.expr(_series_outliers_sql(c_sql))
-        except Exception:
-            pass
-    s = F.array_sort(F.filter(c, lambda x: x.isNotNull()))
-    n = F.size(s)
-
-    def q(p: float) -> Column:
-        idx = (n - F.lit(1)).cast("double") * F.lit(p)
-        lo = F.floor(idx).cast("int")
-        frac = idx - lo.cast("double")
-        return F.element_at(s, lo + F.lit(1)).cast("double") * (
-            F.lit(1.0) - frac
-        ) + F.element_at(s, F.least(lo + F.lit(2), n)).cast("double") * frac
-
-    q10, q50, q90 = q(0.1), q(0.5), q(0.9)
-    iqr = q90 - q10
-    x = lambda e: e.cast("double")  # noqa: E731
-    return F.when(n == 0, F.transform(c, lambda e: F.lit(None).cast("double"))).otherwise(
-        F.transform(
-            c,
-            lambda e: F.when(e.isNull(), F.lit(None).cast("double"))
-            .when(iqr == 0, F.lit(0.0))
-            .when((x(e) > q90) | (x(e) < q10), (x(e) - q50) / iqr)
-            .otherwise(F.lit(0.0)),
-        )
+    no explode, no Python (:func:`_series_outliers_sql`)."""
+    return _sql_function(
+        "kql_series_outliers",
+        "arr ARRAY<DOUBLE>",
+        _series_outliers_sql("arr"),
+        c,
     )
 
 
@@ -472,113 +449,45 @@ def _series_iir(arr: Column, b: list[float], a: list[float]) -> Column:
     ).otherwise(empty)
 
 
-def _let(value: Column, body) -> Column:
-    """Expression-level let-binding: bind ``value`` to a higher-order
-    lambda variable so ``body`` can reference it MANY times without
-    copying its expression tree (a getField over a repeated aggregate
-    would otherwise duplicate the whole fold per reference — the same
-    analyzer blow-up the series_decompose_anomalies staged compile
-    works around). transform(array(v), body)[0] costs one 1-element
-    array wrap at runtime and keeps the tree linear."""
-    return F.get(F.transform(F.array(value), body), 0)
-
-
 def _sql_let(val: str, var: str, body: str) -> str:
-    """SQL-text twin of :func:`_let`: bind ``val`` to lambda variable
-    ``var`` so ``body`` can reference it many times without repeating
-    (and re-evaluating) its text. Used by the series kernels' fast
-    paths (see :func:`_col_sql` for why text beats Columns here)."""
+    """Expression-level let-binding in SQL text: bind ``val`` to the
+    lambda variable ``var`` so ``body`` can reference it many times
+    without repeating (and re-evaluating) its text — a field access
+    over a repeated fold would otherwise copy the whole fold per
+    reference (the analyzer/codegen blow-up k74 once measured at
+    190 s, sf0.001). ``transform(array(v), ...)[0]`` costs one
+    1-element array wrap at runtime and keeps the tree linear."""
     return f"get(transform(array({val}), {var} -> {body}), 0)"
 
 
-def _col_sql(c: Column) -> str | None:
-    """SQL text of a Column, or None when unavailable.
+_KQL_SESSION = contextvars.ContextVar("kql_session", default=None)
 
-    Why: every PySpark Column operation is one py4j gateway round
-    trip (~0.1-0.5 ms of pure driver latency), so builders that
-    assemble hundreds of shift/mask/probe ops Column-by-Column spend
-    seconds CONSTRUCTING the tree before any data moves (k106's
-    geohash pair measured 11,412 gateway calls / ~4.8 s of builder
-    time). The fast path renders the few VARIABLE inputs to SQL text
-    once (this helper — one round trip via Spark's own
-    ColumnNodeToExpressionConverter), assembles the big repetitive
-    expression as a Python string, and hands the whole thing to ONE
-    ``F.expr``. Callers must keep the Column-by-Column build as the
-    fallback for when this returns None (non-classic sessions or a
-    converter API change)."""
-    try:
-        spark = SparkSession.getActiveSession()
-        conv = getattr(
-            getattr(
-                spark._jvm,  # type: ignore[union-attr]
-                "org.apache.spark.sql.classic.ColumnNodeToExpressionConverter$",
-            ),
-            "MODULE$",
+
+def _sql_function(name: str, params: str, body: str, *args: Column) -> Column:
+    """Call ``body`` — SQL text over the parameter names declared in
+    ``params`` — as the temporary SQL function ``name`` of the session
+    compiling the query (the one :func:`kql` binds, else the active
+    one), creating it there on first use: temporary functions are
+    session-scoped. Literal arguments that shape the text belong in
+    ``name``.
+
+    Why text: the series and geohash kernels are big repetitive
+    expression trees, and building them Column-by-Column costs one
+    py4j round trip per node (k106's geohash pair measured 11,412
+    calls, ~4.8 s of builder time); the text is assembled in Python
+    and parsed once per session. Spark inlines the call, binding each
+    argument to an attribute in a Project under the body, so any
+    argument Column works — including ones built from lambdas. Spark
+    accepts such a call in projections, filters, aggregates, windows
+    and joins; a sort key or generator input must be projected
+    first."""
+    spark = _KQL_SESSION.get() or SparkSession.getActiveSession()
+    if not spark.catalog.functionExists(name):
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params})"
+            f" RETURN {body}"
         )
-        return conv.apply(c._jc.node()).sql()  # type: ignore[attr-defined]
-    except Exception:
-        return None
-
-
-def _ols_fold(ys: Column, finish) -> Column:
-    """One sequential fold over a (slice of a) series collecting the
-    OLS sufficient statistics against the LOCAL 0-based x axis —
-    struct(m, sy, sxy, syy), with ``acc.m`` the current x index when
-    element x arrives — then ``finish(acc)`` computed ON THE LAMBDA
-    VARIABLE (cheap references, no tree copies). A null element
-    poisons the fold (documented: gap-fill with series_fill_* first),
-    the shape of Kusto's error-on-null without a per-element branch."""
-    zero = F.struct(
-        F.lit(0.0).alias("m"),
-        F.lit(0.0).alias("sy"),
-        F.lit(0.0).alias("sxy"),
-        F.lit(0.0).alias("syy"),
-    )
-
-    def merge(acc: Column, e: Column) -> Column:
-        x = e.cast("double")
-        return F.struct(
-            (acc.getField("m") + F.lit(1.0)).alias("m"),
-            (acc.getField("sy") + x).alias("sy"),
-            (acc.getField("sxy") + acc.getField("m") * x).alias("sxy"),
-            (acc.getField("syy") + x * x).alias("syy"),
-        )
-
-    return F.aggregate(ys, zero, merge, finish)
-
-
-def _ols_sse(acc: Column) -> Column:
-    """Residual sum of squares of the best-fit line from an
-    :func:`_ols_fold` accumulator, closed form: with S1 = Σx,
-    S2 = Σx² over local x = 0..m−1, SSE = Syy_c − Sxy_c²/Sxx_c
-    (centered moments). A degenerate segment (m < 2) contributes 0."""
-    m = acc.getField("m")
-    s1 = (m - 1) * m / 2
-    s2 = (m - 1) * m * (2 * m - 1) / 6
-    sxx_c = s2 - s1 * s1 / m
-    sxy_c = acc.getField("sxy") - s1 * acc.getField("sy") / m
-    syy_c = acc.getField("syy") - acc.getField("sy") * acc.getField("sy") / m
-    return F.when(
-        (m >= 2) & (sxx_c > 0), syy_c - sxy_c * sxy_c / sxx_c
-    ).otherwise(F.lit(0.0))
-
-
-def _ols_line(acc: Column) -> Column:
-    """struct(slope, interception) of the best-fit line from an
-    :func:`_ols_fold` accumulator; a segment too short to determine a
-    slope pins slope = 0 and interception = mean (the flat answer)."""
-    m = acc.getField("m")
-    s1 = (m - 1) * m / 2
-    s2 = (m - 1) * m * (2 * m - 1) / 6
-    denom = m * s2 - s1 * s1
-    slope = F.when(
-        (m >= 2) & (denom > 0),
-        (m * acc.getField("sxy") - s1 * acc.getField("sy")) / denom,
-    ).otherwise(F.lit(0.0))
-    icpt = F.when(m > 0, (acc.getField("sy") - slope * s1) / m).otherwise(
-        F.lit(0.0)
-    )
-    return F.struct(slope.alias("slope"), icpt.alias("interception"))
+    return F.call_function(name, *args)
 
 
 def _series_decompose_forecast(
@@ -599,31 +508,22 @@ def _series_decompose_forecast(
     All JVM folds/transforms over the make-series array — no explode,
     no shuffle, no Python; composes into the one-rollup make-series
     plan at any corpus size."""
-    n = F.size(arr)
-    train = F.slice(arr, 1, (n - F.lit(points)).cast("int"))
-    dec = _series_decompose(train, period)
-
-    def out(d: Column) -> Column:
-        seas = d.getField("seasonal")
-
-        def fin(acc: Column) -> Column:
-            def mk(line: Column) -> Column:
-                slope = line.getField("slope")
-                icpt = line.getField("interception")
-                return F.transform(
-                    F.sequence(F.lit(0), n - 1),
-                    lambda i: icpt
-                    + slope * i.cast("double")
-                    + F.element_at(
-                        seas, F.pmod(i, F.lit(period)).cast("int") + 1
-                    ),
-                )
-
-            return _let(_ols_line(acc), mk)
-
-        return _ols_fold(d.getField("trend"), fin)
-
-    return _let(dec, out)
+    n = "size(arr)"
+    dec = _series_decompose_sql(f"slice(arr, 1, {n} - {points})", period)
+    forecast = (
+        f"transform(sequence(0, {n} - 1), _xi -> _xl.interception"
+        f" + _xl.slope * CAST(_xi AS DOUBLE)"
+        f" + element_at(_xd.seasonal, CAST(pmod(_xi, {period}) AS INT) + 1))"
+    )
+    fit = _ols_fold_sql(
+        "_xd.trend", _sql_let(_ols_line_sql("_oaX"), "_xl", forecast), "X"
+    )
+    return _sql_function(
+        f"kql_series_decompose_forecast_{period}_{points}",
+        "arr ARRAY<DOUBLE>",
+        _sql_let(dec, "_xd", fit),
+        arr,
+    )
 
 
 _D0D = "CAST(0.0 AS DOUBLE)"
@@ -631,11 +531,15 @@ _D1D = "CAST(1.0 AS DOUBLE)"
 
 
 def _ols_fold_sql(ys: str, finish: str, tag: str) -> str:
-    """SQL-text twin of :func:`_ols_fold`: one sequential fold
-    collecting struct(m, sy, sxy, syy) against the local 0-based x
-    axis. ``finish`` is a SQL string over the accumulator variable
-    ``_oa{tag}``; tags keep nested folds' lambda variables distinct.
-    Identical arithmetic and fold order to the Column build."""
+    """One sequential fold over a (slice of a) series collecting the
+    OLS sufficient statistics against the LOCAL 0-based x axis —
+    struct(m, sy, sxy, syy), with ``m`` the current x index when
+    element x arrives — then ``finish``, a SQL string over the
+    accumulator variable ``_oa{tag}`` (cheap references, no tree
+    copies); tags keep nested folds' lambda variables distinct. A
+    null element poisons the fold (documented: gap-fill with
+    series_fill_* first), the shape of Kusto's error-on-null without a
+    per-element branch."""
     a, e = f"_oa{tag}", f"_oe{tag}"
     x = f"CAST({e} AS DOUBLE)"
     return (
@@ -651,9 +555,12 @@ def _ols_fold_sql(ys: str, finish: str, tag: str) -> str:
 
 
 def _ols_sse_sql(acc: str) -> str:
-    """SQL-text twin of :func:`_ols_sse` (same inlined subtrees as the
-    Column build — Catalyst's subexpression elimination dedupes them
-    at runtime either way)."""
+    """Residual sum of squares of the best-fit line from an
+    :func:`_ols_fold_sql` accumulator, closed form: with S1 = Σx,
+    S2 = Σx² over local x = 0..m−1, SSE = Syy_c − Sxy_c²/Sxx_c
+    (centered moments). A degenerate segment (m < 2) contributes 0.
+    The repeated subtrees are deduped at runtime by Catalyst's
+    subexpression elimination."""
     m = f"{acc}.m"
     s1 = f"(({m} - 1) * {m} / 2)"
     s2 = f"(({m} - 1) * {m} * (2 * {m} - 1) / 6)"
@@ -668,9 +575,10 @@ def _ols_sse_sql(acc: str) -> str:
 
 
 def _ols_line_sql(acc: str) -> str:
-    """SQL-text twin of :func:`_ols_line` —
-    struct(slope, interception), degenerate segments pinned to the
-    flat answer exactly as the Column build pins them."""
+    """struct(slope, interception) of the best-fit line from an
+    :func:`_ols_fold_sql` accumulator; a segment too short to
+    determine a slope pins slope = 0 and interception = mean (the flat
+    answer)."""
     m = f"{acc}.m"
     s1 = f"(({m} - 1) * {m} / 2)"
     s2 = f"(({m} - 1) * {m} * (2 * {m} - 1) / 6)"
@@ -688,9 +596,9 @@ def _ols_line_sql(acc: str) -> str:
 
 
 def _series_fit_line_sql(arr: str) -> str:
-    """SQL text of :func:`_series_fit_line` — same folds, same guards,
-    same field order; the (line, variance, rvariance) core is
-    let-bound exactly like the Column build's :func:`_let`."""
+    """SQL text of :func:`_series_fit_line`: one OLS fold whose finish
+    let-binds the (line, variance, rvariance) core; an empty series
+    yields the all-null struct."""
     acc = "_oaF"
     core = (
         f"named_struct("
@@ -723,12 +631,9 @@ def _series_fit_line_sql(arr: str) -> str:
 
 
 def _series_fit_2lines_sql(arr: str) -> str:
-    """SQL text of :func:`_series_fit_2lines` — the candidate split
-    sweep, best-split fold, per-side line fits and the n<4 fallback,
-    all mirroring the Column build's arithmetic exactly; the big
-    repetitive tree is assembled as ONE string instead of ~2 s of
-    py4j round trips per compile (the k106/series-kernel discipline,
-    round-13)."""
+    """SQL text of :func:`_series_fit_2lines`: the candidate split
+    sweep (two OLS folds per split), the best-split fold, the per-side
+    line fits let-bound, and the n < 4 single-line fallback."""
     nn = f"size({arr})"
     ks = (
         f"CASE WHEN {nn} >= 4 THEN sequence(2, {nn} - 2) "
@@ -792,61 +697,15 @@ def _series_fit_line(arr: Column) -> Column:
     an empty series yields all-null.
 
     One sequential JVM fold collects (n, Σy, Σxy, Σy²); every output
-    is closed-form arithmetic computed in the fold's ``finish`` lambda
-    (tree-linear — see :func:`_let`) — no explode, no shuffle, no
+    is closed-form arithmetic computed in the fold's finish lambda
+    (tree-linear — see :func:`_sql_let`) — no explode, no shuffle, no
     Python, so it composes into the make-series plan shape (one rollup
-    shuffle total) at any corpus size. Fast path: the whole expression
-    rendered as one SQL string (:func:`_series_fit_line_sql`, the
-    series-kernel discipline); the Column build below stays the
-    fallback."""
-    arr_sql = _col_sql(arr)
-    if arr_sql is not None:
-        try:
-            return F.expr(_series_fit_line_sql(arr_sql))
-        except Exception:
-            pass
-
-    def finish(acc: Column) -> Column:
-        core = F.struct(
-            _ols_line(acc).alias("line"),
-            (
-                acc.getField("syy") / acc.getField("m")
-                - (acc.getField("sy") / acc.getField("m"))
-                * (acc.getField("sy") / acc.getField("m"))
-            ).alias("variance"),
-            (_ols_sse(acc) / acc.getField("m")).alias("rvariance"),
-        )
-
-        def out(s: Column) -> Column:
-            slope = s.getField("line").getField("slope")
-            icpt = s.getField("line").getField("interception")
-            variance = s.getField("variance")
-            rvar = s.getField("rvariance")
-            return F.struct(
-                F.when(variance > 0, F.lit(1.0) - rvar / variance)
-                .otherwise(F.lit(1.0))
-                .alias("rsquare"),
-                slope.alias("slope"),
-                variance.alias("variance"),
-                rvar.alias("rvariance"),
-                icpt.alias("interception"),
-                F.transform(
-                    F.sequence(F.lit(0), F.size(arr) - 1),
-                    lambda i: icpt + slope * i.cast("double"),
-                ).alias("line_fit"),
-            )
-
-        return _let(core, out)
-
-    return F.when(F.size(arr) > 0, _ols_fold(arr, finish)).otherwise(
-        F.struct(
-            F.lit(None).cast("double").alias("rsquare"),
-            F.lit(None).cast("double").alias("slope"),
-            F.lit(None).cast("double").alias("variance"),
-            F.lit(None).cast("double").alias("rvariance"),
-            F.lit(None).cast("double").alias("interception"),
-            F.lit(None).cast("array<double>").alias("line_fit"),
-        )
+    shuffle total) at any corpus size (:func:`_series_fit_line_sql`)."""
+    return _sql_function(
+        "kql_series_fit_line",
+        "arr ARRAY<DOUBLE>",
+        _series_fit_line_sql("arr"),
+        arr,
     )
 
 
@@ -870,96 +729,13 @@ def _series_fit_2lines(arr: Column) -> Column:
     bounded split range whose per-element work is two sequential folds
     over array slices — O(n²) arithmetic on an observability-sized
     array (make-series bin counts), all JVM expression evaluation (the
-    :func:`_let` binding keeps the analyzed tree linear): no explode,
-    no shuffle, no Python. Fast path: one SQL string
-    (:func:`_series_fit_2lines_sql` — the Column build of this kernel
-    measured ~2 s of pure py4j latency per compile); the Column build
-    below stays the fallback."""
-    arr_sql = _col_sql(arr)
-    if arr_sql is not None:
-        try:
-            return F.expr(_series_fit_2lines_sql(arr_sql))
-        except Exception:
-            pass
-    nn = F.size(arr)
-    ks = F.when(nn >= 4, F.sequence(F.lit(2), nn - 2)).otherwise(
-        F.expr("cast(array() as array<int>)")
-    )
-    cand = F.transform(
-        ks,
-        lambda k: F.struct(
-            k.cast("long").alias("k"),
-            (
-                _ols_fold(F.slice(arr, 1, k), _ols_sse)
-                + _ols_fold(F.slice(arr, k + 1, nn - k), _ols_sse)
-            ).alias("sse"),
-        ),
-    )
-    best = F.aggregate(
-        cand,
-        F.struct(
-            F.lit(-1).cast("long").alias("k"),
-            F.lit(float("inf")).alias("sse"),
-        ),
-        lambda acc, c: F.when(
-            c.getField("sse") < acc.getField("sse"), c
-        ).otherwise(acc),
-    )
-
-    def with_best(b: Column) -> Column:
-        bk = b.getField("k")
-        bki = bk.cast("int")
-        params = F.struct(
-            _ols_fold(F.slice(arr, 1, bki), _ols_line).alias("l"),
-            _ols_fold(F.slice(arr, bki + 1, nn - bki), _ols_line).alias("r"),
-            _ols_fold(
-                arr,
-                lambda acc: acc.getField("syy") / acc.getField("m")
-                - (acc.getField("sy") / acc.getField("m"))
-                * (acc.getField("sy") / acc.getField("m")),
-            ).alias("v"),
-            (b.getField("sse") / nn.cast("double")).alias("rv"),
-        )
-
-        def out(s: Column) -> Column:
-            variance = s.getField("v")
-            rvar = s.getField("rv")
-            li = s.getField("l")
-            ri = s.getField("r")
-            return F.struct(
-                F.when(variance > 0, F.lit(1.0) - rvar / variance)
-                .otherwise(F.lit(1.0))
-                .alias("rsquare"),
-                bk.alias("split_idx"),
-                variance.alias("variance"),
-                rvar.alias("rvariance"),
-                F.transform(
-                    F.sequence(F.lit(0), nn - 1),
-                    lambda i: F.when(
-                        i.cast("long") < bk,
-                        li.getField("interception")
-                        + li.getField("slope") * i.cast("double"),
-                    ).otherwise(
-                        ri.getField("interception")
-                        + ri.getField("slope")
-                        * (i.cast("double") - bk.cast("double"))
-                    ),
-                ).alias("line_fit"),
-            )
-
-        return _let(params, out)
-
-    def fallback(s: Column) -> Column:
-        return F.struct(
-            s.getField("rsquare").alias("rsquare"),
-            F.lit(-1).cast("long").alias("split_idx"),
-            s.getField("variance").alias("variance"),
-            s.getField("rvariance").alias("rvariance"),
-            s.getField("line_fit").alias("line_fit"),
-        )
-
-    return F.when(nn >= 4, _let(best, with_best)).otherwise(
-        _let(_series_fit_line(arr), fallback)
+    :func:`_sql_let` binding keeps the analyzed tree linear): no
+    explode, no shuffle, no Python (:func:`_series_fit_2lines_sql`)."""
+    return _sql_function(
+        "kql_series_fit_2lines",
+        "arr ARRAY<DOUBLE>",
+        _series_fit_2lines_sql("arr"),
+        arr,
     )
 
 
@@ -1665,32 +1441,6 @@ def _parse_version(v: Column) -> Column:
 _GEOHASH_ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
 
 
-def _geohash_indices(lon: Column, lat: Column, precision: int):
-    """(lon_idx, lat_idx, lon_bits, lat_bits) — the quantized cell
-    coordinates of the standard geohash at ``precision`` chars. The
-    quantization (x + off) / span * 2^bits is written with this exact
-    op order on both engines; the index clamps so the +180 / +90 edge
-    falls in the last cell (the standard convention)."""
-    total = 5 * precision
-    lon_bits = (total + 1) // 2
-    lat_bits = total // 2
-
-    def q(x: Column, off: float, span: float, bits: int) -> Column:
-        idx = F.floor(
-            (x.cast("double") + F.lit(off)) / F.lit(span) * F.lit(float(2**bits))
-        ).cast("long")
-        return F.least(
-            F.greatest(idx, F.lit(0)), F.lit(2**bits - 1)
-        )
-
-    return (
-        q(lon, 180.0, 360.0, lon_bits),
-        q(lat, 90.0, 180.0, lat_bits),
-        lon_bits,
-        lat_bits,
-    )
-
-
 _MORTON_SPREAD_STEPS = (
     (16, 0x0000FFFF0000FFFF),
     (8, 0x00FF00FF00FF00FF),
@@ -1708,45 +1458,12 @@ _MORTON_COMPACT_STEPS = (
 )
 
 
-def _morton_spread(x: Column) -> Column:
+def _morton_spread_sql(x: str, tag: str) -> str:
     """Part1By1: spread the low 32 bits of ``x`` to the even bit
     positions (the branchless Morton interleave). Each doubling step
-    is `_let`-bound so the expression tree stays LINEAR — the naive
+    is let-bound so the expression tree stays LINEAR — the naive
     per-bit fold duplicated the quantizer subtree per bit and cost
-    seconds of codegen (the k74 staged-compile lesson, in-expression
-    form)."""
-    def step(sh: int, m: int):
-        # a closure factory, NOT default-arg capture — a lambda with
-        # extra defaulted params reads as transform's (element, index)
-        # binary form and breaks
-        return lambda c: c.bitwiseOR(F.shiftleft(c, sh)).bitwiseAND(
-            F.lit(m)
-        )
-
-    x = x.bitwiseAND(F.lit(0xFFFFFFFF))
-    for sh, m in _MORTON_SPREAD_STEPS:
-        x = _let(x, step(sh, m))
-    return x
-
-
-def _morton_compact(x: Column) -> Column:
-    """Compact1By1: gather the even bit positions of ``x`` back into
-    the low 32 bits (inverse of :func:`_morton_spread`), `_let`-bound
-    per step."""
-    def step(sh: int, m: int):
-        return lambda c: c.bitwiseOR(F.shiftright(c, sh)).bitwiseAND(
-            F.lit(m)
-        )
-
-    x = x.bitwiseAND(F.lit(0x5555555555555555))
-    for sh, m in _MORTON_COMPACT_STEPS:
-        x = _let(x, step(sh, m))
-    return x
-
-
-def _morton_spread_sql(x: str, tag: str) -> str:
-    """SQL-text twin of :func:`_morton_spread` — same let-bound
-    shift/mask chain, assembled as a string (zero py4j calls)."""
+    seconds of codegen (see :func:`_sql_let`)."""
     cur = f"({x} & 4294967295)"
     for i, (sh, m) in enumerate(_MORTON_SPREAD_STEPS):
         v = f"_s{tag}{i}"
@@ -1758,7 +1475,9 @@ def _morton_spread_sql(x: str, tag: str) -> str:
 
 
 def _morton_compact_sql(x: str, tag: str) -> str:
-    """SQL-text twin of :func:`_morton_compact`."""
+    """Compact1By1: gather the even bit positions of ``x`` back into
+    the low 32 bits (inverse of :func:`_morton_spread_sql`), let-bound
+    per step."""
     cur = f"({x} & 6148914691236517205)"
     for i, (sh, m) in enumerate(_MORTON_COMPACT_STEPS):
         v = f"_c{tag}{i}"
@@ -1770,8 +1489,10 @@ def _morton_compact_sql(x: str, tag: str) -> str:
 
 
 def _geo_q_sql(x: str, off: str, span: str, bits: int) -> str:
-    """SQL-text twin of the quantizer in :func:`_geohash_indices` —
-    same op order ((x + off) / span * 2^bits, floor, clamp)."""
+    """The quantized cell coordinate of ``x`` at ``bits`` bits:
+    floor((x + off) / span * 2^bits), written with this exact op order
+    on both engines and clamped so the +180 / +90 edge falls in the
+    last cell (the standard convention)."""
     idx = (
         f"CAST(floor((CAST({x} AS DOUBLE) + {off}) / {span}"
         f" * CAST({float(2 ** bits)} AS DOUBLE)) AS BIGINT)"
@@ -1786,10 +1507,13 @@ def _geohash_alph_sql() -> str:
 
 
 def _geohash_encode_sql(lon: str, lat: str, precision: int) -> str:
-    """SQL text of the whole geohash encoder (the expression
-    :func:`_geo_point_to_geohash` builds Column-by-Column), assembled
-    with zero py4j traffic. Same quantize → Morton interleave →
-    base-32 render, same null contract."""
+    """SQL text of the whole geohash encoder
+    (:func:`_geo_point_to_geohash`): quantize → Morton interleave →
+    base-32 render, null outside the coordinate ranges. MSB-first
+    alternation starts with lon, so counting from the LSB lon owns the
+    even positions iff the total bit count is odd: code =
+    spread(lon_idx) | spread(lat_idx) << 1, parity flipped for even
+    totals."""
     total = 5 * precision
     lon_bits = (total + 1) // 2
     lat_bits = total // 2
@@ -1821,12 +1545,13 @@ def _geohash_encode_sql(lon: str, lat: str, precision: int) -> str:
 
 
 def _geohash_decode_sql(gh: str) -> str:
-    """SQL text of the whole geohash decoder (the expression
-    :func:`_geo_geohash_to_central_point` builds Column-by-Column).
-    One value-preserving rewrite: the unknown-char guard
-    ``when(array_position - 1 >= 0, ...)`` is written as
-    ``nullif(array_position, 0) - 1`` — array_position returns 0 iff
-    the char is unknown, so both forms yield null exactly then."""
+    """SQL text of the whole geohash decoder
+    (:func:`_geo_geohash_to_central_point`): one literal branch per
+    length 1..8; char i contributes bits total-5i-1 .. total-5(i+1)
+    through ONE alphabet probe, ``nullif(array_position, 0) - 1`` —
+    array_position returns 0 iff the char is unknown, which nulls the
+    code and so the whole point (not a [null, null] pair); Morton
+    compaction inverts the encoder's interleave."""
     alph = _geohash_alph_sql()
     out = "CAST(NULL AS ARRAY<DOUBLE>)"
     for p in range(1, 9):
@@ -1873,63 +1598,21 @@ def _geo_point_to_geohash(lon: Column, lat: Column, precision: int) -> Column:
     Out-of-range coordinates yield null (Kusto's error-as-null).
     All-JVM: one Morton spread per coordinate (~12 let-bound
     shift/mask ops) + p array probes per row — no Python anywhere.
-    The `_let` HOF binding trades wholestage codegen for a LINEAR
-    expression tree; the naive per-bit fold was 14x slower end-to-end
-    (32.5 s -> 4.9 s at sf0.1, mostly analyzer/codegen blow-up —
-    measured, BASELINE.md round-11 session 5). Layout identity (odd
-    total): lon's LSB-bit i lands at even position 2i and lat's at
-    2i+1, so code = spread(lon_idx) | spread(lat_idx) << 1; parity
-    flips for even totals (lat owns the even slots)."""
+    The let binding trades wholestage codegen for a LINEAR expression
+    tree; the naive per-bit fold was 14x slower end-to-end (32.5 s ->
+    4.9 s at sf0.1, mostly analyzer/codegen blow-up — measured,
+    BASELINE.md round-11 session 5). See :func:`_geohash_encode_sql`."""
     if not (1 <= precision <= 8):
         raise ValueError(
             "KQL: geo_point_to_geohash precision must be 1..8"
         )
-    # Fast path: render the two inputs to SQL text once and assemble
-    # the whole interleave/render chain as ONE F.expr — the
-    # Column-by-Column build below costs thousands of py4j round
-    # trips (k106 measured ~4.8 s of pure driver time constructing
-    # the tree). Identical expression, therefore identical values;
-    # any conversion/parse hiccup falls back to the Column build.
-    lon_sql, lat_sql = _col_sql(lon), _col_sql(lat)
-    if lon_sql is not None and lat_sql is not None:
-        try:
-            return F.expr(
-                _geohash_encode_sql(lon_sql, lat_sql, precision)
-            )
-        except Exception:
-            pass
-    lon_idx, lat_idx, lon_bits, lat_bits = _geohash_indices(
-        lon, lat, precision
+    return _sql_function(
+        f"kql_geohash_encode_{precision}",
+        "lon DOUBLE, lat DOUBLE",
+        _geohash_encode_sql("lon", "lat", precision),
+        lon,
+        lat,
     )
-    # MSB-first alternation starts with lon, so counting from the LSB
-    # lon owns the even positions iff the total bit count is odd
-    if (5 * precision) % 2:
-        code = _morton_spread(lon_idx).bitwiseOR(
-            F.shiftleft(_morton_spread(lat_idx), 1)
-        )
-    else:
-        code = _morton_spread(lat_idx).bitwiseOR(
-            F.shiftleft(_morton_spread(lon_idx), 1)
-        )
-    alph = F.array(*[F.lit(ch) for ch in _GEOHASH_ALPHABET])
-
-    def render(c: Column) -> Column:
-        chars = [
-            F.element_at(
-                alph,
-                F.shiftright(c, 5 * (precision - 1 - i))
-                .bitwiseAND(F.lit(31))
-                .cast("int")
-                + 1,
-            )
-            for i in range(precision)
-        ]
-        return F.concat(*chars)
-
-    ok = (F.abs(lat.cast("double")) <= 90) & (
-        F.abs(lon.cast("double")) <= 180
-    )
-    return F.when(ok, _let(code, render))
 
 
 def _geo_geohash_to_central_point(gh: Column) -> Column:
@@ -1939,62 +1622,10 @@ def _geo_geohash_to_central_point(gh: Column) -> Column:
     reads). Supports lengths 1..8 via a literal branch per length;
     unknown characters or other lengths yield null. Center =
     ((idx + 0.5) / 2^bits) * span - offset, the exact inverse of the
-    encoder's quantization."""
-    # Fast path: one F.expr over SQL text (see _geo_point_to_geohash —
-    # the decoder is the bigger win: 8 length branches × probes ×
-    # Morton compacts built Column-by-Column is most of the entry's
-    # py4j chatter). Fallback below on conversion/parse failure.
-    gh_sql = _col_sql(gh)
-    if gh_sql is not None:
-        try:
-            return F.expr(_geohash_decode_sql(gh_sql))
-        except Exception:
-            pass
-    alph = F.array(*[F.lit(ch) for ch in _GEOHASH_ALPHABET])
-
-    def decode_at(p: int) -> Column:
-        total = 5 * p
-        lon_bits = (total + 1) // 2
-        lat_bits = total // 2
-        # char i contributes bits total-5i-1 .. total-5(i+1); the
-        # alphabet probe is ONE array_position per char (0 = unknown
-        # char -> null code via the -1 underflow check)
-        vals = [
-            (
-                F.array_position(alph, F.substring(gh, i + 1, 1)) - 1
-            ).cast("long")
-            for i in range(p)
-        ]
-        vals = [F.when(v >= 0, v) for v in vals]
-        code = _reduce(lambda acc, v: acc * 32 + v, vals, F.lit(0).cast("long"))
-
-        def centers(c: Column) -> Column:
-            # lon owns the even LSB positions iff total is odd (see
-            # the encoder); Morton compaction inverts both sides
-            if total % 2:
-                lon_idx = _morton_compact(c)
-                lat_idx = _morton_compact(F.shiftright(c, 1))
-            else:
-                lat_idx = _morton_compact(c)
-                lon_idx = _morton_compact(F.shiftright(c, 1))
-            lon_c = (
-                (lon_idx.cast("double") + F.lit(0.5))
-                / F.lit(float(2**lon_bits))
-            ) * F.lit(360.0) - F.lit(180.0)
-            lat_c = (
-                (lat_idx.cast("double") + F.lit(0.5))
-                / F.lit(float(2**lat_bits))
-            ) * F.lit(180.0) - F.lit(90.0)
-            return F.array(lon_c, lat_c)
-
-        # an unknown char nulls the code — null the whole point, not
-        # a [null, null] pair
-        return F.when(code.isNotNull(), _let(code, centers))
-
-    out = F.lit(None).cast("array<double>")
-    for p in range(1, 9):
-        out = F.when(F.length(gh) == p, decode_at(p)).otherwise(out)
-    return out
+    encoder's quantization (:func:`_geohash_decode_sql`)."""
+    return _sql_function(
+        "kql_geohash_decode", "gh STRING", _geohash_decode_sql("gh"), gh
+    )
 
 
 def _geo_point_in_polygon(
@@ -2043,8 +1674,8 @@ _D = "CAST({} AS DOUBLE)"
 
 
 def _series_mean_sql(w: str, tag: str) -> str:
-    """sum/size mean over an array, the window let-bound (the Column
-    form re-evaluates the window expression twice per use)."""
+    """sum/size mean over an array, the window let-bound so its
+    expression is evaluated once per use."""
     return _sql_let(
         w,
         f"_w{tag}",
@@ -2056,11 +1687,9 @@ def _series_mean_sql(w: str, tag: str) -> str:
 
 def _series_decompose_sql(arr: str, period: int) -> str:
     """SQL text of :func:`_series_decompose` with the shared
-    subexpressions let-bound: the Column build duplicates the cast
-    array / trend / detrended arrays once per REFERENCE (both py4j
-    chatter and per-element re-evaluation at runtime); here each is
-    computed once per row. Values are identical — same folds, same
-    order, the bindings only share results."""
+    subexpressions (the cast array, trend, detrended array, phase
+    means, seasonal and baseline arrays) let-bound, so each is
+    computed once per row."""
     h = period // 2
     a = f"transform({arr}, _e0 -> {_D.format('_e0')})"
     trend_win = (
@@ -2072,10 +1701,9 @@ def _series_decompose_sql(arr: str, period: int) -> str:
         f" _i1 -> {_series_mean_sql(trend_win, 't')})"
     )
     detr = "zip_with(_A, _T, (_x2, _t2) -> _x2 - _t2)"
-    # empty-phase guard: the Column form's when-chain never evaluated
-    # an empty phase's mean (ANSI 0.0/0 would throw); the hoisted
-    # array is eager, so the empty case is an explicit (unobserved)
-    # null — a position's own phase is never empty
+    # empty-phase guard: the hoisted phase-mean array is eager, so an
+    # empty phase (ANSI 0.0/0 would throw) is an explicit null —
+    # unobserved, since a position's own phase is never empty
     pms = ", ".join(
         _sql_let(
             f"filter(_D0, (_x3{ph}, _i3{ph}) -> _i3{ph} % {period} = {ph})",
@@ -2087,9 +1715,8 @@ def _series_decompose_sql(arr: str, period: int) -> str:
         )
         for ph in range(period)
     )
-    # phase means hoisted into one per-row array probed by i % period —
-    # the Column form re-evaluates the matching phase aggregate per
-    # ELEMENT through a when-chain; same values, computed once
+    # phase means hoisted into one per-row array probed by i % period,
+    # computed once per row rather than once per element
     seasonal = (
         f"transform(sequence(0, size(_A) - 1),"
         f" _i4 -> element_at(_P, (_i4 % {period}) + 1))"
@@ -2110,11 +1737,9 @@ def _series_decompose_sql(arr: str, period: int) -> str:
 
 def _series_outliers_sql(c: str) -> str:
     """SQL text of :func:`_series_outliers` with the sorted array and
-    the three percentiles let-bound (the Column form re-sorts the
-    series per element per reference). The empty-series guard keeps
-    the percentile struct null instead of probing an empty array
-    (ANSI element_at would throw where the Column form's lazy
-    otherwise-branch never evaluated it)."""
+    the three percentiles let-bound, so the series is sorted once per
+    row. The empty-series guard keeps the percentile struct null
+    instead of probing an empty array (ANSI element_at would throw)."""
 
     def q(p: float) -> str:
         idx = f"({_D.format('(size(_OS) - 1)')} * {_D.format(p)})"
@@ -2174,18 +1799,18 @@ def _series_decompose_anomalies_sql(
 
 def _series_seasonal_sql(arr: str, period: int) -> str:
     """SQL text of :func:`_series_seasonal` — phase medians let-bound
-    into one per-row array probed by i % period (the Column form
-    re-sorts the phase values per element through a when-chain)."""
+    into one per-row array probed by i % period, so each phase is
+    sorted once per row."""
 
     def phase_median(ph: int) -> str:
         vals = (
             f"array_sort(filter(_SA,"
             f" (_mx{ph}, _mi{ph}) -> _mi{ph} % {period} = {ph}))"
         )
-        # the Column form's when-chain never evaluated an EMPTY
-        # phase's median (n < period => the phase of every observed
-        # position is non-empty); the hoisted array is eager, so the
-        # empty case must be an explicit null, not an element_at(_, 0)
+        # the hoisted array is eager, so an EMPTY phase's median
+        # (n < period; never probed, since every observed position's
+        # phase is non-empty) must be an explicit null, not an
+        # element_at(_, 0)
         body = (
             f"CASE WHEN size(_mv{ph}) = 0 THEN CAST(NULL AS DOUBLE)"
             f" ELSE (element_at(_mv{ph},"
@@ -2209,8 +1834,8 @@ def _series_periods_detect_sql(
     arr: str, min_period: int, max_period: int, num_periods: int
 ) -> str:
     """SQL text of :func:`_series_periods_detect` — mean, variance and
-    each candidate lag's ACF let-bound (the Column form re-evaluates
-    the mean inside every product term and each ACF twice)."""
+    each candidate lag's ACF let-bound, so each is computed once per
+    row."""
 
     def acf(lag: int) -> str:
         num = (
@@ -2271,56 +1896,15 @@ def _series_decompose(arr: Column, period: int) -> Column:
 
     All arithmetic is left-fold HOF over the observability-sized
     series array — identical fold order to the DuckDB list_reduce
-    twin, so the doubles agree bit-for-bit."""
+    oracle, so the doubles agree bit-for-bit
+    (:func:`_series_decompose_sql`)."""
     if period <= 0:
         raise ValueError("KQL: series_decompose period must be positive")
-    arr_sql = _col_sql(arr)
-    if arr_sql is not None:
-        try:
-            return F.expr(_series_decompose_sql(arr_sql, period))
-        except Exception:
-            pass
-    a = F.transform(arr, lambda e: e.cast("double"))
-    n = F.size(a)
-    h = period // 2
-    idxs = F.sequence(F.lit(0), n - F.lit(1))
-
-    def mean_of(window: Column) -> Column:
-        return F.aggregate(
-            window, F.lit(0.0), lambda acc, x: acc + x
-        ) / F.size(window)
-
-    def trend_at(i: Column) -> Column:
-        lo = F.greatest(F.lit(0), i - F.lit(h))
-        hi = F.least(n - F.lit(1), i + F.lit(h))
-        return mean_of(F.slice(a, lo + F.lit(1), hi - lo + F.lit(1)))
-
-    trend = F.transform(idxs, trend_at)
-    detr = F.zip_with(a, trend, lambda x, t: x - t)
-    phase_means = [
-        mean_of(F.filter(detr, lambda _x, i: i % period == ph))
-        for ph in range(period)
-    ]
-
-    def seasonal_at(i: Column) -> Column:
-        out = None
-        for ph in range(period):
-            cond = i % period == ph
-            out = (
-                F.when(cond, phase_means[ph])
-                if out is None
-                else out.when(cond, phase_means[ph])
-            )
-        return out
-
-    seasonal = F.transform(idxs, seasonal_at)
-    baseline = F.zip_with(trend, seasonal, lambda t, s: t + s)
-    residual = F.zip_with(a, baseline, lambda x, b: x - b)
-    return F.struct(
-        baseline.alias("baseline"),
-        seasonal.alias("seasonal"),
-        trend.alias("trend"),
-        residual.alias("residual"),
+    return _sql_function(
+        f"kql_series_decompose_{period}",
+        "arr ARRAY<DOUBLE>",
+        _series_decompose_sql("arr", period),
+        arr,
     )
 
 
@@ -2339,41 +1923,17 @@ def _series_seasonal(arr: Column, period: int) -> Column:
     bit-for-bit. Phases with no values (n < period) yield null.
 
     Scale shape: all JVM array HOFs over the make-series array (one
-    sort + two picks per phase, one when-chain per element) — zero
-    shuffles beyond make-series' own, no UDF."""
+    sort + two picks per phase per row, one probe per element) — zero
+    shuffles beyond make-series' own, no UDF
+    (:func:`_series_seasonal_sql`)."""
     if period <= 0:
         raise ValueError("KQL: series_seasonal period must be positive")
-    arr_sql = _col_sql(arr)
-    if arr_sql is not None:
-        try:
-            return F.expr(_series_seasonal_sql(arr_sql, period))
-        except Exception:
-            pass
-    a = F.transform(arr, lambda e: e.cast("double"))
-    n = F.size(a)
-    idxs = F.sequence(F.lit(0), n - F.lit(1))
-
-    def phase_median(ph: int) -> Column:
-        vals = F.array_sort(F.filter(a, lambda _x, i: i % period == ph))
-        m = F.size(vals)
-        lo = F.floor((m + F.lit(1)) / F.lit(2)).cast("int")
-        hi = F.floor(m / F.lit(2)).cast("int") + F.lit(1)
-        return (F.element_at(vals, lo) + F.element_at(vals, hi)) / F.lit(2.0)
-
-    meds = [phase_median(ph) for ph in range(period)]
-
-    def seasonal_at(i: Column) -> Column:
-        out = None
-        for ph in range(period):
-            cond = i % period == ph
-            out = (
-                F.when(cond, meds[ph])
-                if out is None
-                else out.when(cond, meds[ph])
-            )
-        return out
-
-    return F.transform(idxs, seasonal_at)
+    return _sql_function(
+        f"kql_series_seasonal_{period}",
+        "arr ARRAY<DOUBLE>",
+        _series_seasonal_sql("arr", period),
+        arr,
+    )
 
 
 def _series_decompose_anomalies(
@@ -2388,31 +1948,14 @@ def _series_decompose_anomalies(
     -threshold, else 0 (Kusto's default threshold 1.5). Returns the
     struct (ad_flag, ad_score, baseline) — Kusto's output triple —
     for the tuple-destructuring extend. All JVM array HOFs; zero
-    shuffles beyond make-series' own."""
-    arr_sql = _col_sql(arr)
-    if arr_sql is not None:
-        try:
-            return F.expr(
-                _series_decompose_anomalies_sql(
-                    arr_sql, period, float(threshold)
-                )
-            )
-        except Exception:
-            pass
-    dec = _series_decompose(arr, period)
-    score = _series_outliers(dec.getField("residual"))
-    thr = F.lit(float(threshold))
-    flag = F.transform(
-        score,
-        lambda sc: F.when(sc.isNull(), F.lit(None).cast("long"))
-        .when(sc > thr, F.lit(1).cast("long"))
-        .when(sc < -thr, F.lit(-1).cast("long"))
-        .otherwise(F.lit(0).cast("long")),
-    )
-    return F.struct(
-        flag.alias("ad_flag"),
-        score.alias("ad_score"),
-        dec.getField("baseline").alias("baseline"),
+    shuffles beyond make-series' own
+    (:func:`_series_decompose_anomalies_sql`)."""
+    thr = repr(float(threshold)).translate(str.maketrans(".-", "pm", "+"))
+    return _sql_function(
+        f"kql_series_decompose_anomalies_{period}_{thr}",
+        "arr ARRAY<DOUBLE>",
+        _series_decompose_anomalies_sql("arr", period, float(threshold)),
+        arr,
     )
 
 
@@ -2431,7 +1974,8 @@ def _series_periods_detect(
     scores): the top ``num`` lags by score desc (ties: smaller lag
     first), as double arrays — Kusto's output shape. Candidate lags
     are compile-time literals, so the whole detector unrolls into one
-    flat JVM expression per lag — no explode, no Python, no shuffle."""
+    flat JVM expression per lag — no explode, no Python, no shuffle
+    (:func:`_series_periods_detect_sql`)."""
     if not (0 < min_period <= max_period):
         raise ValueError(
             "KQL: series_periods_detect needs 0 < min_period <= max_period"
@@ -2442,50 +1986,11 @@ def _series_periods_detect(
         )
     if num_periods <= 0:
         raise ValueError("KQL: series_periods_detect num_periods must be > 0")
-    arr_sql = _col_sql(arr)
-    if arr_sql is not None:
-        try:
-            return F.expr(
-                _series_periods_detect_sql(
-                    arr_sql, min_period, max_period, num_periods
-                )
-            )
-        except Exception:
-            pass
-    a = F.transform(arr, lambda e: e.cast("double"))
-    n = F.size(a)
-    mean = F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x) / n.cast(
-        "double"
-    )
-    var = F.aggregate(
-        a, F.lit(0.0), lambda acc, x: acc + (x - mean) * (x - mean)
-    )
-
-    def acf(lag: int) -> Column:
-        idxs = F.sequence(F.lit(1), F.greatest(n - F.lit(lag), F.lit(0)))
-        num = F.aggregate(
-            idxs,
-            F.lit(0.0),
-            lambda acc, i: acc
-            + (F.element_at(a, i) - mean)
-            * (F.element_at(a, i + F.lit(lag)) - mean),
-        )
-        return F.when(var == 0, F.lit(0.0)).otherwise(num / var)
-
-    cands = F.array(
-        *[
-            F.struct(
-                (-acf(lag)).alias("neg"),
-                F.lit(float(lag)).alias("lag"),
-                acf(lag).alias("score"),
-            )
-            for lag in range(min_period, max_period + 1)
-        ]
-    )
-    top = F.slice(F.array_sort(cands), 1, num_periods)
-    return F.struct(
-        F.transform(top, lambda t: t.getField("lag")).alias("periods"),
-        F.transform(top, lambda t: t.getField("score")).alias("scores"),
+    return _sql_function(
+        f"kql_series_periods_detect_{min_period}_{max_period}_{num_periods}",
+        "arr ARRAY<DOUBLE>",
+        _series_periods_detect_sql("arr", min_period, max_period, num_periods),
+        arr,
     )
 
 
@@ -6537,6 +6042,17 @@ def kql(
             )
         finally:
             _KQL_ALLOW_PYTHON.reset(token)
+    spark = _session(tables)
+    if _KQL_SESSION.get() is not spark:
+        # the kernels' SQL functions are created in, and resolved by,
+        # the session of the query's tables
+        token = _KQL_SESSION.set(spark)
+        try:
+            return kql(
+                query_text, tables, now=now, _lets=_lets, _fork_out=_fork_out
+            )
+        finally:
+            _KQL_SESSION.reset(token)
     lets = dict(_lets or {})
     tables = dict(tables)
     stmts = _split_top(query_text, ";")
@@ -7035,18 +6551,27 @@ def kql(
                 nulls = p.next().text.lower()
                 if nulls not in ("first", "last"):
                     raise ValueError("KQL: top expects 'nulls first|last'")
-            if asc:
-                order = {
-                    "first": key.asc_nulls_first(),
-                    "last": key.asc_nulls_last(),
-                }.get(nulls, key.asc())
-            else:
-                order = {
-                    "first": key.desc_nulls_first(),
-                    "last": key.desc_nulls_last(),
-                }.get(nulls, key.desc())
-            df = df.orderBy(order).limit(n)
-            ser = [order]  # top output is serialized, as in Kusto
+
+            def order(c: Column) -> Column:
+                if asc:
+                    return {
+                        "first": c.asc_nulls_first(),
+                        "last": c.asc_nulls_last(),
+                    }.get(nulls, c.asc())
+                return {
+                    "first": c.desc_nulls_first(),
+                    "last": c.desc_nulls_last(),
+                }.get(nulls, c.desc())
+
+            # sort on the projected key: a kernel's SQL function may
+            # not sit in a Sort (still one TakeOrderedAndProject)
+            df = (
+                df.withColumn("__kql_top", key)
+                .orderBy(order(F.col("__kql_top")))
+                .limit(n)
+                .drop("__kql_top")
+            )
+            ser = [order(key)]  # top output is serialized, as in Kusto
         elif verb in ("take", "limit"):
             df = df.limit(int(p.next().text))
         elif verb == "project":
@@ -7404,68 +6929,7 @@ def kql(
                     p.expect(")")
                     p.expect("=")
                     tmp = "__kql_tuple"
-                    if (
-                        p.peek() is not None
-                        and p.peek().text == "series_decompose_anomalies"
-                    ):
-                        # STAGED compile: composing decompose +
-                        # outlier-scoring as ONE expression tree
-                        # duplicates the decomposition inside every
-                        # percentile reference (measured 190 s of
-                        # analysis/codegen at sf0.001) — materialize
-                        # the struct as a named column first, then
-                        # score the residual ATTRIBUTE, so each stage
-                        # references cheap attributes, never trees.
-                        p.next()
-                        p.expect("(")
-                        sda_arr = p.expr()
-                        p.expect(",")
-                        t = p.next()
-                        if t.kind != "num" or "." in t.text:
-                            raise ValueError(
-                                "KQL: series_decompose_anomalies period "
-                                "must be an integer literal"
-                            )
-                        sda_thr = 1.5
-                        if p.accept(","):
-                            tt = p.next()
-                            if tt.kind != "num":
-                                raise ValueError(
-                                    "KQL: series_decompose_anomalies "
-                                    "threshold must be a numeric literal"
-                                )
-                            sda_thr = float(tt.text)
-                        p.expect(")")
-                        df = df.withColumn(
-                            "__kql_sda", _series_decompose(sda_arr, int(t.text))
-                        ).withColumn(
-                            "__kql_sda_sc",
-                            _series_outliers(
-                                F.col("__kql_sda").getField("residual")
-                            ),
-                        )
-                        thrc = F.lit(float(sda_thr))
-                        df = df.withColumn(
-                            tmp,
-                            F.struct(
-                                F.transform(
-                                    F.col("__kql_sda_sc"),
-                                    lambda sc: F.when(
-                                        sc.isNull(), F.lit(None).cast("long")
-                                    )
-                                    .when(sc > thrc, F.lit(1).cast("long"))
-                                    .when(sc < -thrc, F.lit(-1).cast("long"))
-                                    .otherwise(F.lit(0).cast("long")),
-                                ).alias("ad_flag"),
-                                F.col("__kql_sda_sc").alias("ad_score"),
-                                F.col("__kql_sda")
-                                .getField("baseline")
-                                .alias("baseline"),
-                            ),
-                        ).drop("__kql_sda", "__kql_sda_sc")
-                    else:
-                        st = p.expr()
-                        df = df.withColumn(tmp, st)
+                    df = df.withColumn(tmp, p.expr())
                     fields = df.schema[tmp].dataType
                     from pyspark.sql.types import StructType as _St
 

@@ -205,149 +205,6 @@ _FRONT = [
     "k115_kql_active_users_count",
 ]
 
-_FRONT_ROUND11_RETIRED = [
-    # ROUND-11 WINDOW (retired — all 50 got green CORRECTNESS_r11
-    # rows except k103, re-queued above). Kept for bookkeeping only;
-    # NOT consulted by _reorder(). The round-11 layout note that said
-    # "session-5 additions (11)" listed 13 names — the count was off
-    # by two (round-11 ADVICE); the authoritative displaced list is
-    # exactly the 40-entry block (0) above, re-derived from the
-    # artifacts by tools/rotation_check.py rather than by hand.
-    # ROUND-11 WINDOW. The driver did NOT run a round-10 correctness
-    # check (no CORRECTNESS_r10.json landed — only bench + verdict), so
-    # the 17 round-10 additions are STILL never-checked and stay at the
-    # head, behind this round's own additions (never-checked pre-empts
-    # stale, standing policy). Layout: round-11 additions first
-    # (prepended as they land, tail trimmed to keep 50), then the 17
-    # round-10 additions, then the r2-stale cohort (14), then as much
-    # of the r3-stale cohort as fits.
-    # (0) round-11 additions — never driver-checked by construction
-    # (0b) session-5 additions (11) — never driver-checked by
-    # construction; they displace the 11 tail entries of the session-4
-    # window (k82_kql_activity_counts, k83, k84, d98, k78, k79, d97,
-    # k77, d96, mm13, d94) past the 50 cutoff into the round-12
-    # never-checked queue, per never-checked-pre-empts-stale.
-    "k105_kql_python_plugin",
-    "d107_rrf_hybrid_retrieval",
-    "d108_matryoshka_recall_curve",
-    "d109_binary_hamming_rerank",
-    "s58_stream_cusum_changepoint",
-    "mm15_audio_mfcc",
-    "d110_kneser_ney_bigram",
-    "k106_kql_geohash",
-    "k107_kql_format_scalars",
-    "s59_stream_counter_rate",
-    "k108_kql_graph_shortest_paths",
-    "s60_stream_timer_sessions",
-    "d111_cluster_balanced_sample",
-    # (0a) session-4 additions
-    "mm14_mel_filterbank",
-    "s57_stream_multitouch_attribution",
-    "k104_kql_partition_datatable",
-    "d106_lsh_calibration",
-    "b120_rfm_segments",
-    "d105_source_qq_shift",
-    "s56_stream_kll_quantile",
-    "b119_multitouch_attribution",
-    "b118_kll_quantile_at_rest",
-    "s55_stream_space_saving_topk",
-    "d104_mink_membership_audit",
-    "k103_kql_hash_digest_functions",
-    "d103_nb_quality_classifier",
-    "d102_ks_corpus_drift",
-    "k102_kql_funnel_completion",
-    "k101_kql_dcount_intersect",
-    "k100_kql_ipv4_lookup",
-    "s54_stream_hll_distinct",
-    "k98_kql_series_similarity",
-    "k99_kql_series_arithmetic",
-    "d101_vocab_coverage_curve",
-    "k96_kql_parse_kv",
-    "k97_kql_facet",
-    "k95_kql_series_forecast",
-    "k91_kql_bag_functions",
-    "k92_kql_datetime_format",
-    "k93_kql_row_rank_session",
-    "k94_kql_weighted_percentile",
-    "k90_kql_datetime_diff_bitwise",
-    "k89_kql_parse_url",
-    "d100_phrase_search_postings",
-    "k88_kql_rolling_percentile",
-    "k87_kql_array_manipulation",
-    "s53_stream_new_user_metrics",
-    "k86_kql_geo_distance",
-    "k85_kql_ipv4_functions",
-    "d99_gopher_repetition_signals",
-    "k80_kql_series_fit_line",
-    "k81_kql_series_fit_2lines",
-    "k82_kql_activity_counts",
-    "k83_kql_new_activity_metrics",
-    "k84_kql_session_count",
-    "d98_winnow_overlap_pairs",
-    "k78_kql_sliding_window_counts",
-    "k79_kql_activity_engagement",
-    "d97_gopher_rules_audit",
-    "k77_kql_diffpatterns",
-    "d96_kmv_vocab_overlap",
-    "mm13_image_dhash_neardup",
-    "d94_winnowing_fingerprints",
-    "d95_cross_source_dup_matrix",
-    "mm12_video_shot_segments",
-    "s52_stream_late_shipment_monitor",
-    "b114_shipmode_priority_q12",
-    "b115_order_priority_q4",
-    "b116_suppliers_kept_waiting_q21",
-    "b117_small_qty_revenue_q17",
-    "k74_kql_series_decompose_anomalies",
-    "k75_kql_autocluster",
-    "k76_kql_series_periods_detect",
-    # (1) round-10 additions — never driver-checked (no r10 artifact)
-    "s50_stream_late_data_watermark",
-    "d92_colbert_maxsim",
-    "d92x_colbert_maxsim_ivf",
-    # Window = the FIRST 50 names above (the session-4 additions
-    # mm14/s57/k104/d106/b120/d105/s56/b119/b118/s55/d104/k103/d103
-    # pushed the tail out to d94_winnowing_fingerprints; everything
-    # from d95_cross_source_dup_matrix down — mm12, s52, b114-b117,
-    # k74-k76, s50, d92, d92x — is now PAST the 50 cutoff and joins
-    # the round-12 never-checked queue with the round-10 tail
-    # d93_ivf_index_optimize,
-    # k71_kql_funnel_sequence,
-    # k72_kql_sequence_detect,
-    # b106_product_profit_q9,
-    # b107_local_supplier_volume_q5, b108_volume_shipping_q7,
-    # b109_market_share_q8,
-    # b110_returned_items_q10,
-    # b111_promo_revenue_q14,
-    # b112_forecast_revenue_q6, b113_large_volume_customer_q18,
-    # mm11_audio_vad_segments, s51_stream_sequence_detect,
-    # k73_kql_series_fill and the r2 k13_kql_recent_orders).
-    # Displaced never-checked + r2/r3 entries —
-    # d93_ivf_index_optimize,
-    # k71_kql_funnel_sequence, k72_kql_sequence_detect,
-    # b106_product_profit_q9, b107_local_supplier_volume_q5,
-    # b108_volume_shipping_q7,
-    # b109_market_share_q8, b110_returned_items_q10,
-    # b111_promo_revenue_q14, b112_forecast_revenue_q6,
-    # b113_large_volume_customer_q18,
-    # mm11_audio_vad_segments, s51_stream_sequence_detect,
-    # k73_kql_series_fill,
-    # k13_kql_recent_orders, k14_kql_avg_sales, k15_kql_total_sales, k16_kql_order_counts, k17_kql_filtered_pipeline, k20_kql_between, k21_kql_countif_sumif, k22_kql_parse_json, k23_kql_mv_expand, d07_embedding_cosine_topk, d16_chunk_documents, d17_contamination_check,
-    # d18_repetition_ratio, d19_stratified_sample, b13c_except,
-    # b14_scalar_functions, b14b_date_functions, b15a_json_extract,
-    # b15b_array_functions,
-    # k24_kql_join, k25_kql_let, k26_kql_parse_extract,
-    # k27_kql_case_tiers, k28_kql_arg_max, k29_kql_make_set,
-    # k30_kql_percentile, k32_kql_top_nested, k33_kql_lookup,
-    # k34_kql_mv_apply, k35_kql_pivot, k36_kql_top_hitters,
-    # k37_kql_search, k38_kql_range_source (this round) plus
-    # k39_kql_scalar_strings,
-    # k41_kql_serialized_windows, k42_kql_parse_where,
-    # d04x_minhash_lsh_portable, d06x_simhash_portable and
-    # d07w_lsh_cosine_portable (round 10) — lead the round-12 queue
-    # ahead of the r4 cohort, per never-checked-pre-empts-stale.
-]
-
 
 def _reorder() -> None:
     idx = {name: i for i, name in enumerate(REGISTRY)}

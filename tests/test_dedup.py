@@ -131,17 +131,20 @@ def test_ensure_parallelism_noop_on_well_split_input(spark, sf_dir, tmp_path):
     would be pure waste."""
     from kafka_data_explorer_cdc_spark.io import ensure_parallelism, load
 
+    # Spark packs small files into defaultParallelism scan partitions,
+    # so "well split" is relative to the host's core count
+    cores = spark.sparkContext.defaultParallelism
     docs = load(spark, sf_dir, "documents")
     out = str(tmp_path / "docs_split")
     docs.repartition(64).write.parquet(out)
     split = spark.read.parquet(out)
     n_before = split.rdd.getNumPartitions()
-    assert n_before >= 16, "fixture should scan as many partitions"
+    assert n_before >= cores, "fixture should scan as many partitions"
     result = ensure_parallelism(split)
     assert result is split, "well-split input must pass through untouched"
 
     single = load(spark, sf_dir, "documents")
-    assert single.rdd.getNumPartitions() < 16
+    assert single.rdd.getNumPartitions() < cores
     boosted = ensure_parallelism(single)
     assert boosted is not single
     assert boosted.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

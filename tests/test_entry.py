@@ -165,28 +165,23 @@ def test_rotation_check_parses_two_digit_rounds(tmp_path):
     assert latest == {"old_entry": 9, "both": 10, "new_entry": 10, "newest": 12}
 
 
-def test_scale_ledger_fresh_and_covers_recent_cohorts():
-    """SCALE_LEDGER.json (round-12 VERDICT item 6) must be regenerable
-    byte-identical from BASELINE.md (no hand edits, no drift after a
-    BASELINE.md change), must cover every entry the round-10/12
-    verdicts recorded 20x rows for, and the scaled count must never
-    regress — new entries keep paying the k109-bar scale row."""
+def test_scale_ledger_covers_recent_cohorts():
+    """The scale-evidence index computed from BASELINE.md (round-12
+    VERDICT item 6) must cover every entry the round-10/12 verdicts
+    recorded 20x rows for, and the scaled count must never regress —
+    new entries keep paying the k109-bar scale row."""
     import importlib.util
-    import json
+    import os
 
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
-        "scale_ledger", "/root/repo/tools/scale_ledger.py"
+        "scale_ledger", os.path.join(repo, "tools", "scale_ledger.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    ledger = mod.build_ledger(repo)
 
-    with open("/root/repo/SCALE_LEDGER.json", encoding="utf-8") as fh:
-        on_disk = json.load(fh)
-    assert on_disk == mod.build_ledger(), (
-        "SCALE_LEDGER.json is stale — run python tools/scale_ledger.py"
-    )
-
-    have = {name.split("_", 1)[0] for name in on_disk["entries"]}
+    have = {name.split("_", 1)[0] for name in ledger["entries"]}
     r10_cohort = (
         [f"b{i}" for i in range(106, 118)]
         + [f"d{i}" for i in range(92, 100)]
@@ -197,4 +192,4 @@ def test_scale_ledger_fresh_and_covers_recent_cohorts():
     missing = [c for c in r10_cohort + r12_adds if c not in have]
     assert not missing, f"scale rows lost from BASELINE.md: {missing}"
     # floor at the round-13 generation count; additions may only raise it
-    assert on_disk["scaled_count"] >= 97
+    assert ledger["scaled_count"] >= 97

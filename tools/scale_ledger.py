@@ -1,10 +1,12 @@
-"""Generate SCALE_LEDGER.json — the machine-readable index of per-entry
-scale evidence (round-12 VERDICT item 6).
+"""Index the per-entry scale evidence in BASELINE.md (round-12
+VERDICT item 6).
 
 BASELINE.md accumulates "scale sanity" rows (20x replica corpora, sf1
 decade-up spot-runs) across session tables and prose; this tool greps
-them back into one JSON keyed by registry id so rotation_check-style
-gates can assert coverage instead of a human re-reading five tables.
+them back into one index keyed by registry id so gates can assert
+coverage instead of a human re-reading five tables. The index is
+computed on demand (tests/test_entry.py asserts its coverage), never
+committed: a committed copy goes stale with every BASELINE.md edit.
 
 Two evidence shapes are recognized, both cited by line number:
 - **scale tables**: any markdown table whose HEADER carries a scale
@@ -16,15 +18,13 @@ Two evidence shapes are recognized, both cited by line number:
 Each entry records line numbers and excerpts, so the ledger is a
 citation index, not a claim.
 
-Run from the repo root:
+Run from the repo root to print the coverage summary:
 
-    python tools/scale_ledger.py            # rewrites SCALE_LEDGER.json
-    python tools/scale_ledger.py --check    # exit 1 if the file is stale
+    python tools/scale_ledger.py
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import sys
@@ -33,8 +33,8 @@ MARKER = re.compile(r"20[x×]|\bsf1\b")
 CODE = re.compile(r"(?<![A-Za-z0-9])([a-z]+\d+[a-z]?)(?![0-9a-z])")
 
 
-def build_ledger() -> dict:
-    sys.path.insert(0, os.getcwd())
+def build_ledger(repo: str = ".") -> dict:
+    sys.path.insert(0, os.path.abspath(repo))
     from kafka_data_explorer_cdc_spark.queries import REGISTRY
 
     codes = {name.split("_", 1)[0]: name for name in REGISTRY}
@@ -47,7 +47,8 @@ def build_ledger() -> dict:
         if not any(e["line"] == lineno for e in ev):
             ev.append({"line": lineno, "excerpt": line.strip()[:160]})
 
-    lines = open("BASELINE.md", encoding="utf-8").read().splitlines()
+    with open(os.path.join(repo, "BASELINE.md"), encoding="utf-8") as fh:
+        lines = fh.read().splitlines()
     in_scale_table = False
     for lineno, line in enumerate(lines, 1):
         is_row = line.lstrip().startswith("|")
@@ -73,7 +74,6 @@ def build_ledger() -> dict:
     scaled = sorted(entries)
     missing = sorted(set(REGISTRY) - set(scaled))
     return {
-        "generated_by": "tools/scale_ledger.py",
         "source": "BASELINE.md",
         "total_registry": len(REGISTRY),
         "scaled_count": len(scaled),
@@ -85,27 +85,9 @@ def build_ledger() -> dict:
 
 def main() -> None:
     ledger = build_ledger()
-    text = json.dumps(ledger, indent=1, ensure_ascii=False) + "\n"
-    if "--check" in sys.argv:
-        try:
-            on_disk = open("SCALE_LEDGER.json", encoding="utf-8").read()
-        except FileNotFoundError:
-            print("SCALE_LEDGER.json missing — run tools/scale_ledger.py")
-            raise SystemExit(1)
-        if on_disk != text:
-            print("SCALE_LEDGER.json is stale — run tools/scale_ledger.py")
-            raise SystemExit(1)
-        print(
-            f"OK scale ledger fresh: {ledger['scaled_count']}/"
-            f"{ledger['total_registry']} entries have scale evidence"
-        )
-        return
-    with open("SCALE_LEDGER.json", "w", encoding="utf-8") as fh:
-        fh.write(text)
     print(
-        f"wrote SCALE_LEDGER.json: {ledger['scaled_count']}/"
-        f"{ledger['total_registry']} scaled, "
-        f"{ledger['missing_count']} without evidence"
+        f"{ledger['scaled_count']}/{ledger['total_registry']} entries have "
+        f"scale evidence; without: {', '.join(ledger['missing'])}"
     )
 
 
