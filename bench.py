@@ -25,7 +25,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from kafka_data_explorer_cdc_spark.kql import kql_unpersist_caches
 from kafka_data_explorer_cdc_spark.queries import REGISTRY
-from kafka_data_explorer_cdc_spark.session import get_spark
+from kafka_data_explorer_cdc_spark.session import get_spark, local_cpus
 
 #: Headline set — exercises scan/agg, top-k, CDC parse+apply, joins,
 #: windows, dedup, and similarity as they land in the registry.
@@ -127,8 +127,7 @@ def main() -> None:
     # $SPARK_GRAFT_CPUS too — round 13's 8-core run clobbered the
     # 32-core record) must not clobber it; they got the JSON line
     # above, which is all they came for.
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    if not only and sf_dir == "/root/testdata/sf0.1" and cpus == "32":
+    if not only and sf_dir == "/root/testdata/sf0.1" and local_cpus() == 32:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_LOCAL.json"), "w") as f:
             f.write(full_line + "\n")

@@ -76,8 +76,9 @@ def envelope_schema(after_schema: T.StructType | None = None) -> T.StructType:
     parsed); to CAPTURE them, a restarted pipeline passes the evolved
     row StructType here — the sink's merge widens stored state via
     ``unionByName(allowMissingColumns=True)`` and pre-evolution rows
-    read as null for the new columns (``mergeSchema`` on the bucket
-    read), the same upgrade contract as a warehouse ``ADD COLUMN``."""
+    read as null for the new columns (bucket reads use the schema
+    recorded in the manifest), the same upgrade contract as a warehouse
+    ``ADD COLUMN``."""
     if after_schema is None:
         return ENVELOPE_SCHEMA
     payload = T.StructType(

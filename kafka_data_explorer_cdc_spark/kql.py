@@ -3906,8 +3906,8 @@ def _compile_mv_apply(
     array — the per-record grouping Kusto re-aggregates after its
     expansion is FREE here because the record never stopped being one
     row. Zero shuffle, zero explode for the summarize form; the
-    where-only form appends one ``explode`` of the surviving elements
-    (still shuffle-free). At 100 TB this is the difference between a
+    where-only form is one ``explode`` followed by a row filter (still
+    shuffle-free). At 100 TB this is the difference between a
     narrow map stage and exploding 64× the corpus through an exchange."""
     m = re.match(
         r"mv-apply\s+([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*)\s*"
@@ -3943,19 +3943,20 @@ def _compile_mv_apply(
         arr = F.transform(arr, lambda e: e.cast(sty))
 
     def elem_expr(text: str):
-        # re-parse per call: the element Column exists only inside the
-        # enclosing higher-order-function lambda
+        # re-parse per call: the element Column is a higher-order-function
+        # lambda variable, which exists only inside that lambda
         return lambda e: _Parser(
             _tokenize(text), now=now, lets=lets, vars={var: e}
         ).expr()
 
     sub_stages = [s.strip() for s in _split_top(body, "|")]
     summarize_text = None
+    wheres = []
     for si, sub in enumerate(sub_stages):
         head = re.match(r"[A-Za-z_]\w*", sub)
         verb = head.group().lower() if head else ""
         if verb == "where":
-            arr = F.filter(arr, elem_expr(sub[head.end():]))
+            wheres.append(sub[head.end():])
         elif verb == "summarize":
             if si != len(sub_stages) - 1:
                 raise ValueError(
@@ -3969,8 +3970,16 @@ def _compile_mv_apply(
             )
 
     if summarize_text is None:
-        return df.withColumn(var, F.explode(arr))
+        # filter the exploded rows, not the array: a kernel's SQL
+        # function may sit in a Filter but not in a higher-order
+        # function's lambda or a Generate
+        out = df.withColumn(var, F.explode(arr))
+        for text in wheres:
+            out = out.filter(elem_expr(text)(F.col(var)))
+        return out
 
+    for text in wheres:
+        arr = F.filter(arr, elem_expr(text))
     out = df
     for item in _split_top(summarize_text, ","):
         mi = re.fullmatch(

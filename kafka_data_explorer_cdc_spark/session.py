@@ -18,6 +18,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """Cores for a local run: ``$SPARK_GRAFT_CPUS`` if set, else the
+    cores this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "kafka-data-explorer-cdc-spark",
     master: str | None = None,
@@ -26,10 +33,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
+    ``master`` defaults to ``local[N]`` with N from :func:`local_cpus`
     for local runs; on a cluster, leave unset and submit normally.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = local_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -46,7 +53,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # generous driver memory for local[32] runs; harmless on cluster
+        # generous driver memory for many-core local runs; harmless on cluster
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )

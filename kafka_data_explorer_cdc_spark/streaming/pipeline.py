@@ -29,9 +29,10 @@ import abc
 import json
 import os
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from ..cdc.apply import latest_state
 from ..cdc.envelope import parse_envelope, unwrap
@@ -211,6 +212,19 @@ class ParquetStateSink(CdcStateSink):
     state (one executor task), so 100 TB of state → O(10⁵) buckets; a
     micro-batch touching k distinct keys rewrites ≤ k buckets.
 
+    **Job shape.** Small micro-batches (the reference seals at 10 kB /
+    30 s, ``adx-sink-config.json:5-6``) cost fixed overhead, not data
+    volume, so a batch runs at most four Spark jobs: one probe (a noop
+    write whose observed metrics give the touched buckets, the lsn
+    high-water mark and the row and dead-letter counts, and which
+    materializes the persisted batch), the dead-letter append (only if
+    the batch has bad rows), and the merge write (its shuffle-map job
+    and the write job, with at most one task per core). Each manifest
+    records the stored schema, so bucket reads — the merge,
+    ``current()``, ``at_version()`` — launch no schema-inference job,
+    plus the batch's ``metrics`` (rows in, dead letters, buckets
+    touched).
+
     Malformed envelopes (unparseable JSON, or parseable but keyless /
     sequence-less) never reach the merge: they are appended losslessly
     to a dead-letter parquet under ``state_root/dead_letter`` for
@@ -295,11 +309,28 @@ class ParquetStateSink(CdcStateSink):
                 f"re-ingest into a fresh state_root or load v{m.get('version')} "
                 "manually as a full snapshot"
             )
+        if "schema" not in m:
+            # bucket reads take their schema from the manifest; without
+            # it, mixed-version buckets would read as whichever schema a
+            # footer happened to carry — fail loud instead of guessing
+            raise ValueError(
+                f"incompatible state format at {path}: manifest has no "
+                "'schema' key (written by a sink version that did not "
+                "record the state schema); re-ingest into a fresh state_root"
+            )
         return m
 
     def _read_buckets(
-        self, bucket_versions: dict[str, int], only: set[int] | None = None
+        self,
+        bucket_versions: dict[str, int],
+        schema: dict | None,
+        only: set[int] | None = None,
     ) -> DataFrame | None:
+        """The stored rows (tombstones included) of the mapped buckets,
+        read with the manifest's ``schema``: bucket versions written
+        before a DDL evolution lack the new columns, and the parquet
+        reader null-fills them — ADD COLUMN semantics without a
+        schema-inference job."""
         paths = [
             os.path.join(self.root, f"v{ver}", f"__bucket={b}")
             for b, ver in bucket_versions.items()
@@ -308,12 +339,7 @@ class ParquetStateSink(CdcStateSink):
         paths = [p for p in paths if os.path.isdir(p)]
         if not paths:
             return None
-        # mergeSchema: bucket versions written before a DDL evolution
-        # lack the new columns — merge footers (no data IO) so mixed-
-        # version state reads as the widened schema, old rows null
-        return (
-            self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        )
+        return self.spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
 
     @staticmethod
     def _live(df: DataFrame | None) -> DataFrame | None:
@@ -327,7 +353,7 @@ class ParquetStateSink(CdcStateSink):
         m = self._manifest()
         if m is None:
             return None
-        return self._live(self._read_buckets(m["buckets"]))
+        return self._live(self._read_buckets(m["buckets"], m["schema"]))
 
     def versions(self) -> list[int]:
         """All retained state versions, oldest first — each manifest is
@@ -344,7 +370,7 @@ class ParquetStateSink(CdcStateSink):
         m = self._manifest(version)
         if m is None:
             raise FileNotFoundError(f"no manifest for version {version}")
-        return self._live(self._read_buckets(m["buckets"]))
+        return self._live(self._read_buckets(m["buckets"], m["schema"]))
 
     def vacuum(self, retain_last: int = 10) -> dict:
         """Drop history older than the newest ``retain_last`` manifests
@@ -385,9 +411,9 @@ class ParquetStateSink(CdcStateSink):
         return {"dropped_manifests": dropped_m, "dropped_dirs": dropped_d}
 
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        # the batch feeds several actions (DLQ write, touched-bucket
-        # probe, merge write) — persist it so the envelope JSON parse
-        # runs once per micro-batch, not once per action
+        # the batch feeds several actions (probe, DLQ write, merge
+        # write) — persist it so the envelope JSON parse runs once per
+        # micro-batch, not once per action
         batch = batch.persist()
         try:
             self._apply_batch(batch, batch_id)
@@ -396,68 +422,66 @@ class ParquetStateSink(CdcStateSink):
 
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         bad_cond = F.col(self.key_cols[0]).isNull() | F.col("lsn").isNull()
+        good = ~bad_cond
         has_raw = "raw_value" in batch.columns
 
-        # ONE probe action per micro-batch (optimization round 13):
-        # touched buckets, the lsn high-water mark, AND the
-        # any-dead-letters flag come out of a single bounded collect
-        # (≤ n_buckets+1 groups — bad rows group under __bucket=NULL,
-        # which pmod/xxhash64 never produces for a good row). The
-        # separate ``isEmpty`` probe this replaces cost a second scan
-        # of the persisted batch per micro-batch.
+        # ONE probe job per micro-batch: touched buckets, the lsn
+        # high-water mark and the row / dead-letter counts are observed
+        # metrics of a noop write, which also materializes the persisted
+        # batch for the actions below. The bucket set is bounded by
+        # n_buckets; bad rows contribute only to the dead-letter count.
         prev = self._manifest()
         bucket_versions: dict[str, int] = dict(prev["buckets"]) if prev else {}
         max_lsn: int | None = prev.get("max_lsn") if prev else None
+        schema: dict | None = prev["schema"] if prev else None
 
-        probe = (
-            batch.withColumn(
-                "__bucket", F.when(~bad_cond, self._bucket_col())
-            )
-            .groupBy("__bucket")
-            .agg(F.max("lsn").alias("__mx"))
-            .collect()
-        )
-        any_bad = any(r["__bucket"] is None for r in probe)
+        probe = Observation()
+        batch.observe(
+            probe,
+            F.collect_set(F.when(good, self._bucket_col())).alias("buckets"),
+            F.max(F.when(good, F.col("lsn"))).alias("max_lsn"),
+            F.count_if(bad_cond).alias("dead_letters"),
+            F.count(F.lit(1)).alias("rows_in"),
+        ).write.format("noop").mode("overwrite").save()
+        stats = probe.get
+        touched = {int(b) for b in stats["buckets"]}
+        if stats["max_lsn"] is not None and (
+            max_lsn is None or stats["max_lsn"] > max_lsn
+        ):
+            max_lsn = int(stats["max_lsn"])
+
         if has_raw:
-            if any_bad:
+            if stats["dead_letters"]:
                 # append is idempotent-enough for a DLQ (duplicates on
                 # batch replay are acceptable there; the MERGE path
                 # stays exact)
                 batch.filter(bad_cond).select(
                     F.lit(batch_id).alias("batch_id"), "raw_value"
                 ).write.mode("append").parquet(self.dead_letter_dir())
-            batch = batch.filter(~bad_cond).drop("raw_value")
+            batch = batch.filter(good).drop("raw_value")
         else:
-            batch = batch.filter(~bad_cond)
+            batch = batch.filter(good)
 
-        touched = {
-            int(r["__bucket"]) for r in probe if r["__bucket"] is not None
-        }
-        for r in probe:
-            if r["__bucket"] is None:
-                continue
-            if r["__mx"] is not None and (max_lsn is None or r["__mx"] > max_lsn):
-                max_lsn = int(r["__mx"])
         if touched:
-            cur = self._read_buckets(bucket_versions, only=touched)
+            cur = self._read_buckets(bucket_versions, schema, only=touched)
             # the on_merge consumers (change feed, agg view) re-read the
             # pre-merge rows — persist cur so state parquet is scanned
             # once per micro-batch, not once per consumer
             if self.on_merge is not None and cur is not None:
                 cur = cur.persist()
-            # ONE exchange per merge (optimization round 13): union the
-            # current buckets with the raw batch, cluster by __bucket
-            # (a pure function of the key, so bucket-clustering IS
-            # key-clustering), and run the lsn arbitration window
-            # partitioned by (__bucket, key) — the window reuses the
-            # bucket exchange, and the bucket-partitioned write needs
-            # no further repartition (each bucket still lands in one
-            # task -> one file). Replaces apply_cdc_batch's
-            # compact-batch window + merge window + the write's
-            # repartition (3 exchanges) with 1; winners are identical:
-            # row_number picks each key's (lsn desc, op desc) max, and
-            # (key, lsn, op) ties only arise from at-least-once
-            # redelivery where the rows are bit-identical
+            # ONE exchange per merge: union the current buckets with the
+            # raw batch, cluster by __bucket (a pure function of the key,
+            # so bucket-clustering IS key-clustering), and run the lsn
+            # arbitration window partitioned by (__bucket, key). The
+            # window reuses the bucket exchange and its sort starts with
+            # __bucket, so the bucket-partitioned write adds neither a
+            # repartition nor a sort and still writes one file per
+            # bucket. The exchange has at most one partition per core:
+            # more would only queue tasks (several of them empty, from
+            # hash collisions) behind the cores. Winners are those of
+            # apply_cdc_batch: row_number picks each key's (lsn desc,
+            # op desc) max, and (key, lsn, op) ties only arise from
+            # at-least-once redelivery where the rows are bit-identical
             # (cdc/apply.py latest_state contract).
             base = (
                 batch
@@ -467,9 +491,10 @@ class ParquetStateSink(CdcStateSink):
             w = Window.partitionBy("__bucket", *self.key_cols).orderBy(
                 F.col("lsn").desc(), F.col("op").desc()
             )
+            n_parts = min(len(touched), self.spark.sparkContext.defaultParallelism)
             merged = (
                 base.withColumn("__bucket", self._bucket_col())
-                .repartition(len(touched), F.col("__bucket"))
+                .repartition(n_parts, F.col("__bucket"))
                 .withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") == 1)
                 .drop("__rn")
@@ -479,6 +504,9 @@ class ParquetStateSink(CdcStateSink):
                 merged = merged.filter(
                     (F.col("op") != "d") | (F.col("lsn") >= F.lit(horizon))
                 )
+            # the stored schema, widened by the union above when the
+            # batch carries new columns (DDL evolution)
+            schema = merged.drop("__bucket").schema.jsonValue()
             if self.on_merge is not None:
                 merged = merged.persist()
             try:
@@ -500,6 +528,12 @@ class ParquetStateSink(CdcStateSink):
             "version": batch_id,
             "buckets": bucket_versions,
             "max_lsn": max_lsn,
+            "schema": schema,
+            "metrics": {
+                "rows_in": stats["rows_in"],
+                "dead_letters": stats["dead_letters"],
+                "buckets_touched": len(touched),
+            },
         }
         mpath = os.path.join(self.root, f"manifest_v{batch_id}.json")
         with open(mpath + ".tmp", "w") as f:

@@ -592,6 +592,23 @@ def test_mv_apply(spark):
     assert got["s"] == 12.0
 
 
+def test_mv_apply_kernel_in_where(spark):
+    """A kernel (a SQL function) in the where-only form's element
+    predicate: Spark rejects it inside a lambda or a Generate, so the
+    predicate filters the exploded rows."""
+    df = spark.createDataFrame(
+        [(1, [3.0, 4.0, 50.0]), (2, [4.0, 4.0]), (3, [-10.0])],
+        "id int, x array<double>",
+    )
+    out = kql(
+        "T | mv-apply v = x on (where geo_point_to_geohash(v, v, 4) == 's0dy')",
+        {"T": df},
+    )
+    assert out.columns == ["id", "x", "v"]
+    assert sorted((r["id"], r["v"]) for r in out.collect()) == [
+        (1, 4.0), (2, 4.0), (2, 4.0)]
+
+
 def test_mv_apply_plan_has_no_shuffle(spark):
     # the summarize form must stay a narrow projection: no Exchange, no
     # Generate (explode) in the plan

@@ -481,7 +481,8 @@ def test_tombstones_survive_out_of_order_batches(spark):
     sink.apply_batch(_flat_batch(spark, [(1, 7, 999, "Rome", "u", 20)]), 1)
     assert sink.current().count() == 0, "lower-lsn straggler must not resurrect"
     # the stored (raw) form still remembers the tombstone
-    raw = sink._read_buckets(sink._manifest()["buckets"])
+    m = sink._manifest()
+    raw = sink._read_buckets(m["buckets"], m["schema"])
     tomb = raw.filter("op = 'd'").collect()
     assert len(tomb) == 1 and tomb[0]["lsn"] == 30
     # a genuinely newer event DOES re-create the key
@@ -503,11 +504,13 @@ def test_tombstone_gc_horizon(spark):
         _flat_batch(spark, [(1, 7, 100, "Rome", "c", 5), (1, None, None, None, "d", 10)]),
         0,
     )
-    raw = sink._read_buckets(sink._manifest()["buckets"])
+    m = sink._manifest()
+    raw = sink._read_buckets(m["buckets"], m["schema"])
     assert raw.filter("op = 'd'").count() == 1, "young tombstone retained"
     # max_lsn jumps to 100 -> horizon 50 -> lsn-10 tombstone GC'd
     sink.apply_batch(_flat_batch(spark, [(2, 9, 1, "Oslo", "c", 100)]), 1)
-    raw = sink._read_buckets(sink._manifest()["buckets"])
+    m = sink._manifest()
+    raw = sink._read_buckets(m["buckets"], m["schema"])
     assert raw.filter("op = 'd'").count() == 0, "expired tombstone GC'd"
     assert sink._manifest()["max_lsn"] == 100
     assert {r["orderid"] for r in sink.current().collect()} == {2}
@@ -523,6 +526,88 @@ def test_legacy_manifest_rejected(spark):
     sink = ParquetStateSink(spark, state, ["orderid"])
     with pytest.raises(ValueError, match="incompatible state format"):
         sink.current()
+    # a bucketed manifest that does not record the stored schema: bucket
+    # reads take their schema from the manifest, so it fails loud too
+    with open(os.path.join(state, "LATEST"), "w") as f:
+        json.dump({"version": 3, "buckets": {"0": 3}, "max_lsn": 7}, f)
+    with pytest.raises(ValueError, match="incompatible state format"):
+        sink.current()
+
+
+DLQ_FLAT_SCHEMA = FLAT_SCHEMA + ", raw_value string"
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, jobs launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_state_sink_batch_job_count(spark):
+    """A micro-batch's fixed cost is its job count: one observed probe
+    (which also materializes the persisted batch), the dead-letter
+    append, and the merge write's shuffle-map and write jobs — no
+    groupBy probe and no schema-inference job on the bucket read. And
+    building ``current()`` launches no job at all."""
+    state = _tmp("jobs_state_")
+    sink = ParquetStateSink(spark, state, ["orderid"], n_buckets=4)
+    sink.apply_batch(
+        spark.createDataFrame(
+            [(k, 1, k, "Rome", "c", k, "ok") for k in range(1, 9)],
+            DLQ_FLAT_SCHEMA,
+        ),
+        0,
+    )
+    batch = spark.createDataFrame(
+        [(k, 2, k * 10, "Oslo", "u", 100 + k, "ok") for k in range(1, 9)]
+        + [(None, None, None, None, None, None, "garbage"),
+           (9, None, None, None, "c", None, "no lsn")],
+        DLQ_FLAT_SCHEMA,
+    )
+    _, n = _jobs_in_group(spark, "sink_batch_jobs", lambda: sink.apply_batch(batch, 1))
+    assert n <= 4, f"apply_batch with bad rows and touched state ran {n} jobs"
+    cur, n = _jobs_in_group(spark, "sink_current_jobs", sink.current)
+    assert n == 0, f"building current() ran {n} jobs"
+    assert sorted((r["orderid"], r["amount"]) for r in cur.collect()) == [
+        (k, k * 10) for k in range(1, 9)
+    ]
+
+
+def test_state_sink_manifest_metrics(spark):
+    """Every manifest commits its micro-batch's metrics, taken from the
+    probe's observed aggregates: rows in (dead letters included), dead
+    letters, and buckets touched."""
+    state = _tmp("metrics_state_")
+    sink = ParquetStateSink(spark, state, ["orderid"], n_buckets=4)
+    rows = [(k, 1, k, "Rome", "c", k, "ok") for k in range(1, 7)] + [
+        (None, None, None, None, None, None, '{"this is not an envelope'),
+        (3, None, None, None, "c", None, '{"payload": {"op": "c"}}'),
+    ]
+    sink.apply_batch(spark.createDataFrame(rows, DLQ_FLAT_SCHEMA), 0)
+    m = sink._manifest()
+    want_buckets = {
+        r["b"]
+        for r in spark.range(1, 7)
+        .select(F.pmod(F.xxhash64(F.col("id")), F.lit(4)).alias("b"))
+        .collect()
+    }
+    assert m["metrics"] == {
+        "rows_in": 8, "dead_letters": 2, "buckets_touched": len(want_buckets),
+    }
+    assert set(m["buckets"]) == {str(b) for b in want_buckets}
+    assert m["max_lsn"] == 6
+    assert sink.dead_letters().count() == 2
+    # a batch of only malformed rows touches nothing and carries the
+    # stored schema forward
+    sink.apply_batch(spark.createDataFrame(rows[-2:], DLQ_FLAT_SCHEMA), 1)
+    m1 = sink._manifest()
+    assert m1["metrics"] == {"rows_in": 2, "dead_letters": 2, "buckets_touched": 0}
+    assert m1["schema"] == m["schema"] and m1["buckets"] == m["buckets"]
 
 
 def test_envelope_schema_evolution_tolerated(spark):
