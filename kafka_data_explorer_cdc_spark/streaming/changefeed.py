@@ -16,12 +16,14 @@ vs ``merged`` (post) rows of the touched buckets by key —
   + ``update_postimage`` (Delta CDF's two-row convention)
 - tombstone-to-tombstone re-arbitration           → no visible change
 
-Each batch appends its rows under ``feed/batch_{id}/`` with
-``_change_type`` and ``_commit_version`` columns; a replayed
-micro-batch is skipped by the feed manifest (and would classify to
-zero changes anyway — ``merged == cur`` on replay). The feed is
-therefore effectively-exactly-once even though the input is
-at-least-once: exactly the upgrade consumers need.
+Each batch appends its rows under ``feed/batch_{version}/``, with
+``_change_type`` and ``_commit_version`` columns, for the state version
+its merge commits: the feed is read only up to the state manifest's
+version, so feed and state commit together. A replayed micro-batch —
+same batch id, or a restarted stream's repeated one — classifies to
+zero changes (``merged == cur`` on replay). The feed is therefore
+effectively-exactly-once even though the input is at-least-once:
+exactly the upgrade consumers need.
 
 Scale: classification is one keyed full-outer join over the touched
 buckets (already in memory from the merge — ``merged`` arrives
@@ -31,8 +33,8 @@ only commits newer than its cursor.
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -61,33 +63,33 @@ class ChangeFeedSink(CdcStateSink):
 
     # -- CdcStateSink surface ---------------------------------------
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
+        # a feed dir at the next version was stranded by a crash before
+        # its commit; drop it, or a commit there that merges nothing
+        # (dead letters only) would make it readable
+        shutil.rmtree(
+            self._batch_dir(self.inner.log.next_version()), ignore_errors=True
+        )
         self.inner.apply_batch(batch, batch_id)
 
     def current(self) -> DataFrame | None:
         return self.inner.current()
 
     # -- feed storage -----------------------------------------------
-    def _pointer(self) -> str:
-        return os.path.join(self.feed_root, "FEED_LATEST")
-
-    def _manifest(self) -> dict | None:
-        try:
-            with open(self._pointer()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
+    def _batch_dir(self, version: int) -> str:
+        return os.path.join(self.feed_root, f"batch_{version}")
 
     def feed(self, since_version: int | None = None) -> DataFrame | None:
-        """All change rows, optionally only commits > ``since_version``
-        (the consumer-cursor read path: O(new commits), not O(feed))."""
-        m = self._manifest()
+        """All change rows of committed state versions, optionally only
+        those > ``since_version`` (the consumer-cursor read path:
+        O(new commits), not O(feed))."""
+        m = self.inner._manifest()
         if m is None:
             return None
         dirs = [
             os.path.join(self.feed_root, d)
             for d in sorted(os.listdir(self.feed_root))
             if d.startswith("batch_")
-            and int(d[len("batch_"):]) <= m["last_batch_id"]
+            and int(d[len("batch_"):]) <= m["version"]
             and (since_version is None or int(d[len("batch_"):]) > since_version)
         ]
         if not dirs:
@@ -116,11 +118,8 @@ class ChangeFeedSink(CdcStateSink):
 
     # -- the on_merge hook ------------------------------------------
     def _emit(
-        self, cur: DataFrame | None, merged: DataFrame, batch_id: int
+        self, cur: DataFrame | None, merged: DataFrame, version: int
     ) -> None:
-        m = self._manifest()
-        if m is not None and batch_id <= m["last_batch_id"]:
-            return  # replay: feed already has this commit
         cols = merged.columns
         live = lambda side: F.col(f"{side}.op") != "d"  # noqa: E731
         if cur is None:
@@ -179,11 +178,6 @@ class ChangeFeedSink(CdcStateSink):
                     )
                 ).alias("__c")
             ).select("__c.*")
-        out = os.path.join(self.feed_root, f"batch_{batch_id}")
         changes.withColumn(
-            "_commit_version", F.lit(batch_id)
-        ).write.mode("overwrite").parquet(out)
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"last_batch_id": batch_id}, f)
-        os.replace(tmp, self._pointer())
+            "_commit_version", F.lit(version)
+        ).write.mode("overwrite").parquet(self._batch_dir(version))

@@ -20,20 +20,22 @@ merge for the view — 2x the window work and state reads per batch):
   untouched keys appear identically on both sides and cancel exactly
   (COUNT and DECIMAL sums are order-independent), so no per-key join
   or key-set collect is needed at all;
-- stored view += delta (full-outer join on group, versioned write,
-  atomic pointer).
+- stored view += delta (full-outer join on group), written as
+  ``agg_v{version}`` under the state version the merge commits.
 
-Crash/replay safety, two independent layers: (a) the view manifest
-records the last applied batch_id and skips replays; (b) even without
-the guard, a replayed batch finds its effects already in ``cur``, so
-``merged == cur`` and the delta is exactly zero. SUM/COUNT are
-self-inverting under deltas; MIN/MAX are not (a delete can require a
-rescan) — this sink is the algebraic-aggregate form.
+Crash/replay safety comes from the state manifest alone. The view is
+read at the last state version that merged (``max`` of the manifest's
+bucket map), so a view written by a batch that crashed before its
+state commit is never read, and state and view commit together. A
+replayed batch — same batch id, or a restarted stream's repeated one —
+finds its effects already in ``cur``, so ``merged == cur`` and the
+delta is exactly zero. SUM/COUNT are self-inverting under deltas;
+MIN/MAX are not (a delete can require a rescan) — this sink is the
+algebraic-aggregate form.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -74,24 +76,22 @@ class AggViewSink(CdcStateSink):
         return self.inner.current()
 
     # -- view storage -----------------------------------------------
-    def _pointer(self) -> str:
-        return os.path.join(self.view_root, "VIEW_LATEST")
-
-    def _view_manifest(self) -> dict | None:
-        try:
-            with open(self._pointer()) as f:
-                return json.load(f)
-        except FileNotFoundError:
+    def _stored(self) -> DataFrame | None:
+        """The view as of the committed state: written by the last
+        version that merged, the newest in the manifest's bucket map."""
+        m = self.inner._manifest()
+        if m is None or not m["buckets"]:
             return None
+        version = max(m["buckets"].values())
+        return self.spark.read.parquet(
+            os.path.join(self.view_root, f"agg_v{version}")
+        )
 
     def view(self) -> DataFrame | None:
         """The maintained aggregate (groups with count 0 dropped)."""
-        m = self._view_manifest()
-        if m is None:
+        df = self._stored()
+        if df is None:
             return None
-        df = self.spark.read.parquet(
-            os.path.join(self.view_root, f"agg_v{m['version']}")
-        )
         return df.filter(F.col("n_rows") > 0).select(
             F.col(self.group_col),
             F.col("n_rows"),
@@ -106,11 +106,8 @@ class AggViewSink(CdcStateSink):
         )
 
     def _maintain(
-        self, cur: DataFrame | None, merged: DataFrame, batch_id: int
+        self, cur: DataFrame | None, merged: DataFrame, version: int
     ) -> None:
-        m = self._view_manifest()
-        if m is not None and batch_id <= m["last_batch_id"]:
-            return  # replayed micro-batch: delta already applied
         g = self.group_col
         if cur is None:
             delta = self._agg(merged).select(
@@ -141,11 +138,7 @@ class AggViewSink(CdcStateSink):
                     F.when(F.col("__w") > 0, val).otherwise(-val)
                 ).alias("d_sum"),
             )
-        prior = None
-        if m is not None:
-            prior = self.spark.read.parquet(
-                os.path.join(self.view_root, f"agg_v{m['version']}")
-            )
+        prior = self._stored()
         if prior is None:
             updated = delta.select(
                 g,
@@ -168,9 +161,5 @@ class AggViewSink(CdcStateSink):
                     ).cast("decimal(18,2)").alias("sum_dec"),
                 )
             )
-        out = os.path.join(self.view_root, f"agg_v{batch_id}")
+        out = os.path.join(self.view_root, f"agg_v{version}")
         updated.write.mode("overwrite").parquet(out)
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": batch_id, "last_batch_id": batch_id}, f)
-        os.replace(tmp, self._pointer())

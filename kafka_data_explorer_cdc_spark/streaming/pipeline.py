@@ -16,11 +16,13 @@ The at-least-once → effectively-exactly-once upgrade happens in
 micro-batches (checkpoint recovery, duplicate delivery) cannot change
 state (SURVEY.md §7 hard parts; tests/test_cdc.py proves idempotence).
 
-State storage here is versioned parquet (``state/v{batch_id}``) because
-this environment has no transactional table format; each version is
-written before the pointer advances, never rewritten in place. On a
-cluster the foreachBatch body becomes a Delta ``MERGE INTO`` and the
-versioning collapses into the table's own log.
+State storage here is versioned parquet (``state/v{N}``) because this
+environment has no transactional table format. Versions are numbered by
+the sink's own commit log (:class:`ManifestLog`), not by the batch id,
+and a version's files become visible only when its state manifest
+commits; they are never rewritten in place. On a cluster the
+foreachBatch body becomes a Delta ``MERGE INTO`` and the versioning
+collapses into the table's own log.
 """
 
 from __future__ import annotations
@@ -47,15 +49,19 @@ class CdcStateSink(abc.ABC):
 
     - **idempotent on replay**: re-applying a batch (same or new
       batch_id) must not change state — keyed, seq-arbitrated merge;
+    - **batch ids may restart**: Structured Streaming numbers batches
+      per checkpoint, so a stream restarted on a fresh checkpoint
+      repeats ids already applied — storage must not be keyed on them;
     - **order-insensitive across batches**: the stored form retains
       winning delete tombstones, so a lower-lsn straggler in a later
       batch cannot resurrect a deleted key;
     - ``current()`` returns live rows only (tombstones filtered).
 
     ``ParquetStateSink`` implements this on plain parquet with a
-    manifest log; ``DeltaMergeSink`` maps the same contract onto a
-    transactional ``MERGE INTO`` (the production path on a cluster,
-    construction-gated here because this environment ships no Delta).
+    :class:`ManifestLog`; ``DeltaMergeSink`` maps the same contract
+    onto a transactional ``MERGE INTO`` (the production path on a
+    cluster, construction-gated here because this environment ships no
+    Delta).
     """
 
     @abc.abstractmethod
@@ -63,6 +69,60 @@ class CdcStateSink(abc.ABC):
 
     @abc.abstractmethod
     def current(self) -> DataFrame | None: ...
+
+
+class ManifestLog:
+    """The commit log every parquet sink commits through: one
+    ``manifest_v{N}.json`` per committed version, plus ``LATEST``, a
+    copy of the newest — the commit point.
+
+    The log numbers its own commits (``LATEST.version + 1``, 0 on an
+    empty root), never by the caller's batch id, which restarts with a
+    fresh checkpoint. So a data dir written for version N before its
+    commit is only ever overwritten while no committed manifest
+    references it, i.e. when a crash stranded it. Each file is written
+    under a temp name and ``os.replace``d, so readers see the previous
+    commit or the next, never a torn one."""
+
+    def __init__(self, root: str):
+        self.root = root
+        os.makedirs(root, exist_ok=True)
+
+    def path(self, version: int | None = None) -> str:
+        name = "LATEST" if version is None else f"manifest_v{version}.json"
+        return os.path.join(self.root, name)
+
+    def read(self, version: int | None = None) -> dict | None:
+        """The manifest committed as ``version`` (default: the newest),
+        or None if there is none."""
+        try:
+            with open(self.path(version)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def next_version(self) -> int:
+        m = self.read()
+        return 0 if m is None else m["version"] + 1
+
+    def versions(self) -> list[int]:
+        """Every retained committed version, oldest first."""
+        return sorted(
+            int(d[len("manifest_v"):-len(".json")])
+            for d in os.listdir(self.root)
+            if d.startswith("manifest_v") and d.endswith(".json")
+        )
+
+    def drop(self, version: int) -> None:
+        os.remove(self.path(version))
+
+    def commit(self, manifest: dict) -> None:
+        """Commit ``manifest`` as ``manifest["version"]``: the versioned
+        file first, then ``LATEST``."""
+        for path in (self.path(manifest["version"]), self.path()):
+            with open(path + ".tmp", "w") as f:
+                json.dump(manifest, f)
+            os.replace(path + ".tmp", path)
 
 
 def kafka_source_options(
@@ -201,12 +261,14 @@ class ParquetStateSink(CdcStateSink):
     with the touched fraction of state (≈ batch keyspread / n_buckets),
     not with total state size, which is what keeps a long-running CDC
     stream over a large keyspace viable on plain parquet. Each batch
-    writes its touched buckets under an immutable ``v{batch_id}/`` dir
-    and commits a manifest mapping every bucket to the version that
-    last rewrote it — the poor man's Delta log; on a transactional
-    format both collapse into the table's own MERGE + history. Nothing
-    is ever rewritten in place, so a crash between write and manifest
-    commit leaves the previous state intact.
+    writes its touched buckets under an immutable ``v{N}/`` dir, N the
+    next version of the sink's :class:`ManifestLog` (sink-numbered, so
+    a restarted batch id cannot overwrite committed state), and commits
+    a manifest mapping every bucket to the version that last rewrote it
+    — the poor man's Delta log; on a transactional format both collapse
+    into the table's own MERGE + history. Nothing committed is ever
+    rewritten in place, so a crash between write and manifest commit
+    leaves the previous state intact.
 
     Sizing ``n_buckets`` at scale: target bucket ≈ a few hundred MB of
     state (one executor task), so 100 TB of state → O(10⁵) buckets; a
@@ -255,21 +317,24 @@ class ParquetStateSink(CdcStateSink):
         tombstone_gc_lsn_lag: int | None = None,
         on_merge=None,
     ):
-        """``on_merge``: optional callback ``(cur, merged, batch_id)``
+        """``on_merge``: optional callback ``(cur, merged, version)``
         invoked once per non-empty micro-batch with the PRE-merge rows
-        of the touched buckets (``cur``, None on first batch) and the
+        of the touched buckets (``cur``, None on first batch), the
         post-merge result (``merged``, persisted — reading it is a
-        cache hit, not a recompute). Lets derived artifacts
-        (incremental materialized views, change feeds) share the one
-        merge computation instead of re-deriving it; called after the
-        state files are written, before the manifest commits."""
+        cache hit, not a recompute) and the version the state manifest
+        is about to commit. Lets derived artifacts (incremental
+        materialized views, change feeds) share the one merge
+        computation instead of re-deriving it; called after the state
+        files are written, before the manifest commits — so what the
+        hook writes under ``version`` is committed by the state
+        manifest, atomically with the state."""
         self.spark = spark
         self.root = state_root
         self.key_cols = key_cols
         self.n_buckets = n_buckets
         self.tombstone_gc_lsn_lag = tombstone_gc_lsn_lag
         self.on_merge = on_merge
-        os.makedirs(state_root, exist_ok=True)
+        self.log = ManifestLog(state_root)
 
     def dead_letter_dir(self) -> str:
         return os.path.join(self.root, "dead_letter")
@@ -280,25 +345,16 @@ class ParquetStateSink(CdcStateSink):
         except Exception:
             return None
 
-    def _pointer(self) -> str:
-        return os.path.join(self.root, "LATEST")
-
     def _bucket_col(self) -> Column:
         return F.pmod(
             F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(self.n_buckets)
         )
 
     def _manifest(self, version: int | None = None) -> dict | None:
-        path = (
-            self._pointer()
-            if version is None
-            else os.path.join(self.root, f"manifest_v{version}.json")
-        )
-        try:
-            with open(path) as f:
-                m = json.load(f)
-        except FileNotFoundError:
+        m = self.log.read(version)
+        if m is None:
             return None
+        path = self.log.path(version)
         if "buckets" not in m:
             # pre-bucketing sink versions wrote {"version": n} pointing
             # at a monolithic v{n}/ snapshot; silently reading it as an
@@ -359,14 +415,10 @@ class ParquetStateSink(CdcStateSink):
         """All retained state versions, oldest first — each manifest is
         an immutable full-state snapshot (bucket → version map) after
         its micro-batch."""
-        out = []
-        for d in os.listdir(self.root):
-            if d.startswith("manifest_v") and d.endswith(".json"):
-                out.append(int(d[len("manifest_v"):-len(".json")]))
-        return sorted(out)
+        return self.log.versions()
 
     def at_version(self, version: int) -> DataFrame | None:
-        """Time travel: state as of micro-batch ``version``."""
+        """Time travel: state as of committed ``version``."""
         m = self._manifest(version)
         if m is None:
             raise FileNotFoundError(f"no manifest for version {version}")
@@ -375,7 +427,7 @@ class ParquetStateSink(CdcStateSink):
     def vacuum(self, retain_last: int = 10) -> dict:
         """Drop history older than the newest ``retain_last`` manifests
         — Delta's ``VACUUM`` for the manifest log. Without it a
-        long-running stream's version history grows one ``v{batch}/``
+        long-running stream's version history grows one ``v{N}/``
         dir per micro-batch forever even though live state is bounded
         (the soak harness's disk-leak axis).
 
@@ -399,7 +451,7 @@ class ParquetStateSink(CdcStateSink):
         dropped_m = 0
         for v in vers:
             if v not in keep:
-                os.remove(os.path.join(self.root, f"manifest_v{v}.json"))
+                self.log.drop(v)
                 dropped_m += 1
         dropped_d = 0
         for d in os.listdir(self.root):
@@ -431,6 +483,7 @@ class ParquetStateSink(CdcStateSink):
         # batch for the actions below. The bucket set is bounded by
         # n_buckets; bad rows contribute only to the dead-letter count.
         prev = self._manifest()
+        version = self.log.next_version()
         bucket_versions: dict[str, int] = dict(prev["buckets"]) if prev else {}
         max_lsn: int | None = prev.get("max_lsn") if prev else None
         schema: dict | None = prev["schema"] if prev else None
@@ -510,22 +563,24 @@ class ParquetStateSink(CdcStateSink):
             if self.on_merge is not None:
                 merged = merged.persist()
             try:
-                out = os.path.join(self.root, f"v{batch_id}")
+                # overwrite: a v{version}/ already there was stranded by
+                # a crash before its commit — no manifest references it
+                out = os.path.join(self.root, f"v{version}")
                 merged.write.mode("overwrite").partitionBy(
                     "__bucket"
                 ).parquet(out)
                 if self.on_merge is not None:
-                    self.on_merge(cur, merged.drop("__bucket"), batch_id)
+                    self.on_merge(cur, merged.drop("__bucket"), version)
             finally:
                 if self.on_merge is not None:
                     merged.unpersist()
                     if cur is not None:
                         cur.unpersist()
             for b in touched:
-                bucket_versions[str(b)] = batch_id
+                bucket_versions[str(b)] = version
 
-        manifest = {
-            "version": batch_id,
+        self.log.commit({
+            "version": version,
             "buckets": bucket_versions,
             "max_lsn": max_lsn,
             "schema": schema,
@@ -534,15 +589,7 @@ class ParquetStateSink(CdcStateSink):
                 "dead_letters": stats["dead_letters"],
                 "buckets_touched": len(touched),
             },
-        }
-        mpath = os.path.join(self.root, f"manifest_v{batch_id}.json")
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, self._pointer())
+        })
 
 
 class DeltaMergeSink(CdcStateSink):
@@ -639,14 +686,15 @@ class MergeStateSink(CdcStateSink):
     UPDATEs them in rather than deleting, so ``current()`` filters them
     on read.
 
-    Storage is a versioned FULL snapshot per applied batch
-    (``v{batch_id}/`` + atomic pointer rename — crash between write and
-    pointer commit leaves the previous state intact). That rewrite-all
-    shape is what a transactional MERGE without file-skipping statistics
-    does anyway; it is the correctness twin, not the scale path — at
-    scale use ``ParquetStateSink`` (bucketed incremental merges) or real
-    Delta/Iceberg (MERGE + file skipping). Time travel comes free:
-    ``at_version(batch_id)`` reads any retained snapshot."""
+    Storage is a versioned FULL snapshot per applied batch (``v{N}/``,
+    N sink-numbered by a :class:`ManifestLog` and committed by its
+    manifest — a crash between write and commit leaves the previous
+    state intact). That rewrite-all shape is what a transactional MERGE
+    without file-skipping statistics does anyway; it is the correctness
+    twin, not the scale path — at scale use ``ParquetStateSink``
+    (bucketed incremental merges) or real Delta/Iceberg (MERGE + file
+    skipping). Time travel comes free: ``at_version(N)`` reads any
+    committed snapshot."""
 
     def __init__(
         self,
@@ -661,17 +709,7 @@ class MergeStateSink(CdcStateSink):
         self.key_cols = key_cols
         self.seq_col = seq_col
         self.op_col = op_col
-        os.makedirs(state_root, exist_ok=True)
-
-    def _pointer(self) -> str:
-        return os.path.join(self.root, "CURRENT")
-
-    def _version(self) -> int | None:
-        try:
-            with open(self._pointer()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
+        self.log = ManifestLog(state_root)
 
     def _snapshot(self, version: int) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.root, f"v{version}"))
@@ -680,11 +718,11 @@ class MergeStateSink(CdcStateSink):
         compacted = latest_state(
             batch, self.key_cols, self.seq_col, self.op_col, keep_deletes=True
         )
-        v = self._version()
-        if v is None:
+        m = self.log.read()
+        if m is None:
             merged = compacted
         else:
-            t = self._snapshot(v).alias("t")
+            t = self._snapshot(m["version"]).alias("t")
             s = compacted.alias("s")
             cols = compacted.columns
             cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in self.key_cols]
@@ -703,25 +741,21 @@ class MergeStateSink(CdcStateSink):
                     for c in cols
                 ]
             )
-        out = os.path.join(self.root, f"v{batch_id}")
-        merged.write.mode("overwrite").parquet(out)
-        tmp = self._pointer() + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(batch_id))
-        os.replace(tmp, self._pointer())  # atomic commit
+        version = self.log.next_version()
+        merged.write.mode("overwrite").parquet(
+            os.path.join(self.root, f"v{version}")
+        )
+        self.log.commit({"version": version})
 
     def current(self) -> DataFrame | None:
-        v = self._version()
-        if v is None:
-            return None
-        return self._snapshot(v).filter(F.col(self.op_col) != "d")
+        m = self.log.read()
+        return None if m is None else self.at_version(m["version"])
 
     def at_version(self, version: int) -> DataFrame | None:
-        """Time travel over retained snapshots (live rows only)."""
-        path = os.path.join(self.root, f"v{version}")
-        if not os.path.isdir(path):
+        """Time travel over committed snapshots (live rows only)."""
+        if self.log.read(version) is None:
             return None
-        return self.spark.read.parquet(path).filter(F.col(self.op_col) != "d")
+        return self._snapshot(version).filter(F.col(self.op_col) != "d")
 
 
 def start_cdc_pipeline(

@@ -534,6 +534,46 @@ def test_legacy_manifest_rejected(spark):
         sink.current()
 
 
+def test_state_sink_crash_between_write_and_commit(spark):
+    """A crash after the state files are written and before the manifest
+    commits (injected through ``on_merge``, which runs exactly there)
+    leaves the committed state and its versions unchanged; a fresh sink
+    replaying the same batch under the same id then lands the right
+    state at exactly one new version. A stray uncommitted snapshot dir
+    is not a version of MergeStateSink either."""
+    from kafka_data_explorer_cdc_spark.streaming.pipeline import MergeStateSink
+
+    state = _tmp("crash_state_")
+    b0 = _flat_batch(spark, [(k, k, k, "Rome", "c", k) for k in range(1, 9)])
+    sink = ParquetStateSink(spark, state, ["orderid"], n_buckets=4)
+    sink.apply_batch(b0, 0)
+    before = sorted(tuple(r) for r in sink.current().collect())
+    versions = sink.versions()
+
+    def crash(cur, merged, version):
+        raise RuntimeError("crash before commit")
+
+    b1 = _flat_batch(spark, [(1, 1, 111, "Oslo", "u", 100), (9, 9, 9, "Pune", "c", 101)])
+    crashing = ParquetStateSink(spark, state, ["orderid"], n_buckets=4, on_merge=crash)
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        crashing.apply_batch(b1, 1)
+    assert os.listdir(os.path.join(state, f"v{versions[-1] + 1}")), "state was written"
+    assert sink.versions() == versions
+    assert sorted(tuple(r) for r in sink.current().collect()) == before
+
+    ParquetStateSink(spark, state, ["orderid"], n_buckets=4).apply_batch(b1, 1)
+    assert sink.versions() == versions + [versions[-1] + 1]
+    got = {r["orderid"]: r["amount"] for r in sink.current().collect()}
+    assert got == {**{k: k for k in range(1, 9)}, 1: 111, 9: 9}
+
+    root = _tmp("crash_merge_")
+    merge = MergeStateSink(spark, root, ["orderid"])
+    merge.apply_batch(b0, 0)
+    b1.write.parquet(os.path.join(root, "v1"))  # written, never committed
+    assert merge.at_version(1) is None
+    assert merge.at_version(0).count() == merge.current().count() == 8
+
+
 DLQ_FLAT_SCHEMA = FLAT_SCHEMA + ", raw_value string"
 
 
@@ -687,6 +727,17 @@ def test_sink_contract(spark, kind):
     sink.apply_batch(_flat_batch(spark, [(1, 9, 1, "Pune", "c", 40)]), 3)
     got = {r["orderid"]: r["city"] for r in sink.current().collect()}
     assert got == {1: "Pune", 2: "Oslo"}
+    # a stream restarted on a fresh checkpoint numbers its batches from
+    # 0 again, and its batch 1 is redelivered: ids already applied must
+    # not overwrite committed state (key 2 is in none of these batches)
+    for batch_id, row in [
+        (0, (1, 9, 2, "Lima", "u", 50)),
+        (1, (1, 9, 3, "Kyiv", "u", 60)),
+        (1, (1, 9, 3, "Kyiv", "u", 60)),
+    ]:
+        sink.apply_batch(_flat_batch(spark, [row]), batch_id)
+    got = {r["orderid"]: r["city"] for r in sink.current().collect()}
+    assert got == {1: "Kyiv", 2: "Oslo"}
 
 
 def test_merge_sink_through_pipeline_matches_parquet_sink(spark, sf_dir):
@@ -1054,9 +1105,10 @@ def test_agg_view_incremental_matches_reaggregation(spark):
 
 
 def test_agg_view_replay_and_straggler_are_noops(spark):
-    """The two at-least-once hazards: (a) a replayed batch_id must not
+    """The at-least-once hazards: (a) a replayed batch_id must not
     double-apply its delta; (b) a lower-lsn straggler for a deleted key
-    must neither resurrect the key nor perturb the view."""
+    must neither resurrect the key nor perturb the view; (c) a batch id
+    repeated by a restarted stream is applied, not skipped."""
     from kafka_data_explorer_cdc_spark.streaming.matview import AggViewSink
 
     root = _tmp("mv_state2_")
@@ -1082,12 +1134,27 @@ def test_agg_view_replay_and_straggler_are_noops(spark):
            for r in sink.view().collect()}
     assert got == want
     assert sink.current().filter(F.col("orderid") == 2).count() == 0
+    # (c) a stream restarted on a fresh checkpoint repeats batch id 0,
+    # this time with a new key: its delta must land in the view
+    sink.apply_batch(_flat_changes(spark, [(3, 30, 70, "C", "c", 40)]), 0)
+    got = {r["city"]: (r["n_rows"], float(r["sum_value"]))
+           for r in sink.view().collect()}
+    reagg = {
+        r["city"]: (r["n"], float(r["s"]))
+        for r in sink.current().groupBy("city")
+        .agg(F.count("*").alias("n"),
+             F.sum(F.col("amount").cast("decimal(18,2)")).cast("double").alias("s"))
+        .collect()
+    }
+    assert got == reagg == {"A": (1, 100.0), "C": (1, 70.0)}
 
 
 def test_change_feed_types_counts_and_compaction(spark):
     """ChangeFeedSink: per-commit change rows carry the right types and
-    images, compaction reproduces current(), and a replayed batch adds
-    nothing to the feed."""
+    images, compaction reproduces current(), a replayed batch adds
+    nothing to the feed, a batch id repeated by a restarted stream is
+    not skipped, and rows a crash stranded before the commit stay
+    unread."""
     from kafka_data_explorer_cdc_spark.streaming.changefeed import ChangeFeedSink
 
     root = _tmp("cf_state_")
@@ -1129,6 +1196,28 @@ def test_change_feed_types_counts_and_compaction(spark):
     assert len(sink.feed().collect()) == len(feed)
     # cursor read: only commit 1's rows
     assert len(sink.feed(since_version=0).collect()) == 4
+    # a stream restarted on a fresh checkpoint repeats batch id 0: its
+    # insert reaches the feed, and the feed still compacts to the state
+    sink.apply_batch(_flat_changes(spark, [(5, 50, 10, "B", "c", 20)]), 0)
+    got = {(r["orderid"], r["amount"], r["city"]) for r in sink.compact().collect()}
+    want = {(r["orderid"], r["amount"], r["city"]) for r in sink.current().collect()}
+    assert got == want == {(1, 100, "A"), (2, 60, "C"), (4, 80, "A"), (5, 10, "B")}
+    # a crash after the feed write and before the state commit strands
+    # that version's feed rows; a next commit that merges nothing (its
+    # only row is keyless) must not make them readable
+    emit = sink.inner.on_merge
+
+    def crash(*args):
+        emit(*args)
+        raise RuntimeError("crash before commit")
+
+    sink.inner.on_merge = crash
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        sink.apply_batch(_flat_changes(spark, [(6, 60, 1, "D", "c", 30)]), 1)
+    sink.inner.on_merge = emit
+    sink.apply_batch(_flat_changes(spark, [(None, None, None, None, "c", 31)]), 2)
+    got = {(r["orderid"], r["amount"], r["city"]) for r in sink.compact().collect()}
+    assert got == want
 
 
 def test_custom_envelope_source_batch_and_stream(spark):
