@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from functools import reduce
+from typing import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -53,6 +56,58 @@ SQL_DISC_PRICE = (
     "CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1 - l_discount AS DECIMAL(12,2))"
 )
 SQL_CHARGE = SQL_DISC_PRICE + " * CAST(1 + l_tax AS DECIMAL(12,2))"
+
+
+def set_gate(
+    cols: list[str],
+    ref: DataFrame,
+    *,
+    same: Sequence[tuple[DataFrame, int]] = (),
+    recall: Sequence[tuple[DataFrame, float, int]] = (),
+) -> DataFrame:
+    """``(probe_id long, ok boolean)`` rows comparing frames with
+    ``ref`` as sets on ``cols``, one row per probe.
+
+    - ``same=[(frame, probe_id)]``: ok when ``frame`` and ``ref`` hold
+      the same set (no group on one side only).
+    - ``recall=[(frame, bound, probe_id)]``: ok when
+      ``|frame ∩ ref| >= bound * |ref|``.
+
+    Every side is tagged with its own bit (``ref`` 1, the i-th frame
+    after it ``1 << i``) and the union is aggregated once:
+    ``groupBy(cols)`` ORs the bits, then one global aggregate counts
+    each probe's groups. Each input is read once, through one exchange
+    and no join, so nothing needs a persist or a broadcast.
+
+    Each side is a SET on ``cols``, so a duplicated row changes no
+    answer. Every recall caller passes top-k or pair lists that are
+    unique on ``cols``, so its distinct-group counts equal row counts.
+    NULLs compare equal in ``groupBy`` (a NULL key present on both
+    sides matches), unlike an equi-join anti-join."""
+    sides = [ref] + [f for f, _ in same] + [f for f, _, _ in recall]
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            s.select(*cols, F.lit(1 << i).cast("long").alias("__tag"))
+            for i, s in enumerate(sides)
+        ],
+    )
+    groups = tagged.groupBy(*cols).agg(F.bit_or("__tag").alias("__m"))
+
+    def has(i: int) -> Column:
+        return F.col("__m").bitwiseAND(1 << i) != 0
+
+    probes = [(pid, F.count_if(has(0) != has(i)) == 0)
+              for i, (_, pid) in enumerate(same, start=1)]
+    probes += [
+        (pid, F.count_if(has(0) & has(i)) >= F.count_if(has(0)) * bound)
+        for i, (_, bound, pid) in enumerate(recall, start=1 + len(same))
+    ]
+    rows = F.array(*[
+        F.struct(F.lit(pid).cast("long").alias("probe_id"), ok.alias("ok"))
+        for pid, ok in probes
+    ])
+    return groups.agg(rows.alias("__p")).select(F.inline("__p"))
 
 
 def welch_from_power_sums(df):

@@ -28,7 +28,7 @@ from ..operators import dedup as D
 from ..operators import multimodal as MM
 from ..operators import similarity as S
 from ..operators.text import DUCKDB_POLY_HASH, LANG_STOPWORDS, POLY_MOD, poly_hash
-from .helpers import dsum
+from .helpers import dsum, set_gate
 from .registry import REGISTRY, query
 
 # ---------------------------------------------------------------------------
@@ -592,30 +592,14 @@ def d06_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.least("id", "s_id").alias("id1"),
             F.greatest("id", "s_id").alias("id2"),
         )
-        .distinct()
     )
     uncapped = D.simhash_near_pairs(fps, max_hamming=3, max_bucket=None)
     in_sample = (F.col("id1") % 5 == 0) | (F.col("id2") % 5 == 0)
     organic = ~((F.col("id1") >= 1_000_000) | (F.col("id2") >= 1_000_000))
-    # both sides of the symmetric anti-join pair are consumed twice:
-    # unpersisted, the whole uncapped chunk-join pipeline (and the
-    # brute hamming block) executed once per consumer (guide §2.4).
-    # The frames are tiny pair lists — broadcast the anti-join right
-    # sides so the set comparison needs no exchange (guide §3.1).
-    lsh_side = (
-        uncapped.select("id1", "id2")
-        .filter(in_sample & organic)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    lsh_side = uncapped.filter(in_sample & organic)
+    return planted_ok.unionByName(
+        set_gate(["id1", "id2"], brute, same=[(lsh_side, -1)])
     )
-    brute = brute.persist(StorageLevel.MEMORY_AND_DISK)
-    missing = brute.join(F.broadcast(lsh_side), ["id1", "id2"], "left_anti")
-    extra = lsh_side.join(F.broadcast(brute), ["id1", "id2"], "left_anti")
-    lossless_ok = (
-        missing.unionByName(extra)
-        .agg((F.count("*") == 0).alias("ok"))
-        .select(F.lit(-1).cast("long").alias("probe_id"), "ok")
-    )
-    return planted_ok.unionByName(lossless_ok)
 
 
 _D20_CC_ORACLE = (
@@ -745,21 +729,19 @@ def _twin_rank1_ok(queries: DataFrame, topk: DataFrame) -> DataFrame:
     )
 
 
-def _recall_row(
-    ann: DataFrame, brute: DataFrame, bound: float, probe_id: int
-) -> DataFrame:
-    """One (probe_id, ok) row: |ann ∩ brute| / |brute| >= bound."""
-    hits = ann.select("q_id", "c_id").join(
-        brute.select("q_id", "c_id"), ["q_id", "c_id"], "left_semi"
-    )
-    total = brute.select(F.count("*").alias("n"))
+def _twin_hits_ok(topk: DataFrame, probe_id: int) -> DataFrame:
+    """One (probe_id, ok) row: >= 15 of the 20 planted twins come back
+    at rank 1 with cosine ~1. Quantized scans (PQ, IVF-PQ) make each
+    twin's hit likely but not certain, so the gate bounds the count
+    instead of checking every twin (``_twin_rank1_ok``)."""
     return (
-        hits.agg(F.count("*").alias("h"))
-        .crossJoin(total)
-        .select(
-            F.lit(probe_id).cast("long").alias("probe_id"),
-            (F.col("h") >= F.col("n") * bound).alias("ok"),
+        topk.filter(
+            (F.col("rank") == 1)
+            & (F.col("c_id") == F.col("q_id") + 1_000_000)
+            & (F.col("cosine") >= 0.999999)
         )
+        .agg((F.count("*") >= 15).alias("ok"))
+        .select(F.lit(probe_id).cast("long").alias("probe_id"), "ok")
     )
 
 
@@ -845,7 +827,7 @@ def d07x_lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     brute = S.brute_force_cosine_topk(corpus, queries, k=5)
     return _twin_rank1_ok(queries, ann).unionByName(
-        _recall_row(ann, brute, 0.3, -1)
+        set_gate(["q_id", "c_id"], brute, recall=[(ann, 0.3, -1)])
     )
 
 
@@ -1026,31 +1008,14 @@ def d07y_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = S.ivf_cosine_topk(
         corpus, queries, k=5, n_cells=16, nprobe=8, centroids=C, cells=cells
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    brute = S.brute_force_cosine_topk(corpus, queries, k=5).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    # persisted: both symmetric anti-joins consume it — unpersisted,
-    # the nprobe=16 probe executed twice (guide §2.4); the k x |q|
-    # outputs are tiny, so the anti-join right sides broadcast
-    # (guide §3.1 — no exchange for the set comparison)
+    brute = S.brute_force_cosine_topk(corpus, queries, k=5)
     full = S.ivf_cosine_topk(
         corpus, queries, k=5, n_cells=16, nprobe=16, centroids=C, cells=cells
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    missing = brute.select("q_id", "c_id").join(
-        F.broadcast(full.select("q_id", "c_id")), ["q_id", "c_id"], "left_anti"
     )
-    extra = full.select("q_id", "c_id").join(
-        F.broadcast(brute.select("q_id", "c_id")), ["q_id", "c_id"], "left_anti"
-    )
-    exact_knob = (
-        missing.unionByName(extra)
-        .agg((F.count("*") == 0).alias("ok"))
-        .select(F.lit(-2).cast("long").alias("probe_id"), "ok")
-    )
-    return (
-        _twin_rank1_ok(queries, ann)
-        .unionByName(_recall_row(ann, brute, 0.5, -1))
-        .unionByName(exact_knob)
+    return _twin_rank1_ok(queries, ann).unionByName(
+        set_gate(
+            ["q_id", "c_id"], brute, same=[(full, -2)], recall=[(ann, 0.5, -1)]
+        )
     )
 
 
@@ -1134,36 +1099,17 @@ def d07v_pq_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = S.pq_cosine_topk(
         corpus, queries, k=5, rerank=20, codebooks=B
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    brute = S.brute_force_cosine_topk(corpus, queries, k=5).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    twin_hits = (
-        ann.filter(
-            (F.col("rank") == 1)
-            & (F.col("c_id") == F.col("q_id") + 1_000_000)
-            & (F.col("cosine") >= 0.999999)
-        )
-        .agg((F.count("*") >= 15).alias("ok"))
-        .select(F.lit(-1).cast("long").alias("probe_id"), "ok")
-    )
-    recall = _recall_row(ann, brute, 0.5, -2)
+    brute = S.brute_force_cosine_topk(corpus, queries, k=5)
     # exact-degenerate: rerank larger than any test corpus (the knob is
     # a cap, not an allocation — oversizing costs nothing)
     full = S.pq_cosine_topk(
         corpus, queries, k=5, rerank=n_corpus, codebooks=B
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # two anti-join consumers
-    missing = brute.select("q_id", "c_id").join(
-        F.broadcast(full.select("q_id", "c_id")), ["q_id", "c_id"], "left_anti"
     )
-    extra = full.select("q_id", "c_id").join(
-        F.broadcast(brute.select("q_id", "c_id")), ["q_id", "c_id"], "left_anti"
+    return _twin_hits_ok(ann, -1).unionByName(
+        set_gate(
+            ["q_id", "c_id"], brute, same=[(full, -3)], recall=[(ann, 0.5, -2)]
+        )
     )
-    degenerate = (
-        missing.unionByName(extra)
-        .agg((F.count("*") == 0).alias("ok"))
-        .select(F.lit(-3).cast("long").alias("probe_id"), "ok")
-    )
-    return twin_hits.unionByName(recall).unionByName(degenerate)
 
 
 @query("d07u_pq_codes_topk", oracle=_D07V_ORACLE, tags=("llm", "similarity", "approx"))
@@ -1195,33 +1141,13 @@ def d07u_pq_codes_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, queries, k=5, rerank=20, codebooks=B
     ).persist(StorageLevel.MEMORY_AND_DISK)
     brute = S.brute_force_cosine_topk(corpus, queries, k=5)
-    # persisted: the path-equivalence pair consumes it twice —
-    # unpersisted, the whole inline ADC pipeline executed per consumer
-    inline = S.pq_cosine_topk(
-        corpus, queries, k=5, rerank=20, codebooks=B
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    twin_hits = (
-        ann.filter(
-            (F.col("rank") == 1)
-            & (F.col("c_id") == F.col("q_id") + 1_000_000)
-            & (F.col("cosine") >= 0.999999)
-        )
-        .agg((F.count("*") >= 15).alias("ok"))
-        .select(F.lit(-1).cast("long").alias("probe_id"), "ok")
+    inline = S.pq_cosine_topk(corpus, queries, k=5, rerank=20, codebooks=B)
+    cols = ["q_id", "c_id"]
+    return (
+        _twin_hits_ok(ann, -1)
+        .unionByName(set_gate(cols, brute, recall=[(ann, 0.5, -2)]))
+        .unionByName(set_gate(cols, inline, same=[(ann, -3)]))
     )
-    recall = _recall_row(ann, brute, 0.5, -2)
-    missing = inline.select("q_id", "c_id").join(
-        F.broadcast(ann.select("q_id", "c_id")), ["q_id", "c_id"], "left_anti"
-    )
-    extra = ann.select("q_id", "c_id").join(
-        F.broadcast(inline.select("q_id", "c_id")), ["q_id", "c_id"], "left_anti"
-    )
-    equiv = (
-        missing.unionByName(extra)
-        .agg((F.count("*") == 0).alias("ok"))
-        .select(F.lit(-3).cast("long").alias("probe_id"), "ok")
-    )
-    return twin_hits.unionByName(recall).unionByName(equiv)
 
 
 @query("d07t_ivfpq_topk", oracle=_D07V_ORACLE, tags=("llm", "similarity", "approx"))
@@ -1259,18 +1185,11 @@ def d07t_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, queries, k=5, n_cells=16, nprobe=8, rerank=20
     ).persist(StorageLevel.MEMORY_AND_DISK)
     brute = S.brute_force_cosine_topk(corpus, queries, k=5)
-    twin_hits = (
-        ann.filter(
-            (F.col("rank") == 1)
-            & (F.col("c_id") == F.col("q_id") + 1_000_000)
-            & (F.col("cosine") >= 0.999999)
-        )
-        .agg((F.count("*") >= 15).alias("ok"))
-        .select(F.lit(-1).cast("long").alias("probe_id"), "ok")
+    return (
+        _twin_hits_ok(ann, -1)
+        .unionByName(set_gate(["q_id", "c_id"], brute, recall=[(ann, 0.35, -2)]))
+        .unionByName(_exact_score_row(ann, corpus, queries, -3))
     )
-    recall = _recall_row(ann, brute, 0.35, -2)
-    exact_scores = _exact_score_row(ann, corpus, queries, -3)
-    return twin_hits.unionByName(recall).unionByName(exact_scores)
 
 
 @query(
@@ -2518,17 +2437,9 @@ def d28_cms_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
         CMS.cms_build(evens, "o_custkey", width, depth),
         CMS.cms_build(odds, "o_custkey", width, depth),
     )
-    diff = (
-        sketch.withColumnRenamed("cnt", "a")
-        .join(merged.withColumnRenamed("cnt", "b"), ["d", "bucket"], "full")
-        .filter(
-            F.coalesce(F.col("a"), F.lit(0))
-            != F.coalesce(F.col("b"), F.lit(0))
-        )
-    )
-    linear = diff.agg((F.count("*") == 0).alias("ok")).select(
-        F.lit(-3).cast("long").alias("probe_id"), "ok"
-    )
+    # every cell on either side counts >= 1 row (no weight column), so
+    # cell-for-cell equality is set equality on (d, bucket, cnt)
+    linear = set_gate(["d", "bucket", "cnt"], sketch, same=[(merged, -3)])
     return lower.unionByName(upper).unionByName(linear)
 
 
@@ -2776,7 +2687,7 @@ def d34_sq8_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     brute = S.brute_force_cosine_topk(corpus, queries, k=5)
     return _twin_rank1_ok(queries, ann).unionByName(
-        _recall_row(ann, brute, 0.6, -1)
+        set_gate(["q_id", "c_id"], brute, recall=[(ann, 0.6, -1)])
     )
 
 
@@ -7062,32 +6973,18 @@ def d89_hard_negative_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     C, cells = S.ivf_build(em, n_cells=16, label_col="label")
     ann = S.hard_negative_ivf_topk(
         em, anchors, k=3, n_cells=16, nprobe=8, centroids=C, cells=cells
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    exact = S.hard_negative_topk(em, anchors, k=3).persist(
-        StorageLevel.MEMORY_AND_DISK
     )
+    exact = S.hard_negative_topk(em, anchors, k=3)
     full = S.hard_negative_ivf_topk(
         em, anchors, k=3, n_cells=16, nprobe=16, centroids=C, cells=cells
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # two anti-join consumers
-    missing = exact.select("q_id", "c_id").join(
-        F.broadcast(full.select("q_id", "c_id")), ["q_id", "c_id"], "left_anti"
     )
-    extra = full.select("q_id", "c_id").join(
-        F.broadcast(exact.select("q_id", "c_id")), ["q_id", "c_id"], "left_anti"
+    out = set_gate(
+        ["q_id", "c_id"], exact, same=[(full, -2)], recall=[(ann, 0.5, -1)]
     )
-    exact_knob = (
-        missing.unionByName(extra)
-        .agg((F.count("*") == 0).alias("ok"))
-        .select(F.lit(-2).cast("long").alias("probe_id"), "ok")
-    )
-    out = _recall_row(ann, exact, 0.5, -1).unionByName(exact_knob)
-    # bounded 2-row collect, then release the gate caches (round-10
-    # ADVICE d92x pattern: repeated bench/driver invocations must not
-    # accumulate session-lifetime MEMORY_AND_DISK entries)
+    # bounded 2-row collect, then release the IVF cell cache (repeated
+    # invocations must not accumulate session-lifetime MEMORY_AND_DISK
+    # entries)
     rows = out.collect()
-    ann.unpersist()
-    exact.unpersist()
-    full.unpersist()
     cells.unpersist()
     return spark.createDataFrame(rows, out.schema)
 
@@ -7119,6 +7016,8 @@ def d90_bitext_margin_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     em = load(spark, sf_dir, "embeddings")
     src = em.filter(F.col("label") == 0)
     tgt = em.filter(F.col("label") == 1)
+    # read by both gates below (recall and the knob compare on
+    # different columns)
     exact = S.bitext_margin_pairs(src, tgt, k=4, threshold=1.05).persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -7130,38 +7029,22 @@ def d90_bitext_margin_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         src, tgt, k=4, threshold=1.05, ivf=(16, 8),
         ivf_centroids=C, ivf_cells=tcells,
     )
-    hits = probed.select("src_id", "tgt_id").join(
-        exact.select("src_id", "tgt_id"), ["src_id", "tgt_id"], "left_semi"
-    )
-    recall = (
-        hits.agg(F.count("*").alias("h"))
-        .crossJoin(exact.select(F.count("*").alias("n")))
-        .select(
-            F.lit(-1).cast("long").alias("probe_id"),
-            (F.col("h") >= F.col("n") * 0.5).alias("ok"),
-        )
-    )
     full = S.bitext_margin_pairs(
         src, tgt, k=4, threshold=1.05, ivf=(16, 16),
         ivf_centroids=C, ivf_cells=tcells,
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # two anti-join consumers
-    cols = ["src_id", "tgt_id", "cosine", "margin", "mined"]
-    missing = exact.select(cols).join(
-        F.broadcast(full.select(cols)), cols, "left_anti"
     )
-    extra = full.select(cols).join(
-        F.broadcast(exact.select(cols)), cols, "left_anti"
+    out = set_gate(
+        ["src_id", "tgt_id"], exact, recall=[(probed, 0.5, -1)]
+    ).unionByName(
+        set_gate(
+            ["src_id", "tgt_id", "cosine", "margin", "mined"],
+            exact,
+            same=[(full, -2)],
+        )
     )
-    exact_knob = (
-        missing.unionByName(extra)
-        .agg((F.count("*") == 0).alias("ok"))
-        .select(F.lit(-2).cast("long").alias("probe_id"), "ok")
-    )
-    out = recall.unionByName(exact_knob)
     # bounded 2-row collect + cache release (round-10 ADVICE pattern)
     rows = out.collect()
     exact.unpersist()
-    full.unpersist()
     tcells.unpersist()
     return spark.createDataFrame(rows, out.schema)
 
@@ -7231,21 +7114,8 @@ def d91_ivf_index_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rank") <= 5)
         .select("q_id", "c_id", "rank")
     )
-    # NOT persisted/broadcast (unlike the d07y-family gates): both
-    # sides' shuffles are deduped by ReusedExchange inside this ONE
-    # lazy plan, and a measured A/B of the persist+broadcast variant
-    # was wall-flat with +156 bookkeeping tasks (OPTIMIZATION_r14.md)
-    mem = S.ivf_cosine_topk(
-        em, queries, k=5, n_cells=16, nprobe=4
-    ).select("q_id", "c_id", "rank")
-    cols = ["q_id", "c_id", "rank"]
-    missing = mem.join(at_rest, cols, "left_anti")
-    extra = at_rest.join(mem, cols, "left_anti")
-    return (
-        missing.unionByName(extra)
-        .agg((F.count("*") == 0).alias("ok"))
-        .select(F.lit(-3).cast("long").alias("probe_id"), "ok")
-    )
+    mem = S.ivf_cosine_topk(em, queries, k=5, n_cells=16, nprobe=4)
+    return set_gate(["q_id", "c_id", "rank"], mem, same=[(at_rest, -3)])
 
 
 def _mm10_oracle() -> str:
@@ -7550,13 +7420,7 @@ def d93_ivf_index_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id", "q_vec", F.col("leaf").alias("cell")
         ),
     )
-    cols = ["q_id", "c_id", "rank"]
-    diff = before.join(after, cols, "left_anti").unionByName(
-        after.join(before, cols, "left_anti")
-    )
-    lossless = diff.agg((F.count("*") == 0).alias("ok")).select(
-        F.lit(-1).cast("long").alias("probe_id"), "ok"
-    )
+    lossless = set_gate(["q_id", "c_id", "rank"], before, same=[(after, -1)])
 
     base_hist = base_idx.groupBy(F.col("cell").alias("parent")).agg(
         F.count("*").alias("n_before")
@@ -7706,6 +7570,8 @@ def d92x_colbert_maxsim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
       pruning trades recall, never correctness."""
     em = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = em.filter(F.col("vec_id") < _D92_Q)
+    # read by both gates below (recall and the knob compare on
+    # different columns)
     exact = _maxsim_rerank(
         em,
         queries,
@@ -7722,17 +7588,6 @@ def d92x_colbert_maxsim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             centroids=C, cells=cells,
         ).select("q_id", "c_id"),
     )
-    hits = probed.select("q_id", "c_id").join(
-        exact.select("q_id", "c_id"), ["q_id", "c_id"], "left_semi"
-    )
-    recall = (
-        hits.agg(F.count("*").alias("h"))
-        .crossJoin(exact.agg(F.count("*").alias("n")))
-        .select(
-            F.lit(-1).cast("long").alias("probe_id"),
-            (F.col("h") >= F.col("n") * 0.5).alias("ok"),
-        )
-    )
     full = _maxsim_rerank(
         em,
         queries,
@@ -7740,27 +7595,15 @@ def d92x_colbert_maxsim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             em, queries, k=_D92_CAND, n_cells=16, nprobe=16,
             centroids=C, cells=cells,
         ).select("q_id", "c_id"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # two anti-join consumers
-    cols = ["q_id", "rank", "c_id"]
-    missing = exact.select(cols).join(
-        F.broadcast(full.select(cols)), cols, "left_anti"
     )
-    extra = full.select(cols).join(
-        F.broadcast(exact.select(cols)), cols, "left_anti"
-    )
-    exact_knob = (
-        missing.unionByName(extra)
-        .agg((F.count("*") == 0).alias("ok"))
-        .select(F.lit(-2).cast("long").alias("probe_id"), "ok")
-    )
-    out = recall.unionByName(exact_knob)
+    out = set_gate(
+        ["q_id", "c_id"], exact, recall=[(probed, 0.5, -1)]
+    ).unionByName(set_gate(["q_id", "rank", "c_id"], exact, same=[(full, -2)]))
     # Materialize the two gate rows (bounded collect), then release
-    # the MEMORY_AND_DISK rerank cache so repeated bench/driver
-    # invocations don't accumulate session-lifetime cache entries
-    # (round-10 ADVICE).
+    # the MEMORY_AND_DISK caches so repeated invocations don't
+    # accumulate session-lifetime cache entries.
     rows = out.collect()
     exact.unpersist()
-    full.unpersist()
     cells.unpersist()
     return spark.createDataFrame(rows, out.schema)
 

@@ -25,7 +25,7 @@ from ..streaming.windows import (
     run_to_memory,
     streaming_dedup,
 )
-from .helpers import SCD2_MERGE_ORACLE
+from .helpers import SCD2_MERGE_ORACLE, set_gate
 from .registry import query
 
 
@@ -1750,13 +1750,7 @@ def s49_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_idx = em.select(
         "vec_id", one(F.col("embedding")).getItem(0).alias("cell")
     )
-    missing = batch_idx.join(streamed, ["vec_id", "cell"], "left_anti")
-    extra = streamed.join(batch_idx, ["vec_id", "cell"], "left_anti")
-    same = (
-        missing.unionByName(extra)
-        .agg((F.count("*") == 0).alias("ok"))
-        .select(F.lit(-1).cast("long").alias("probe_id"), "ok")
-    )
+    same = set_gate(["vec_id", "cell"], batch_idx, same=[(streamed, -1)])
     counts = (
         streamed.agg(F.count("*").alias("a"))
         .crossJoin(em.agg(F.count("*").alias("b")))

@@ -5,8 +5,10 @@ repin the runtime confs correctness depends on."""
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as e
 
@@ -48,13 +50,13 @@ def test_coverage_freshness_table_not_stale():
     import re
 
     checked: set[str] = set()
-    for p in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for p in glob.glob(str(REPO / "CORRECTNESS_r*.json")):
         checked.update(json.load(open(p)).keys())
     from kafka_data_explorer_cdc_spark.queries import REGISTRY
 
     ever = sum(1 for n in REGISTRY if n in checked)
     never = len(REGISTRY) - ever
-    doc = open("/root/repo/COVERAGE.md").read()
+    doc = open(REPO / "COVERAGE.md").read()
     m = re.search(
         r"Registry entries: (\d+); ever driver-checked: (\d+); never: (\d+)",
         doc,
@@ -78,7 +80,7 @@ def test_survey_declares_every_registry_entry():
 
     from kafka_data_explorer_cdc_spark.queries import REGISTRY
 
-    doc = open("/root/repo/SURVEY.md").read()
+    doc = open(REPO / "SURVEY.md").read()
     missing = []
     for name in REGISTRY:
         short = name.split("_", 1)[0]
@@ -100,7 +102,7 @@ def test_rotation_queue_names_exist():
     from kafka_data_explorer_cdc_spark.queries import REGISTRY
 
     src = open(
-        "/root/repo/kafka_data_explorer_cdc_spark/queries/__init__.py"
+        REPO / "kafka_data_explorer_cdc_spark" / "queries" / "__init__.py"
     ).read()
     comment = "\n".join(
         ln for ln in src.splitlines() if ln.lstrip().startswith("#")
@@ -122,7 +124,7 @@ def test_rotation_window_covers_never_checked():
     from kafka_data_explorer_cdc_spark.queries import REGISTRY
 
     checked: set[str] = set()
-    for p in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for p in glob.glob(str(REPO / "CORRECTNESS_r*.json")):
         checked.update(json.load(open(p)).keys())
     reg = list(REGISTRY)
     never = [n for n in reg if n not in checked]
@@ -146,7 +148,7 @@ def test_rotation_check_parses_two_digit_rounds(tmp_path):
     import json
 
     spec = importlib.util.spec_from_file_location(
-        "rotation_check", "/root/repo/tools/rotation_check.py"
+        "rotation_check", REPO / "tools" / "rotation_check.py"
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
