@@ -17,6 +17,13 @@ append keyed on the micro-batch id:
 - readers see at most one copy of every batch: at-least-once delivery
   x idempotent write = effectively exactly-once.
 
+That guarantee holds within ONE checkpoint. Partitions are keyed by
+Structured Streaming's batch id, and a fresh checkpoint restarts the
+ids at 0, so its batch N replaces the earlier run's ``batch_id=N``
+instead of adding to it (batches of 10 and 10 rows, then a restarted
+batch 0 of 3 rows, read back 13 rows, not 23). ``out_dir`` must keep
+the checkpoint it was written with.
+
 Scale shape: the overwrite touches ONE partition directory per batch
 (dynamic mode never lists or rewrites other batches' directories), and
 the layout composes with b63's small-file compaction downstream. No
@@ -42,6 +49,9 @@ class IdempotentBatchSink:
     Replay safety is testable without a crash harness: calling
     ``sink(df, n)`` twice — even with a partial first write — leaves
     exactly one copy of the final batch (tests/test_streaming.py).
+    Pair ``out_dir`` with one checkpoint for its whole life: a stream
+    restarted on a fresh checkpoint reuses batch ids and overwrites the
+    earlier run's partitions.
     """
 
     def __init__(self, out_dir: str):

