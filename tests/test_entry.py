@@ -73,8 +73,14 @@ def test_driver_order_puts_stalest_checks_first(tmp_path):
     ]
     assert e.driver_order(build, root=str(tmp_path / "none")) == build
 
-    # On this checkout: a permutation of the registry whose 50-entry
-    # head holds nothing fresher than anything after it.
+
+def test_rotation_window_covers_never_checked():
+    """The driver checks only the first 50 entries of queries() per
+    round. On this checkout queries() is a permutation of the registry
+    whose 50-entry head holds nothing fresher than anything after it,
+    so every never-checked entry sits in the window when they fit."""
+    import json
+
     from kafka_data_explorer_cdc_spark.queries import REGISTRY
 
     names = list(e.queries())
@@ -89,6 +95,29 @@ def test_driver_order_puts_stalest_checks_first(tmp_path):
                 rounds[name] = (rnd, rnd if passed else 0)
     fresh = [rounds.get(n, (0, 0))[1] for n in names]
     assert max(fresh[:50]) <= min(fresh[50:])
+    never = [n for n in names if n not in rounds]
+    if len(never) <= 50:
+        assert set(never) <= set(names[:50])
+
+
+def test_rotation_check_parses_two_digit_rounds(tmp_path):
+    """Round numbers compare as numbers: r9 is older than r10 whatever
+    the padding, so a row red in r9 and green in r10 reads as green, and
+    an entry checked only in r10+ never reads as never-checked."""
+    import json
+
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    red = {**ok, "rows_match": False}
+    (tmp_path / "CORRECTNESS_r9.json").write_text(json.dumps(
+        {"old_entry": ok, "both": red}))
+    (tmp_path / "CORRECTNESS_r10.json").write_text(json.dumps(
+        {"new_entry": ok, "both": ok}))
+    (tmp_path / "CORRECTNESS_r12.json").write_text(json.dumps({"newest": ok}))
+
+    build = ["newest", "new_entry", "both", "old_entry", "never"]
+    assert e.driver_order(build, root=str(tmp_path)) == [
+        "never", "old_entry", "new_entry", "both", "newest",
+    ]
 
 
 def test_survey_declares_every_registry_entry():
