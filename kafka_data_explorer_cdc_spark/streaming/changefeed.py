@@ -44,14 +44,15 @@ from .pipeline import CdcStateSink, ParquetStateSink
 
 class ChangeFeedSink(CdcStateSink):
     """:class:`ParquetStateSink` plus a per-commit row-level change
-    feed derived from each micro-batch's merge."""
+    feed derived from each micro-batch's merge. ``n_buckets`` is the
+    state sink's (default: one per core, recorded in the manifest)."""
 
     def __init__(
         self,
         spark: SparkSession,
         state_root: str,
         key_cols: list[str],
-        n_buckets: int = 16,
+        n_buckets: int | None = None,
     ):
         self.spark = spark
         self.key_cols = key_cols

@@ -48,7 +48,8 @@ class AggViewSink(CdcStateSink):
     """Maintains ``SELECT group_col, COUNT(*), SUM(value_col) GROUP BY
     group_col`` over the live CDC state, incrementally, as a derived
     artifact of a :class:`ParquetStateSink` (which remains the source
-    of truth and the replay/idempotence anchor)."""
+    of truth and the replay/idempotence anchor). ``n_buckets`` is the
+    state sink's (default: one per core, recorded in the manifest)."""
 
     def __init__(
         self,
@@ -57,7 +58,7 @@ class AggViewSink(CdcStateSink):
         key_cols: list[str],
         group_col: str,
         value_col: str,
-        n_buckets: int = 16,
+        n_buckets: int | None = None,
     ):
         self.spark = spark
         self.inner = ParquetStateSink(

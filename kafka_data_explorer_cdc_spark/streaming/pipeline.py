@@ -30,7 +30,9 @@ from __future__ import annotations
 import abc
 import json
 import os
+from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -270,9 +272,17 @@ class ParquetStateSink(CdcStateSink):
     rewritten in place, so a crash between write and manifest commit
     leaves the previous state intact.
 
-    Sizing ``n_buckets`` at scale: target bucket ≈ a few hundred MB of
-    state (one executor task), so 100 TB of state → O(10⁵) buckets; a
-    micro-batch touching k distinct keys rewrites ≤ k buckets.
+    **Sizing ``n_buckets``.** ``None`` (the default) means one bucket
+    per core (``defaultParallelism``), fixed at the first commit on an
+    empty root: small micro-batches touch every bucket anyway, and each
+    bucket is one file written and read per batch. Every manifest
+    records ``"n_buckets"``; a sink opened on an existing root hashes
+    with the recorded count, and an explicit ``n_buckets`` that
+    disagrees with it raises ``ValueError`` (rehashing with another
+    count would strand each key's stored row in its old bucket). At
+    scale, target a bucket of a few hundred MB of state (one executor
+    task), so 100 TB of state → O(10⁵) buckets; a micro-batch touching
+    k distinct keys rewrites ≤ k buckets.
 
     **Job shape.** Small micro-batches (the reference seals at 10 kB /
     30 s, ``adx-sink-config.json:5-6``) cost fixed overhead, not data
@@ -280,11 +290,13 @@ class ParquetStateSink(CdcStateSink):
     write whose observed metrics give the touched buckets, the lsn
     high-water mark and the row and dead-letter counts, and which
     materializes the persisted batch), the dead-letter append (only if
-    the batch has bad rows), and the merge write (its shuffle-map job
-    and the write job, with at most one task per core). Each manifest
-    records the stored schema, so bucket reads — the merge,
-    ``current()``, ``at_version()`` — launch no schema-inference job,
-    plus the batch's ``metrics`` (rows in, dead letters, buckets
+    the batch has bad rows; it runs in a thread beside the merge, with
+    the caller's job group, and is joined before the commit, so a
+    failed append commits nothing), and the merge write (its
+    shuffle-map job and the write job, with at most one task per core).
+    Each manifest records the stored schema, so bucket reads — the
+    merge, ``current()``, ``at_version()`` — launch no schema-inference
+    job, plus the batch's ``metrics`` (rows in, dead letters, buckets
     touched).
 
     Malformed envelopes (unparseable JSON, or parseable but keyless /
@@ -313,7 +325,7 @@ class ParquetStateSink(CdcStateSink):
         spark: SparkSession,
         state_root: str,
         key_cols: list[str],
-        n_buckets: int = 16,
+        n_buckets: int | None = None,
         tombstone_gc_lsn_lag: int | None = None,
         on_merge=None,
     ):
@@ -345,9 +357,9 @@ class ParquetStateSink(CdcStateSink):
         except Exception:
             return None
 
-    def _bucket_col(self) -> Column:
+    def _bucket_col(self, n_buckets: int) -> Column:
         return F.pmod(
-            F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(self.n_buckets)
+            F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(n_buckets)
         )
 
     def _manifest(self, version: int | None = None) -> dict | None:
@@ -373,6 +385,21 @@ class ParquetStateSink(CdcStateSink):
                 f"incompatible state format at {path}: manifest has no "
                 "'schema' key (written by a sink version that did not "
                 "record the state schema); re-ingest into a fresh state_root"
+            )
+        if "n_buckets" not in m:
+            # keys are hashed with the recorded count; without it a
+            # guessed count would send a key's update to another bucket
+            # and leave its stored row behind — fail loud instead
+            raise ValueError(
+                f"incompatible state format at {path}: manifest has no "
+                "'n_buckets' key (written by a sink version that did not "
+                "record its bucket count); re-ingest into a fresh state_root"
+            )
+        if self.n_buckets is not None and self.n_buckets != m["n_buckets"]:
+            raise ValueError(
+                f"state at {self.root} is hashed into {m['n_buckets']} "
+                f"buckets, not n_buckets={self.n_buckets}; open it with "
+                "n_buckets=None to use the recorded count"
             )
         return m
 
@@ -483,7 +510,12 @@ class ParquetStateSink(CdcStateSink):
         # batch for the actions below. The bucket set is bounded by
         # n_buckets; bad rows contribute only to the dead-letter count.
         prev = self._manifest()
-        version = self.log.next_version()
+        version = 0 if prev is None else prev["version"] + 1
+        n_buckets = (
+            prev["n_buckets"]
+            if prev
+            else self.n_buckets or self.spark.sparkContext.defaultParallelism
+        )
         bucket_versions: dict[str, int] = dict(prev["buckets"]) if prev else {}
         max_lsn: int | None = prev.get("max_lsn") if prev else None
         schema: dict | None = prev["schema"] if prev else None
@@ -491,7 +523,7 @@ class ParquetStateSink(CdcStateSink):
         probe = Observation()
         batch.observe(
             probe,
-            F.collect_set(F.when(good, self._bucket_col())).alias("buckets"),
+            F.collect_set(F.when(good, self._bucket_col(n_buckets))).alias("buckets"),
             F.max(F.when(good, F.col("lsn"))).alias("max_lsn"),
             F.count_if(bad_cond).alias("dead_letters"),
             F.count(F.lit(1)).alias("rows_in"),
@@ -503,85 +535,39 @@ class ParquetStateSink(CdcStateSink):
         ):
             max_lsn = int(stats["max_lsn"])
 
+        join_dead_letters = None
         if has_raw:
             if stats["dead_letters"]:
-                # append is idempotent-enough for a DLQ (duplicates on
-                # batch replay are acceptable there; the MERGE path
-                # stays exact)
-                batch.filter(bad_cond).select(
+                # the append needs nothing from the merge, so it runs
+                # beside it and is joined before the commit: a failed
+                # append commits nothing. Append is idempotent-enough
+                # for a DLQ (duplicates on batch replay are acceptable
+                # there; the MERGE path stays exact)
+                dead = batch.filter(bad_cond).select(
                     F.lit(batch_id).alias("batch_id"), "raw_value"
-                ).write.mode("append").parquet(self.dead_letter_dir())
+                )
+                join_dead_letters = _beside(
+                    lambda: dead.write.mode("append").parquet(self.dead_letter_dir())
+                )
             batch = batch.filter(good).drop("raw_value")
         else:
             batch = batch.filter(good)
 
-        if touched:
-            cur = self._read_buckets(bucket_versions, schema, only=touched)
-            # the on_merge consumers (change feed, agg view) re-read the
-            # pre-merge rows — persist cur so state parquet is scanned
-            # once per micro-batch, not once per consumer
-            if self.on_merge is not None and cur is not None:
-                cur = cur.persist()
-            # ONE exchange per merge: union the current buckets with the
-            # raw batch, cluster by __bucket (a pure function of the key,
-            # so bucket-clustering IS key-clustering), and run the lsn
-            # arbitration window partitioned by (__bucket, key). The
-            # window reuses the bucket exchange and its sort starts with
-            # __bucket, so the bucket-partitioned write adds neither a
-            # repartition nor a sort and still writes one file per
-            # bucket. The exchange has at most one partition per core:
-            # more would only queue tasks (several of them empty, from
-            # hash collisions) behind the cores. Winners are those of
-            # apply_cdc_batch: row_number picks each key's (lsn desc,
-            # op desc) max, and (key, lsn, op) ties only arise from
-            # at-least-once redelivery where the rows are bit-identical
-            # (cdc/apply.py latest_state contract).
-            base = (
-                batch
-                if cur is None
-                else cur.unionByName(batch, allowMissingColumns=True)
-            )
-            w = Window.partitionBy("__bucket", *self.key_cols).orderBy(
-                F.col("lsn").desc(), F.col("op").desc()
-            )
-            n_parts = min(len(touched), self.spark.sparkContext.defaultParallelism)
-            merged = (
-                base.withColumn("__bucket", self._bucket_col())
-                .repartition(n_parts, F.col("__bucket"))
-                .withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .drop("__rn")
-            )
-            if self.tombstone_gc_lsn_lag is not None and max_lsn is not None:
-                horizon = max_lsn - self.tombstone_gc_lsn_lag
-                merged = merged.filter(
-                    (F.col("op") != "d") | (F.col("lsn") >= F.lit(horizon))
+        try:
+            if touched:
+                schema = self._merge(
+                    batch, bucket_versions, schema, touched, n_buckets, max_lsn, version
                 )
-            # the stored schema, widened by the union above when the
-            # batch carries new columns (DDL evolution)
-            schema = merged.drop("__bucket").schema.jsonValue()
-            if self.on_merge is not None:
-                merged = merged.persist()
-            try:
-                # overwrite: a v{version}/ already there was stranded by
-                # a crash before its commit — no manifest references it
-                out = os.path.join(self.root, f"v{version}")
-                merged.write.mode("overwrite").partitionBy(
-                    "__bucket"
-                ).parquet(out)
-                if self.on_merge is not None:
-                    self.on_merge(cur, merged.drop("__bucket"), version)
-            finally:
-                if self.on_merge is not None:
-                    merged.unpersist()
-                    if cur is not None:
-                        cur.unpersist()
-            for b in touched:
-                bucket_versions[str(b)] = version
+                for b in touched:
+                    bucket_versions[str(b)] = version
+        finally:
+            if join_dead_letters is not None:
+                join_dead_letters()
 
         self.log.commit({
             "version": version,
             "buckets": bucket_versions,
+            "n_buckets": n_buckets,
             "max_lsn": max_lsn,
             "schema": schema,
             "metrics": {
@@ -590,6 +576,102 @@ class ParquetStateSink(CdcStateSink):
                 "buckets_touched": len(touched),
             },
         })
+
+    def _merge(
+        self,
+        batch: DataFrame,
+        bucket_versions: dict[str, int],
+        schema: dict | None,
+        touched: set[int],
+        n_buckets: int,
+        max_lsn: int | None,
+        version: int,
+    ) -> dict:
+        """Merge the good rows of ``batch`` into the ``touched`` buckets
+        and write them under ``v{version}/``; returns the stored schema."""
+        cur = self._read_buckets(bucket_versions, schema, only=touched)
+        # the on_merge consumers (change feed, agg view) re-read the
+        # pre-merge rows — persist cur so state parquet is scanned
+        # once per micro-batch, not once per consumer
+        if self.on_merge is not None and cur is not None:
+            cur = cur.persist()
+        # ONE exchange per merge: union the current buckets with the
+        # raw batch, cluster by __bucket (a pure function of the key,
+        # so bucket-clustering IS key-clustering), and run the lsn
+        # arbitration window partitioned by (__bucket, key). The
+        # window reuses the bucket exchange and its sort starts with
+        # __bucket, so the bucket-partitioned write adds neither a
+        # repartition nor a sort and still writes one file per
+        # bucket. The exchange has at most one partition per core:
+        # more would only queue tasks (several of them empty, from
+        # hash collisions) behind the cores. Winners are those of
+        # apply_cdc_batch: row_number picks each key's (lsn desc,
+        # op desc) max, and (key, lsn, op) ties only arise from
+        # at-least-once redelivery where the rows are bit-identical
+        # (cdc/apply.py latest_state contract).
+        base = (
+            batch
+            if cur is None
+            else cur.unionByName(batch, allowMissingColumns=True)
+        )
+        w = Window.partitionBy("__bucket", *self.key_cols).orderBy(
+            F.col("lsn").desc(), F.col("op").desc()
+        )
+        n_parts = min(len(touched), self.spark.sparkContext.defaultParallelism)
+        merged = (
+            base.withColumn("__bucket", self._bucket_col(n_buckets))
+            .repartition(n_parts, F.col("__bucket"))
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
+        if self.tombstone_gc_lsn_lag is not None and max_lsn is not None:
+            horizon = max_lsn - self.tombstone_gc_lsn_lag
+            merged = merged.filter(
+                (F.col("op") != "d") | (F.col("lsn") >= F.lit(horizon))
+            )
+        # the stored schema, widened by the union above when the
+        # batch carries new columns (DDL evolution)
+        schema = merged.drop("__bucket").schema.jsonValue()
+        if self.on_merge is not None:
+            merged = merged.persist()
+        try:
+            # overwrite: a v{version}/ already there was stranded by
+            # a crash before its commit — no manifest references it
+            out = os.path.join(self.root, f"v{version}")
+            merged.write.mode("overwrite").partitionBy("__bucket").parquet(out)
+            if self.on_merge is not None:
+                self.on_merge(cur, merged.drop("__bucket"), version)
+        finally:
+            if self.on_merge is not None:
+                merged.unpersist()
+                if cur is not None:
+                    cur.unpersist()
+        return schema
+
+
+def _beside(fn: Callable[[], None]) -> Callable[[], None]:
+    """Start ``fn`` in a thread that inherits the caller's Spark local
+    properties (job group, the streaming query's properties), so its
+    jobs are attributed to the caller; return a join that waits for it
+    and re-raises its error."""
+    errors: list[BaseException] = []
+
+    def run() -> None:
+        try:
+            fn()
+        except BaseException as e:
+            errors.append(e)
+
+    t = InheritableThread(run)
+    t.start()
+
+    def join() -> None:
+        t.join()
+        if errors:
+            raise errors[0]
+
+    return join
 
 
 class DeltaMergeSink(CdcStateSink):

@@ -321,9 +321,11 @@ def test_state_sink_merge_is_incremental(spark, cdc_stream_setup):
     pointers unchanged, old files untouched on disk)."""
     log, indir = cdc_stream_setup
     state, ckpt = _tmp("inc_state_"), _tmp("inc_ckpt_")
-    q = start_cdc_pipeline(spark, indir, state, ckpt, available_now=True)
+    # 16 buckets whatever the core count, so the fixture spreads over
+    # several of them
+    sink = ParquetStateSink(spark, state, ["orderid"], n_buckets=16)
+    q = start_cdc_pipeline(spark, indir, state, ckpt, available_now=True, sink=sink)
     q.awaitTermination()
-    sink = ParquetStateSink(spark, state, ["orderid"])
     m0 = sink._manifest()
     assert len(m0["buckets"]) > 1, "fixture must populate several buckets"
 
@@ -348,7 +350,7 @@ def test_state_sink_merge_is_incremental(spark, cdc_stream_setup):
     }
     with open(os.path.join(indir, "part_update.jsonl"), "w") as f:
         f.write(json.dumps(update_env) + "\n")
-    q = start_cdc_pipeline(spark, indir, state, ckpt, available_now=True)
+    q = start_cdc_pipeline(spark, indir, state, ckpt, available_now=True, sink=sink)
     q.awaitTermination()
 
     m1 = sink._manifest()
@@ -532,6 +534,55 @@ def test_legacy_manifest_rejected(spark):
         json.dump({"version": 3, "buckets": {"0": 3}, "max_lsn": 7}, f)
     with pytest.raises(ValueError, match="incompatible state format"):
         sink.current()
+    # one that does not record its bucket count: keys are hashed with
+    # the recorded count, so it fails loud too
+    with open(os.path.join(state, "LATEST"), "w") as f:
+        json.dump({"version": 3, "buckets": {"0": 3}, "max_lsn": 7,
+                   "schema": {"type": "struct", "fields": []}}, f)
+    with pytest.raises(ValueError, match="incompatible state format"):
+        sink.current()
+
+
+def test_reopened_sink_keeps_its_bucket_count(spark):
+    """A sink opened on an existing root hashes keys with the bucket
+    count recorded in its manifest. Rehashing with another count would
+    send each key's update to another bucket and leave its stored row
+    behind (13 rows for 8 keys), so an explicit count that disagrees
+    raises, and the default (None) uses the recorded one."""
+    state = _tmp("reopen_state_")
+    ParquetStateSink(spark, state, ["orderid"], n_buckets=16).apply_batch(
+        _flat_batch(spark, [(k, k, k, "Rome", "c", k) for k in range(1, 9)]), 0
+    )
+    update = _flat_batch(spark, [(k, k, k * 10, "Oslo", "u", 100 + k) for k in range(1, 9)])
+    with pytest.raises(ValueError, match="hashed into 16 buckets"):
+        ParquetStateSink(spark, state, ["orderid"], n_buckets=4).apply_batch(update, 1)
+    sink = ParquetStateSink(spark, state, ["orderid"])
+    assert sink.versions() == [0]
+    sink.apply_batch(update, 1)
+    assert sink._manifest()["n_buckets"] == 16
+    assert sorted((r["orderid"], r["amount"]) for r in sink.current().collect()) == [
+        (k, k * 10) for k in range(1, 9)
+    ]
+
+
+def test_default_bucket_count_is_one_per_core(spark):
+    """``n_buckets=None`` sizes a new root at one bucket per core and
+    records the count in every manifest, so a batch that touches every
+    bucket writes one file per core."""
+    state = _tmp("cores_state_")
+    sink = ParquetStateSink(spark, state, ["orderid"])
+    sink.apply_batch(
+        _flat_batch(spark, [(k, k, k, "Rome", "c", k) for k in range(1, 1001)]), 0
+    )
+    cores = spark.sparkContext.defaultParallelism
+    m = sink._manifest()
+    assert m["n_buckets"] == cores
+    assert len(m["buckets"]) == cores
+    files = [
+        f for d, _, fs in os.walk(os.path.join(state, "v0")) for f in fs
+        if f.endswith(".parquet")
+    ]
+    assert len(files) == cores
 
 
 def test_state_sink_crash_between_write_and_commit(spark):
@@ -592,8 +643,10 @@ def test_state_sink_batch_job_count(spark):
     """A micro-batch's fixed cost is its job count: one observed probe
     (which also materializes the persisted batch), the dead-letter
     append, and the merge write's shuffle-map and write jobs — no
-    groupBy probe and no schema-inference job on the bucket read. And
-    building ``current()`` launches no job at all."""
+    groupBy probe and no schema-inference job on the bucket read. The
+    append runs in a thread beside the merge and must keep the caller's
+    job group, so all four count. And building ``current()`` launches
+    no job at all."""
     state = _tmp("jobs_state_")
     sink = ParquetStateSink(spark, state, ["orderid"], n_buckets=4)
     sink.apply_batch(
@@ -610,7 +663,7 @@ def test_state_sink_batch_job_count(spark):
         DLQ_FLAT_SCHEMA,
     )
     _, n = _jobs_in_group(spark, "sink_batch_jobs", lambda: sink.apply_batch(batch, 1))
-    assert n <= 4, f"apply_batch with bad rows and touched state ran {n} jobs"
+    assert n == 4, f"apply_batch with bad rows and touched state ran {n} jobs"
     cur, n = _jobs_in_group(spark, "sink_current_jobs", sink.current)
     assert n == 0, f"building current() ran {n} jobs"
     assert sorted((r["orderid"], r["amount"]) for r in cur.collect()) == [
@@ -648,6 +701,46 @@ def test_state_sink_manifest_metrics(spark):
     m1 = sink._manifest()
     assert m1["metrics"] == {"rows_in": 2, "dead_letters": 2, "buckets_touched": 0}
     assert m1["schema"] == m["schema"] and m1["buckets"] == m["buckets"]
+
+
+def test_failed_dead_letter_append_commits_nothing(spark):
+    """The dead-letter append runs beside the merge; the sink joins it
+    before the commit. If the append fails, the batch fails and commits
+    nothing, although its merge has written; once the fault is gone, a
+    replay of the batch lands the right state at exactly one new
+    version."""
+    state = _tmp("dlq_fail_state_")
+    sink = ParquetStateSink(spark, state, ["orderid"], n_buckets=4)
+    sink.apply_batch(
+        spark.createDataFrame(
+            [(k, 1, k, "Rome", "c", k, "ok") for k in range(1, 9)], DLQ_FLAT_SCHEMA
+        ),
+        0,
+    )
+    before = sorted(tuple(r) for r in sink.current().collect())
+    versions = sink.versions()
+    batch = spark.createDataFrame(
+        [(k, 2, k * 10, "Oslo", "u", 100 + k, "ok") for k in range(1, 9)]
+        + [(None, None, None, None, None, None, "garbage"),
+           (9, None, None, None, "c", None, "no lsn")],
+        DLQ_FLAT_SCHEMA,
+    )
+    with open(sink.dead_letter_dir(), "w") as f:
+        f.write("not a directory")
+    with pytest.raises(Exception, match="dead_letter"):
+        sink.apply_batch(batch, 1)
+    assert sink.versions() == versions
+    assert sorted(tuple(r) for r in sink.current().collect()) == before
+
+    os.remove(sink.dead_letter_dir())
+    sink.apply_batch(batch, 1)
+    assert sink.versions() == versions + [versions[-1] + 1]
+    assert sorted((r["orderid"], r["amount"]) for r in sink.current().collect()) == [
+        (k, k * 10) for k in range(1, 9)
+    ]
+    assert sorted(r["raw_value"] for r in sink.dead_letters().collect()) == [
+        "garbage", "no lsn",
+    ]
 
 
 def test_envelope_schema_evolution_tolerated(spark):
