@@ -8,11 +8,10 @@ The lakehouse upsert statement —
 
 — without a table format: ``merge_into`` computes the post-MERGE state
 of a target DataFrame as ONE query. The CDC-shaped sibling lives in
-``streaming/pipeline.py`` (``MergeStateSink`` applies op/seq envelopes
-per micro-batch; ``DeltaMergeSink`` is the real-Delta form, package-
-gated in this container); this operator is the GENERIC user-facing
-algebra: arbitrary match conditions and SET maps, evaluated with
-Delta/SQL:2003 clause semantics.
+``streaming/pipeline.py`` (``ParquetStateSink`` applies op/seq
+envelopes per micro-batch as a keyed, lsn-arbitrated merge); this
+operator is the GENERIC user-facing algebra: arbitrary match conditions
+and SET maps, evaluated with Delta/SQL:2003 clause semantics.
 
 Semantics (matching Delta Lake's MERGE reference):
 

@@ -359,7 +359,7 @@ def a18_custom_source_connector(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.envelope_source import register
 
     register(spark)
-    indir = tempfile.mkdtemp(prefix="a18_env_", dir="/tmp")
+    indir = tempfile.mkdtemp(prefix="a18_env_")
     env = to_envelope_json(_info(spark, sf_dir))
     env.select("value").write.mode("overwrite").text(indir)
     raw = spark.read.format("cdc_envelopes").load(indir)
@@ -516,7 +516,7 @@ def a21_malformed_envelope_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     unknowable there — the payload didn't parse).
 
     The streaming twin of this split already runs inside
-    `start_cdc_pipeline` (streaming/pipeline.py:176 — bad rows append
+    `start_cdc_pipeline` (`ParquetStateSink._apply_batch` — bad rows append
     to `state_root/dead_letter` each micro-batch); this entry gates
     the SAME parse-split semantics through the driver oracle on the
     batch path, where the corruption is deterministic.

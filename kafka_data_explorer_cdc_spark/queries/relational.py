@@ -3993,7 +3993,7 @@ def b80_merge_upsert_dsl(spark: SparkSession, sf_dir: str) -> DataFrame:
     MergeCardinalityError via a source-only map-side-combined guard.
     At 100 TB: the join shuffles each side once on the merge key, or
     zero times from b47's bucketed layout; the CDC micro-batch sibling
-    is streaming/pipeline.py's MergeStateSink."""
+    is streaming/pipeline.py's ParquetStateSink."""
     from ..operators.merge import MatchedClause, merge_into
 
     o = load(spark, sf_dir, "orders")

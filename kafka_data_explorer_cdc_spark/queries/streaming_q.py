@@ -30,7 +30,7 @@ from .registry import query
 
 
 def _tmp(prefix: str) -> str:
-    return tempfile.mkdtemp(prefix=prefix, dir="/tmp")
+    return tempfile.mkdtemp(prefix=prefix)
 
 
 def _change_log_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -43,7 +43,7 @@ def _change_log_dir(spark: SparkSession, sf_dir: str) -> str:
     from ..cdc.envelope import to_change_envelopes
 
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    indir = os.path.join("/tmp", f"spark_graft_changelog_{tag}")
+    indir = os.path.join(tempfile.gettempdir(), f"spark_graft_changelog_{tag}")
     done = os.path.join(indir, "_DONE")
     if os.path.exists(done):
         return indir
@@ -1724,7 +1724,7 @@ def s49_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = _tmp("s49_idx_")
     cp = _tmp("s49_cp_")
 
-    src_dir = tempfile.mkdtemp(prefix="s49_src_", dir="/tmp")
+    src_dir = tempfile.mkdtemp(prefix="s49_src_")
     os.symlink(
         f"{sf_dir}/embeddings.parquet",
         os.path.join(src_dir, "embeddings.parquet"),
@@ -2085,7 +2085,7 @@ def s52_stream_late_shipment_monitor(
     name = f"s52_{uuid.uuid4().hex[:8]}"
     src = f"{sf_dir}/lineitem.parquet"
     schema = load(spark, sf_dir, "lineitem").schema
-    d = tempfile.mkdtemp(prefix="s52_lineitem_", dir="/tmp")
+    d = tempfile.mkdtemp(prefix="s52_lineitem_")
     if os.path.isdir(src):
         # directory-shaped table (multi-file corpora): the file source
         # does not follow a nested directory symlink — link each part

@@ -39,10 +39,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .pipeline import CdcStateSink, ParquetStateSink
+from .pipeline import ParquetStateSink
 
 
-class ChangeFeedSink(CdcStateSink):
+class ChangeFeedSink:
     """:class:`ParquetStateSink` plus a per-commit row-level change
     feed derived from each micro-batch's merge. ``n_buckets`` is the
     state sink's (default: one per core, recorded in the manifest)."""
@@ -62,7 +62,7 @@ class ChangeFeedSink(CdcStateSink):
         self.feed_root = os.path.join(state_root, "feed")
         os.makedirs(self.feed_root, exist_ok=True)
 
-    # -- CdcStateSink surface ---------------------------------------
+    # -- sink surface -----------------------------------------------
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         # a feed dir at the next version was stranded by a crash before
         # its commit; drop it, or a commit there that merges nothing

@@ -41,10 +41,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import CdcStateSink, ParquetStateSink
+from .pipeline import ParquetStateSink
 
 
-class AggViewSink(CdcStateSink):
+class AggViewSink:
     """Maintains ``SELECT group_col, COUNT(*), SUM(value_col) GROUP BY
     group_col`` over the live CDC state, incrementally, as a derived
     artifact of a :class:`ParquetStateSink` (which remains the source
@@ -69,7 +69,7 @@ class AggViewSink(CdcStateSink):
         self.view_root = os.path.join(state_root, "agg_view")
         os.makedirs(self.view_root, exist_ok=True)
 
-    # -- CdcStateSink surface ---------------------------------------
+    # -- sink surface -----------------------------------------------
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.inner.apply_batch(batch, batch_id)
 

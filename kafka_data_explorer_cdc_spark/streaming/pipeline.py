@@ -8,26 +8,27 @@ JsonConverter per-record schema         →   from_json(ENVELOPE_SCHEMA)
 ExtractNewRecordState SMT               →   unwrap(): payload.after.* projection
 flush.size/interval batching            →   micro-batch trigger interval
 Connect offset topics (at-least-once)   →   checkpointLocation (exact offsets)
-Kusto batched ingest + table            →   foreachBatch idempotent merge → parquet
-                                            (Delta/Iceberg MERGE in production)
+Kusto batched ingest + table            →   foreachBatch → ParquetStateSink
 
 The at-least-once → effectively-exactly-once upgrade happens in
-``apply_cdc_batch``: the merge is keyed and lsn-arbitrated, so replayed
-micro-batches (checkpoint recovery, duplicate delivery) cannot change
-state (SURVEY.md §7 hard parts; tests/test_cdc.py proves idempotence).
+:class:`ParquetStateSink`, the one state sink: its merge is keyed and
+lsn-arbitrated (the winners of ``cdc/apply.py``'s ``apply_cdc_batch``),
+so replayed micro-batches (checkpoint recovery, duplicate delivery)
+cannot change state (SURVEY.md §7 hard parts; tests/test_streaming.py's
+``test_sink_contract`` proves idempotence).
 
 State storage here is versioned parquet (``state/v{N}``) because this
 environment has no transactional table format. Versions are numbered by
 the sink's own commit log (:class:`ManifestLog`), not by the batch id,
 and a version's files become visible only when its state manifest
-commits; they are never rewritten in place. On a cluster the
-foreachBatch body becomes a Delta ``MERGE INTO`` and the versioning
-collapses into the table's own log.
+commits; they are never rewritten in place. On a table format with its
+own log (Delta, Iceberg) the merge becomes one ``MERGE INTO`` and the
+manifest log collapses into the table's history; the generic MERGE
+algebra is ``operators/merge.merge_into`` (entry b80).
 """
 
 from __future__ import annotations
 
-import abc
 import json
 import os
 from typing import Callable
@@ -38,43 +39,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from ..cdc.apply import latest_state
 from ..cdc.envelope import parse_envelope, unwrap
 
 
-class CdcStateSink(abc.ABC):
-    """The seam between the streaming pipeline and the state store.
-
-    ``foreachBatch`` calls ``apply_batch``; readers call ``current()``.
-    Contract every implementation must honor (tests/test_streaming.py
-    runs the same contract suite against each):
-
-    - **idempotent on replay**: re-applying a batch (same or new
-      batch_id) must not change state — keyed, seq-arbitrated merge;
-    - **batch ids may restart**: Structured Streaming numbers batches
-      per checkpoint, so a stream restarted on a fresh checkpoint
-      repeats ids already applied — storage must not be keyed on them;
-    - **order-insensitive across batches**: the stored form retains
-      winning delete tombstones, so a lower-lsn straggler in a later
-      batch cannot resurrect a deleted key;
-    - ``current()`` returns live rows only (tombstones filtered).
-
-    ``ParquetStateSink`` implements this on plain parquet with a
-    :class:`ManifestLog`; ``DeltaMergeSink`` maps the same contract
-    onto a transactional ``MERGE INTO`` (the production path on a
-    cluster, construction-gated here because this environment ships no
-    Delta).
-    """
-
-    @abc.abstractmethod
-    def apply_batch(self, batch: DataFrame, batch_id: int) -> None: ...
-
-    @abc.abstractmethod
-    def current(self) -> DataFrame | None: ...
-
-
 class ManifestLog:
-    """The commit log every parquet sink commits through: one
+    """The commit log :class:`ParquetStateSink` commits through: one
     ``manifest_v{N}.json`` per committed version, plus ``LATEST``, a
     copy of the newest — the commit point.
 
@@ -253,9 +222,15 @@ def flatten_after(flat: DataFrame) -> DataFrame:
     return flat.select(*cols)
 
 
-class ParquetStateSink(CdcStateSink):
+class ParquetStateSink:
     """foreachBatch target: hash-bucketed, versioned-parquet latest-state
-    store with INCREMENTAL merges.
+    store with INCREMENTAL merges — the pipeline's one state sink.
+
+    **Contract** (``test_sink_contract``): replaying a batch, under the
+    same or a new batch id, leaves state unchanged; batch ids restart
+    with a fresh checkpoint, so nothing is keyed on them; retained
+    tombstones (below) keep stragglers from resurrecting deleted keys;
+    ``current()`` returns live rows only.
 
     State is hash-partitioned into ``n_buckets`` by key
     (``pmod(xxhash64(key), n_buckets)``). A micro-batch reads and
@@ -352,10 +327,13 @@ class ParquetStateSink(CdcStateSink):
         return os.path.join(self.root, "dead_letter")
 
     def dead_letters(self) -> DataFrame | None:
-        try:
-            return self.spark.read.parquet(self.dead_letter_dir())
-        except Exception:
+        """The dead-lettered rows, or None if no batch has had any. Read
+        with the schema the append writes, so a corrupt file raises."""
+        if not os.path.exists(self.dead_letter_dir()):
             return None
+        return self.spark.read.schema("batch_id int, raw_value string").parquet(
+            self.dead_letter_dir()
+        )
 
     def _bucket_col(self, n_buckets: int) -> Column:
         return F.pmod(
@@ -674,172 +652,6 @@ def _beside(fn: Callable[[], None]) -> Callable[[], None]:
     return join
 
 
-class DeltaMergeSink(CdcStateSink):
-    """The transactional-table form of the sink contract: one
-    ``MERGE INTO`` per micro-batch against a Delta table.
-
-    Same semantics as ``ParquetStateSink``, expressed in the table
-    format's own log instead of a hand-rolled manifest:
-
-    - batch compacted to one winning row per key (``latest_state`` with
-      ``keep_deletes=True``);
-    - ``MERGE ON key`` — matched rows update only when the source seq
-      is higher (idempotence + out-of-order safety), unmatched rows
-      insert, DELETE rows insert/update as retained tombstones;
-    - ``current()`` filters ``op != 'd'``; versioning/time travel is
-      the table's own history (``DESCRIBE HISTORY``), and the manifest
-      bookkeeping disappears.
-
-    Construction-gated: this container ships no delta-spark, so
-    ``__init__`` raises ImportError with instructions; the contract
-    test documents the skip. On a cluster with Delta the class is
-    complete as written (no further porting seam).
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        table_path: str,
-        key_cols: list[str],
-        seq_col: str = "lsn",
-        op_col: str = "op",
-    ):
-        try:
-            from delta.tables import DeltaTable  # noqa: F401
-        except ImportError as e:  # pragma: no cover - env has no delta
-            raise ImportError(
-                "DeltaMergeSink needs delta-spark (pip install delta-spark "
-                "and spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension); "
-                "use ParquetStateSink in environments without it"
-            ) from e
-        self.spark = spark
-        self.path = table_path
-        self.key_cols = key_cols
-        self.seq_col = seq_col
-        self.op_col = op_col
-
-    def apply_batch(self, batch: DataFrame, batch_id: int) -> None:  # pragma: no cover
-        from delta.tables import DeltaTable
-
-        compacted = latest_state(
-            batch, self.key_cols, self.seq_col, self.op_col, keep_deletes=True
-        )
-        if not DeltaTable.isDeltaTable(self.spark, self.path):
-            compacted.write.format("delta").save(self.path)
-            return
-        target = DeltaTable.forPath(self.spark, self.path)
-        on = " AND ".join(f"t.{k} = s.{k}" for k in self.key_cols)
-        (
-            target.alias("t")
-            .merge(compacted.alias("s"), on)
-            # higher-seq source wins; equal/lower-seq replays are no-ops —
-            # tombstones are UPDATEd in (retained), not deleted, so a
-            # later lower-seq straggler still loses the seq comparison
-            .whenMatchedUpdateAll(condition=f"s.{self.seq_col} > t.{self.seq_col}")
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def current(self) -> DataFrame | None:  # pragma: no cover
-        from delta.tables import DeltaTable
-
-        if not DeltaTable.isDeltaTable(self.spark, self.path):
-            return None
-        df = self.spark.read.format("delta").load(self.path)
-        return df.filter(F.col(self.op_col) != "d")
-
-
-class MergeStateSink(CdcStateSink):
-    """``DeltaMergeSink``'s MERGE algebra on plain parquet — the tested
-    stand-in that keeps the transactional-merge semantics EXERCISED in
-    environments without delta-spark (this container: no package, no
-    network, so the Delta skip is permanent here; VERDICT r4 #5).
-
-    One ``MERGE INTO`` micro-batch is exactly a keyed full-outer join
-    against the current snapshot:
-
-    - matched & ``s.seq > t.seq``  → source row (the
-      ``whenMatchedUpdateAll`` condition — replays and out-of-order
-      stragglers lose the seq comparison and are no-ops);
-    - matched otherwise            → target row;
-    - unmatched source             → insert (``whenNotMatchedInsertAll``);
-    - unmatched target             → carry forward.
-    Tombstones are retained rows (op='d'), exactly as DeltaMergeSink
-    UPDATEs them in rather than deleting, so ``current()`` filters them
-    on read.
-
-    Storage is a versioned FULL snapshot per applied batch (``v{N}/``,
-    N sink-numbered by a :class:`ManifestLog` and committed by its
-    manifest — a crash between write and commit leaves the previous
-    state intact). That rewrite-all shape is what a transactional MERGE
-    without file-skipping statistics does anyway; it is the correctness
-    twin, not the scale path — at scale use ``ParquetStateSink``
-    (bucketed incremental merges) or real Delta/Iceberg (MERGE + file
-    skipping). Time travel comes free: ``at_version(N)`` reads any
-    committed snapshot."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        state_root: str,
-        key_cols: list[str],
-        seq_col: str = "lsn",
-        op_col: str = "op",
-    ):
-        self.spark = spark
-        self.root = state_root
-        self.key_cols = key_cols
-        self.seq_col = seq_col
-        self.op_col = op_col
-        self.log = ManifestLog(state_root)
-
-    def _snapshot(self, version: int) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.root, f"v{version}"))
-
-    def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        compacted = latest_state(
-            batch, self.key_cols, self.seq_col, self.op_col, keep_deletes=True
-        )
-        m = self.log.read()
-        if m is None:
-            merged = compacted
-        else:
-            t = self._snapshot(m["version"]).alias("t")
-            s = compacted.alias("s")
-            cols = compacted.columns
-            cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in self.key_cols]
-            joined = t.join(s, cond, "full_outer")
-            src_wins = F.col(f"t.{self.key_cols[0]}").isNull() | (
-                F.col(f"s.{self.seq_col}") > F.col(f"t.{self.seq_col}")
-            )
-            merged = joined.select(
-                *[
-                    F.when(
-                        F.col(f"s.{self.key_cols[0]}").isNotNull() & src_wins,
-                        F.col(f"s.{c}"),
-                    )
-                    .otherwise(F.col(f"t.{c}"))
-                    .alias(c)
-                    for c in cols
-                ]
-            )
-        version = self.log.next_version()
-        merged.write.mode("overwrite").parquet(
-            os.path.join(self.root, f"v{version}")
-        )
-        self.log.commit({"version": version})
-
-    def current(self) -> DataFrame | None:
-        m = self.log.read()
-        return None if m is None else self.at_version(m["version"])
-
-    def at_version(self, version: int) -> DataFrame | None:
-        """Time travel over committed snapshots (live rows only)."""
-        if self.log.read(version) is None:
-            return None
-        return self._snapshot(version).filter(F.col(self.op_col) != "d")
-
-
 def start_cdc_pipeline(
     spark: SparkSession,
     input_dir: str,
@@ -848,7 +660,7 @@ def start_cdc_pipeline(
     available_now: bool = True,
     trigger_seconds: int = 30,
     max_files_per_trigger: int | None = None,
-    sink: CdcStateSink | None = None,
+    sink=None,
     tombstone_gc_lsn_lag: int | None = None,
     envelopes: DataFrame | None = None,
     after_schema=None,
@@ -860,8 +672,9 @@ def start_cdc_pipeline(
     honored by availableNow backlog drains too, which then process the
     backlog as several bounded micro-batches rather than one big one).
     ``available_now`` drains the backlog and stops (test/replay mode).
-    ``sink`` swaps the state store (any :class:`CdcStateSink`); default
-    is the parquet manifest sink at ``state_root``.
+    ``sink`` swaps the state store: ``foreachBatch`` calls its
+    ``apply_batch(batch, batch_id)``, the one method the pipeline uses;
+    default is a :class:`ParquetStateSink` at ``state_root``.
     """
     if sink is None:
         sink = ParquetStateSink(

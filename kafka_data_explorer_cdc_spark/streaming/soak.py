@@ -39,7 +39,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .pipeline import CdcStateSink, ParquetStateSink
+from .pipeline import ParquetStateSink
 
 _CITIES = ["Seattle", "New Delhi", "London", "Sao Paulo", "Sydney"]
 
@@ -78,12 +78,12 @@ def cdc_rate_stream(
 
 
 class TimedSink:
-    """Wraps any :class:`CdcStateSink`, recording per-batch wall-clock
+    """Wraps any sink with ``apply_batch(batch, batch_id)``, recording per-batch wall-clock
     and row count. The count is taken on the raw batch before the merge
     (rate-source recompute is trivial); timing covers ONLY the inner
     sink's work, so the gate measures the merge path, not the probe."""
 
-    def __init__(self, inner: CdcStateSink):
+    def __init__(self, inner):
         self.inner = inner
         self.records: list[dict] = []
 

@@ -47,7 +47,7 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
             probe = files[0]
     t = _events_ts_arrow_type(probe)
     if os.path.isfile(path):
-        d = tempfile.mkdtemp(prefix="events_stream_", dir="/tmp")
+        d = tempfile.mkdtemp(prefix="events_stream_")
         os.symlink(path, os.path.join(d, os.path.basename(path)))
         path = d
     if pa.types.is_timestamp(t) and t.unit in ("s", "ms", "us"):

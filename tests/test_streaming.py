@@ -590,10 +590,8 @@ def test_state_sink_crash_between_write_and_commit(spark):
     commits (injected through ``on_merge``, which runs exactly there)
     leaves the committed state and its versions unchanged; a fresh sink
     replaying the same batch under the same id then lands the right
-    state at exactly one new version. A stray uncommitted snapshot dir
-    is not a version of MergeStateSink either."""
-    from kafka_data_explorer_cdc_spark.streaming.pipeline import MergeStateSink
-
+    state at exactly one new version. The stranded ``v{N}/`` dir is not
+    a version: time travel to it raises."""
     state = _tmp("crash_state_")
     b0 = _flat_batch(spark, [(k, k, k, "Rome", "c", k) for k in range(1, 9)])
     sink = ParquetStateSink(spark, state, ["orderid"], n_buckets=4)
@@ -611,18 +609,13 @@ def test_state_sink_crash_between_write_and_commit(spark):
     assert os.listdir(os.path.join(state, f"v{versions[-1] + 1}")), "state was written"
     assert sink.versions() == versions
     assert sorted(tuple(r) for r in sink.current().collect()) == before
+    with pytest.raises(FileNotFoundError):
+        sink.at_version(versions[-1] + 1)
 
     ParquetStateSink(spark, state, ["orderid"], n_buckets=4).apply_batch(b1, 1)
     assert sink.versions() == versions + [versions[-1] + 1]
     got = {r["orderid"]: r["amount"] for r in sink.current().collect()}
     assert got == {**{k: k for k in range(1, 9)}, 1: 111, 9: 9}
-
-    root = _tmp("crash_merge_")
-    merge = MergeStateSink(spark, root, ["orderid"])
-    merge.apply_batch(b0, 0)
-    b1.write.parquet(os.path.join(root, "v1"))  # written, never committed
-    assert merge.at_version(1) is None
-    assert merge.at_version(0).count() == merge.current().count() == 8
 
 
 DLQ_FLAT_SCHEMA = FLAT_SCHEMA + ", raw_value string"
@@ -769,36 +762,27 @@ def test_envelope_schema_evolution_tolerated(spark):
     assert sink.dead_letters() is None, "evolved envelopes are not garbage"
 
 
-@pytest.mark.parametrize("kind", ["parquet", "merge", "delta"])
-def test_sink_contract(spark, kind):
-    """The CdcStateSink contract, run identically against every
-    implementation: replay idempotence, out-of-order tombstone safety,
-    live-rows-only reads. The "merge" kind is MergeStateSink —
-    DeltaMergeSink's MERGE algebra on plain parquet — so the
-    transactional-merge semantics are EXERCISED here, not just
-    construction-gated. The Delta skip is PERMANENT in this container
-    (no delta-spark package, no network to install it); on a cluster
-    with Delta the same body runs the real MERGE path unchanged."""
-    from kafka_data_explorer_cdc_spark.streaming.pipeline import (
-        DeltaMergeSink,
-        MergeStateSink,
-    )
+def test_dead_letters_broken_queue_raises(spark):
+    """``dead_letters()`` is None only when there is no dead-letter dir:
+    an empty dir reads as 0 rows, and a file there that is not parquet
+    raises on read instead of passing for "no dead letters"."""
+    sink = ParquetStateSink(spark, _tmp("dlq_read_state_"), ["orderid"], n_buckets=4)
+    assert sink.dead_letters() is None
+    os.makedirs(sink.dead_letter_dir())
+    assert sink.dead_letters().count() == 0
+    with open(os.path.join(sink.dead_letter_dir(), "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    dl = sink.dead_letters()
+    assert dl is not None
+    with pytest.raises(Exception, match="part-0.parquet"):
+        dl.collect()
 
-    if kind == "delta":
-        try:
-            sink = DeltaMergeSink(spark, _tmp("delta_state_"), ["orderid"])
-        except ImportError:
-            pytest.skip(
-                "delta-spark not installable here (no package, no "
-                "network) — permanent env gate; the MERGE semantics "
-                "are exercised by the 'merge' parametrization "
-                "(MergeStateSink) and the contract is also proven on "
-                "ParquetStateSink"
-            )
-    elif kind == "merge":
-        sink = MergeStateSink(spark, _tmp("merge_state_"), ["orderid"])
-    else:
-        sink = ParquetStateSink(spark, _tmp("contract_state_"), ["orderid"], n_buckets=4)
+
+def test_sink_contract(spark):
+    """The state sink contract (``ParquetStateSink``'s docstring): replay
+    idempotence, restartable batch ids, out-of-order tombstone safety,
+    live-rows-only reads."""
+    sink = ParquetStateSink(spark, _tmp("contract_state_"), ["orderid"], n_buckets=4)
 
     b0 = _flat_batch(
         spark,
@@ -831,51 +815,6 @@ def test_sink_contract(spark, kind):
         sink.apply_batch(_flat_batch(spark, [row]), batch_id)
     got = {r["orderid"]: r["city"] for r in sink.current().collect()}
     assert got == {1: "Kyiv", 2: "Oslo"}
-
-
-def test_merge_sink_through_pipeline_matches_parquet_sink(spark, sf_dir):
-    """End-to-end seam check: the full streaming CDC pipeline with
-    sink=MergeStateSink must land the same final state as the default
-    ParquetStateSink on the same envelope replay — two implementations,
-    one contract, same pipeline."""
-    from kafka_data_explorer_cdc_spark.cdc.envelope import (
-        orders_info,
-        to_envelope_json,
-    )
-    from kafka_data_explorer_cdc_spark.io import load
-    from kafka_data_explorer_cdc_spark.streaming.pipeline import (
-        MergeStateSink,
-        start_cdc_pipeline,
-    )
-
-    env = to_envelope_json(orders_info(load(spark, sf_dir, "orders")))
-    indir = _tmp("merge_e2e_in_")
-    env.select("value").write.mode("overwrite").text(indir)
-
-    state_p, ckpt_p = _tmp("merge_e2e_pstate_"), _tmp("merge_e2e_pckpt_")
-    q = start_cdc_pipeline(spark, indir, state_p, ckpt_p, available_now=True)
-    q.awaitTermination()
-    want = {
-        tuple(r)
-        for r in ParquetStateSink(spark, state_p, ["orderid"])
-        .current()
-        .select("orderid", "custid", "city", "amount")
-        .collect()
-    }
-
-    state_m, ckpt_m = _tmp("merge_e2e_mstate_"), _tmp("merge_e2e_mckpt_")
-    sink = MergeStateSink(spark, state_m, ["orderid"])
-    q = start_cdc_pipeline(
-        spark, indir, state_m, ckpt_m, available_now=True, sink=sink
-    )
-    q.awaitTermination()
-    got = {
-        tuple(r)
-        for r in sink.current()
-        .select("orderid", "custid", "city", "amount")
-        .collect()
-    }
-    assert got == want and got
 
 
 def test_kafka_wire_format_round_trip(spark, sf_dir):
