@@ -51,24 +51,12 @@ SOURCE_SCHEMA = T.StructType(
     ]
 )
 
-#: Full envelope payload (``README.md:265-293``): before/after images,
-#: source metadata, op code, and timestamp. ``lsn`` is the total-order key.
-PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("before", ORDERS_ROW_SCHEMA),
-        T.StructField("after", ORDERS_ROW_SCHEMA),
-        T.StructField("source", SOURCE_SCHEMA),
-        T.StructField("op", T.StringType()),
-        T.StructField("ts_ms", T.LongType()),
-        T.StructField("transaction", T.StringType()),
-    ]
-)
-
-ENVELOPE_SCHEMA = T.StructType([T.StructField("payload", PAYLOAD_SCHEMA)])
-
 
 def envelope_schema(after_schema: T.StructType | None = None) -> T.StructType:
-    """Envelope schema with an optional EVOLVED row image.
+    """The envelope (``README.md:265-293``): before/after row images,
+    source metadata, op code and timestamp; ``lsn`` is the total-order
+    key. ``after_schema`` (default :data:`ORDERS_ROW_SCHEMA`) is the row
+    image.
 
     Debezium evolves the embedded value schema when the source table's
     DDL changes (new column → new ``after`` field). The pipeline's
@@ -79,12 +67,11 @@ def envelope_schema(after_schema: T.StructType | None = None) -> T.StructType:
     read as null for the new columns (bucket reads use the schema
     recorded in the manifest), the same upgrade contract as a warehouse
     ``ADD COLUMN``."""
-    if after_schema is None:
-        return ENVELOPE_SCHEMA
+    row = ORDERS_ROW_SCHEMA if after_schema is None else after_schema
     payload = T.StructType(
         [
-            T.StructField("before", after_schema),
-            T.StructField("after", after_schema),
+            T.StructField("before", row),
+            T.StructField("after", row),
             T.StructField("source", SOURCE_SCHEMA),
             T.StructField("op", T.StringType()),
             T.StructField("ts_ms", T.LongType()),
@@ -92,6 +79,11 @@ def envelope_schema(after_schema: T.StructType | None = None) -> T.StructType:
         ]
     )
     return T.StructType([T.StructField("payload", payload)])
+
+
+#: The envelope with the reference's row image, and its payload.
+ENVELOPE_SCHEMA = envelope_schema()
+PAYLOAD_SCHEMA = ENVELOPE_SCHEMA["payload"].dataType
 
 #: Narrow probe schema for pre-parse routing/filter decisions (source
 #: table, key parity/ranges): parsing ONLY the fields a predicate needs
@@ -219,50 +211,13 @@ def orders_info(orders: DataFrame) -> DataFrame:
     )
 
 
-def to_envelope_json(info: DataFrame) -> DataFrame:
-    """Serialize an orders_info-shaped DataFrame into Debezium-insert
-    envelopes (op='c', before=null), as JSON strings in ``value`` — a
-    deterministic stand-in for the reference's Kafka topic payloads
-    (shape: ``README.md:265-293``).
-    """
-    after = F.struct(
-        F.col("orderid").cast("int").alias("orderid"),
-        F.col("custid").cast("int").alias("custid"),
-        F.col("amount").cast("int").alias("amount"),
-        F.col("city").alias("city"),
-    )
-    source = F.struct(
-        F.lit("1.2.0.Final").alias("version"),
-        F.lit("postgresql").alias("connector"),
-        F.lit("myserver").alias("name"),
-        (F.lit(1602057392691) + F.col("orderid")).alias("ts_ms"),
-        F.lit("false").alias("snapshot"),
-        F.lit("postgres").alias("db"),
-        F.lit("inventory").alias("schema"),
-        F.lit("orders_info").alias("table"),
-        (F.lit(653) + F.col("orderid")).alias("txId"),
-        (F.lit(34220200) + F.col("orderid") * 10).alias("lsn"),
-        F.lit(None).cast("long").alias("xmin"),
-    )
-    payload = F.struct(
-        F.lit(None).cast(ORDERS_ROW_SCHEMA).alias("before"),
-        after.alias("after"),
-        source.alias("source"),
-        F.lit("c").alias("op"),
-        (F.lit(1602057392692) + F.col("orderid")).alias("ts_ms"),
-        F.lit(None).cast("string").alias("transaction"),
-    )
-    return info.select(
-        F.col("orderid").cast("string").alias("key"),
-        F.to_json(F.struct(payload.alias("payload"))).alias("value"),
-    )
-
-
 def to_change_envelopes(info: DataFrame, op: str, lsn_step: int = 0) -> DataFrame:
     """Serialize an orders_info-shaped DataFrame into Debezium
-    envelopes of any op kind (generalizes :func:`to_envelope_json`,
-    which is the op='c' form). ``lsn_step`` offsets the per-key lsn so
-    a synthesized multi-op log has a well-defined total order per key
+    envelopes of op kind ``op`` ('c', 'u' or 'd'), as JSON strings in
+    ``value`` with the string key in ``key`` — a deterministic stand-in
+    for the reference's Kafka topic payloads (shape:
+    ``README.md:265-293``). ``lsn_step`` offsets the per-key lsn so a
+    synthesized multi-op log has a well-defined total order per key
     (insert step 0 < update step 1 < delete step 2, etc.).
 
     Delete envelopes follow the reference's wire shape

@@ -409,16 +409,6 @@ def write_bucketed(
     w.saveAsTable(table_name)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql paths."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def derived_cache_dir(name: str, src_path: str) -> str:
     """A /tmp directory for a DERIVED layout of ``src_path`` (hive
     repartition, IVF index, ...), keyed by the source file's identity

@@ -214,35 +214,6 @@ def brute_force_cosine_topk(
     )
 
 
-def hyperplane_signature(
-    df: DataFrame,
-    planes: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "sig",
-) -> DataFrame:
-    """b-bit random-hyperplane signature: bit j = sign(v · plane_j).
-
-    Computed as one Arrow-batched numpy matmul per partition
-    (``(n × dim) @ (dim × bits)``) — hyperplane folds are exactly the
-    workload where a vectorized pandas UDF beats Catalyst higher-order
-    functions (which evaluate interpreted, outside codegen, one
-    multiply-add at a time). Verified bit-identical to the expression
-    fold: the comparison is ``> 0`` on the same double-precision dot,
-    and numpy's summation order only differs on exact-zero knife edges
-    that the seeded planes never produce. Planes ship to executors as a
-    closure constant (a few KB), not a join side."""
-    P = np.asarray(planes, dtype="float64")
-    powers = 2.0 ** np.arange(P.shape[0])
-
-    @pandas_udf("long")
-    def _sig(v: pd.Series) -> pd.Series:
-        M = np.vstack(v.values).astype("float64")
-        bits = (M @ P.T) > 0
-        return pd.Series((bits @ powers).astype("int64"), index=v.index)
-
-    return df.withColumn(out_col, _sig(F.col(vec_col)))
-
-
 def multi_signature(
     df: DataFrame,
     planes_list: list[list[list[float]]],

@@ -71,17 +71,6 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("fp", F.expr(poly_hash(norm)))
 
 
-def shingle_expr(text_col: str = "text", n: int = 3) -> str:
-    """SQL fragment producing the distinct word-``n``-gram array of a
-    text column (Spark SQL dialect; 1-based ``element_at``)."""
-    parts = ", ".join(f"element_at(toks, i + {j})" for j in range(n))
-    return (
-        f"CASE WHEN size(split({text_col}, ' ')) >= {n} THEN "
-        f"transform(sequence(1, size(split({text_col}, ' ')) - {n - 1}, 1), "
-        f"i -> concat_ws(' ', {parts})) ELSE array() END"
-    ).replace("toks", f"split({text_col}, ' ')")
-
-
 def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Token counting: whitespace tokens + a BPE-ish regex token count
     (letter runs, digit runs, single punctuation marks) — the standard

@@ -22,7 +22,7 @@ from ..cdc.envelope import (
     orders_info,
     parse_envelope,
     sink_projection,
-    to_envelope_json,
+    to_change_envelopes,
     unwrap,
 )
 from ..cdc.apply import latest_state
@@ -59,7 +59,8 @@ def a08_order_generator(spark: SparkSession, sf_dir: str) -> DataFrame:
     amount∈[100,199], city uniform over six cities) as a seeded batch:
     ``spark.range`` + LCG-style integer expressions instead of ``rand()``
     so DuckDB reproduces every value exactly. The streaming twin is
-    :func:`..streaming.generator.order_stream` (rate-micro-batch source).
+    :func:`..streaming.generator.order_stream_deterministic`
+    (rate-micro-batch source).
     Scales embarrassingly: range splits across executors, no shuffle.
     """
     ids = spark.range(10000)
@@ -94,7 +95,7 @@ def a09_envelope_unwrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     coercion). Round-trips through real JSON so the parse path is what
     is being verified. Refs: adx-sink-config.json:15-16, README.md:121-123.
     """
-    env = to_envelope_json(_info(spark, sf_dir))
+    env = to_change_envelopes(_info(spark, sf_dir), "c")
     flat = unwrap(parse_envelope(env))
     return flat.select(sink_projection(F.col("after")))
 
@@ -117,7 +118,7 @@ def a10_jsonpath_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema ``from_json`` path. Same output contract, including the
     int→string coercion on orderid/custid (README.md:121).
     """
-    env = to_envelope_json(_info(spark, sf_dir))
+    env = to_change_envelopes(_info(spark, sf_dir), "c")
     flat = env.select(
         F.get_json_object("value", "$.payload.after").alias("rec")
     )
@@ -144,7 +145,7 @@ def a11_source_table_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-expressed as a predicate on CDC metadata after parse; here the
     even-orderid half stands in for a second table's traffic.
     """
-    env = to_envelope_json(_info(spark, sf_dir))
+    env = to_change_envelopes(_info(spark, sf_dir), "c")
     # Filter BEFORE the full parse, exactly like the reference: the
     # source-table whitelist is a pre-parse filter in Debezium
     # (pg-source-config.json table.include.list), not a post-parse
@@ -360,7 +361,7 @@ def a18_custom_source_connector(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register(spark)
     indir = tempfile.mkdtemp(prefix="a18_env_")
-    env = to_envelope_json(_info(spark, sf_dir))
+    env = to_change_envelopes(_info(spark, sf_dir), "c")
     env.select("value").write.mode("overwrite").text(indir)
     raw = spark.read.format("cdc_envelopes").load(indir)
     flat = unwrap(parse_envelope(raw, value_col="value"))
@@ -526,13 +527,11 @@ def a21_malformed_envelope_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates; the raw line is carried only on the dead-letter
     branch (keep_raw contract), so the good path never pays the
     duplicate string."""
-    from ..cdc.envelope import orders_info, parse_envelope, to_envelope_json
-
     o = load(spark, sf_dir, "orders")
-    env = to_envelope_json(orders_info(o))
+    env = to_change_envelopes(orders_info(o), "c")
     # torn message: keep the first 40 chars — valid prefix, invalid
     # JSON. The corruption target comes from the envelope KEY (the
-    # Kafka key column to_envelope_json carries), NOT from re-parsing
+    # Kafka key column to_change_envelopes carries), NOT from re-parsing
     # the value with get_json_object — the b15a/a10 per-call-reparse
     # tax, measured 6.7 s -> ~1.5 s on this entry at sf0.1.
     corrupted = env.select(
@@ -592,14 +591,6 @@ def a22_snapshot_log_cutover(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME one-key-shuffle window A12 uses — cutover adds no new shuffle
     shape, which is the point: snapshot rows are just change events
     with op='r'."""
-    from ..cdc.apply import latest_state
-    from ..cdc.envelope import (
-        orders_info,
-        parse_envelope,
-        to_change_envelopes,
-        unwrap,
-    )
-
     info = orders_info(load(spark, sf_dir, "orders"))
     base_lsn = F.lit(34220200) + F.col("orderid") * 10
     snap_has_update = (F.col("orderid") % 3 == 0) & (F.col("orderid") % 2 == 0)
@@ -672,10 +663,8 @@ def a23_replication_lag_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: parse and lag arithmetic fuse into the scan; ONE city
     rollup. At 100 TB swap the exact percentile for percentile_approx
     (b27's documented trade) — the monitor's shape is unchanged."""
-    from ..cdc.envelope import orders_info, parse_envelope, to_envelope_json, unwrap
-
     info = orders_info(load(spark, sf_dir, "orders"))
-    env = to_envelope_json(info)
+    env = to_change_envelopes(info, "c")
     flat = unwrap(parse_envelope(env))
     lagged = flat.select(
         F.col("after.city").alias("city"),
@@ -721,16 +710,8 @@ def a24_dlq_repair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: routing is one codegen projection; the replay batch is
     DLQ-sized (1/13th), applied with the same one-key-shuffle window —
     no new shuffle shape for the recovery path."""
-    from ..cdc.apply import latest_state
-    from ..cdc.envelope import (
-        orders_info,
-        parse_envelope,
-        to_envelope_json,
-        unwrap,
-    )
-
     info = orders_info(load(spark, sf_dir, "orders"))
-    env = to_envelope_json(info)
+    env = to_change_envelopes(info, "c")
     corrupted = env.select(
         "key",
         F.when(
@@ -758,7 +739,7 @@ def a24_dlq_repair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     repaired = unwrap(
         parse_envelope(
-            to_envelope_json(info.join(dlq_keys, "orderid", "left_semi"))
+            to_change_envelopes(info.join(dlq_keys, "orderid", "left_semi"), "c")
         )
     )
     log = good.select(

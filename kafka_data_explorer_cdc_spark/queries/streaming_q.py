@@ -16,7 +16,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cdc.envelope import ORDERS_INFO_SQL, orders_info, to_envelope_json
+from ..cdc.envelope import ORDERS_INFO_SQL, orders_info, to_change_envelopes
 from ..io import load
 from ..streaming.pipeline import ParquetStateSink, start_cdc_pipeline
 from ..streaming.windows import (
@@ -40,8 +40,6 @@ def _change_log_dir(spark: SparkSession, sf_dir: str) -> str:
     files are deterministic in sf_dir, and the streaming source only
     reads the directory — checkpoints and state stay per-run. Same
     caching pattern as b48's format copies."""
-    from ..cdc.envelope import to_change_envelopes
-
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     indir = os.path.join(tempfile.gettempdir(), f"spark_graft_changelog_{tag}")
     done = os.path.join(indir, "_DONE")
@@ -191,7 +189,7 @@ def s24_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         _tmp(f"s24_state_{run_id}_"),
         _tmp(f"s24_ckpt_{run_id}_"),
     )
-    env = to_envelope_json(orders_info(load(spark, sf_dir, "orders")))
+    env = to_change_envelopes(orders_info(load(spark, sf_dir, "orders")), "c")
     env.select("value").write.mode("overwrite").text(indir)
     q = start_cdc_pipeline(spark, indir, state, ckpt, available_now=True)
     q.awaitTermination()
@@ -468,11 +466,12 @@ def s31_pipeline_over_custom_source(spark: SparkSession, sf_dir: str) -> DataFra
     """s24's full CDC pipeline with the TRANSPORT swapped: envelopes
     arrive through the pluggable ``cdc_envelopes`` streaming connector
     (Python Data Source API, offset-checkpointed file tail —
-    sources/envelope_source.py) instead of the built-in file reader.
-    Everything from parse to merge is unchanged and the oracle is
-    s24's — the connector seam is proven transport-agnostic end to
-    end, which is the whole point of a connector API."""
-    from ..cdc.envelope import parse_envelope, unwrap
+    sources/envelope_source.py) instead of the built-in file reader,
+    passed raw as ``source=``. The pipeline decodes it as it decodes
+    every transport, everything from parse to merge is unchanged, and
+    the oracle is s24's — the connector seam is proven
+    transport-agnostic end to end, which is the whole point of a
+    connector API."""
     from ..sources.envelope_source import register
 
     register(spark)
@@ -482,13 +481,10 @@ def s31_pipeline_over_custom_source(spark: SparkSession, sf_dir: str) -> DataFra
         _tmp(f"s31_state_{run_id}_"),
         _tmp(f"s31_ckpt_{run_id}_"),
     )
-    env = to_envelope_json(orders_info(load(spark, sf_dir, "orders")))
+    env = to_change_envelopes(orders_info(load(spark, sf_dir, "orders")), "c")
     env.select("value").write.mode("overwrite").text(indir)
     raw = spark.readStream.format("cdc_envelopes").load(indir)
-    envelopes = unwrap(parse_envelope(raw, value_col="value"), keep_raw=True)
-    q = start_cdc_pipeline(
-        spark, indir, state, ckpt, available_now=True, envelopes=envelopes
-    )
+    q = start_cdc_pipeline(spark, indir, state, ckpt, available_now=True, source=raw)
     q.awaitTermination()
     final = ParquetStateSink(spark, state, ["orderid"]).current()
     return final.select(

@@ -10,16 +10,17 @@ loader helper.
 
 Schema mirrors a Kafka topic dump plus provenance metadata columns
 (the connector equivalent of Kafka's partition/offset columns):
-``value`` (the envelope JSON line), ``src_file``, ``line_no``.
-Downstream is the existing pipeline unchanged: ``parse_envelope`` →
-``unwrap`` → merge.
+``value`` (the envelope JSON line), ``src_file``, ``line_no``. The
+stream is a raw transport like the Kafka reader: pass it to
+``start_cdc_pipeline(source=...)``, which decodes it (parse → unwrap →
+merge, malformed lines dead-lettered) as it does every transport.
 
 Scale/execution design:
 
 - **batch**: one ``InputPartition`` per file — files scan in parallel
   across executors, no driver materialization; rows stream out of a
   generator (never a list).
-- **streaming (default)**: a partition-based
+- **streaming**: a partition-based
   :class:`DataSourceStreamReader` whose offset is ``{"files_done": n}``
   over the sorted file list. ``partitions(start, end)`` plans one
   ``InputPartition`` per newly-arrived file and ``read`` runs in
@@ -30,18 +31,11 @@ Scale/execution design:
   replay models. Offsets commit through the normal checkpoint, so
   restart/replay goes through the sink's idempotent merge like any
   other source.
-- **streaming (``simpleReader=true``)**: the original
-  :class:`SimpleDataSourceStreamReader` tail path, which prefetches
-  rows driver-side per micro-batch (the documented behavior of the
-  simple-reader API). Kept as the tiny-tail fallback only; the
-  partition reader is the scale path.
 
-Immutable-file contract: the tail readers trust ``os.listdir`` — a
+Immutable-file contract: the tail reader trusts ``os.listdir`` — a
 file is consumed whole the first micro-batch it is visible, so
 writers must publish files atomically (write to a ``.``/``_``-prefixed
 temp name, then rename — both prefixes are ignored while in flight).
-``graceSeconds=N`` additionally defers files whose mtime is younger
-than N seconds for writers that cannot rename atomically.
 
 (The Python worker boundary costs one serialization hop vs the JVM
 text source — this connector is the *extensibility* story: the same
@@ -52,40 +46,26 @@ system without a JVM connector.)
 from __future__ import annotations
 
 import os
-import time
 from collections.abc import Iterator
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 SCHEMA = "value string, src_file string, line_no bigint"
 
 
-def _opt(options, key: str, default: str) -> str:
-    # Spark hands the data source a CaseInsensitiveDict; tolerate plain
-    # dicts too (direct construction in tests/tools)
-    v = options.get(key)
-    return v if v is not None else options.get(key.lower(), default)
-
-
-def _list_files(path: str, grace_seconds: float = 0.0) -> list[str]:
+def _list_files(path: str) -> list[str]:
     if os.path.isfile(path):
         return [path]
     out = []
-    cutoff = time.time() - grace_seconds if grace_seconds > 0 else None
     for f in os.listdir(path):
         full = os.path.join(path, f)
-        if f.startswith(("_", ".")) or not os.path.isfile(full):
-            continue
-        if cutoff is not None and os.path.getmtime(full) > cutoff:
-            continue  # still inside the writer grace window
-        out.append(full)
+        if not f.startswith(("_", ".")) and os.path.isfile(full):
+            out.append(full)
     return sorted(out)
 
 
@@ -115,41 +95,8 @@ class CdcEnvelopeBatchReader(DataSourceReader):
         yield from _read_lines(partition.path)
 
 
-class CdcEnvelopeStreamReader(SimpleDataSourceStreamReader):
-    """File-granularity tail, driver-side simple reader (fallback path,
-    ``simpleReader=true``): each micro-batch drains every file not yet
-    consumed (sorted order = arrival order in the replay model)."""
-
-    def __init__(self, options):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("cdc_envelopes: .load(path) is required")
-        self.grace = float(_opt(options, "graceSeconds", "0"))
-
-    def initialOffset(self) -> dict:
-        return {"files_done": 0}
-
-    def read(self, start: dict):
-        files = _list_files(self.path, self.grace)
-        done = start["files_done"]
-        # The rows are materialized eagerly (the simple-reader API
-        # caches the prefetched batch driver-side for replay), but the
-        # wrapper's end==start idle probe calls next() on the returned
-        # object — it must be an *iterator*, not a bare list, or any
-        # idle micro-batch raises TypeError and kills the stream.
-        rows = [r for p in files[done:] for r in _read_lines(p)]
-        return iter(rows), {"files_done": len(files)}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # replay for recovery: deterministic because the file list is
-        # sorted and files are immutable once written
-        files = _list_files(self.path)[start["files_done"]: end["files_done"]]
-        for p in files:
-            yield from _read_lines(p)
-
-
 class CdcEnvelopePartitionStreamReader(DataSourceStreamReader):
-    """Executor-parallel tail (the default streaming path): offsets are
+    """Executor-parallel tail (the streaming path): offsets are
     positions in the sorted file list; each micro-batch plans one
     :class:`InputPartition` per newly-arrived file, and ``read`` runs
     in executor tasks — no driver-side row materialization, so the
@@ -161,16 +108,15 @@ class CdcEnvelopePartitionStreamReader(DataSourceStreamReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("cdc_envelopes: .load(path) is required")
-        self.grace = float(_opt(options, "graceSeconds", "0"))
 
     def initialOffset(self) -> dict:
         return {"files_done": 0}
 
     def latestOffset(self) -> dict:
-        return {"files_done": len(_list_files(self.path, self.grace))}
+        return {"files_done": len(_list_files(self.path))}
 
     def partitions(self, start: dict, end: dict):
-        files = _list_files(self.path, self.grace)
+        files = _list_files(self.path)
         return [
             _FilePartition(p)
             for p in files[start["files_done"]: end["files_done"]]
@@ -195,17 +141,7 @@ class CdcEnvelopeDataSource(DataSource):
         return CdcEnvelopeBatchReader(self.options)
 
     def streamReader(self, schema):
-        if _opt(self.options, "simpleReader", "false").lower() == "true":
-            # signal Spark's _streamReader dispatch to fall back to the
-            # driver-side simple reader below
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         return CdcEnvelopePartitionStreamReader(self.options)
-
-    def simpleStreamReader(self, schema):
-        return CdcEnvelopeStreamReader(self.options)
 
 
 def register(spark) -> None:

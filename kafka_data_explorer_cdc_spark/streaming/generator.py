@@ -3,18 +3,15 @@
 every 3 s, custid∈[1,1000], amount∈[100,199], city uniform over six
 cities) re-expressed as a Structured Streaming rate source.
 
-Two variants:
+:func:`order_stream_deterministic` reads a ``rate-micro-batch`` source
+with a fixed ``rowsPerBatch``, so batch boundaries are deterministic
+(the plain ``rate`` source's batch sizes depend on wall-clock). Values
+are derived from the monotonically increasing ``value`` column with the
+same LCG-style integer expressions as the batch twin
+(``queries/reference.py:a08``), so a given sequence number always
+yields the same order on any executor.
 
-- :func:`order_stream` — ``rate`` source at the reference's cadence
-  (1 row / 3 s ≈ 0.33 rows/s); values derived from the monotonically
-  increasing ``value`` column with the same LCG-style integer
-  expressions as the batch twin (``queries/reference.py:a08``), so a
-  given sequence number always yields the same order on any executor.
-- :func:`order_stream_deterministic` — ``rate-micro-batch`` source with
-  a fixed ``rowsPerBatch``; fully deterministic batch boundaries for
-  tests (the plain rate source's batch sizes depend on wall-clock).
-
-Both scale without shuffles: the rate source parallelizes over
+It scales without shuffles: the rate source parallelizes over
 ``numPartitions`` and every derived column is a per-row projection.
 """
 
@@ -40,20 +37,6 @@ def _order_columns(df: DataFrame) -> DataFrame:
         ((F.col("value") * 16807) % 100 + 100).alias("amount"),
         expr.otherwise(CITIES[-1]).alias("city"),
     )
-
-
-def order_stream(
-    spark: SparkSession, rows_per_second: float = 1 / 3, num_partitions: int = 1
-) -> DataFrame:
-    """Reference-cadence infinite order stream (1 insert / 3 s,
-    ``main.go:58``)."""
-    raw = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", max(1, round(rows_per_second)))
-        .option("numPartitions", num_partitions)
-        .load()
-    )
-    return _order_columns(raw)
 
 
 def order_stream_deterministic(

@@ -3,12 +3,17 @@ reference's Debezium→Kafka→Connect→ADX path (SURVEY.md §3.1):
 
 reference (five containers)                 this engine (one streaming query)
 ---------------------------                 ---------------------------------
-Kafka topic of JSON envelopes           →   readStream (kafka | file)
+Kafka topic of JSON envelopes           →   raw ``value`` stream: text files
+                                            (default), kafka, cdc_envelopes
 JsonConverter per-record schema         →   from_json(ENVELOPE_SCHEMA)
 ExtractNewRecordState SMT               →   unwrap(): payload.after.* projection
 flush.size/interval batching            →   micro-batch trigger interval
 Connect offset topics (at-least-once)   →   checkpointLocation (exact offsets)
 Kusto batched ingest + table            →   foreachBatch → ParquetStateSink
+
+Every transport is decoded once, in :func:`start_cdc_pipeline`: the
+readers return raw ``value`` streams, so each one dead-letters malformed
+records and honours ``after_schema`` the same way.
 
 The at-least-once → effectively-exactly-once upgrade happens in
 :class:`ParquetStateSink`, the one state sink: its merge is keyed and
@@ -34,11 +39,12 @@ import os
 from typing import Callable
 
 from pyspark import InheritableThread
-from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
+from ..cdc.apply import latest_state
 from ..cdc.envelope import parse_envelope, unwrap
 
 
@@ -127,11 +133,13 @@ def read_kafka_envelopes(
     max_offsets_per_trigger: int | None = None,
 ) -> DataFrame:
     """Kafka source — the production path (reference topic naming,
-    ``README.md:259``). Requires the spark-sql-kafka package on the
-    cluster; not exercised in this container (no broker). Options are
-    built by :func:`kafka_source_options` (contract-pinned in
+    ``README.md:259``): the raw record stream, whose binary ``value``
+    :func:`start_cdc_pipeline` decodes (pass it as ``source=``).
+    Requires the spark-sql-kafka package on the cluster; not exercised
+    in this container (no broker). Options are built by
+    :func:`kafka_source_options` (contract-pinned in
     tests/test_streaming.py)."""
-    raw = (
+    return (
         spark.readStream.format("kafka")
         .options(
             **kafka_source_options(
@@ -143,7 +151,6 @@ def read_kafka_envelopes(
         )
         .load()
     )
-    return unwrap(parse_envelope(raw))
 
 
 def envelope_wire_format(envelopes: DataFrame) -> DataFrame:
@@ -164,7 +171,7 @@ def write_kafka_envelopes(
 ):
     """Kafka sink — publish (key, value) envelope rows back to a topic
     (the engine as a CDC *producer*, e.g. re-emitting enriched or
-    filtered change streams). Expects the ``to_envelope_json`` shape:
+    filtered change streams). Expects the ``to_change_envelopes`` shape:
     string ``key``, JSON string ``value``. Exactly-once is inherited
     from the checkpoint + Kafka's idempotent producer; the broker hop
     itself is not exercisable in this container — the wire projection
@@ -177,28 +184,6 @@ def write_kafka_envelopes(
         .option("topic", topic)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger_seconds} seconds")
-    )
-
-
-def read_file_envelopes(
-    spark: SparkSession,
-    input_dir: str,
-    max_files_per_trigger: int | None = None,
-    after_schema=None,
-) -> DataFrame:
-    """File-based envelope stream: one JSON envelope per line — the
-    test/replay path (a Kafka topic dump is exactly this shape). Carries
-    the raw line through for dead-lettering. ``max_files_per_trigger``
-    is the size bound on a micro-batch — the file-source twin of the
-    reference's ``flush.size.bytes`` (adx-sink-config.json:5); the Kafka
-    source's equivalent is ``maxOffsetsPerTrigger``."""
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    raw = reader.load(input_dir)
-    return unwrap(
-        parse_envelope(raw, value_col="value", after_schema=after_schema),
-        keep_raw=True,
     )
 
 
@@ -575,33 +560,27 @@ class ParquetStateSink:
             cur = cur.persist()
         # ONE exchange per merge: union the current buckets with the
         # raw batch, cluster by __bucket (a pure function of the key,
-        # so bucket-clustering IS key-clustering), and run the lsn
-        # arbitration window partitioned by (__bucket, key). The
-        # window reuses the bucket exchange and its sort starts with
-        # __bucket, so the bucket-partitioned write adds neither a
-        # repartition nor a sort and still writes one file per
-        # bucket. The exchange has at most one partition per core:
-        # more would only queue tasks (several of them empty, from
-        # hash collisions) behind the cores. Winners are those of
-        # apply_cdc_batch: row_number picks each key's (lsn desc,
-        # op desc) max, and (key, lsn, op) ties only arise from
-        # at-least-once redelivery where the rows are bit-identical
-        # (cdc/apply.py latest_state contract).
+        # so bucket-clustering IS key-clustering), and arbitrate with
+        # cdc/apply.py's latest_state window partitioned by (__bucket,
+        # key), keeping tombstones. The window reuses the bucket
+        # exchange and its sort starts with __bucket, so the
+        # bucket-partitioned write adds neither a repartition nor a
+        # sort and still writes one file per bucket. The exchange has
+        # at most one partition per core: more would only queue tasks
+        # (several of them empty, from hash collisions) behind the
+        # cores.
         base = (
             batch
             if cur is None
             else cur.unionByName(batch, allowMissingColumns=True)
         )
-        w = Window.partitionBy("__bucket", *self.key_cols).orderBy(
-            F.col("lsn").desc(), F.col("op").desc()
-        )
         n_parts = min(len(touched), self.spark.sparkContext.defaultParallelism)
-        merged = (
-            base.withColumn("__bucket", self._bucket_col(n_buckets))
-            .repartition(n_parts, F.col("__bucket"))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
+        merged = latest_state(
+            base.withColumn("__bucket", self._bucket_col(n_buckets)).repartition(
+                n_parts, F.col("__bucket")
+            ),
+            ["__bucket", *self.key_cols],
+            keep_deletes=True,
         )
         if self.tombstone_gc_lsn_lag is not None and max_lsn is not None:
             horizon = max_lsn - self.tombstone_gc_lsn_lag
@@ -662,33 +641,43 @@ def start_cdc_pipeline(
     max_files_per_trigger: int | None = None,
     sink=None,
     tombstone_gc_lsn_lag: int | None = None,
-    envelopes: DataFrame | None = None,
+    source: DataFrame | None = None,
     after_schema=None,
 ) -> StreamingQuery:
     """Wire the full pipeline. The reference seals batches by BOTH time
     and size (``adx-sink-config.json:5-6``: flush.size.bytes 10000 /
     flush.interval.ms 30 s): ``trigger_seconds`` mirrors the time bound,
-    ``max_files_per_trigger`` the size bound (file-source granularity;
-    honored by availableNow backlog drains too, which then process the
-    backlog as several bounded micro-batches rather than one big one).
+    ``max_files_per_trigger`` the size bound (in files, for the default
+    text source only; honored by availableNow backlog drains too, which
+    then process the backlog as several bounded micro-batches rather
+    than one big one).
     ``available_now`` drains the backlog and stops (test/replay mode).
     ``sink`` swaps the state store: ``foreachBatch`` calls its
     ``apply_batch(batch, batch_id)``, the one method the pipeline uses;
     default is a :class:`ParquetStateSink` at ``state_root``.
+
+    ``source`` swaps the transport: a raw stream with a ``value``
+    column of envelope JSON (string or binary), such as
+    :func:`read_kafka_envelopes` or the ``cdc_envelopes`` connector.
+    By default ``input_dir`` is read as a text stream, one envelope per
+    line (a Kafka topic dump is exactly this shape). Whatever the
+    transport, the decode is the same: parse with
+    ``envelope_schema(after_schema)`` for DDL-evolved sources, unwrap,
+    and carry the raw line so the sink dead-letters malformed records.
     """
     if sink is None:
         sink = ParquetStateSink(
             spark, state_root, ["orderid"],
             tombstone_gc_lsn_lag=tombstone_gc_lsn_lag,
         )
-    # ``envelopes`` swaps the transport (Kafka reader, the pluggable
-    # cdc_envelopes connector, ...) for the default file replay —
-    # everything downstream of unwrap is transport-agnostic
-    if envelopes is None:
-        envelopes = read_file_envelopes(
-            spark, input_dir, max_files_per_trigger, after_schema=after_schema
-        )
-    flat = flatten_after(envelopes)
+    if source is None:
+        reader = spark.readStream.format("text")
+        if max_files_per_trigger is not None:
+            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+        source = reader.load(input_dir)
+    flat = flatten_after(
+        unwrap(parse_envelope(source, after_schema=after_schema), keep_raw=True)
+    )
     writer = flat.writeStream.option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -63,23 +63,6 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     return raw.withColumn("ts", F.timestamp_micros(micros))
 
 
-def tumbling_counts(
-    events: DataFrame, width: str = "1 minute", watermark: str = "10 minutes"
-) -> DataFrame:
-    """Tumbling event-time window counts with a watermark."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "event_type",
-            "n_events",
-        )
-    )
-
-
 def streaming_dedup(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Streaming exact dedup on event_id. The watermark lets the state
     store evict ids older than the horizon — unbounded streams, bounded
