@@ -1,16 +1,17 @@
 from .envelope import (
     ENVELOPE_SCHEMA,
     ORDERS_ROW_SCHEMA,
+    flatten_after,
     parse_envelope,
     unwrap,
 )
-from .apply import latest_state, apply_cdc_batch
+from .apply import latest_state
 
 __all__ = [
     "ENVELOPE_SCHEMA",
     "ORDERS_ROW_SCHEMA",
+    "flatten_after",
     "parse_envelope",
     "unwrap",
     "latest_state",
-    "apply_cdc_batch",
 ]

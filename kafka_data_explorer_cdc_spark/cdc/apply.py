@@ -1,4 +1,4 @@
-"""CDC apply: latest-state materialization + idempotent batch upsert.
+"""CDC apply: latest-state materialization and SCD2 history.
 
 The reference's sink is at-least-once (Connect offset topics,
 ``docker-compose.yaml:35-37``) and append-only — ADX receives every
@@ -11,10 +11,12 @@ CDC log is the canonical downstream task (SURVEY.md §2A A12):
 
 Spark-first: a single ``row_number()`` window over ``(key ORDER BY lsn
 DESC)`` — one shuffle on the key, no driver-side state, arbitrarily
-partitionable ⇒ scales to 100 TB of change log. At cluster scale the
-same logic runs incrementally in ``foreachBatch`` as a keyed MERGE into
-Delta/Iceberg (see ``streaming/pipeline.py``); the batch form here is
-the semantics oracle for it.
+partitionable ⇒ scales to 100 TB of change log. The same window is
+the arbitration of the incremental merge: ``ParquetStateSink`` in
+``streaming/pipeline.py`` applies each micro-batch by calling
+:func:`latest_state` over the touched buckets plus the batch, keeping
+tombstones. The CDC tests check that sink against a pure-Python replay
+of the log (``cdc/generator.expected_final_state``).
 """
 
 from __future__ import annotations
@@ -88,51 +90,4 @@ def scd2_history(
     return (
         versioned.filter(F.col(op_col) != delete_op)
         .withColumnRenamed(seq_col, "valid_from")
-    )
-
-
-def apply_cdc_batch(
-    current: DataFrame | None,
-    batch: DataFrame,
-    key_cols: list[str],
-    seq_col: str = "lsn",
-    op_col: str = "op",
-    delete_op: str = "d",
-    keep_deletes: bool = False,
-) -> DataFrame:
-    """Idempotent micro-batch MERGE, expressed relationally.
-
-    Equivalent of ``MERGE INTO current USING batch ON key WHEN MATCHED
-    [AND op='d'] DELETE / UPDATE WHEN NOT MATCHED INSERT`` — but keeps
-    the seq column so replays (at-least-once) and out-of-order batches
-    are idempotent: the highest ``lsn`` always wins, exactly like the
-    reference's ADX table dedup story would require.
-
-    With a transactional table format (Delta/Iceberg) this becomes a
-    real MERGE in ``foreachBatch``; on plain parquet we rewrite the
-    union's latest state, which is correct though not incremental.
-
-    ``current`` must be a prior output of this function (it retains the
-    ``seq``/``op`` columns of each key's winning event, which is what
-    makes replays idempotent).
-
-    **Chained (stored) use MUST pass ``keep_deletes=True``.** If the
-    stored state drops tombstones, it has no memory of a delete's
-    ``lsn`` — a lower-lsn straggler for the same key in a LATER batch
-    (micro-batch boundaries give no cross-batch ordering guarantee)
-    would then resurrect the deleted key. Retain the winning tombstone
-    rows in the persisted form and filter ``op != delete_op`` only in
-    the *read* view (see ``ParquetStateSink.current``); drop them only
-    when a GC horizon guarantees no older event can still arrive.
-    ``keep_deletes=False`` is the one-shot/terminal form.
-    """
-    compacted = latest_state(
-        batch, key_cols, seq_col, op_col, delete_op, keep_deletes=True
-    )
-    if current is None:
-        merged = compacted
-    else:
-        merged = current.unionByName(compacted, allowMissingColumns=True)
-    return latest_state(
-        merged, key_cols, seq_col, op_col, delete_op, keep_deletes=keep_deletes
     )

@@ -158,6 +158,28 @@ def unwrap(
     return parsed.select(*cols)
 
 
+def flatten_after(flat: DataFrame) -> DataFrame:
+    """The flat change row of an :func:`unwrap` output: the key, the
+    after-image's value columns, ``op`` and ``lsn`` (and ``raw_value``
+    when unwrap kept it) — the row every merge and replay consumes.
+    Deletes carry their key in the before-image (README.md:268-288).
+    Value columns are derived from the parsed ``after`` struct, so a
+    DDL-evolved envelope schema (``envelope_schema(after_schema=...)``)
+    flows through without touching this projection."""
+    after_fields = [f.name for f in flat.schema["after"].dataType.fields]
+    cols = [
+        F.coalesce(F.col("after.orderid"), F.col("before.orderid")).alias("orderid")
+    ] + [
+        F.col(f"after.{c}").alias(c) for c in after_fields if c != "orderid"
+    ] + [
+        "op",
+        "lsn",
+    ]
+    if "raw_value" in flat.columns:
+        cols.append("raw_value")
+    return flat.select(*cols)
+
+
 def sink_projection(after: Column) -> list[Column]:
     """The ADX ingestion mapping (``README.md:123``): JSONPath → column
     with the deliberate int→string coercion on orderid/custid
@@ -195,19 +217,22 @@ FROM orders
 """
 
 
+def city_of(n: Column) -> Column:
+    """``CITIES[n % 6]`` as the CASE chain the SQL twins spell."""
+    idx = n % 6
+    expr = F.when(idx == 0, CITIES[0])
+    for i, name in enumerate(CITIES[1:-1], start=1):
+        expr = expr.when(idx == i, name)
+    return expr.otherwise(CITIES[-1])
+
+
 def orders_info(orders: DataFrame) -> DataFrame:
     """Spark twin of :data:`ORDERS_INFO_SQL` (kept expression-identical)."""
-    city = F.col("o_orderkey") % 6
-    expr = None
-    for i, name in enumerate(CITIES[:-1]):
-        cond = city == i
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    expr = expr.otherwise(CITIES[-1])
     return orders.select(
         F.col("o_orderkey").alias("orderid"),
         ((F.col("o_custkey") % 1000) + 1).alias("custid"),
         (((F.col("o_orderkey") * 7 + F.col("o_custkey")) % 100) + 100).alias("amount"),
-        expr.alias("city"),
+        city_of(F.col("o_orderkey")).alias("city"),
     )
 
 

@@ -192,8 +192,11 @@ def _int64_epoch_to_micros_divisor(path: str) -> int:
     return 1_000  # nanos -> micros: floor-divide (matches DuckDB truncation)
 
 
-def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    """Load events with the ts unit sniffed from the parquet footer.
+def _load_events(reader, path: str) -> DataFrame:
+    """Load events with the ts unit sniffed from the parquet footer,
+    through ``reader``: ``spark.read`` for the batch table,
+    ``spark.readStream`` for the file stream
+    (``streaming/windows.read_events_stream``), so both decode ts alike.
 
     Round-3 postmortem: a hardcoded TIMESTAMP(NANOS) assumption silently
     compressed 30 days of 2024 events into one 1970 minute when the driver
@@ -214,8 +217,8 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     probe_file = _resolve_parquet_file(path)
     t = _events_ts_arrow_type(probe_file)
     if pa.types.is_timestamp(t) and t.unit in ("s", "ms", "us"):
-        return spark.read.schema(SCHEMAS["events"]).parquet(path)
-    raw = spark.read.schema(_EVENTS_PHYSICAL).parquet(path)
+        return reader.schema(SCHEMAS["events"]).parquet(path)
+    raw = reader.schema(_EVENTS_PHYSICAL).parquet(path)
     if pa.types.is_timestamp(t):  # logical timestamp[ns]: unit is declared
         div = 1_000
     else:  # raw INT64: infer unit from value magnitude
@@ -272,7 +275,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     case it relies on (round-3 postmortem — a unit change must fail
     loudly, not relocate the data to 1970)."""
     if table == "events":
-        return _load_events(spark, f"{sf_dir}/events.parquet")
+        return _load_events(spark.read, f"{sf_dir}/events.parquet")
     path = f"{sf_dir}/{table}.parquet"
     _assert_native_timestamps(path, SCHEMAS[table], table)
     return spark.read.schema(SCHEMAS[table]).parquet(path)

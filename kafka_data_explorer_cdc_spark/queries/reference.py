@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..cdc.envelope import (
-    CITIES,
     ORDERS_INFO_SQL,
     PROBE_SCHEMA,
+    flatten_after,
     orders_info,
     parse_envelope,
     sink_projection,
@@ -27,6 +27,7 @@ from ..cdc.envelope import (
 )
 from ..cdc.apply import latest_state
 from ..io import load
+from ..streaming.generator import order_columns
 from .registry import query
 
 _OI = f"WITH orders_info AS ({ORDERS_INFO_SQL})"
@@ -34,6 +35,18 @@ _OI = f"WITH orders_info AS ({ORDERS_INFO_SQL})"
 
 def _info(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders_info(load(spark, sf_dir, "orders"))
+
+
+def _long_change_rows(flat: DataFrame) -> DataFrame:
+    """:func:`flatten_after`'s change rows of an ``unwrap`` output, with
+    the integer columns widened to long (the type a22's snapshot and
+    both entries' outputs carry)."""
+    return flatten_after(flat).select(
+        *[F.col(c).cast("long").alias(c) for c in ("orderid", "custid", "amount")],
+        "city",
+        "op",
+        F.col("lsn").cast("long").alias("lsn"),
+    )
 
 
 @query(
@@ -63,19 +76,7 @@ def a08_order_generator(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rate-micro-batch source).
     Scales embarrassingly: range splits across executors, no shuffle.
     """
-    ids = spark.range(10000)
-    city = F.col("id") % 6
-    expr = None
-    for i, name in enumerate(CITIES[:-1]):
-        expr = (
-            F.when(city == i, name) if expr is None else expr.when(city == i, name)
-        )
-    return ids.select(
-        (F.col("id") + 1).alias("orderid"),
-        ((F.col("id") * 48271) % 1000 + 1).alias("custid"),
-        ((F.col("id") * 16807) % 100 + 100).alias("amount"),
-        expr.otherwise(CITIES[-1]).alias("city"),
-    )
+    return spark.range(10000).select(*order_columns(F.col("id")))
 
 
 @query(
@@ -617,17 +618,7 @@ def a22_snapshot_log_cutover(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(to_change_envelopes(updated, "u", 1))
         .unionByName(to_change_envelopes(deleted, "d", 2))
     )
-    flat = unwrap(parse_envelope(env))
-    log = flat.select(
-        F.coalesce(F.col("after.orderid"), F.col("before.orderid"))
-        .cast("long")
-        .alias("orderid"),
-        F.col("after.custid").cast("long").alias("custid"),
-        F.col("after.amount").cast("long").alias("amount"),
-        F.col("after.city").alias("city"),
-        "op",
-        F.col("lsn").cast("long").alias("lsn"),
-    )
+    log = _long_change_rows(unwrap(parse_envelope(env)))
     state = latest_state(snapshot.unionByName(log), ["orderid"], seq_col="lsn")
     return state.select("orderid", "custid", "amount", "city")
 
@@ -742,23 +733,7 @@ def a24_dlq_repair_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             to_change_envelopes(info.join(dlq_keys, "orderid", "left_semi"), "c")
         )
     )
-    log = good.select(
-        F.col("after.orderid").cast("long").alias("orderid"),
-        F.col("after.custid").cast("long").alias("custid"),
-        F.col("after.amount").cast("long").alias("amount"),
-        F.col("after.city").alias("city"),
-        "op",
-        F.col("lsn").cast("long").alias("lsn"),
-    ).unionByName(
-        repaired.select(
-            F.col("after.orderid").cast("long").alias("orderid"),
-            F.col("after.custid").cast("long").alias("custid"),
-            F.col("after.amount").cast("long").alias("amount"),
-            F.col("after.city").alias("city"),
-            "op",
-            F.col("lsn").cast("long").alias("lsn"),
-        )
-    )
+    log = _long_change_rows(good).unionByName(_long_change_rows(repaired))
     return latest_state(log, ["orderid"], seq_col="lsn").select(
         "orderid", "custid", "amount", "city"
     )

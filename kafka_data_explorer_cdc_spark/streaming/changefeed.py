@@ -36,9 +36,10 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cdc.apply import latest_state
 from .pipeline import ParquetStateSink
 
 
@@ -98,24 +99,21 @@ class ChangeFeedSink:
         return self.spark.read.parquet(*dirs)
 
     def compact(self) -> DataFrame | None:
-        """Replay the feed into latest state — per key, the winning row
-        of the newest commit (postimages only); deletes drop the key.
-        Must equal ``current()`` — the feed-completeness invariant."""
+        """Replay the feed into latest state — per key, the row of the
+        newest commit (postimages only); deletes drop the key. Without
+        preimages a commit holds at most one row per key, so this is
+        ``latest_state`` sequenced by ``_commit_version``. Must equal
+        ``current()`` — the feed-completeness invariant."""
         f = self.feed()
         if f is None:
             return None
-        w = Window.partitionBy(*self.key_cols).orderBy(
-            F.col("_commit_version").desc(), F.col("lsn").desc()
-        )
-        latest = (
-            f.filter(F.col("_change_type") != "update_preimage")
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        return latest.filter(F.col("_change_type") != "delete").drop(
-            "_change_type", "_commit_version"
-        )
+        return latest_state(
+            f.filter(F.col("_change_type") != "update_preimage"),
+            self.key_cols,
+            seq_col="_commit_version",
+            op_col="_change_type",
+            delete_op="delete",
+        ).drop("_change_type", "_commit_version")
 
     # -- the on_merge hook ------------------------------------------
     def _emit(

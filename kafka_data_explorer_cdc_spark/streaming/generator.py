@@ -6,10 +6,10 @@ cities) re-expressed as a Structured Streaming rate source.
 :func:`order_stream_deterministic` reads a ``rate-micro-batch`` source
 with a fixed ``rowsPerBatch``, so batch boundaries are deterministic
 (the plain ``rate`` source's batch sizes depend on wall-clock). Values
-are derived from the monotonically increasing ``value`` column with the
-same LCG-style integer expressions as the batch twin
-(``queries/reference.py:a08``), so a given sequence number always
-yields the same order on any executor.
+are derived from the monotonically increasing ``value`` column by
+:func:`order_columns`, the LCG-style integer expressions the batch twin
+(``queries/reference.py:a08``) also uses, so a given sequence number
+always yields the same order on any executor.
 
 It scales without shuffles: the rate source parallelizes over
 ``numPartitions`` and every derived column is a per-row projection.
@@ -17,26 +17,22 @@ It scales without shuffles: the rate source parallelizes over
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cdc.envelope import CITIES
+from ..cdc.envelope import city_of
 
 
-def _order_columns(df: DataFrame) -> DataFrame:
-    """Map the rate source's ``value`` sequence to order fields with the
-    exact expressions of the a08 batch generator."""
-    city = F.col("value") % 6
-    expr = None
-    for i, name in enumerate(CITIES[:-1]):
-        expr = F.when(city == i, name) if expr is None else expr.when(city == i, name)
-    return df.select(
-        F.col("timestamp").alias("ts"),
-        (F.col("value") + 1).alias("orderid"),
-        ((F.col("value") * 48271) % 1000 + 1).alias("custid"),
-        ((F.col("value") * 16807) % 100 + 100).alias("amount"),
-        expr.otherwise(CITIES[-1]).alias("city"),
-    )
+def order_columns(seq: Column) -> list[Column]:
+    """The order fields of sequence number ``seq`` (0-based): the one
+    expression set of the batch generator (a08, over ``spark.range``)
+    and the streaming one (over the rate source's ``value``)."""
+    return [
+        (seq + 1).alias("orderid"),
+        ((seq * 48271) % 1000 + 1).alias("custid"),
+        ((seq * 16807) % 100 + 100).alias("amount"),
+        city_of(seq).alias("city"),
+    ]
 
 
 def order_stream_deterministic(
@@ -51,4 +47,6 @@ def order_stream_deterministic(
         .option("startTimestamp", 0)
         .load()
     )
-    return _order_columns(raw)
+    return raw.select(
+        F.col("timestamp").alias("ts"), *order_columns(F.col("value"))
+    )

@@ -6,7 +6,8 @@ reference (five containers)                 this engine (one streaming query)
 Kafka topic of JSON envelopes           →   raw ``value`` stream: text files
                                             (default), kafka, cdc_envelopes
 JsonConverter per-record schema         →   from_json(ENVELOPE_SCHEMA)
-ExtractNewRecordState SMT               →   unwrap(): payload.after.* projection
+ExtractNewRecordState SMT               →   unwrap() + flatten_after(): the
+                                            flat after-image change row
 flush.size/interval batching            →   micro-batch trigger interval
 Connect offset topics (at-least-once)   →   checkpointLocation (exact offsets)
 Kusto batched ingest + table            →   foreachBatch → ParquetStateSink
@@ -17,10 +18,12 @@ records and honours ``after_schema`` the same way.
 
 The at-least-once → effectively-exactly-once upgrade happens in
 :class:`ParquetStateSink`, the one state sink: its merge is keyed and
-lsn-arbitrated (the winners of ``cdc/apply.py``'s ``apply_cdc_batch``),
-so replayed micro-batches (checkpoint recovery, duplicate delivery)
-cannot change state (SURVEY.md §7 hard parts; tests/test_streaming.py's
-``test_sink_contract`` proves idempotence).
+lsn-arbitrated (``cdc/apply.py``'s ``latest_state`` window), so
+replayed micro-batches (checkpoint recovery, duplicate delivery) cannot
+change state (SURVEY.md §7 hard parts; tests/test_streaming.py's
+``test_sink_contract`` proves idempotence, tests/test_cdc.py's
+properties check any split and any batch order against a Python
+replay).
 
 State storage here is versioned parquet (``state/v{N}``) because this
 environment has no transactional table format. Versions are numbered by
@@ -45,7 +48,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..cdc.apply import latest_state
-from ..cdc.envelope import parse_envelope, unwrap
+from ..cdc.envelope import flatten_after, parse_envelope, unwrap
 
 
 class ManifestLog:
@@ -185,26 +188,6 @@ def write_kafka_envelopes(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger_seconds} seconds")
     )
-
-
-def flatten_after(flat: DataFrame) -> DataFrame:
-    """After-image + CDC metadata as flat columns, keyed for the merge.
-    Deletes carry their key in the before-image (README.md:268-288).
-    Value columns are derived from the parsed ``after`` struct, so a
-    DDL-evolved envelope schema (``envelope_schema(after_schema=...)``)
-    flows through without touching this projection."""
-    after_fields = [f.name for f in flat.schema["after"].dataType.fields]
-    cols = [
-        F.coalesce(F.col("after.orderid"), F.col("before.orderid")).alias("orderid")
-    ] + [
-        F.col(f"after.{c}").alias(c) for c in after_fields if c != "orderid"
-    ] + [
-        "op",
-        "lsn",
-    ]
-    if "raw_value" in flat.columns:
-        cols.append("raw_value")
-    return flat.select(*cols)
 
 
 class ParquetStateSink:
@@ -640,7 +623,6 @@ def start_cdc_pipeline(
     trigger_seconds: int = 30,
     max_files_per_trigger: int | None = None,
     sink=None,
-    tombstone_gc_lsn_lag: int | None = None,
     source: DataFrame | None = None,
     after_schema=None,
 ) -> StreamingQuery:
@@ -654,22 +636,29 @@ def start_cdc_pipeline(
     ``available_now`` drains the backlog and stops (test/replay mode).
     ``sink`` swaps the state store: ``foreachBatch`` calls its
     ``apply_batch(batch, batch_id)``, the one method the pipeline uses;
-    default is a :class:`ParquetStateSink` at ``state_root``.
+    default is a :class:`ParquetStateSink` at ``state_root`` (pass one
+    built with ``tombstone_gc_lsn_lag`` to bound tombstone retention).
 
     ``source`` swaps the transport: a raw stream with a ``value``
     column of envelope JSON (string or binary), such as
     :func:`read_kafka_envelopes` or the ``cdc_envelopes`` connector.
+    A ``source`` carries its own size bound (``maxOffsetsPerTrigger``
+    for Kafka), so passing ``max_files_per_trigger`` with it raises
+    ``ValueError`` instead of silently dropping the bound.
     By default ``input_dir`` is read as a text stream, one envelope per
     line (a Kafka topic dump is exactly this shape). Whatever the
     transport, the decode is the same: parse with
     ``envelope_schema(after_schema)`` for DDL-evolved sources, unwrap,
     and carry the raw line so the sink dead-letters malformed records.
     """
-    if sink is None:
-        sink = ParquetStateSink(
-            spark, state_root, ["orderid"],
-            tombstone_gc_lsn_lag=tombstone_gc_lsn_lag,
+    if source is not None and max_files_per_trigger is not None:
+        raise ValueError(
+            "max_files_per_trigger bounds only the default text source; "
+            "bound a source= stream with its own option "
+            "(maxOffsetsPerTrigger for Kafka)"
         )
+    if sink is None:
+        sink = ParquetStateSink(spark, state_root, ["orderid"])
     if source is None:
         reader = spark.readStream.format("text")
         if max_files_per_trigger is not None:

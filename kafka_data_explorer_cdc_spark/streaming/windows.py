@@ -14,53 +14,28 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..io import (
-    _EVENTS_PHYSICAL,
-    _events_ts_arrow_type,
-    _int64_epoch_to_micros_divisor,
-    SCHEMAS,
-)
+from ..io import _load_events
 
 
 def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-based events stream with the ts unit sniffed from the parquet
-    footer — the SAME detection as the batch loader (``io._load_events``),
-    so streaming and batch agree to the microsecond whatever physical unit
-    the testdata was generated with (round-3 postmortem: a hardcoded unit
-    silently relocated every event to 1970).
+    footer — the batch loader's decode (``io._load_events``) through
+    ``spark.readStream``, so streaming and batch agree to the
+    microsecond whatever physical unit the testdata was generated with
+    (round-3 postmortem: a hardcoded unit silently relocated every event
+    to 1970).
 
     Spark's FileStreamSource requires a *directory* to monitor; the
     driver testdata ships single parquet files, so a plain file is
     symlinked into a temp dir first (local-mode test path only — on a
     cluster the source is a directory or a Kafka topic).
     """
-    import glob
-
-    import pyarrow as pa
-
-    probe = path
-    if os.path.isdir(probe):
-        files = sorted(glob.glob(os.path.join(probe, "*.parquet")))
-        if files:
-            probe = files[0]
-    t = _events_ts_arrow_type(probe)
     if os.path.isfile(path):
         d = tempfile.mkdtemp(prefix="events_stream_")
         os.symlink(path, os.path.join(d, os.path.basename(path)))
         path = d
-    if pa.types.is_timestamp(t) and t.unit in ("s", "ms", "us"):
-        return spark.readStream.schema(SCHEMAS["events"]).parquet(path)
-    raw = spark.readStream.schema(_EVENTS_PHYSICAL).parquet(path)
-    div = 1_000 if pa.types.is_timestamp(t) else _int64_epoch_to_micros_divisor(probe)
-    if div == 1:
-        micros = F.col("ts")
-    elif div > 0:
-        micros = F.expr(f"ts div {div}")
-    else:
-        micros = F.expr(f"ts * {-div}")
-    return raw.withColumn("ts", F.timestamp_micros(micros))
+    return _load_events(spark.readStream, path)
 
 
 def streaming_dedup(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:

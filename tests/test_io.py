@@ -7,12 +7,13 @@ tests make the next unit change fail loudly:
 
 - an invariant on the real testdata (loaded min(ts) is a plausible year),
 - a chaos fixture written in each of ns / us / ms / s physical units that
-  must all load to IDENTICAL timestamps.
+  must all load to IDENTICAL timestamps, in batch and as a file stream.
 """
 
 from __future__ import annotations
 
 import datetime
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -20,6 +21,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_data_explorer_cdc_spark.io import load, _load_events
+from kafka_data_explorer_cdc_spark.streaming.windows import (
+    read_events_stream,
+    run_to_memory,
+)
 
 
 def test_events_ts_year_invariant(spark, sf_dir):
@@ -71,24 +76,36 @@ def _write_fixture(tmp_path, unit: str, as_int64: bool) -> str:
     return path
 
 
+_ENCODINGS = [
+    ("ms", False),
+    ("us", False),
+    ("ns", False),
+    ("s", True),
+    ("ms", True),
+    ("us", True),
+    ("ns", True),
+]
+
+
 @pytest.mark.parametrize(
-    "unit,as_int64",
+    "unit,as_int64,stream",
     [
-        ("ms", False),
-        ("us", False),
-        ("ns", False),
-        ("s", True),
-        ("ms", True),
-        ("us", True),
-        ("ns", True),
+        pytest.param(unit, as_int64, stream, id=f"{unit}-{as_int64}" + "-stream" * stream)
+        for stream in (False, True)
+        for unit, as_int64 in _ENCODINGS
     ],
 )
-def test_events_loader_unit_chaos(spark, tmp_path, unit, as_int64):
-    """Every physical encoding of the same instants loads identically."""
+def test_events_loader_unit_chaos(spark, tmp_path, unit, as_int64, stream):
+    """Every physical encoding of the same instants loads identically,
+    through the batch loader and through the file stream."""
     path = _write_fixture(tmp_path, unit, as_int64)
-    got = sorted(
-        r.ts for r in _load_events(spark, path).select("ts").collect()
-    )
+    if stream:
+        name = f"chaos_{unit}_{int(as_int64)}_{uuid.uuid4().hex[:8]}"
+        run_to_memory(read_events_stream(spark, path), name)
+        events = spark.table(name)
+    else:
+        events = _load_events(spark.read, path)
+    got = sorted(r.ts for r in events.select("ts").collect())
     assert got == _INSTANTS, f"unit={unit} int64={as_int64}: {got}"
 
 
@@ -102,7 +119,7 @@ def test_events_loader_int64_directory(spark, tmp_path):
     import shutil
 
     shutil.copy(src, str(d / "part-0.parquet"))
-    got = sorted(r.ts for r in _load_events(spark, str(d)).select("ts").collect())
+    got = sorted(r.ts for r in _load_events(spark.read, str(d)).select("ts").collect())
     assert got == _INSTANTS
 
 

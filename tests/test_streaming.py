@@ -827,6 +827,7 @@ def test_kafka_wire_format_round_trip(spark, sf_dir):
     Only the broker hop itself is unexercised (no broker in this
     container)."""
     from kafka_data_explorer_cdc_spark.cdc.envelope import (
+        flatten_after,
         orders_info,
         parse_envelope,
         to_change_envelopes,
@@ -843,12 +844,8 @@ def test_kafka_wire_format_round_trip(spark, sf_dir):
     out = _tmp("wire_")
     wire.select("value").write.mode("overwrite").text(out)
 
-    back = unwrap(parse_envelope(spark.read.text(out)))
-    flat = back.select(
-        F.coalesce(F.col("after.orderid"), F.col("before.orderid")).alias("orderid"),
-        F.col("after.custid").alias("custid"),
-        F.col("after.amount").alias("amount"),
-        F.col("after.city").alias("city"),
+    flat = flatten_after(unwrap(parse_envelope(spark.read.text(out)))).select(
+        "orderid", "custid", "amount", "city"
     )
     got = sorted(tuple(r) for r in flat.collect())
     want = sorted(tuple(r) for r in info.collect())
@@ -1380,6 +1377,13 @@ def test_connector_source_dead_letters_malformed_line(spark):
     assert [r["raw_value"] for r in dlq.collect()] == [bad]
     counted = sum(sink.log.read(v)["metrics"]["dead_letters"] for v in sink.versions())
     assert counted == 1
+    # a source= stream is bounded by its own option, so the text-source
+    # bound is refused rather than silently dropped
+    with pytest.raises(ValueError, match="maxOffsetsPerTrigger"):
+        start_cdc_pipeline(
+            spark, indir, state, ckpt, max_files_per_trigger=1,
+            source=_connector_stream(spark, indir),
+        )
 
 
 def test_connector_source_honours_after_schema(spark):
