@@ -224,6 +224,9 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+# Σ aᵢ·bᵢ as one zip_with + one fold; length equality is the caller's guard
+from .operators.similarity import _dot
+
 #: STRING-LITERAL VALUE SEMANTICS — read before consuming a ``str``
 #: token. The pattern accepts ``\.`` pairs so a quoted literal can
 #: CONTAIN quotes, but the compiler deliberately forks on what those
@@ -818,25 +821,15 @@ def _end_of(start: Column, **interval) -> Column:
     )
 
 
-def _series_dot(a: Column, b: Column) -> Column:
-    """Σ aᵢ·bᵢ as one zip_with + one fold (length equality is the
-    caller's guard)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def _series_dot_product(a: Column, b: Column) -> Column:
     """``series_dot_product(a, b)`` — null on length mismatch (the
     array_iff convention; Kusto errors)."""
-    return F.when(F.size(a) == F.size(b), _series_dot(a, b))
+    return F.when(F.size(a) == F.size(b), _dot(a, b))
 
 
 def _series_magnitude(a: Column) -> Column:
     """``series_magnitude(a)`` — the L2 norm, √(a·a)."""
-    return F.sqrt(_series_dot(a, a))
+    return F.sqrt(_dot(a, a))
 
 
 def _series_cosine(a: Column, b: Column) -> Column:
@@ -844,7 +837,7 @@ def _series_cosine(a: Column, b: Column) -> Column:
     length mismatch or a zero-magnitude side."""
     den = _series_magnitude(a) * _series_magnitude(b)
     return F.when(
-        (F.size(a) == F.size(b)) & (den > 0), _series_dot(a, b) / den
+        (F.size(a) == F.size(b)) & (den > 0), _dot(a, b) / den
     )
 
 
@@ -859,8 +852,8 @@ def _series_pearson(a: Column, b: Column) -> Column:
         c, F.lit(0.0), lambda acc, v: acc + v.cast("double")
     )
     sx, sy = asum(a), asum(b)
-    sxx, syy = _series_dot(a, a), _series_dot(b, b)
-    sxy = _series_dot(a, b)
+    sxx, syy = _dot(a, a), _dot(b, b)
+    sxy = _dot(a, b)
     num = n * sxy - sx * sy
     den = F.sqrt(n * sxx - sx * sx) * F.sqrt(n * syy - sy * sy)
     return F.when((F.size(a) == F.size(b)) & (den > 0), num / den)

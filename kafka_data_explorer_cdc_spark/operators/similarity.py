@@ -1,20 +1,23 @@
 """Similarity search over embedding columns.
 
-- **Brute-force cosine top-k** — exact baseline: broadcast the query
-  vectors (small side), fold the dot product JVM-side with
-  ``zip_with`` + ``aggregate`` (no Python, no shuffle of the corpus),
-  rank per query. At 100 TB the corpus side streams through map tasks;
-  cost is O(|corpus| × |queries|) FLOPs but zero data movement beyond
-  the broadcast.
-- **LSH (random hyperplane) ANN** — the scale path: b-bit signatures
-  bucket the corpus; queries join their bucket(s) only. Candidate
-  generation is an equi-join on the signature, re-ranking touches a
-  tiny fraction of the corpus. Recall is probabilistic — measured
-  against the brute-force baseline in tests, never hash-compared.
+Every path shares three decisions, each written once:
 
-Norms are folded in the same element order in Spark and DuckDB
-(`aggregate` vs `list_reduce`), so even double-precision cosines are
-reproducible bit-for-bit for the oracle.
+- **Score** — :func:`_cosine`: the ``_dot`` fold over the product of
+  the two norms, folded JVM-side with ``zip_with`` + ``aggregate`` in
+  the same element order as DuckDB's ``list_reduce``, so double
+  cosines reproduce bit-for-bit in the oracle.
+- **Rank** — :func:`_topk`: ``row_number()`` per ``q_id`` by score
+  descending, ties to the smaller ``c_id``, kept while ``rank <= k``.
+- **IVF index** — :func:`ivf_build` (or :func:`bitext_ivf_build`)
+  assigns each corpus vector its :func:`_nearest_cell`;
+  :func:`_ivf_probe` fans each query out to its ``nprobe`` nearest
+  cells for the equi-join on ``cell``.
+
+The candidate generators differ: brute force crosses the corpus with
+broadcast queries; LSH joins on hyperplane signatures; IVF joins on
+probed cells; PQ, SQ8 and the blocked kernel pre-reduce per Arrow
+batch. Approximate candidates are always re-scored exactly, and their
+recall is measured against brute force, never hash-compared.
 
 Cache ownership: ``ivf_build``/``bitext_ivf_build`` document "caller
 owns the unpersist", and the collecting gate queries honor it; the
@@ -27,6 +30,8 @@ does this between invocations; round-13 verdict, persist hygiene).
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -50,6 +55,27 @@ def _dot(a, b):
 def _norm_sq(a):
     return F.aggregate(
         a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
+    )
+
+
+def _cosine(a, b, a_norm=None, b_norm=None):
+    """Cosine of two vector columns. Pass a norm the plan already
+    computed; a missing one is folded inline as ``sqrt(_norm_sq(v))``."""
+    dot = _dot(a, b)
+    if a_norm is None:
+        a_norm = F.sqrt(_norm_sq(a))
+    if b_norm is None:
+        b_norm = F.sqrt(_norm_sq(b))
+    return dot / (a_norm * b_norm)
+
+
+def _topk(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """The per-query rank rule: a long ``rank`` from ``row_number()``
+    over ``q_id`` by ``score`` descending, ties to the smaller
+    ``c_id``; keeps ``rank <= k``."""
+    w = Window.partitionBy("q_id").orderBy(F.desc(score), F.asc("c_id"))
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= k
     )
 
 
@@ -95,14 +121,11 @@ def hard_negative_topk(
         .filter(F.col("c_label") != F.col("q_label"))
         .withColumn(
             "cosine",
-            _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
+            _cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "q_label", "c_id", "c_label", "cosine", "rank")
+    return _topk(scored, k).select(
+        "q_id", "q_label", "c_id", "c_label", "cosine", "rank"
     )
 
 
@@ -134,46 +157,26 @@ def hard_negative_ivf_topk(
 
     ``centroids``/``cells`` (from :func:`ivf_build` with
     ``label_col``) inject the one-time build state — multi-probe
-    gates build the index once, probe it per setting.
+    gates build the index once, probe it per setting. Pass both or
+    neither; without both, :func:`ivf_build` builds the index here.
     """
     if centroids is None or cells is None:
-        corpus = ensure_parallelism(corpus)
-    C = (
-        _centroids(corpus, n_cells, id_col, vec_col)
-        if centroids is None
-        else centroids
+        centroids, cells = ivf_build(corpus, n_cells, id_col, vec_col, label_col)
+    q = _ivf_probe(
+        queries.select(
+            F.col(id_col).alias("q_id"),
+            F.col(label_col).alias("q_label"),
+            F.col(vec_col).alias("q_vec"),
+        ),
+        centroids,
+        nprobe,
     )
-    if cells is None:
-        one_cell = _cell_assigner(C, 1)
-        cells = (
-            corpus.select(
-                F.col(id_col).alias("c_id"),
-                F.col(label_col).alias("c_label"),
-                F.col(vec_col).alias("c_vec"),
-            )
-            .withColumn("cell", one_cell(F.col("c_vec")).getItem(0))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-    probe = _cell_assigner(C, nprobe)
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(label_col).alias("q_label"),
-        F.col(vec_col).alias("q_vec"),
-    ).withColumn("cell", F.explode(probe(F.col("q_vec"))))
-
     cand = cells.join(broadcast(q), "cell").filter(
         F.col("c_label") != F.col("q_label")
     )
-    scored = cand.withColumn(
-        "cosine",
-        _dot(F.col("q_vec"), F.col("c_vec"))
-        / (F.sqrt(_norm_sq(F.col("q_vec"))) * F.sqrt(_norm_sq(F.col("c_vec")))),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "q_label", "c_id", "c_label", "cosine", "rank")
+    scored = cand.withColumn("cosine", _cosine(F.col("q_vec"), F.col("c_vec")))
+    return _topk(scored, k).select(
+        "q_id", "q_label", "c_id", "c_label", "cosine", "rank"
     )
 
 
@@ -203,15 +206,10 @@ def brute_force_cosine_topk(
         .filter(F.col("c_id") != F.col("q_id"))
         .withColumn(
             "cosine",
-            _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm")),
+            _cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    return _topk(scored, k).select("q_id", "c_id", "cosine", "rank")
 
 
 def multi_signature(
@@ -291,17 +289,8 @@ def lsh_cosine_topk(
         .dropDuplicates(["q_id", "c_id"])
         .filter(F.col("c_id") != F.col("q_id"))
     )
-    scored = cand.withColumn(
-        "cosine",
-        _dot(F.col("q_vec"), F.col("c_vec"))
-        / (F.sqrt(_norm_sq(F.col("q_vec"))) * F.sqrt(_norm_sq(F.col("c_vec")))),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    scored = cand.withColumn("cosine", _cosine(F.col("q_vec"), F.col("c_vec")))
+    return _topk(scored, k).select("q_id", "c_id", "cosine", "rank")
 
 
 def embedding_near_dup_pairs(
@@ -344,14 +333,28 @@ def embedding_near_dup_pairs(
         .dropDuplicates(["id1", "id2"])
     )
     return (
-        pairs.withColumn(
-            "cosine",
-            _dot(F.col("v1"), F.col("v2"))
-            / (F.sqrt(_norm_sq(F.col("v1"))) * F.sqrt(_norm_sq(F.col("v2")))),
-        )
+        pairs.withColumn("cosine", _cosine(F.col("v1"), F.col("v2")))
         .filter(F.col("cosine") >= threshold)
         .select("id1", "id2", "cosine")
     )
+
+
+def _unit_rows(vectors) -> np.ndarray:
+    """The vectors stacked as float64 rows, each scaled to unit L2
+    norm."""
+    M = np.vstack(vectors).astype("float64")
+    return M / np.linalg.norm(M, axis=1, keepdims=True)
+
+
+def _query_matrix(
+    queries: DataFrame, id_col: str, vec_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """The query ids and unit query rows on the driver — a collect
+    bounded by the query set (the broadcast contract), never the
+    corpus."""
+    qrows = queries.select(id_col, vec_col).collect()
+    q_ids = np.array([r[0] for r in qrows], dtype="int64")
+    return q_ids, _unit_rows([r[1] for r in qrows])
 
 
 def _centroids(
@@ -376,17 +379,40 @@ def _centroids(
 def _cell_assigner(C: np.ndarray, nprobe: int):
     """pandas UDF: top-``nprobe`` nearest cells (by cosine) per vector,
     one Arrow-batched matmul against the normalized codebook."""
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    Cn = _unit_rows(C)
 
     @pandas_udf("array<int>")
     def assign(v: pd.Series) -> pd.Series:
-        M = np.vstack(v.values).astype("float64")
-        M = M / np.linalg.norm(M, axis=1, keepdims=True)
-        sims = M @ Cn.T
+        sims = _unit_rows(v.values) @ Cn.T
         top = np.argsort(-sims, axis=1)[:, :nprobe]
         return pd.Series(list(top.astype("int32")), index=v.index)
 
     return assign
+
+
+def _nearest_cell(C: np.ndarray, v):
+    """The IVF cell of vector column ``v``: the row of codebook ``C``
+    with the highest cosine."""
+    return _cell_assigner(C, 1)(v).getItem(0)
+
+
+def _ivf_probe(q: DataFrame, C: np.ndarray, nprobe: int) -> DataFrame:
+    """The IVF probe: query side ``q`` (vector column ``q_vec``) with
+    one row per probed cell in ``cell`` — its ``nprobe`` nearest rows
+    of ``C``. Callers equi-join it on ``cell`` with a cell-assigned
+    corpus and add their own candidate filter. ``nprobe == len(C)``
+    probes every cell, so the join is the full candidate block."""
+    return q.withColumn(
+        "cell", F.explode(_cell_assigner(C, nprobe)(F.col("q_vec")))
+    )
+
+
+def _ivf_topk(cells: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """Exact-cosine top-``k`` over the IVF candidates: cell-assigned
+    corpus ``cells`` joined with probed queries ``q`` (from
+    :func:`_ivf_probe`) on ``cell``, self-match excluded."""
+    cand = cells.join(broadcast(q), "cell").filter(F.col("c_id") != F.col("q_id"))
+    return _topk(cand.withColumn("cosine", _cosine(F.col("q_vec"), F.col("c_vec"))), k)
 
 
 def ivf_build(
@@ -408,7 +434,6 @@ def ivf_build(
     (deterministic hash-ordered centroids, same assigner)."""
     corpus = ensure_parallelism(corpus)
     C = _centroids(corpus, n_cells, id_col, vec_col)
-    one_cell = _cell_assigner(C, 1)
     cols = [
         F.col(id_col).alias("c_id"),
         F.col(vec_col).alias("c_vec"),
@@ -417,7 +442,7 @@ def ivf_build(
         cols.insert(1, F.col(label_col).alias("c_label"))
     cells = (
         corpus.select(*cols)
-        .withColumn("cell", one_cell(F.col("c_vec")).getItem(0))
+        .withColumn("cell", _nearest_cell(C, F.col("c_vec")))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     return C, cells
@@ -452,39 +477,16 @@ def ivf_cosine_topk(
 
     ``centroids``/``cells`` (from :func:`ivf_build`) inject the
     one-time build state so multi-probe gates don't rebuild the index
-    per call; omitted, the build happens here (unchanged behavior)."""
+    per call. Pass both or neither; without both, :func:`ivf_build`
+    builds the index here."""
     if centroids is None or cells is None:
-        corpus = ensure_parallelism(corpus)
-    C = (
-        _centroids(corpus, n_cells, id_col, vec_col)
-        if centroids is None
-        else centroids
+        centroids, cells = ivf_build(corpus, n_cells, id_col, vec_col)
+    q = _ivf_probe(
+        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
+        centroids,
+        nprobe,
     )
-    if cells is None:
-        one_cell = _cell_assigner(C, 1)
-        cells = corpus.select(
-            F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
-        ).withColumn("cell", one_cell(F.col("c_vec")).getItem(0)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-    probe = _cell_assigner(C, nprobe)
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    ).withColumn("cell", F.explode(probe(F.col("q_vec"))))
-
-    cand = cells.join(broadcast(q), "cell").filter(F.col("c_id") != F.col("q_id"))
-    scored = cand.withColumn(
-        "cosine",
-        _dot(F.col("q_vec"), F.col("c_vec"))
-        / (F.sqrt(_norm_sq(F.col("q_vec"))) * F.sqrt(_norm_sq(F.col("c_vec")))),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    return _ivf_topk(cells, q, k).select("q_id", "c_id", "cosine", "rank")
 
 
 def blocked_cosine_topk(
@@ -510,19 +512,14 @@ def blocked_cosine_topk(
     the last float ulp (numpy pairwise summation vs sequential fold),
     so this variant is verified by rank-equality tests, not hash match.
     """
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype="int64")
-    Q = np.vstack([r[1] for r in qrows]).astype("float64")
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    q_ids, Qn = _query_matrix(queries, id_col, vec_col)
 
     def local_topk(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf[id_col].values.astype("int64")
-            M = np.vstack(pdf[vec_col].values).astype("float64")
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            sims = Mn @ Qn.T  # (n_corpus_batch, n_queries)
+            sims = _unit_rows(pdf[vec_col].values) @ Qn.T  # (n_corpus_batch, n_queries)
             sims[ids[:, None] == q_ids[None, :]] = -np.inf  # self-match
             kk = min(k, sims.shape[0])
             top = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (kk, Q)
@@ -539,12 +536,7 @@ def blocked_cosine_topk(
     cand = ensure_parallelism(corpus).mapInPandas(
         local_topk, "q_id long, c_id long, cosine double"
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    return _topk(cand, k).select("q_id", "c_id", "cosine", "rank")
 
 
 def pq_train(
@@ -574,8 +566,7 @@ def pq_train(
         .limit(n_train)
         .collect()
     )
-    X = np.vstack([r["vec"] for r in rows]).astype("float64")
-    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
+    Xn = _unit_rows([r["vec"] for r in rows])
     d = Xn.shape[1]
     if d % m:
         raise ValueError(f"pq_train: dim {d} not divisible by m={m}")
@@ -585,18 +576,30 @@ def pq_train(
         S_ = Xn[:, j * dsub : (j + 1) * dsub]
         C = S_[:ksub].copy()
         for _ in range(iters):
-            d2 = (
-                (S_**2).sum(1)[:, None]
-                - 2.0 * S_ @ C.T
-                + (C**2).sum(1)[None, :]
-            )
-            a = d2.argmin(1)
+            a = _nearest_codeword(S_, C)
             for c in range(ksub):
                 pts = S_[a == c]
                 if len(pts):
                     C[c] = pts.mean(0)
         books.append(C)
     return np.stack(books)
+
+
+def _nearest_codeword(S_: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Per row of ``S_``, the index of the nearest row of ``C`` by
+    squared L2 (first index on ties)."""
+    d2 = (S_**2).sum(1)[:, None] - 2.0 * S_ @ C.T + (C**2).sum(1)[None, :]
+    return d2.argmin(1)
+
+
+def _pq_codes(Mn: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """PQ codes of unit rows ``Mn``: per subspace ``j``, the nearest
+    codeword of ``B[j]``."""
+    m, _, dsub = B.shape
+    codes = np.empty((len(Mn), m), dtype="int32")
+    for j in range(m):
+        codes[:, j] = _nearest_codeword(Mn[:, j * dsub : (j + 1) * dsub], B[j])
+    return codes
 
 
 def pq_cosine_topk(
@@ -641,10 +644,7 @@ def pq_cosine_topk(
         else codebooks
     )
     dsub = B.shape[2]
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype="int64")
-    Q = np.vstack([r[1] for r in qrows]).astype("float64")
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    q_ids, Qn = _query_matrix(queries, id_col, vec_col)
     # LUT[q, j, c] = <query_q subvector j, codeword c> ; cosine ≈ Σ_j LUT
     LUT = np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), m, dsub), B)
 
@@ -653,18 +653,8 @@ def pq_cosine_topk(
             if not len(pdf):
                 continue
             ids = pdf[id_col].values.astype("int64")
-            M = np.vstack(pdf[vec_col].values).astype("float64")
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            codes = np.empty((len(Mn), m), dtype="int64")
-            for j in range(m):
-                S_ = Mn[:, j * dsub : (j + 1) * dsub]
-                C = B[j]
-                d2 = (
-                    (S_**2).sum(1)[:, None]
-                    - 2.0 * S_ @ C.T
-                    + (C**2).sum(1)[None, :]
-                )
-                codes[:, j] = d2.argmin(1)
+            Mn = _unit_rows(pdf[vec_col].values)
+            codes = _pq_codes(Mn, B)
             # approx[q, i] = Σ_j LUT[q, j, codes[i, j]]
             approx = np.zeros((len(q_ids), len(ids)))
             for j in range(m):
@@ -688,12 +678,7 @@ def pq_cosine_topk(
     cand = ensure_parallelism(corpus).mapInPandas(
         scan, "q_id long, c_id long, cosine double"
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    return _topk(cand, k).select("q_id", "c_id", "cosine", "rank")
 
 
 def pq_encode(
@@ -710,26 +695,15 @@ def pq_encode(
     bytes per vector instead of d floats (32x less IO at m=8, d=64
     float32). Raw vectors are touched again only at re-rank, by id.
 
-    ``cell_assign`` (optional pandas UDF from :func:`_cell_assigner`)
-    adds the IVF coarse cell in the same pass."""
-    m, _, dsub = B.shape
+    ``cell_assign`` (optional function from the vector column to its
+    IVF coarse cell, such as ``partial(_nearest_cell, C)``) adds the
+    cell in the same pass."""
 
     def enc(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            M = np.vstack(pdf[vec_col].values).astype("float64")
-            Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
-            codes = np.empty((len(Mn), m), dtype="int32")
-            for j in range(m):
-                S_ = Mn[:, j * dsub : (j + 1) * dsub]
-                C = B[j]
-                d2 = (
-                    (S_**2).sum(1)[:, None]
-                    - 2.0 * S_ @ C.T
-                    + (C**2).sum(1)[None, :]
-                )
-                codes[:, j] = d2.argmin(1)
+            codes = _pq_codes(_unit_rows(pdf[vec_col].values), B)
             yield pd.DataFrame(
                 {"id": pdf[id_col].values, "codes": list(codes)}
             )
@@ -740,7 +714,7 @@ def pq_encode(
     if cell_assign is not None:
         cells = corpus.select(
             F.col(id_col).alias("id"),
-            cell_assign(F.col(vec_col)).getItem(0).alias("cell"),
+            cell_assign(F.col(vec_col)).alias("cell"),
         )
         out = out.join(cells, "id")
     return out
@@ -755,8 +729,8 @@ def _adc_scan_topk(
     rerank: int,
     id_col: str,
     vec_col: str,
-    probe_cells: dict[int, np.ndarray] | None = None,
-    n_cells: int | None = None,
+    C: np.ndarray | None = None,
+    nprobe: int | None = None,
 ):
     """Codes-only ADC scan + exact join-back re-rank, shared by the
     flat-PQ and IVF-PQ serving paths.
@@ -768,25 +742,20 @@ def _adc_scan_topk(
     |queries| rows) then equi-join BACK to the corpus by id for the
     exact cosine — candidates approximate, scores exact, and on a real
     deployment that join-back is a point-lookup fan-out against the
-    vector store, not a second scan. With ``probe_cells`` (IVF-PQ),
-    a query only scores rows whose cell it probes — at rest the cell
-    is a partition key and unprobed cells are never read; here the
-    mask prunes inside the batch."""
-    m = B.shape[0]
-    dsub = B.shape[2]
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype="int64")
-    Q = np.vstack([r[1] for r in qrows]).astype("float64")
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    vector store, not a second scan. With IVF centroids ``C``
+    (IVF-PQ), a query only scores rows in its ``nprobe`` nearest
+    cells — at rest the cell is a partition key and unprobed cells are
+    never read; here the mask prunes inside the batch."""
+    m, _, dsub = B.shape
+    q_ids, Qn = _query_matrix(queries, id_col, vec_col)
     LUT = np.einsum("qjd,jcd->qjc", Qn.reshape(len(Qn), m, dsub), B)
-    has_cells = probe_cells is not None
+    has_cells = C is not None
     if has_cells:
-        # width must be the TRUE cell count, not the max probed cell —
-        # a batch row can live in a cell no query probes
-        assert n_cells is not None
-        probed = np.zeros((len(q_ids), n_cells), dtype=bool)
-        for qi, qid in enumerate(q_ids):
-            probed[qi, probe_cells[qid]] = True
+        # one column per cell, probed or not: a batch row can live in
+        # a cell no query probes
+        probed = np.zeros((len(q_ids), len(C)), dtype=bool)
+        top = np.argsort(-(Qn @ _unit_rows(C).T), axis=1)[:, :nprobe]
+        np.put_along_axis(probed, top, True, axis=1)
 
     def scan(batches):
         for pdf in batches:
@@ -826,16 +795,10 @@ def _adc_scan_topk(
         .join(broadcast(q_side), "q_id")
         .withColumn(
             "cosine",
-            _dot(F.col("q_vec"), F.col("c_vec"))
-            / (F.col("q_nrm") * F.col("c_nrm")),
+            _cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_nrm"), F.col("c_nrm")),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    return _topk(scored, k).select("q_id", "c_id", "cosine", "rank")
 
 
 def pq_codes_cosine_topk(
@@ -893,22 +856,12 @@ def ivf_pq_cosine_topk(
     :func:`pq_cosine_topk`."""
     C = _centroids(corpus, n_cells, id_col, vec_col)
     B = pq_train(corpus, m=m, ksub=ksub, id_col=id_col, vec_col=vec_col)
-    one_cell = _cell_assigner(C, 1)
     encoded = pq_encode(
-        corpus, B, id_col=id_col, vec_col=vec_col, cell_assign=one_cell
+        corpus, B, id_col=id_col, vec_col=vec_col,
+        cell_assign=partial(_nearest_cell, C),
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # per-query probed cells: tiny driver-side matmul against the
-    # codebook (|queries| x n_cells), same collect bound as the LUT
-    qrows = queries.select(id_col, vec_col).collect()
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    probe: dict[int, np.ndarray] = {}
-    for r_ in qrows:
-        v = np.asarray(r_[1], dtype="float64")
-        v = v / np.linalg.norm(v)
-        probe[int(r_[0])] = np.argsort(-(Cn @ v))[:nprobe]
     return _adc_scan_topk(
-        encoded, corpus, queries, B, k, rerank, id_col, vec_col,
-        probe_cells=probe, n_cells=n_cells,
+        encoded, corpus, queries, B, k, rerank, id_col, vec_col, C, nprobe
     )
 
 
@@ -941,10 +894,9 @@ def semantic_dedup(
     probes, never hash-compared raw."""
     corpus = ensure_parallelism(corpus)
     C = _centroids(corpus, n_cells, id_col, vec_col)
-    one_cell = _cell_assigner(C, 1)
     cells = corpus.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).withColumn("cell", one_cell(F.col("vec")).getItem(0)).persist(
+    ).withColumn("cell", _nearest_cell(C, F.col("vec"))).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     a = cells.select(
@@ -959,12 +911,7 @@ def semantic_dedup(
     )
     pairs = a.join(b, "cell").filter(F.col("id_small") < F.col("id_big"))
     near = pairs.withColumn(
-        "cosine",
-        _dot(F.col("vec_small"), F.col("vec_big"))
-        / (
-            F.sqrt(_norm_sq(F.col("vec_small")))
-            * F.sqrt(_norm_sq(F.col("vec_big")))
-        ),
+        "cosine", _cosine(F.col("vec_small"), F.col("vec_big"))
     ).filter(F.col("cosine") >= threshold)
     dup_of = near.groupBy("id_big").agg(F.min("id_small").alias("dup_of"))
     return (
@@ -1040,16 +987,12 @@ def sq8_cosine_topk(
         .filter(F.col("c_id") != F.col("q_id"))
         .withColumn(
             "ascore",
-            _dot(F.col("q_vec"), F.col("c_deq"))
-            / (F.col("q_norm") * F.col("c_dnorm")),
+            _cosine(
+                F.col("q_vec"), F.col("c_deq"), F.col("q_norm"), F.col("c_dnorm")
+            ),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("ascore"), F.asc("c_id"))
-    shortl = (
-        approx.withColumn("arank", F.row_number().over(w))
-        .filter(F.col("arank") <= shortlist)
-        .select("q_id", "c_id")
-    )
+    shortl = _topk(approx, shortlist, "ascore").select("q_id", "c_id")
     c_raw = corpus.select(
         F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
     )
@@ -1059,16 +1002,10 @@ def sq8_cosine_topk(
         .withColumn("c_norm", F.sqrt(_norm_sq(F.col("c_vec"))))
         .withColumn(
             "cosine",
-            _dot(F.col("q_vec"), F.col("c_vec"))
-            / (F.col("q_norm") * F.col("c_norm")),
+            _cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
         )
     )
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    return _topk(scored, k).select("q_id", "c_id", "cosine", "rank")
 
 
 def kmeans_lloyd(
@@ -1175,6 +1112,16 @@ def kmeans_lloyd(
     return assignments, sse, C
 
 
+def _bitext_targets(tgt: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The bitext target side as ``(tgt_id, c_vec, c_norm)``."""
+    return with_norm(
+        ensure_parallelism(tgt).select(
+            F.col(id_col).alias("tgt_id"), F.col(vec_col).alias("c_vec")
+        ),
+        "c_vec",
+    ).withColumnRenamed("norm", "c_norm")
+
+
 def bitext_ivf_build(
     tgt: DataFrame,
     n_cells: int,
@@ -1187,17 +1134,11 @@ def bitext_ivf_build(
     each ``ivf=`` call would build internally — the d90 gate probes
     one index twice (recall probe + exactness knob) instead of
     rebuilding it per setting."""
-    c = with_norm(
-        ensure_parallelism(tgt).select(
-            F.col(id_col).alias("tgt_id"), F.col(vec_col).alias("c_vec")
-        ),
-        "c_vec",
-    ).withColumnRenamed("norm", "c_norm")
+    c = _bitext_targets(tgt, id_col, vec_col)
     C = _centroids(c, n_cells, "tgt_id", "c_vec")
-    one_cell = _cell_assigner(C, 1)
-    cells = c.withColumn(
-        "cell", one_cell(F.col("c_vec")).getItem(0)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    cells = c.withColumn("cell", _nearest_cell(C, F.col("c_vec"))).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     return C, cells
 
 
@@ -1250,45 +1191,30 @@ def bitext_margin_pairs(
     ``ivf_centroids``/``ivf_cells`` inject the one-time target-side
     build (centroids from :func:`bitext_ivf_build`, which also returns
     the cell-assigned normed target frame) so the d90 gate's two probe
-    settings share one centroid scan and one Arrow assignment pass."""
+    settings share one centroid scan and one Arrow assignment pass.
+    Pass both or neither; without both, :func:`bitext_ivf_build`
+    builds the index here."""
     q = with_norm(
         src.select(
             F.col(id_col).alias("src_id"), F.col(vec_col).alias("q_vec")
         ),
         "q_vec",
     ).withColumnRenamed("norm", "q_norm")
-    c = with_norm(
-        ensure_parallelism(tgt).select(
-            F.col(id_col).alias("tgt_id"), F.col(vec_col).alias("c_vec")
-        ),
-        "c_vec",
-    ).withColumnRenamed("norm", "c_norm")
     if ivf is not None:
         n_cells, nprobe = ivf
-        C = (
-            _centroids(c, n_cells, "tgt_id", "c_vec")
-            if ivf_centroids is None
-            else ivf_centroids
-        )
-        if ivf_cells is None:
-            one_cell = _cell_assigner(C, 1)
-            ivf_cells = c.withColumn(
-                "cell", one_cell(F.col("c_vec")).getItem(0)
+        if ivf_centroids is None or ivf_cells is None:
+            ivf_centroids, ivf_cells = bitext_ivf_build(
+                tgt, n_cells, id_col, vec_col
             )
-        probe = _cell_assigner(C, nprobe)
         block = ivf_cells.join(
-            broadcast(
-                q.withColumn("cell", F.explode(probe(F.col("q_vec"))))
-            ),
-            "cell",
+            broadcast(_ivf_probe(q, ivf_centroids, nprobe)), "cell"
         )
     else:
-        block = c.crossJoin(broadcast(q))
+        block = _bitext_targets(tgt, id_col, vec_col).crossJoin(broadcast(q))
     scored = (
         block.withColumn(
             "cosine",
-            _dot(F.col("q_vec"), F.col("c_vec"))
-            / (F.col("q_norm") * F.col("c_norm")),
+            _cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_norm"), F.col("c_norm")),
         )
         .select("src_id", "tgt_id", "cosine")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1409,9 +1335,8 @@ def mmr_rerank(
             F.col("a.q_id").alias("q_id"),
             F.col("a.c_id").alias("a_id"),
             F.col("b.c_id").alias("b_id"),
-            (
-                _dot(F.col("a.cv"), F.col("b.cv"))
-                / (F.col("a.norm") * F.col("b.norm"))
+            _cosine(
+                F.col("a.cv"), F.col("b.cv"), F.col("a.norm"), F.col("b.norm")
             ).alias("sim"),
         )
     )
@@ -1544,11 +1469,10 @@ def optimize_ivf_index(
     for c in sorted(int(x) for x in hot):
         sub = idx.filter(F.col(cell_col) == c)
         C_sub = _centroids(sub, sub_cells, id_col, vec_col)
-        assign = _cell_assigner(C_sub, 1)
         child0 = split_base + sub_cells * c
         recoded = sub.withColumn(
             cell_col,
-            (F.lit(child0) + assign(F.col(vec_col)).getItem(0)).cast("int"),
+            (F.lit(child0) + _nearest_cell(C_sub, F.col(vec_col))).cast("int"),
         )
         out = out.unionByName(recoded)
         leaf_rows += [(c, child0 + j) for j in range(len(C_sub))]

@@ -3786,7 +3786,7 @@ FROM dense GROUP BY 1
 def k98_kql_series_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The series similarity-math family — ``series_dot_product`` /
     ``series_magnitude`` / ``series_cosine_similarity`` /
-    ``series_pearson_correlation`` (kql.py:_series_dot et al.; null on
+    ``series_pearson_correlation`` (kql.py:_series_dot_product et al.; null on
     length mismatch or degenerate denominators), over TWO series built
     by ONE multi-aggregate make-series (n aggregates share the grid
     and the single per-bin rollup — one shuffle, not n; this entry is

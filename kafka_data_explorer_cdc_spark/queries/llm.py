@@ -961,16 +961,12 @@ def d07w_lsh_cosine_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "cosine",
-            S._dot(F.col("q_vec"), F.col("c_vec"))
-            / (F.col("q_nrm") * F.col("c_nrm")),
+            S._cosine(
+                F.col("q_vec"), F.col("c_vec"), F.col("q_nrm"), F.col("c_nrm")
+            ),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select("q_id", "c_id", "cosine", "rank")
-    )
+    return S._topk(scored, 5).select("q_id", "c_id", "cosine", "rank")
 
 
 _D07Y_ORACLE = """
@@ -7074,48 +7070,46 @@ def d91_ivf_index_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet float arrays round-trip exactly), so pruning changes WHERE
     bytes live, never the answer. DPP presence is pinned in
     tests/test_plans.py."""
-    import os as _os
-    import tempfile as _tmp
-
     em = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     C = S._centroids(em, 16, "vec_id", "embedding")
-    one = S._cell_assigner(C, 1)
+    queries = em.filter(F.col("vec_id") < 20)
+    at_rest = S._ivf_topk(
+        _index_side(spark, _d91_index(sf_dir, em, C)),
+        S._ivf_probe(_query_side(queries), C, 4),
+        5,
+    ).select("q_id", "c_id", "rank")
+    mem = S.ivf_cosine_topk(em, queries, k=5, n_cells=16, nprobe=4)
+    return set_gate(["q_id", "c_id", "rank"], mem, same=[(at_rest, -3)])
+
+
+def _d91_index(sf_dir: str, em: DataFrame, C) -> str:
+    """The d91 IVF index at rest: ``em`` partitioned by its nearest
+    cell of ``C``, written once per source file. Returns its
+    directory."""
+    import os
+
     from ..io import derived_cache_dir
 
     out = derived_cache_dir("d91", f"{sf_dir}/embeddings.parquet")
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
         em.withColumn(
-            "cell", one(F.col("embedding")).getItem(0)
+            "cell", S._nearest_cell(C, F.col("embedding"))
         ).write.mode("overwrite").partitionBy("cell").parquet(out)
-    idx = spark.read.parquet(out).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("embedding").alias("c_vec"),
-        "cell",
+    return out
+
+
+def _index_side(spark: SparkSession, path: str) -> DataFrame:
+    """A cell-partitioned index directory as ``(c_id, c_vec, cell)``."""
+    return spark.read.parquet(path).select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"), "cell"
     )
-    queries = em.filter(F.col("vec_id") < 20)
-    probe = S._cell_assigner(C, 4)
-    q = queries.select(
+
+
+def _query_side(queries: DataFrame) -> DataFrame:
+    """Embedding rows as the ``(q_id, q_vec)`` query side."""
+    return queries.select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    ).withColumn("cell", F.explode(probe(F.col("q_vec"))))
-    cand = idx.join(broadcast(q), "cell").filter(
-        F.col("c_id") != F.col("q_id")
     )
-    scored = cand.withColumn(
-        "cosine",
-        S._dot(F.col("q_vec"), F.col("c_vec"))
-        / (
-            F.sqrt(S._norm_sq(F.col("q_vec")))
-            * F.sqrt(S._norm_sq(F.col("c_vec")))
-        ),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    at_rest = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select("q_id", "c_id", "rank")
-    )
-    mem = S.ivf_cosine_topk(em, queries, k=5, n_cells=16, nprobe=4)
-    return set_gate(["q_id", "c_id", "rank"], mem, same=[(at_rest, -3)])
 
 
 def _mm10_oracle() -> str:
@@ -7274,14 +7268,7 @@ def _maxsim_rerank(em: DataFrame, queries: DataFrame, cand: DataFrame) -> DataFr
             F.col("vec_id").alias("q_id"),
             F.posexplode(slices).alias("q_tok", "q_vec"),
         )
-        nrm = F.sqrt(
-            F.aggregate(
-                "q_vec",
-                F.lit(0.0),
-                lambda a, x: a + x.cast("double") * x.cast("double"),
-            )
-        )
-        return out.withColumn("q_nrm", nrm)
+        return out.withColumn("q_nrm", F.sqrt(S._norm_sq(F.col("q_vec"))))
 
     qt = q_token_view(queries)
     # candidate tokens carry BOTH ids (a candidate list is per query)
@@ -7299,33 +7286,15 @@ def _maxsim_rerank(em: DataFrame, queries: DataFrame, cand: DataFrame) -> DataFr
                 )
             ).alias("c_tok", "c_vec"),
         )
-        .withColumn(
-            "c_nrm",
-            F.sqrt(
-                F.aggregate(
-                    "c_vec",
-                    F.lit(0.0),
-                    lambda a, x: a + x.cast("double") * x.cast("double"),
-                )
-            ),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with("q_vec", "c_vec", lambda a, b: a.cast("double") * b.cast("double")),
-        F.lit(0.0),
-        lambda a, x: a + x,
+        .withColumn("c_nrm", F.sqrt(S._norm_sq(F.col("c_vec"))))
     )
     pairs = ct.join(broadcast(qt), "q_id").withColumn(
-        "cos", dot / (F.col("q_nrm") * F.col("c_nrm"))
+        "cos",
+        S._cosine(F.col("q_vec"), F.col("c_vec"), F.col("q_nrm"), F.col("c_nrm")),
     )
     best = pairs.groupBy("q_id", "c_id", "q_tok").agg(F.max("cos").alias("m"))
     scored = best.groupBy("q_id", "c_id").agg(F.sum("m").alias("maxsim"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("maxsim"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select("q_id", "rank", "c_id", "maxsim")
-    )
+    return S._topk(scored, 3, "maxsim").select("q_id", "rank", "c_id", "maxsim")
 
 
 _D93_ORACLE = """
@@ -7366,14 +7335,7 @@ def d93_ivf_index_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     em = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     C = S._centroids(em, 16, "vec_id", "embedding")
-    one = S._cell_assigner(C, 1)
-
-    base = derived_cache_dir("d91", f"{sf_dir}/embeddings.parquet")
-    if not _os.path.exists(_os.path.join(base, "_SUCCESS")):
-        em.withColumn(
-            "cell", one(F.col("embedding")).getItem(0)
-        ).write.mode("overwrite").partitionBy("cell").parquet(base)
-
+    base = _d91_index(sf_dir, em, C)
     opt = derived_cache_dir("d93_opt", f"{sf_dir}/embeddings.parquet")
     map_path = _os.path.join(opt, "_leafmap")
     if not _os.path.exists(_os.path.join(opt, "_ALL_DONE")):
@@ -7382,44 +7344,16 @@ def d93_ivf_index_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
         open(_os.path.join(opt, "_ALL_DONE"), "w").close()
     leafmap = spark.read.parquet(map_path)
 
-    base_idx = spark.read.parquet(base).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"), "cell"
+    base_idx = _index_side(spark, base)
+    opt_idx = _index_side(spark, opt)
+    q = S._ivf_probe(_query_side(em.filter(F.col("vec_id") < 20)), C, 4)
+    leaf_q = (
+        q.withColumnRenamed("cell", "parent")
+        .join(broadcast(leafmap), "parent")
+        .select("q_id", "q_vec", F.col("leaf").alias("cell"))
     )
-    opt_idx = spark.read.parquet(opt).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec"), "cell"
-    )
-    queries = em.filter(F.col("vec_id") < 20)
-    probe = S._cell_assigner(C, 4)
-    q = queries.select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    ).withColumn("parent", F.explode(probe(F.col("q_vec"))))
-
-    def topk(idx: DataFrame, qside: DataFrame) -> DataFrame:
-        cand = idx.join(broadcast(qside), "cell").filter(
-            F.col("c_id") != F.col("q_id")
-        )
-        scored = cand.withColumn(
-            "cosine",
-            S._dot(F.col("q_vec"), F.col("c_vec"))
-            / (
-                F.sqrt(S._norm_sq(F.col("q_vec")))
-                * F.sqrt(S._norm_sq(F.col("c_vec")))
-            ),
-        )
-        w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= 5)
-            .select("q_id", "c_id", "rank")
-        )
-
-    before = topk(base_idx, q.withColumnRenamed("parent", "cell"))
-    after = topk(
-        opt_idx,
-        q.join(broadcast(leafmap), "parent").select(
-            "q_id", "q_vec", F.col("leaf").alias("cell")
-        ),
-    )
+    before = S._ivf_topk(base_idx, q, 5).select("q_id", "c_id", "rank")
+    after = S._ivf_topk(opt_idx, leaf_q, 5).select("q_id", "c_id", "rank")
     lossless = set_gate(["q_id", "c_id", "rank"], before, same=[(after, -1)])
 
     base_hist = base_idx.groupBy(F.col("cell").alias("parent")).agg(
@@ -9638,21 +9572,12 @@ def d109_binary_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.when(x >= 0, F.lit(1)).otherwise(F.lit(0)),
         )
 
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform(
-                "embedding", lambda x: x.cast("double") * x.cast("double")
-            ),
-            F.lit(0.0),
-            lambda p, q: p + q,
-        )
-    )
     sig = em.select(
         "vec_id",
         "embedding",
         pack(F.slice("embedding", 1, 32)).alias("lo"),
         pack(F.slice("embedding", 33, 32)).alias("hi"),
-        nrm.alias("nrm"),
+        F.sqrt(S._norm_sq(F.col("embedding"))).alias("nrm"),
     )
     q = sig.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"),
@@ -9681,20 +9606,11 @@ def d109_binary_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("srn", F.row_number().over(w_h))
         .filter(F.col("srn") <= 50)
     )
-    cosine = F.aggregate(
-        F.zip_with(
-            "q_vec",
-            "c_vec",
-            lambda a, b: a.cast("double") * b.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda p, x: p + x,
-    ) / (F.col("q_nrm") * F.col("c_nrm"))
-    w_r = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        short.select("q_id", "c_id", "hamming", cosine.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w_r).cast("long"))
-        .filter(F.col("rank") <= 5)
+    cosine = S._cosine(
+        F.col("q_vec"), F.col("c_vec"), F.col("q_nrm"), F.col("c_nrm")
+    )
+    return S._topk(
+        short.select("q_id", "c_id", "hamming", cosine.alias("cosine")), 5
     )
 
 
@@ -9935,28 +9851,17 @@ def d111_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     single pass each, and the hash ranking replaces the global sort a
     naive 'ORDER BY rand() LIMIT' would shuffle."""
     em = load(spark, sf_dir, "embeddings")
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform(
-                "embedding", lambda x: x.cast("double") * x.cast("double")
-            ),
-            F.lit(0.0),
-            lambda p, q: p + q,
-        )
+    n = em.select(
+        "vec_id", "embedding", F.sqrt(S._norm_sq(F.col("embedding"))).alias("nrm")
     )
-    n = em.select("vec_id", "embedding", nrm.alias("nrm"))
     seeds = n.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("sid"),
         F.col("embedding").alias("s_emb"),
         F.col("nrm").alias("s_nrm"),
     )
-    cosine = F.aggregate(
-        F.zip_with(
-            "embedding", "s_emb", lambda a, b: a.cast("double") * b.cast("double")
-        ),
-        F.lit(0.0),
-        lambda p, x: p + x,
-    ) / (F.col("nrm") * F.col("s_nrm"))
+    cosine = S._cosine(
+        F.col("embedding"), F.col("s_emb"), F.col("nrm"), F.col("s_nrm")
+    )
     w_a = Window.partitionBy("vec_id").orderBy(
         F.desc("cosine"), F.asc("sid")
     )

@@ -11,7 +11,7 @@ DuckDB oracle can verify values exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -166,6 +166,22 @@ def a11_source_table_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _events_change_log(ev: DataFrame) -> DataFrame:
+    """The events table as a keyed change log (a12, a17, a19):
+    ``user_id`` is the key, ``event_id`` the sequence, and the op code
+    is a deterministic function of ``event_id``."""
+    return ev.select(
+        "user_id",
+        "event_id",
+        F.when(F.col("event_id") % 10 == 9, "d")
+        .when(F.col("event_id") % 10 < 3, "c")
+        .otherwise("u")
+        .alias("op"),
+        "event_type",
+        "value",
+    )
+
+
 @query(
     "a12_cdc_latest_state",
     oracle="""
@@ -193,16 +209,7 @@ def a12_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     README.md:268-288 (op/before/after/lsn semantics).
     """
     ev = load(spark, sf_dir, "events")
-    log = ev.select(
-        "user_id",
-        "event_id",
-        F.when(F.col("event_id") % 10 == 9, "d")
-        .when(F.col("event_id") % 10 < 3, "c")
-        .otherwise("u")
-        .alias("op"),
-        "event_type",
-        "value",
-    )
+    log = _events_change_log(ev)
     out = latest_state(log, ["user_id"], seq_col="event_id")
     return out.withColumnRenamed("event_id", "last_seq")
 
@@ -313,16 +320,7 @@ def a17_cdc_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard warehouse materialization of a Debezium stream, one window
     shuffle (cdc/apply.py:scd2_history)."""
     ev = load(spark, sf_dir, "events")
-    log = ev.select(
-        "user_id",
-        "event_id",
-        F.when(F.col("event_id") % 10 == 9, "d")
-        .when(F.col("event_id") % 10 < 3, "c")
-        .otherwise("u")
-        .alias("op"),
-        "event_type",
-        "value",
-    )
+    log = _events_change_log(ev)
     from ..cdc.apply import scd2_history
 
     out = scd2_history(log, ["user_id"], seq_col="event_id")
@@ -411,16 +409,7 @@ def a19_point_in_time_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (a17 / the CDC sink's versioned state) and this entry is the
     cheap read-side slice."""
     ev = load(spark, sf_dir, "events")
-    log = ev.select(
-        "user_id",
-        "event_id",
-        F.when(F.col("event_id") % 10 == 9, "d")
-        .when(F.col("event_id") % 10 < 3, "c")
-        .otherwise("u")
-        .alias("op"),
-        "event_type",
-        "value",
-    )
+    log = _events_change_log(ev)
     from ..cdc.apply import scd2_history
 
     hist = scd2_history(log, ["user_id"], seq_col="event_id")

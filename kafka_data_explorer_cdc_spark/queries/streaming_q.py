@@ -1716,7 +1716,6 @@ def s49_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     em = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     C = S._centroids(em, 16, "vec_id", "embedding")
-    one = S._cell_assigner(C, 1)
     out = _tmp("s49_idx_")
     cp = _tmp("s49_cp_")
 
@@ -1731,7 +1730,7 @@ def s49_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         batch.withColumn(
-            "cell", one(F.col("embedding")).getItem(0)
+            "cell", S._nearest_cell(C, F.col("embedding"))
         ).write.mode("append").partitionBy("cell").parquet(out)
 
     q = (
@@ -1744,7 +1743,7 @@ def s49_stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     streamed = spark.read.parquet(out).select("vec_id", "cell")
     batch_idx = em.select(
-        "vec_id", one(F.col("embedding")).getItem(0).alias("cell")
+        "vec_id", S._nearest_cell(C, F.col("embedding")).alias("cell")
     )
     same = set_gate(["vec_id", "cell"], batch_idx, same=[(streamed, -1)])
     counts = (

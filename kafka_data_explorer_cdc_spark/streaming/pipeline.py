@@ -46,6 +46,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
+from pyspark.storagelevel import StorageLevel
 
 from ..cdc.apply import latest_state
 from ..cdc.envelope import flatten_after, parse_envelope, unwrap
@@ -438,12 +439,16 @@ class ParquetStateSink:
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         # the batch feeds several actions (probe, DLQ write, merge
         # write) — persist it so the envelope JSON parse runs once per
-        # micro-batch, not once per action
-        batch = batch.persist()
+        # micro-batch, not once per action. A frame the caller already
+        # cached keeps its cache: only a cache made here is released.
+        owned = batch.storageLevel == StorageLevel.NONE
+        if owned:
+            batch.persist()
         try:
             self._apply_batch(batch, batch_id)
         finally:
-            batch.unpersist()
+            if owned:
+                batch.unpersist()
 
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
         bad_cond = F.col(self.key_cols[0]).isNull() | F.col("lsn").isNull()

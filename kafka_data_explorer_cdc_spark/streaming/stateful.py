@@ -47,6 +47,16 @@ from pyspark.sql.types import (
 )
 
 
+_UNIT_SECONDS = {"days": 86400, "hours": 3600, "minutes": 60, "seconds": 1}
+
+
+def _window_seconds(text: str) -> int:
+    """Seconds in a ``"<n> <unit>"`` window literal (``"30 minutes"``,
+    ``"7 days"``)."""
+    qty, unit = text.split()
+    return int(qty) * _UNIT_SECONDS[unit]
+
+
 def _sorted_batch(pdfs, by=("ts", "event_id")) -> pd.DataFrame:
     """The per-group (ts, event_id)-ordered batch, cheaply.
 
@@ -254,9 +264,8 @@ def _last_touch_fn(
 ) -> Iterator[pd.DataFrame]:
     (user_id,) = key
     touch_type, touch_us = state.get if state.exists else (None, None)
-    rows = pd.concat(list(pdfs), ignore_index=True)
     # Match the batch twin's (ts, event_id) tie order exactly.
-    rows = rows.sort_values(["ts", "event_id"], kind="mergesort")
+    rows = _sorted_batch(pdfs)
     ts_us = rows["ts"].to_numpy().astype("datetime64[us]").astype("int64")
     kinds = rows["event_type"].to_numpy()
     values = rows["value"].to_numpy()
@@ -363,12 +372,8 @@ def streaming_sequence_detect(
         ]
     )
 
-    def _secs(text: str) -> int:
-        qty, unit = text.split()
-        return int(qty) * {"hours": 3600, "minutes": 60, "seconds": 1}[unit]
-
-    step_us = _secs(step_win) * 1_000_000
-    span_us = _secs(span_win) * 1_000_000
+    step_us = _window_seconds(step_win) * 1_000_000
+    span_us = _window_seconds(span_win) * 1_000_000
 
     def fn(key, pdfs, state: GroupState):
         cur, t1, tprev, s2 = state.get if state.exists else (0, -1, -1, -1)
@@ -569,11 +574,7 @@ def streaming_multitouch_attribution(
         ]
     )
 
-    def _secs(text: str) -> int:
-        qty, unit = text.split()
-        return int(qty) * {"days": 86400, "hours": 3600, "minutes": 60}[unit]
-
-    hor_us = _secs(horizon) * 1_000_000
+    hor_us = _window_seconds(horizon) * 1_000_000
     touch_set = set(touch_types)
 
     def fn(key, pdfs, state: GroupState):

@@ -84,10 +84,14 @@ def test_batch_merge_equals_full_replay(spark, flat, log, tmp_path):
 
 
 def test_batch_merge_idempotent_on_replay(spark, flat, log, tmp_path):
-    """Re-delivering an entire batch (at-least-once) must not change state."""
+    """Re-delivering an entire batch (at-least-once) must not change
+    state, and a batch the caller cached keeps its cache."""
+    level = flat.storageLevel
+    assert level.useMemory, "the module fixture is cached"
     sink = ParquetStateSink(spark, str(tmp_path), ["orderid"])
     sink.apply_batch(flat, 0)
     sink.apply_batch(flat, 1)
+    assert flat.storageLevel == level
     assert _as_state_dict(sink.current()) == expected_final_state(log)
 
 

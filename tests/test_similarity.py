@@ -82,10 +82,16 @@ def test_lsh_recall_vs_brute_force_real_data(spark, sf_dir):
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
     """IVF with nprobe=4/16 cells must recover most true neighbors;
     with nprobe=n_cells (probe everything) it must equal brute force
-    exactly — the pruning knob trades recall, never correctness."""
+    exactly — the pruning knob trades recall, never correctness. An
+    index built once by ``ivf_build`` and injected answers exactly as
+    the self-building call, and the probed hard-negative miner at
+    nprobe=n_cells equals the exact one."""
     from kafka_data_explorer_cdc_spark.io import load
     from kafka_data_explorer_cdc_spark.operators.similarity import (
         brute_force_cosine_topk,
+        hard_negative_ivf_topk,
+        hard_negative_topk,
+        ivf_build,
         ivf_cosine_topk,
     )
 
@@ -109,6 +115,28 @@ def test_ivf_recall_vs_brute_force(spark, sf_dir):
         for r in ivf_cosine_topk(em, queries, k=5, n_cells=16, nprobe=16).collect()
     }
     assert full == truth, "nprobe=n_cells must reproduce brute force exactly"
+
+    C, cells = ivf_build(em, 16)
+    for nprobe in (8, 16):
+        built = ivf_cosine_topk(em, queries, k=5, n_cells=16, nprobe=nprobe)
+        injected = ivf_cosine_topk(
+            em, queries, k=5, nprobe=nprobe, centroids=C, cells=cells
+        )
+        assert sorted(injected.collect()) == sorted(built.collect()), nprobe
+    cells.unpersist()
+
+    anchors = em.filter(F.col("vec_id") % 25 == 0)
+    exact = {
+        (r["q_id"], r["c_id"], r["rank"])
+        for r in hard_negative_topk(em, anchors, k=3).collect()
+    }
+    probed = {
+        (r["q_id"], r["c_id"], r["rank"])
+        for r in hard_negative_ivf_topk(
+            em, anchors, k=3, n_cells=16, nprobe=16
+        ).collect()
+    }
+    assert probed == exact, "nprobe=n_cells must reproduce the exact miner"
 
 
 def test_blocked_topk_rank_identical_to_brute_force(spark, sf_dir):
