@@ -217,6 +217,7 @@ from __future__ import annotations
 import contextvars
 import math
 import re
+import weakref
 from dataclasses import dataclass
 from functools import reduce as _reduce
 
@@ -465,6 +466,12 @@ def _sql_let(val: str, var: str, body: str) -> str:
 
 _KQL_SESSION = contextvars.ContextVar("kql_session", default=None)
 
+#: The temporary SQL functions :func:`_sql_function` created, per
+#: session: a name is created once, with no catalog probe per call.
+_SESSION_FUNCTIONS: weakref.WeakKeyDictionary[SparkSession, set[str]] = (
+    weakref.WeakKeyDictionary()
+)
+
 
 def _sql_function(name: str, params: str, body: str, *args: Column) -> Column:
     """Call ``body`` — SQL text over the parameter names declared in
@@ -485,11 +492,13 @@ def _sql_function(name: str, params: str, body: str, *args: Column) -> Column:
     and joins; a sort key or generator input must be projected
     first."""
     spark = _KQL_SESSION.get() or SparkSession.getActiveSession()
-    if not spark.catalog.functionExists(name):
+    created = _SESSION_FUNCTIONS.setdefault(spark, set())
+    if name not in created:
         spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({params})"
             f" RETURN {body}"
         )
+        created.add(name)
     return F.call_function(name, *args)
 
 
@@ -4799,6 +4808,49 @@ def _compile_funnel_completion(
     )
 
 
+def _require_string_attrs(df: DataFrame, plugin: str) -> None:
+    """The segmentation plugins mine attribute VALUES: every column of
+    ``df`` must be a string."""
+    non_str = [c for c, t in df.dtypes if t != "string"]
+    if non_str:
+        raise ValueError(
+            f"KQL: {plugin} needs string attribute columns; project/"
+            f"tostring first (non-string: {non_str})"
+        )
+
+
+def _itemsets(df: DataFrame, cols: list[str], *carry: Column) -> DataFrame:
+    """The candidate itemsets of the segmentation plugins (basket,
+    autocluster, diffpatterns): each row of ``df`` emits one copy per
+    size-1 and size-2 subset of ``cols``, the other attributes masked
+    to null, plus the ``carry`` columns unmasked. A null value never
+    forms an itemset (masking would conflate "null value" with "not in
+    the itemset")."""
+    k = len(cols)
+    subsets = [(i,) for i in range(k)] + [
+        (i, j) for i in range(k) for j in range(i + 1, k)
+    ]
+
+    def masked(sub: tuple) -> Column:
+        struct = F.struct(
+            *[
+                (F.col(c) if i in sub else F.lit(None).cast("string")).alias(c)
+                for i, c in enumerate(cols)
+            ],
+            *carry,
+        )
+        nonnull = _reduce(
+            lambda a, b: a & b, [F.col(cols[i]).isNotNull() for i in sub]
+        )
+        return F.when(nonnull, struct)
+
+    return (
+        df.select(F.explode(F.array(*[masked(s) for s in subsets])).alias("b"))
+        .filter(F.col("b").isNotNull())
+        .select("b.*")
+    )
+
+
 def _compile_basket(df: DataFrame, threshold: float) -> DataFrame:
     """``evaluate basket(threshold)`` — frequent attribute-combination
     mining over the piped table's (string) columns, Kusto's
@@ -4817,43 +4869,16 @@ def _compile_basket(df: DataFrame, threshold: float) -> DataFrame:
     other job is a bounded COUNT(*) for the support floor. Null
     attribute values never form itemsets (masking would conflate
     "null value" with "not in basket")."""
-    import math
-
     if not 0 < threshold <= 1:
         raise ValueError("KQL: basket threshold must be in (0, 1]")
     cols = df.columns
-    non_str = [c for c, t in df.dtypes if t != "string"]
-    if non_str:
-        raise ValueError(
-            f"KQL: basket needs string attribute columns; project/"
-            f"tostring first (non-string: {non_str})"
-        )
+    _require_string_attrs(df, "basket")
     if len(cols) < 2:
         raise ValueError("KQL: basket needs at least two columns")
     total = df.count()  # bounded: one scalar, the support denominator
     min_count = math.ceil(threshold * total)
-    k = len(cols)
-    subsets = [(i,) for i in range(k)] + [
-        (i, j) for i in range(k) for j in range(i + 1, k)
-    ]
-
-    def masked(sub: tuple) -> Column:
-        struct = F.struct(
-            *[
-                (F.col(c) if i in sub else F.lit(None).cast("string")).alias(c)
-                for i, c in enumerate(cols)
-            ]
-        )
-        nonnull = None
-        for i in sub:
-            cond = F.col(cols[i]).isNotNull()
-            nonnull = cond if nonnull is None else (nonnull & cond)
-        return F.when(nonnull, struct)
-
     out = (
-        df.select(F.explode(F.array(*[masked(s) for s in subsets])).alias("b"))
-        .filter(F.col("b").isNotNull())
-        .select("b.*")
+        _itemsets(df, cols)
         .groupBy(*cols)
         .agg(F.count("*").alias("Count"))
         .filter(F.col("Count") >= F.lit(min_count))
@@ -4894,42 +4919,16 @@ def _compile_autocluster(df: DataFrame, size_weight: float) -> DataFrame:
     denominator; the dominance prune is a self-join on the BOUNDED
     candidate table (post-aggregate, metadata-sized), never on rows;
     the top-16 is TakeOrderedAndProject."""
-    import math  # noqa: F401
-
     if not 0 < size_weight < 1:
         raise ValueError("KQL: autocluster size_weight must be in (0, 1)")
     cols = df.columns
-    non_str = [c for c, t in df.dtypes if t != "string"]
-    if non_str:
-        raise ValueError(
-            f"KQL: autocluster needs string attribute columns; project/"
-            f"tostring first (non-string: {non_str})"
-        )
+    _require_string_attrs(df, "autocluster")
     if len(cols) < 2:
         raise ValueError("KQL: autocluster needs at least two columns")
     total = df.count()  # bounded: one scalar, the coverage denominator
     k = len(cols)
-    subsets = [(i,) for i in range(k)] + [
-        (i, j) for i in range(k) for j in range(i + 1, k)
-    ]
-
-    def masked(sub: tuple) -> Column:
-        struct = F.struct(
-            *[
-                (F.col(c) if i in sub else F.lit(None).cast("string")).alias(c)
-                for i, c in enumerate(cols)
-            ]
-        )
-        nonnull = None
-        for i in sub:
-            cond = F.col(cols[i]).isNotNull()
-            nonnull = cond if nonnull is None else (nonnull & cond)
-        return F.when(nonnull, struct)
-
     cand = (
-        df.select(F.explode(F.array(*[masked(s) for s in subsets])).alias("b"))
-        .filter(F.col("b").isNotNull())
-        .select("b.*")
+        _itemsets(df, cols)
         .groupBy(*cols)
         .agg(F.count("*").alias("Count"))
         .withColumn(
@@ -5515,12 +5514,7 @@ def _compile_diffpatterns(
     cols = [c for c in df.columns if c != split_col]
     if split_col not in df.columns:
         raise ValueError(f"KQL: diffpatterns split column {split_col!r} not found")
-    non_str = [c for c, t in df.dtypes if t != "string"]
-    if non_str:
-        raise ValueError(
-            f"KQL: diffpatterns needs string attribute columns; project/"
-            f"tostring first (non-string: {non_str})"
-        )
+    _require_string_attrs(df, "diffpatterns")
     if not cols:
         raise ValueError("KQL: diffpatterns needs attribute columns")
     both = df.filter(F.col(split_col).isin(val_a, val_b))
@@ -5533,31 +5527,8 @@ def _compile_diffpatterns(
         raise ValueError(
             f"KQL: diffpatterns cohort empty (A={tot_a} rows, B={tot_b})"
         )
-    k = len(cols)
-    subsets = [(i,) for i in range(k)] + [
-        (i, j) for i in range(k) for j in range(i + 1, k)
-    ]
-
-    def masked(sub: tuple) -> Column:
-        struct = F.struct(
-            *[
-                (F.col(c) if i in sub else F.lit(None).cast("string")).alias(c)
-                for i, c in enumerate(cols)
-            ],
-            F.col(split_col).alias("__side"),
-        )
-        nonnull = None
-        for i in sub:
-            cond = F.col(cols[i]).isNotNull()
-            nonnull = cond if nonnull is None else (nonnull & cond)
-        return F.when(nonnull, struct)
-
     cand = (
-        both.select(
-            F.explode(F.array(*[masked(s) for s in subsets])).alias("b")
-        )
-        .filter(F.col("b").isNotNull())
-        .select("b.*")
+        _itemsets(both, cols, F.col(split_col).alias("__side"))
         .groupBy(*cols)
         .agg(
             F.sum(F.when(F.col("__side") == val_a, 1).otherwise(0)).alias(

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..cdc.envelope import ORDERS_INFO_SQL, orders_info
 from ..io import load
 from ..kql import kql
+from .helpers import ACTIVITY_COUNTS_ORACLE, SEQUENCE_DETECT_ORACLE
 from .registry import query
 
 _OI = f"WITH orders_info AS ({ORDERS_INFO_SQL})"
@@ -1980,59 +1981,7 @@ def k71_kql_funnel_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "k72_kql_sequence_detect",
-    oracle="""
-WITH RECURSIVE coded AS (
-  SELECT user_id, ts,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS rn,
-         event_type = 'view' AS f1,
-         event_type = 'click' AS f2,
-         event_type = 'purchase' AS f3
-  FROM events
-), walk AS (
-  SELECT user_id, CAST(0 AS BIGINT) AS rn, 0 AS cur,
-         CAST(NULL AS TIMESTAMP) AS t1, CAST(NULL AS TIMESTAMP) AS tprev,
-         CAST(NULL AS TIMESTAMP) AS s2, CAST(NULL AS TIMESTAMP) AS e1,
-         CAST(NULL AS TIMESTAMP) AS e2, CAST(NULL AS TIMESTAMP) AS e3,
-         FALSE AS emit
-  FROM (SELECT DISTINCT user_id FROM coded)
-  UNION ALL
-  SELECT c.user_id, c.rn,
-         CASE WHEN nd AND wok AND w.cur = 2 THEN 0
-              WHEN nd AND wok THEN w.cur + 1
-              WHEN nd AND NOT wok AND c.f1 THEN 1
-              WHEN nd AND NOT wok THEN 0
-              ELSE w.cur END,
-         CASE WHEN nd AND wok AND w.cur = 2 THEN NULL
-              WHEN nd AND wok AND w.cur = 0 THEN c.ts
-              WHEN nd AND wok THEN w.t1
-              WHEN nd AND NOT wok AND c.f1 THEN c.ts
-              WHEN nd AND NOT wok THEN NULL
-              ELSE w.t1 END,
-         CASE WHEN nd AND wok AND w.cur = 2 THEN NULL
-              WHEN nd AND wok THEN c.ts
-              WHEN nd AND NOT wok AND c.f1 THEN c.ts
-              WHEN nd AND NOT wok THEN NULL
-              ELSE w.tprev END,
-         CASE WHEN nd AND wok AND w.cur = 2 THEN NULL
-              WHEN nd AND wok AND w.cur = 1 THEN c.ts
-              WHEN nd AND wok THEN w.s2
-              WHEN nd AND NOT wok THEN NULL
-              ELSE w.s2 END,
-         CASE WHEN nd AND wok AND w.cur = 2 THEN w.t1 END,
-         CASE WHEN nd AND wok AND w.cur = 2 THEN w.s2 END,
-         CASE WHEN nd AND wok AND w.cur = 2 THEN c.ts END,
-         COALESCE(nd AND wok AND w.cur = 2, FALSE)
-  FROM walk w
-  JOIN coded c ON c.user_id = w.user_id AND c.rn = w.rn + 1
-  CROSS JOIN LATERAL (SELECT
-      CASE w.cur WHEN 0 THEN c.f1 WHEN 1 THEN c.f2 ELSE c.f3 END AS nd,
-      (w.cur = 0 OR (c.ts <= w.tprev + INTERVAL 24 HOUR
-                     AND c.ts <= w.t1 + INTERVAL 96 HOUR)) AS wok) x
-)
-SELECT user_id, e1 AS f1_ts, e2 AS f2_ts, e3 AS f3_ts
-FROM walk WHERE emit
-""",
+    oracle=SEQUENCE_DETECT_ORACLE,
     tags=("kql", "scan", "stateful"),
 )
 def k72_kql_sequence_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2837,34 +2786,7 @@ def k81_kql_series_fit_2lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "k82_kql_activity_counts",
-    oracle="""
-WITH bins AS (
-  SELECT unnest(generate_series(0, 27)) AS k
-), ev AS (
-  SELECT CAST(FLOOR(EXTRACT(EPOCH FROM ts - TIMESTAMP '2024-01-01 00:00:00')
-                    / 86400) AS BIGINT) AS k, user_id
-  FROM events
-  WHERE ts >= TIMESTAMP '2024-01-01 00:00:00'
-    AND ts <  TIMESTAMP '2024-01-29 00:00:00'
-), per AS (
-  SELECT k, CAST(COUNT(*) AS BIGINT) AS count,
-         CAST(COUNT(DISTINCT user_id) AS BIGINT) AS dcount
-  FROM ev GROUP BY 1
-), fs AS (
-  SELECT user_id, MIN(k) AS k FROM ev GROUP BY 1
-), nw AS (
-  SELECT k, CAST(COUNT(*) AS BIGINT) AS new_dcount FROM fs GROUP BY 1
-)
-SELECT TIMESTAMP '2024-01-01 00:00:00' + INTERVAL (b.k) DAY AS Timestamp,
-       COALESCE(per.count, 0) AS count,
-       COALESCE(per.dcount, 0) AS dcount,
-       COALESCE(nw.new_dcount, 0) AS new_dcount,
-       CAST(SUM(COALESCE(nw.new_dcount, 0)) OVER (ORDER BY b.k) AS BIGINT)
-         AS aggregated_dcount
-FROM bins b
-LEFT JOIN per ON per.k = b.k
-LEFT JOIN nw ON nw.k = b.k
-""",
+    oracle=ACTIVITY_COUNTS_ORACLE,
     tags=("kql", "timeseries", "activity"),
 )
 def k82_kql_activity_counts(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -507,8 +507,8 @@ def a21_malformed_envelope_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
     unknowable there — the payload didn't parse).
 
     The streaming twin of this split already runs inside
-    `start_cdc_pipeline` (`ParquetStateSink._apply_batch` — bad rows append
-    to `state_root/dead_letter` each micro-batch); this entry gates
+    `start_cdc_pipeline` (`ParquetStateSink._apply_batch` — bad rows go
+    to `state_root/dead_letter/v{N}` each micro-batch); this entry gates
     the SAME parse-split semantics through the driver oracle on the
     batch path, where the corruption is deterministic.
 

@@ -17,11 +17,15 @@ from pyspark.sql.functions import broadcast
 from ..io import load
 from ..operators import layout as L
 from .helpers import (
+    LAST_TOUCH_ORACLE,
+    MULTITOUCH_ORACLE,
     SCD2_MERGE_ORACLE,
+    SESSION_WINDOW_ORACLE,
     SQL_CHARGE,
     SQL_DAVG,
     SQL_DISC_PRICE,
     SQL_DSUM,
+    WELCH_TTEST_ORACLE,
     charge_dec,
     davg,
     disc_price_dec,
@@ -917,24 +921,7 @@ def b27x_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "b25_session_window",
-    oracle="""
-WITH o AS (
-  SELECT user_id, ts,
-         CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-              OR ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                 >= INTERVAL '30 minutes'
-              THEN 1 ELSE 0 END AS brk
-  FROM events
-), g AS (
-  SELECT user_id, ts,
-         SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                        ROWS UNBOUNDED PRECEDING) AS sid
-  FROM o
-)
-SELECT user_id, MIN(ts) AS session_start,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM g GROUP BY user_id, sid
-""",
+    oracle=SESSION_WINDOW_ORACLE,
     tags=("relational", "window", "session"),
 )
 def b25_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4446,32 +4433,7 @@ def b86_wilson_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "b87_last_touch_attribution",
-    oracle=f"""
-WITH seq AS (
-  SELECT user_id, ts, event_type, value,
-         last_value(CASE WHEN event_type <> 'purchase' THEN event_type END
-                    IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS touch_type,
-         last_value(CASE WHEN event_type <> 'purchase' THEN ts END
-                    IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS touch_ts
-  FROM events
-), attrib AS (
-  SELECT CASE WHEN touch_ts IS NOT NULL
-               AND ts - touch_ts <= INTERVAL 7 DAY
-              THEN touch_type ELSE 'direct' END AS channel,
-         value
-  FROM seq WHERE event_type = 'purchase'
-)
-SELECT channel,
-       CAST(COUNT(*) AS BIGINT) AS n_purchases,
-       {SQL_DSUM.format(col="value")} AS revenue
-FROM attrib GROUP BY channel
-""",
+    oracle=LAST_TOUCH_ORACLE,
     tags=("relational", "window", "analytics"),
 )
 def b87_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4525,36 +4487,7 @@ def b87_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "b88_welch_ttest",
-    oracle=f"""
-WITH q AS (
-  SELECT event_type, user_id % 2 AS g,
-         CAST(value AS DECIMAL(18,2)) AS x
-  FROM events
-), s AS (
-  SELECT event_type,
-         CAST(SUM(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS na,
-         CAST(SUM(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-         CAST(SUM(CASE WHEN g = 0 THEN x END) AS DOUBLE) AS sxa,
-         CAST(SUM(CASE WHEN g = 1 THEN x END) AS DOUBLE) AS sxb,
-         CAST(SUM(CASE WHEN g = 0 THEN x * x END) AS DOUBLE) AS sxxa,
-         CAST(SUM(CASE WHEN g = 1 THEN x * x END) AS DOUBLE) AS sxxb
-  FROM q GROUP BY event_type
-), w AS (
-  SELECT event_type, na, nb,
-         sxa / na AS ma, sxb / nb AS mb,
-         (sxxa - sxa * sxa / na) / (na - 1.0) / na AS sea,
-         (sxxb - sxb * sxb / nb) / (nb - 1.0) / nb AS seb
-  FROM s
-)
-SELECT event_type, na AS n_a, nb AS n_b,
-       ROUND(ma, 6) AS mean_a, ROUND(mb, 6) AS mean_b,
-       ROUND((ma - mb) / sqrt(sea + seb), 6) AS t_stat,
-       ROUND((sea + seb) * (sea + seb)
-             / (sea * sea / (na - 1.0) + seb * seb / (nb - 1.0)), 6)
-         AS welch_df,
-       abs((ma - mb) / sqrt(sea + seb)) >= 1.96 AS significant
-FROM w
-""",
+    oracle=WELCH_TTEST_ORACLE,
     tags=("relational", "stats", "abtest"),
 )
 def b88_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6544,34 +6477,7 @@ def b118_kll_quantile_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "b119_multitouch_attribution",
-    oracle="""
-WITH purch AS (
-  SELECT event_id AS p_id, user_id, ts AS p_ts, value
-  FROM events WHERE event_type = 'purchase'
-), touch AS (
-  SELECT p.p_id, p.value, e.event_type AS channel,
-         ROW_NUMBER() OVER (PARTITION BY p.p_id
-                            ORDER BY e.ts, e.event_id) AS rn,
-         COUNT(*) OVER (PARTITION BY p.p_id) AS n
-  FROM purch p JOIN events e
-    ON e.user_id = p.user_id
-   AND e.event_type IN ('view', 'click', 'signup')
-   AND e.ts < p.p_ts
-   AND e.ts >= p.p_ts - INTERVAL 7 DAY
-), credited AS (
-  SELECT channel,
-         CAST(ROUND(value * (CASE WHEN n = 1 THEN 1.0
-                                  WHEN n = 2 THEN 0.5
-                                  WHEN rn = 1 OR rn = n THEN 0.4
-                                  ELSE 0.2 / (n - 2) END) * 1e6) AS BIGINT)
-           AS cr
-  FROM touch
-)
-SELECT channel,
-       CAST(COUNT(*) AS BIGINT) AS n_touches,
-       CAST(SUM(cr) AS BIGINT) / 1e6 AS credited_value
-FROM credited GROUP BY 1 ORDER BY 1
-""",
+    oracle=MULTITOUCH_ORACLE,
     tags=("relational", "attribution", "analytics"),
 )
 def b119_multitouch_attribution(

@@ -6,6 +6,7 @@ on ``local[N]``:
 - AQE on (adaptive coalescing + skew-join handling at runtime)
 - Arrow on (all pandas UDF / mapInPandas paths are Arrow-batched)
 - session timezone pinned to UTC (oracle comparisons are UTC)
+- local Python UDF workers find this package (its root on their path)
 - shuffle partitions sized to the local core count; on a real cluster
   AQE coalesces from the configured initial value, so over-provisioning
   the initial partition count is safe.
@@ -16,6 +17,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+#: The directory that holds this package.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def local_cpus() -> int:
@@ -57,6 +61,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        # Python UDF workers import this package by module name; put its
+        # root on their path, whatever the driver's working directory
+        b = b.config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

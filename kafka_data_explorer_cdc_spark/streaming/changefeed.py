@@ -16,10 +16,11 @@ vs ``merged`` (post) rows of the touched buckets by key —
   + ``update_postimage`` (Delta CDF's two-row convention)
 - tombstone-to-tombstone re-arbitration           → no visible change
 
-Each batch appends its rows under ``feed/batch_{version}/``, with
+Each batch writes its rows under ``feed/v{version}/``, with
 ``_change_type`` and ``_commit_version`` columns, for the state version
-its merge commits: the feed is read only up to the state manifest's
-version, so feed and state commit together. A replayed micro-batch —
+its merge commits; the state log's visibility rule
+(:meth:`ManifestLog.committed`) reads only committed versions, so feed
+and state commit together. A replayed micro-batch —
 same batch id, or a restarted stream's repeated one — classifies to
 zero changes (``merged == cur`` on replay). The feed is therefore
 effectively-exactly-once even though the input is at-least-once:
@@ -32,9 +33,6 @@ only commits newer than its cursor.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,39 +58,23 @@ class ChangeFeedSink:
         self.inner = ParquetStateSink(
             spark, state_root, key_cols, n_buckets, on_merge=self._emit
         )
-        self.feed_root = os.path.join(state_root, "feed")
-        os.makedirs(self.feed_root, exist_ok=True)
 
     # -- sink surface -----------------------------------------------
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        # a feed dir at the next version was stranded by a crash before
-        # its commit; drop it, or a commit there that merges nothing
-        # (dead letters only) would make it readable
-        shutil.rmtree(
-            self._batch_dir(self.inner.log.next_version()), ignore_errors=True
-        )
         self.inner.apply_batch(batch, batch_id)
 
     def current(self) -> DataFrame | None:
         return self.inner.current()
 
     # -- feed storage -----------------------------------------------
-    def _batch_dir(self, version: int) -> str:
-        return os.path.join(self.feed_root, f"batch_{version}")
-
     def feed(self, since_version: int | None = None) -> DataFrame | None:
         """All change rows of committed state versions, optionally only
         those > ``since_version`` (the consumer-cursor read path:
         O(new commits), not O(feed))."""
-        m = self.inner._manifest()
-        if m is None:
-            return None
         dirs = [
-            os.path.join(self.feed_root, d)
-            for d in sorted(os.listdir(self.feed_root))
-            if d.startswith("batch_")
-            and int(d[len("batch_"):]) <= m["version"]
-            and (since_version is None or int(d[len("batch_"):]) > since_version)
+            d
+            for v, d in self.inner.log.committed("feed").items()
+            if since_version is None or v > since_version
         ]
         if not dirs:
             return None
@@ -179,4 +161,4 @@ class ChangeFeedSink:
             ).select("__c.*")
         changes.withColumn(
             "_commit_version", F.lit(version)
-        ).write.mode("overwrite").parquet(self._batch_dir(version))
+        ).write.mode("overwrite").parquet(self.inner.log.dir("feed", version))

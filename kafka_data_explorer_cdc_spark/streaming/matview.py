@@ -21,22 +21,20 @@ merge for the view — 2x the window work and state reads per batch):
   (COUNT and DECIMAL sums are order-independent), so no per-key join
   or key-set collect is needed at all;
 - stored view += delta (full-outer join on group), written as
-  ``agg_v{version}`` under the state version the merge commits.
+  ``agg_view/v{version}`` for the state version the merge commits.
 
-Crash/replay safety comes from the state manifest alone. The view is
-read at the last state version that merged (``max`` of the manifest's
-bucket map), so a view written by a batch that crashed before its
-state commit is never read, and state and view commit together. A
-replayed batch — same batch id, or a restarted stream's repeated one —
-finds its effects already in ``cur``, so ``merged == cur`` and the
-delta is exactly zero. SUM/COUNT are self-inverting under deltas;
-MIN/MAX are not (a delete can require a rescan) — this sink is the
-algebraic-aggregate form.
+Crash/replay safety comes from the state log alone. The view is read
+from the newest committed ``agg_view`` dir
+(:meth:`ManifestLog.committed`), so a view written by a batch that
+crashed before its state commit is never read, and state and view
+commit together. A replayed batch — same batch id, or a restarted
+stream's repeated one — finds its effects already in ``cur``, so
+``merged == cur`` and the delta is exactly zero. SUM/COUNT are
+self-inverting under deltas; MIN/MAX are not (a delete can require a
+rescan) — this sink is the algebraic-aggregate form.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,8 +64,6 @@ class AggViewSink:
         )
         self.group_col = group_col
         self.value_col = value_col
-        self.view_root = os.path.join(state_root, "agg_view")
-        os.makedirs(self.view_root, exist_ok=True)
 
     # -- sink surface -----------------------------------------------
     def apply_batch(self, batch: DataFrame, batch_id: int) -> None:
@@ -78,15 +74,12 @@ class AggViewSink:
 
     # -- view storage -----------------------------------------------
     def _stored(self) -> DataFrame | None:
-        """The view as of the committed state: written by the last
-        version that merged, the newest in the manifest's bucket map."""
-        m = self.inner._manifest()
-        if m is None or not m["buckets"]:
+        """The view as of the committed state: the newest committed
+        ``agg_view`` dir, written by the last version that merged."""
+        dirs = self.inner.log.committed("agg_view")
+        if not dirs:
             return None
-        version = max(m["buckets"].values())
-        return self.spark.read.parquet(
-            os.path.join(self.view_root, f"agg_v{version}")
-        )
+        return self.spark.read.parquet(dirs[max(dirs)])
 
     def view(self) -> DataFrame | None:
         """The maintained aggregate (groups with count 0 dropped)."""
@@ -162,5 +155,6 @@ class AggViewSink:
                     ).cast("decimal(18,2)").alias("sum_dec"),
                 )
             )
-        out = os.path.join(self.view_root, f"agg_v{version}")
-        updated.write.mode("overwrite").parquet(out)
+        updated.write.mode("overwrite").parquet(
+            self.inner.log.dir("agg_view", version)
+        )

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from typing import Callable
 
 from pyspark import InheritableThread
@@ -63,7 +64,14 @@ class ManifestLog:
     commit is only ever overwritten while no committed manifest
     references it, i.e. when a crash stranded it. Each file is written
     under a temp name and ``os.replace``d, so readers see the previous
-    commit or the next, never a torn one."""
+    commit or the next, never a torn one.
+
+    **One visibility rule** for everything else a micro-batch writes
+    (dead letters, change feed, aggregate view): an artifact of kind
+    ``K`` for version N lives at ``<root>/K/v{N}`` (:meth:`dir`) and is
+    visible exactly when N is committed (:meth:`committed`). Before a
+    sink writes version N it calls :meth:`clear`, so what a crashed
+    attempt at N left behind is never read as the retry's."""
 
     def __init__(self, root: str):
         self.root = root
@@ -82,10 +90,6 @@ class ManifestLog:
         except FileNotFoundError:
             return None
 
-    def next_version(self) -> int:
-        m = self.read()
-        return 0 if m is None else m["version"] + 1
-
     def versions(self) -> list[int]:
         """Every retained committed version, oldest first."""
         return sorted(
@@ -96,6 +100,36 @@ class ManifestLog:
 
     def drop(self, version: int) -> None:
         os.remove(self.path(version))
+
+    def dir(self, kind: str, version: int) -> str:
+        """Where the artifact of ``kind`` for ``version`` is written."""
+        return os.path.join(self.root, kind, f"v{version}")
+
+    def committed(self, kind: str) -> dict[int, str]:
+        """The dirs of ``kind`` a reader may see — those of committed
+        versions — by version, oldest first. Any other entry under
+        ``<root>/<kind>`` was not written by this log (an older sink's
+        layout), so it raises instead of being skipped."""
+        m = self.read()
+        base = os.path.join(self.root, kind)
+        if m is None or not os.path.isdir(base):
+            return {}
+        found = []
+        for d in os.listdir(base):
+            if not (d.startswith("v") and d[1:].isdigit()):
+                raise ValueError(
+                    f"incompatible {kind} layout at {base}: {d!r} is not a "
+                    "v{N} dir (written by an older sink version); "
+                    "re-ingest into a fresh state_root"
+                )
+            found.append(int(d[1:]))
+        return {v: self.dir(kind, v) for v in sorted(found) if v <= m["version"]}
+
+    def clear(self, version: int) -> None:
+        """Remove every ``<root>/<kind>/v{version}``: what an attempt at
+        ``version`` wrote before a crash kept it from committing."""
+        for kind in os.listdir(self.root):
+            shutil.rmtree(self.dir(kind, version), ignore_errors=True)
 
     def commit(self, manifest: dict) -> None:
         """Commit ``manifest`` as ``manifest["version"]``: the versioned
@@ -233,10 +267,10 @@ class ParquetStateSink:
     volume, so a batch runs at most four Spark jobs: one probe (a noop
     write whose observed metrics give the touched buckets, the lsn
     high-water mark and the row and dead-letter counts, and which
-    materializes the persisted batch), the dead-letter append (only if
+    materializes the persisted batch), the dead-letter write (only if
     the batch has bad rows; it runs in a thread beside the merge, with
     the caller's job group, and is joined before the commit, so a
-    failed append commits nothing), and the merge write (its
+    failed write commits nothing), and the merge write (its
     shuffle-map job and the write job, with at most one task per core).
     Each manifest records the stored schema, so bucket reads — the
     merge, ``current()``, ``at_version()`` — launch no schema-inference
@@ -244,10 +278,14 @@ class ParquetStateSink:
     touched).
 
     Malformed envelopes (unparseable JSON, or parseable but keyless /
-    sequence-less) never reach the merge: they are appended losslessly
-    to a dead-letter parquet under ``state_root/dead_letter`` for
-    inspection and replay — the DLQ every production CDC sink needs,
-    since ``from_json`` nulls corrupt records instead of failing.
+    sequence-less) never reach the merge: they are written losslessly
+    to ``state_root/dead_letter/v{N}`` for inspection and replay — the
+    DLQ every production CDC sink needs, since ``from_json`` nulls
+    corrupt records instead of failing. Like the change feed and the
+    aggregate view, they follow the log's one visibility rule
+    (:class:`ManifestLog`): ``dead_letters()`` reads committed versions
+    only, so a batch that failed shows none and its replay shows one
+    copy.
 
     **Tombstone retention.** The stored form keeps each key's winning
     DELETE row (``op='d'``) instead of dropping it: micro-batch
@@ -282,8 +320,8 @@ class ParquetStateSink:
         materialized views, change feeds) share the one merge
         computation instead of re-deriving it; called after the state
         files are written, before the manifest commits — so what the
-        hook writes under ``version`` is committed by the state
-        manifest, atomically with the state."""
+        hook writes at ``log.dir(kind, version)`` becomes visible with
+        the state (:meth:`ManifestLog.committed`)."""
         self.spark = spark
         self.root = state_root
         self.key_cols = key_cols
@@ -292,16 +330,15 @@ class ParquetStateSink:
         self.on_merge = on_merge
         self.log = ManifestLog(state_root)
 
-    def dead_letter_dir(self) -> str:
-        return os.path.join(self.root, "dead_letter")
-
     def dead_letters(self) -> DataFrame | None:
-        """The dead-lettered rows, or None if no batch has had any. Read
-        with the schema the append writes, so a corrupt file raises."""
-        if not os.path.exists(self.dead_letter_dir()):
+        """The dead-lettered rows of committed versions, or None if none
+        has any. Read with the schema the write uses, so a corrupt file
+        raises."""
+        dirs = self.log.committed("dead_letter")
+        if not dirs:
             return None
         return self.spark.read.schema("batch_id int, raw_value string").parquet(
-            self.dead_letter_dir()
+            *dirs.values()
         )
 
     def _bucket_col(self, n_buckets: int) -> Column:
@@ -411,8 +448,6 @@ class ParquetStateSink:
         manifests-first, then unreferenced data dirs, so a crash
         mid-vacuum can only strand unreferenced dirs (re-vacuumed next
         call), never break a reader."""
-        import shutil
-
         vers = self.versions()
         if len(vers) <= retain_last:
             return {"dropped_manifests": 0, "dropped_dirs": 0}
@@ -470,6 +505,7 @@ class ParquetStateSink:
         bucket_versions: dict[str, int] = dict(prev["buckets"]) if prev else {}
         max_lsn: int | None = prev.get("max_lsn") if prev else None
         schema: dict | None = prev["schema"] if prev else None
+        self.log.clear(version)
 
         probe = Observation()
         batch.observe(
@@ -489,16 +525,16 @@ class ParquetStateSink:
         join_dead_letters = None
         if has_raw:
             if stats["dead_letters"]:
-                # the append needs nothing from the merge, so it runs
+                # the write needs nothing from the merge, so it runs
                 # beside it and is joined before the commit: a failed
-                # append commits nothing. Append is idempotent-enough
-                # for a DLQ (duplicates on batch replay are acceptable
-                # there; the MERGE path stays exact)
+                # write commits nothing, and what it wrote is visible
+                # only once the version commits
                 dead = batch.filter(bad_cond).select(
                     F.lit(batch_id).alias("batch_id"), "raw_value"
                 )
+                out = self.log.dir("dead_letter", version)
                 join_dead_letters = _beside(
-                    lambda: dead.write.mode("append").parquet(self.dead_letter_dir())
+                    lambda: dead.write.mode("overwrite").parquet(out)
                 )
             batch = batch.filter(good).drop("raw_value")
         else:

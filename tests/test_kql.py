@@ -2770,6 +2770,39 @@ def test_kql_geohash_canonical_vectors(spark):
     assert bad is None
 
 
+def test_kql_kernel_function_created_once_per_session(spark, monkeypatch):
+    """A kernel's temporary SQL function is created once per session:
+    compiling the kernel again probes no catalog and creates nothing,
+    and a new session (its own temporary-function namespace) still
+    gets the function."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.catalog import Catalog
+
+    query = "T | extend gh = geo_point_to_geohash(lon, lat, 5)"
+    rows, schema = [(-5.6, 42.6)], "lon double, lat double"
+    kql(query, {"T": spark.createDataFrame(rows, schema)})
+    probes, creates = [], []
+    exists = Catalog.functionExists
+    monkeypatch.setattr(
+        Catalog, "functionExists",
+        lambda self, *a, **k: probes.append(a) or exists(self, *a, **k),
+    )
+    sql = SparkSession.sql
+    monkeypatch.setattr(
+        SparkSession, "sql",
+        lambda self, text, *a, **k: (
+            creates.append(text) if "TEMPORARY FUNCTION" in text else None
+        ) or sql(self, text, *a, **k),
+    )
+    out = kql(query, {"T": spark.createDataFrame(rows, schema)})
+    assert probes == [] and creates == []
+    other = spark.newSession()
+    again = kql(query, {"T": other.createDataFrame(rows, schema)})
+    assert len(creates) == 1 and probes == []
+    assert again.collect() == out.collect()
+    assert again.first()["gh"] == "ezs42"
+
+
 def test_kql_graph_shortest_paths(spark):
     """graph-shortest-paths: first BFS level found is the minimum
     (diamond a->b->d, a->c->d, a->d direct gives hops=1); pairs

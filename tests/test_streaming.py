@@ -720,14 +720,15 @@ def test_failed_dead_letter_append_commits_nothing(spark):
            (9, None, None, None, "c", None, "no lsn")],
         DLQ_FLAT_SCHEMA,
     )
-    with open(sink.dead_letter_dir(), "w") as f:
+    dead_letter = os.path.join(state, "dead_letter")
+    with open(dead_letter, "w") as f:
         f.write("not a directory")
     with pytest.raises(Exception, match="dead_letter"):
         sink.apply_batch(batch, 1)
     assert sink.versions() == versions
     assert sorted(tuple(r) for r in sink.current().collect()) == before
 
-    os.remove(sink.dead_letter_dir())
+    os.remove(dead_letter)
     sink.apply_batch(batch, 1)
     assert sink.versions() == versions + [versions[-1] + 1]
     assert sorted((r["orderid"], r["amount"]) for r in sink.current().collect()) == [
@@ -765,19 +766,67 @@ def test_envelope_schema_evolution_tolerated(spark):
 
 
 def test_dead_letters_broken_queue_raises(spark):
-    """``dead_letters()`` is None only when there is no dead-letter dir:
-    an empty dir reads as 0 rows, and a file there that is not parquet
-    raises on read instead of passing for "no dead letters"."""
-    sink = ParquetStateSink(spark, _tmp("dlq_read_state_"), ["orderid"], n_buckets=4)
+    """``dead_letters()`` is None only when no committed version has
+    dead letters: a committed dead-letter file that is not parquet
+    raises on read instead of passing for "no dead letters", and the
+    flat ``dead_letter/*.parquet`` layout of older sink versions raises
+    at once."""
+    state = _tmp("dlq_read_state_")
+    sink = ParquetStateSink(spark, state, ["orderid"], n_buckets=4)
     assert sink.dead_letters() is None
-    os.makedirs(sink.dead_letter_dir())
+    sink.apply_batch(_flat_batch(spark, [(1, 1, 1, "Rome", "c", 1)]), 0)
+    assert sink.dead_letters() is None
+    committed = sink.log.dir("dead_letter", 0)
+    os.makedirs(committed)
     assert sink.dead_letters().count() == 0
-    with open(os.path.join(sink.dead_letter_dir(), "part-0.parquet"), "wb") as f:
+    with open(os.path.join(committed, "part-0.parquet"), "wb") as f:
         f.write(b"not a parquet file")
     dl = sink.dead_letters()
     assert dl is not None
     with pytest.raises(Exception, match="part-0.parquet"):
         dl.collect()
+    open(os.path.join(state, "dead_letter", "part-1.parquet"), "wb").close()
+    with pytest.raises(ValueError, match="part-1.parquet"):
+        sink.dead_letters()
+
+
+def test_dead_letters_commit_with_the_state(spark):
+    """Dead letters follow the state log's visibility rule: a batch
+    whose merge fails shows none, its replay shows exactly one copy,
+    and what a crashed attempt wrote is not read as the dead letters of
+    the clean batch that commits that version instead."""
+
+    def crash(cur, merged, version):
+        raise RuntimeError("crash before commit")
+
+    batch = spark.createDataFrame(
+        [(k, 1, k, "Rome", "c", k, "ok") for k in range(1, 5)]
+        + [(None, None, None, None, None, None, "garbage"),
+           (9, None, None, None, "c", None, "no lsn")],
+        DLQ_FLAT_SCHEMA,
+    )
+    state = _tmp("dlq_commit_state_")
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        ParquetStateSink(
+            spark, state, ["orderid"], n_buckets=2, on_merge=crash
+        ).apply_batch(batch, 0)
+    sink = ParquetStateSink(spark, state, ["orderid"], n_buckets=2)
+    assert sink.versions() == []
+    assert sink.dead_letters() is None
+    sink.apply_batch(batch, 0)
+    assert sorted(r["raw_value"] for r in sink.dead_letters().collect()) == [
+        "garbage", "no lsn",
+    ]
+
+    state = _tmp("dlq_retry_state_")
+    with pytest.raises(RuntimeError, match="crash before commit"):
+        ParquetStateSink(
+            spark, state, ["orderid"], n_buckets=2, on_merge=crash
+        ).apply_batch(batch, 0)
+    sink = ParquetStateSink(spark, state, ["orderid"], n_buckets=2)
+    sink.apply_batch(batch.filter(F.col("raw_value") == "ok"), 0)
+    assert sink._manifest()["metrics"]["dead_letters"] == 0
+    assert sink.dead_letters() is None
 
 
 def test_sink_contract(spark):
@@ -1654,34 +1703,6 @@ def test_streaming_session_window_merges_across_microbatches(spark, tmp_path):
         (7, "2024-01-01 10:00:00", "2024-01-01 10:45:00"): 3,
         (7, "2024-01-01 12:00:00", "2024-01-01 12:20:00"): 1,
     }
-
-
-def test_exactly_once_sink_crash_replay(spark):
-    """IdempotentBatchSink's replay contract: a crash between the sink
-    write and the checkpoint commit makes Structured Streaming replay
-    the SAME batch id. Simulate the worst case — the first attempt
-    wrote only a PARTIAL batch (crash mid-write), the replay writes
-    the full batch — and assert the table holds exactly one full copy,
-    while a different batch id appends alongside untouched."""
-    from kafka_data_explorer_cdc_spark.streaming.exactly_once import (
-        IdempotentBatchSink,
-    )
-
-    out = _tmp("xonce_")
-    sink = IdempotentBatchSink(out)
-    full = spark.range(100).withColumnRenamed("id", "k")
-
-    sink(full.limit(37), 7)  # crash mid-write: partial batch 7 landed
-    sink(full, 7)  # Structured Streaming replays batch 7 in full
-    sink(full.filter("k < 10"), 8)  # next batch appends normally
-
-    back = spark.read.parquet(out)
-    assert back.filter("batch_id = 7").count() == 100  # one full copy
-    assert back.filter("batch_id = 8").count() == 10
-    assert back.count() == 110
-    # replaying batch 8 with the SAME rows is also a no-op
-    sink(full.filter("k < 10"), 8)
-    assert spark.read.parquet(out).count() == 110
 
 
 def test_kafka_source_options_contract():
