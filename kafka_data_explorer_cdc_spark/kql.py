@@ -473,6 +473,13 @@ _SESSION_FUNCTIONS: weakref.WeakKeyDictionary[SparkSession, set[str]] = (
 )
 
 
+#: Bound by a caller that needs to know whether an expression calls a
+#: kernel: :func:`_sql_function` adds each function name it is asked for.
+_KERNEL_CALLS: contextvars.ContextVar[set[str] | None] = contextvars.ContextVar(
+    "kql_kernel_calls", default=None
+)
+
+
 def _sql_function(name: str, params: str, body: str, *args: Column) -> Column:
     """Call ``body`` — SQL text over the parameter names declared in
     ``params`` — as the temporary SQL function ``name`` of the session
@@ -491,6 +498,9 @@ def _sql_function(name: str, params: str, body: str, *args: Column) -> Column:
     accepts such a call in projections, filters, aggregates, windows
     and joins; a sort key or generator input must be projected
     first."""
+    calls = _KERNEL_CALLS.get()
+    if calls is not None:
+        calls.add(name)
     spark = _KQL_SESSION.get() or SparkSession.getActiveSession()
     created = _SESSION_FUNCTIONS.setdefault(spark, set())
     if name not in created:
@@ -3910,7 +3920,14 @@ def _compile_mv_apply(
     row. Zero shuffle, zero explode for the summarize form; the
     where-only form is one ``explode`` followed by a row filter (still
     shuffle-free). At 100 TB this is the difference between a
-    narrow map stage and exploding 64× the corpus through an exchange."""
+    narrow map stage and exploding 64× the corpus through an exchange.
+
+    A kernel (a temporary SQL function) cannot sit in a higher-order
+    function's lambda, so a summarize form whose ``where`` or aggregate
+    argument calls one explodes as the where-only form does and
+    collects each source row's kept elements back into an array
+    (:func:`_mv_apply_kept`) for the same folds: one shuffle, the same
+    results."""
     m = re.match(
         r"mv-apply\s+([A-Za-z_]\w*)\s*=\s*([A-Za-z_]\w*)\s*"
         r"(?:to\s+typeof\s*\(\s*([A-Za-z]+)\s*\)\s*)?on\s*\(",
@@ -3980,9 +3997,7 @@ def _compile_mv_apply(
             out = out.filter(elem_expr(text)(F.col(var)))
         return out
 
-    for text in wheres:
-        arr = F.filter(arr, elem_expr(text))
-    out = df
+    aggs = []
     for item in _split_top(summarize_text, ","):
         mi = re.fullmatch(
             r"(?:([A-Za-z_]\w*)\s*=\s*)?([A-Za-z_]\w*)\s*\((.*)\)", item.strip()
@@ -3993,33 +4008,94 @@ def _compile_mv_apply(
         if fn == "count":
             if argtext:
                 raise ValueError("KQL: mv-apply count() takes no argument")
-            col = F.size(arr).cast("long")
             name = name or "count_"
-        else:
-            if not argtext:
-                raise ValueError(f"KQL: mv-apply {fn}() needs an argument")
-            vals = F.transform(arr, elem_expr(argtext))
-            dsum = F.aggregate(
-                vals, F.lit(0.0), lambda a, x: a + x.cast("double")
+        elif fn not in ("sum", "avg", "min", "max"):
+            raise ValueError(
+                f"KQL: mv-apply supports count/sum/avg/min/max, got {fn!r}"
             )
-            nonempty = F.size(vals) > 0
-            if fn == "sum":
-                col = dsum
-            elif fn == "avg":
-                col = F.when(nonempty, dsum / F.size(vals))
-            elif fn == "min":
-                col = F.array_min(vals)
-            elif fn == "max":
-                col = F.array_max(vals)
-            else:
-                raise ValueError(
-                    f"KQL: mv-apply supports count/sum/avg/min/max, got {fn!r}"
-                )
+        elif not argtext:
+            raise ValueError(f"KQL: mv-apply {fn}() needs an argument")
+        else:
             name = name or (
                 f"{fn}_{argtext}" if re.fullmatch(r"\w+", argtext) else f"{fn}_"
             )
+        aggs.append((name, fn, argtext))
+
+    kernels: set[str] = set()
+    token = _KERNEL_CALLS.set(kernels)
+    try:
+        for text in wheres + [a for _, fn, a in aggs if fn != "count"]:
+            elem_expr(text)(F.col(var))
+    finally:
+        _KERNEL_CALLS.reset(token)
+    if kernels:
+        out, vals = _mv_apply_kept(df, arr, wheres, aggs, elem_expr)
+    else:
+        for text in wheres:
+            arr = F.filter(arr, elem_expr(text))
+        out = df
+        vals = [
+            arr if fn == "count" else F.transform(arr, elem_expr(argtext))
+            for _, fn, argtext in aggs
+        ]
+    for (name, fn, _), v in zip(aggs, vals):
+        if fn == "count":
+            col = F.size(v).cast("long")
+        else:
+            dsum = F.aggregate(v, F.lit(0.0), lambda a, x: a + x.cast("double"))
+            if fn == "sum":
+                col = dsum
+            elif fn == "avg":
+                col = F.when(F.size(v) > 0, dsum / F.size(v))
+            elif fn == "min":
+                col = F.array_min(v)
+            else:
+                col = F.array_max(v)
         out = out.withColumn(name, col)
-    return out
+    return out.drop("__mv_kept") if kernels else out
+
+
+def _mv_apply_kept(df, arr, wheres, aggs, elem_expr):
+    """The arrays the ``mv-apply`` summarize folds read, built outside
+    any lambda for a kernel in ``where`` or an aggregate argument (see
+    :func:`_compile_mv_apply`): ``posexplode_outer``, the predicates and
+    arguments evaluated per element row, then one group per source row
+    that collects the kept elements' arguments in array order. Returns
+    the grouped frame (``df``'s columns and ``__mv_kept``) and, per
+    aggregate, the array to fold: ``__mv_kept`` itself for ``count``,
+    its argument field otherwise. A null source array stays null, and
+    an empty one, or one none of whose elements pass, gives ``[]``."""
+    out = df.withColumn("__mv_row", F.monotonically_increasing_id()).select(
+        "*", F.posexplode_outer(arr).alias("__mv_pos", "__mv_elem")
+    )
+    pos, elem = F.col("__mv_pos"), F.col("__mv_elem")
+    # an empty or null array's one outer row is no element
+    keep = pos.isNotNull()
+    for text in wheres:
+        keep = keep & F.coalesce(elem_expr(text)(elem), F.lit(False))
+    fields = [pos.alias("pos")] + [
+        elem_expr(argtext)(elem).alias(f"v{i}")
+        for i, (_, fn, argtext) in enumerate(aggs)
+        if fn != "count"
+    ]
+    out = out.withColumn("__mv_item", F.when(keep, F.struct(*fields)))
+    kept = (
+        out.groupBy("__mv_row")
+        .agg(
+            *[F.first(c).alias(c) for c in df.columns],
+            F.when(
+                F.first(arr.isNotNull()),
+                F.array_sort(F.collect_list("__mv_item")),
+            ).alias("__mv_kept"),
+        )
+        .drop("__mv_row")
+    )
+    items = F.col("__mv_kept")
+    vals = [
+        items if fn == "count" else items.getField(f"v{i}")
+        for i, (_, fn, _) in enumerate(aggs)
+    ]
+    return kept, vals
 
 
 def _compile_join(

@@ -36,6 +36,8 @@ rescan) — this sink is the algebraic-aggregate form.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -71,6 +73,17 @@ class AggViewSink:
 
     def current(self) -> DataFrame | None:
         return self.inner.current()
+
+    def vacuum(self, retain_last: int = 10) -> dict:
+        """:meth:`ParquetStateSink.vacuum`, then drop every committed
+        ``agg_view/v{N}`` below the newest: each is a full copy of the
+        view, and only the newest is read (:meth:`_stored`)."""
+        rep = self.inner.vacuum(retain_last)
+        dirs = self.inner.log.committed("agg_view")
+        old = sorted(dirs)[:-1]
+        for v in old:
+            shutil.rmtree(dirs[v], ignore_errors=True)
+        return {**rep, "dropped_views": len(old)}
 
     # -- view storage -----------------------------------------------
     def _stored(self) -> DataFrame | None:

@@ -447,7 +447,11 @@ class ParquetStateSink:
         stay fully readable for time travel. Deletion order is
         manifests-first, then unreferenced data dirs, so a crash
         mid-vacuum can only strand unreferenced dirs (re-vacuumed next
-        call), never break a reader."""
+        call), never break a reader.
+
+        ``dead_letter/`` and ``feed/`` stay: they are logs whose readers
+        union every committed version, not snapshots. ``agg_view/``
+        copies are dropped by :meth:`AggViewSink.vacuum`."""
         vers = self.versions()
         if len(vers) <= retain_last:
             return {"dropped_manifests": 0, "dropped_dirs": 0}

@@ -609,6 +609,44 @@ def test_mv_apply_kernel_in_where(spark):
         (1, 4.0), (2, 4.0), (2, 4.0)]
 
 
+def test_mv_apply_kernel_in_where_with_summarize(spark):
+    """The summarize form with a kernel in its element predicate or an
+    aggregate argument collects each source row's kept elements after an
+    explode, with the same results as the folds give for a kernel-free
+    predicate that keeps the same elements (4.0 is the only value in
+    geohash cell 's0dy')."""
+    one = spark.createDataFrame([(1, [3.0, 4.0, 50.0])], "id int, x array<double>")
+    got = kql(
+        "T | mv-apply v = x on (where geo_point_to_geohash(v, v, 4) == 's0dy' "
+        "| summarize n = count())",
+        {"T": one},
+    )
+    assert got.columns == ["id", "x", "n"]
+    assert [(r["id"], r["n"]) for r in got.collect()] == [(1, 1)]
+    cell = kql(
+        "T | mv-apply v = x on (summarize m = max(geo_point_to_geohash(v, v, 4)))",
+        {"T": spark.createDataFrame([(1, [4.0])], "id int, x array<double>")},
+    )
+    assert [tuple(r) for r in cell.select("id", "m").collect()] == [(1, "s0dy")]
+    df = spark.createDataFrame(
+        [(1, [3.0, 4.0, 50.0]), (2, [4.0, 4.0]), (3, [-10.0]), (4, []),
+         (5, None), (6, [4.0, None])],
+        "id int, x array<double>",
+    )
+    aggs = "summarize n = count(), s = sum(v), mx = max(v), av = avg(v * 2)"
+
+    def rows(pred):
+        out = kql(f"T | mv-apply v = x on (where {pred} | {aggs})", {"T": df})
+        assert out.columns == ["id", "x", "n", "s", "mx", "av"]
+        return sorted(tuple(r) for r in out.collect())
+
+    kernel = rows("geo_point_to_geohash(v, v, 4) == 's0dy'")
+    assert kernel == rows("v == 4.0")
+    assert [r[2:] for r in kernel] == [
+        (1, 4.0, 4.0, 8.0), (2, 8.0, 4.0, 8.0), (0, 0.0, None, None), (0, 0.0, None, None),
+        (None, None, None, None), (1, 4.0, 4.0, 8.0)]
+
+
 def test_mv_apply_plan_has_no_shuffle(spark):
     # the summarize form must stay a narrow projection: no Exchange, no
     # Generate (explode) in the plan

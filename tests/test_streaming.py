@@ -1229,6 +1229,26 @@ def test_agg_view_replay_and_straggler_are_noops(spark):
     assert got == reagg == {"A": (1, 100.0), "C": (1, 70.0)}
 
 
+def test_agg_view_vacuum_keeps_only_the_newest_view(spark):
+    """Each merge writes a full copy of the view; vacuum leaves the one
+    that is read, and the view reads the same."""
+    from kafka_data_explorer_cdc_spark.streaming.matview import AggViewSink
+
+    root = _tmp("mv_vac_")
+    sink = AggViewSink(spark, root, ["orderid"], "city", "amount")
+    for i in range(8):
+        sink.apply_batch(_flat_changes(spark, [
+            (i, i, 10 * i, "AB"[i % 2], "c", i + 1), (i // 2, None, None, None, "d", 100 + i),
+        ]), i)
+    before = sorted(map(tuple, sink.view().collect()))
+    assert len(os.listdir(os.path.join(root, "agg_view"))) == 8
+    rep = sink.vacuum(retain_last=2)
+    assert rep["dropped_views"] == 7 and sink.inner.versions() == [6, 7]
+    assert os.listdir(os.path.join(root, "agg_view")) == ["v7"]
+    assert sorted(map(tuple, sink.view().collect())) == before
+    assert sink.vacuum(retain_last=2)["dropped_views"] == 0
+
+
 def test_change_feed_types_counts_and_compaction(spark):
     """ChangeFeedSink: per-commit change rows carry the right types and
     images, compaction reproduces current(), a replayed batch adds
