@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 import urllib.parse
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -412,16 +413,24 @@ def write_bucketed(
     w.saveAsTable(table_name)
 
 
-def derived_cache_dir(name: str, src_path: str) -> str:
-    """A /tmp directory for a DERIVED layout of ``src_path`` (hive
-    repartition, IVF index, ...), keyed by the source file's identity
-    (size + mtime) as well as its name — so a regenerated testdata
-    file can never be served from a stale cached derivation (the
-    write-once `_SUCCESS` marker pattern is only sound while the
-    source bytes are the same bytes). Callers still own the marker
-    check and the write."""
+def derived(name: str, src_path: str, build: Callable[[str], None]) -> str:
+    """The directory holding the ``name`` derivation of ``src_path`` (a
+    hive repartition, an IVF index, a replay log, ...), built at most
+    once per source.
+
+    The key is ``spark_graft_<name>_<tag>_<fp>`` under the temp dir:
+    ``tag`` names the source's directory and ``fp`` hashes its size
+    and ``st_mtime_ns`` (for a directory source, its first parquet
+    file's), so a rewritten source gets a new directory, never a stale
+    one. A published directory is returned as it is. Otherwise
+    ``build(tmp)`` writes the layout into a hidden sibling temp
+    directory, which is then renamed into place: the directory exists
+    only once it is complete, so no marker file is needed. If
+    ``build`` raises, the temp directory is removed and the error
+    re-raised; if a concurrent builder published first, this one's
+    copy is dropped and the published one returned."""
     import hashlib
-    import os
+    import shutil
     import tempfile
 
     p = src_path
@@ -434,11 +443,28 @@ def derived_cache_dir(name: str, src_path: str) -> str:
     try:
         st = os.stat(p)
         fp = hashlib.sha256(
-            f"{st.st_size}:{int(st.st_mtime)}".encode()
+            f"{st.st_size}:{st.st_mtime_ns}".encode()
         ).hexdigest()[:12]
     except OSError:
         fp = "nostat"
     tag = os.path.basename(os.path.dirname(p.rstrip("/"))) or "root"
-    return os.path.join(
+    out = os.path.join(
         tempfile.gettempdir(), f"spark_graft_{name}_{tag}_{fp}"
     )
+    if os.path.isdir(out):
+        return out
+    tmp = tempfile.mkdtemp(
+        prefix=f".{os.path.basename(out)}.", dir=os.path.dirname(out)
+    )
+    try:
+        build(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    try:
+        os.rename(tmp, out)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.isdir(out):
+            raise
+    return out

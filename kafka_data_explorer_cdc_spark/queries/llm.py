@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import broadcast, pandas_udf
 from pyspark.storagelevel import StorageLevel
 
-from ..io import ensure_parallelism, load
+from ..io import derived, ensure_parallelism, load
 from ..operators import dedup as D
 from ..operators import multimodal as MM
 from ..operators import similarity as S
@@ -7086,16 +7086,14 @@ def _d91_index(sf_dir: str, em: DataFrame, C) -> str:
     """The d91 IVF index at rest: ``em`` partitioned by its nearest
     cell of ``C``, written once per source file. Returns its
     directory."""
-    import os
-
-    from ..io import derived_cache_dir
-
-    out = derived_cache_dir("d91", f"{sf_dir}/embeddings.parquet")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        em.withColumn(
-            "cell", S._nearest_cell(C, F.col("embedding"))
-        ).write.mode("overwrite").partitionBy("cell").parquet(out)
-    return out
+    return derived(
+        "d91",
+        f"{sf_dir}/embeddings.parquet",
+        lambda d: em.withColumn("cell", S._nearest_cell(C, F.col("embedding")))
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(d),
+    )
 
 
 def _index_side(spark: SparkSession, path: str) -> DataFrame:
@@ -7331,18 +7329,16 @@ def d93_ivf_index_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import os as _os
 
-    from ..io import derived_cache_dir
-
     em = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     C = S._centroids(em, 16, "vec_id", "embedding")
     base = _d91_index(sf_dir, em, C)
-    opt = derived_cache_dir("d93_opt", f"{sf_dir}/embeddings.parquet")
-    map_path = _os.path.join(opt, "_leafmap")
-    if not _os.path.exists(_os.path.join(opt, "_ALL_DONE")):
-        leafmap = S.optimize_ivf_index(spark, base, opt, sub_cells=2)
-        leafmap.coalesce(1).write.mode("overwrite").parquet(map_path)
-        open(_os.path.join(opt, "_ALL_DONE"), "w").close()
-    leafmap = spark.read.parquet(map_path)
+
+    def build(d: str) -> None:
+        leafmap = S.optimize_ivf_index(spark, base, d, sub_cells=2)
+        leafmap.coalesce(1).write.mode("overwrite").parquet(f"{d}/_leafmap")
+
+    opt = derived("d93_opt", f"{sf_dir}/embeddings.parquet", build)
+    leafmap = spark.read.parquet(f"{opt}/_leafmap")
 
     base_idx = _index_side(spark, base)
     opt_idx = _index_side(spark, opt)

@@ -26,7 +26,7 @@ from ..cdc.envelope import (
     unwrap,
 )
 from ..cdc.apply import latest_state
-from ..io import load
+from ..io import derived, load
 from ..streaming.generator import order_columns
 from .registry import query
 
@@ -454,25 +454,22 @@ def a20_schema_evolution_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     history to the new schema — is a 100 TB table rewrite; mergeSchema
     is the zero-rewrite path, with the NULL-fill happening at read
     time per batch."""
-    import os as _os
-    import tempfile as _tmp
-
     o = load(spark, sf_dir, "orders")
-    tag = _os.path.basename(sf_dir.rstrip("/"))
-    base = _os.path.join(_tmp.gettempdir(), f"spark_graft_a20_{tag}")
-    b1, b2 = f"{base}/batch1", f"{base}/batch2"
-    if not _os.path.exists(_os.path.join(base, "_DONE")):
+
+    def build(d: str) -> None:
         o.filter(F.col("o_orderkey") % 4 == 1).select(
             "o_orderkey", "o_totalprice"
-        ).write.mode("overwrite").parquet(b1)
+        ).write.mode("overwrite").parquet(f"{d}/batch1")
         o.filter(F.col("o_orderkey") % 4 == 2).select(
             "o_orderkey",
             "o_totalprice",
             F.when(F.col("o_orderkey") % 2 == 0, "web")
             .otherwise("store")
             .alias("o_channel"),
-        ).write.mode("overwrite").parquet(b2)
-        open(_os.path.join(base, "_DONE"), "w").close()
+        ).write.mode("overwrite").parquet(f"{d}/batch2")
+
+    base = derived("a20", f"{sf_dir}/orders.parquet", build)
+    b1, b2 = f"{base}/batch1", f"{base}/batch2"
     merged = spark.read.option("mergeSchema", "true").parquet(b1, b2)
     return merged.select("o_orderkey", "o_totalprice", "o_channel")
 

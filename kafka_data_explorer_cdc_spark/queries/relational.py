@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..io import load
+from ..io import derived, load
 from ..operators import layout as L
 from .helpers import (
     LAST_TOUCH_ORACLE,
@@ -1596,15 +1596,12 @@ def b44_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     tight min/max stats on BOTH predicate columns (skipping itself is
     pinned in tests/test_plans.py::test_zorder_layout_clusters_files
     via per-file parquet stats + PushedFilters)."""
-    import os as _os
-    import tempfile as _tmp
-
     ev = load(spark, sf_dir, "events")
-    out = _os.path.join(
-        _tmp.gettempdir(),
-        f"spark_graft_zorder_{_os.path.basename(sf_dir.rstrip('/'))}",
+    out = derived(
+        "b44_zorder",
+        f"{sf_dir}/events.parquet",
+        lambda d: L.zorder_write(ev, d, ["user_id", "ts"], num_files=8),
     )
-    L.zorder_write(ev, out, ["user_id", "ts"], num_files=8)
     z = spark.read.parquet(out)
     return z.filter(
         F.col("user_id").between(3, 14)
@@ -1894,11 +1891,12 @@ def b47_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     tag = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = _os.path.join(_tmp.gettempdir(), f"spark_graft_b47_{tag}")
     from ..io import write_bucketed
 
-    # write once per session+SF; later invocations reuse the layout
+    # write once per session+SF (the bucket spec lives in the session
+    # catalog); later invocations reuse the layout
     if not spark.catalog.tableExists(f"b47_cust_{tag}"):
+        base = _tmp.mkdtemp(prefix=f"b47_{tag}_")
         write_bucketed(
             cust, f"b47_cust_{tag}", ["c_custkey"], 16,
             path=_os.path.join(base, "cust"),
@@ -1943,17 +1941,14 @@ def b48_multiformat_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once per session+SF (declared schemas on read — no
     inference scan, the 100 TB-safe form) and each format's plan is an
     independent codegen scan + one-shuffle agg."""
-    import os as _os
-    import tempfile as _tmp
-
-    from ..io import derived_cache_dir
-
-    base = derived_cache_dir("b48", f"{sf_dir}/orders.parquet")
     proj = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    csv_p, json_p = _os.path.join(base, "csv"), _os.path.join(base, "json")
-    if not _os.path.isdir(csv_p):
-        proj.write.mode("overwrite").option("header", True).csv(csv_p)
-        proj.write.mode("overwrite").json(json_p)
+
+    def build(d: str) -> None:
+        proj.write.mode("overwrite").option("header", True).csv(f"{d}/csv")
+        proj.write.mode("overwrite").json(f"{d}/json")
+
+    base = derived("b48", f"{sf_dir}/orders.parquet", build)
+    csv_p, json_p = f"{base}/csv", f"{base}/json"
     schema = "o_orderkey bigint, o_totalprice double"
     srcs = {
         "parquet": proj,
@@ -2829,13 +2824,9 @@ def b63_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     read parallelism."""
     import math as _math
     import os as _os
-    import tempfile as _tmp
 
     ev = load(spark, sf_dir, "events")
-    tag = _os.path.basename(sf_dir.rstrip("/"))
-    base = _os.path.join(_tmp.gettempdir(), f"spark_graft_b63_{tag}")
-    frag, compact = f"{base}/frag", f"{base}/compact"
-    ev.repartition(64).write.mode("overwrite").parquet(frag)
+    target = 8 * 1024 * 1024
 
     def _part_files(d: str) -> list[str]:
         return [
@@ -2844,13 +2835,20 @@ def b63_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             if f.endswith(".parquet")
         ]
 
+    def _n_out(frag: str) -> int:
+        total_bytes = sum(_os.path.getsize(f) for f in _part_files(frag))
+        return max(1, _math.ceil(total_bytes / target))
+
+    def build(d: str) -> None:
+        ev.repartition(64).write.mode("overwrite").parquet(f"{d}/frag")
+        spark.read.parquet(f"{d}/frag").repartition(
+            _n_out(f"{d}/frag")
+        ).write.mode("overwrite").parquet(f"{d}/compact")
+
+    base = derived("b63", f"{sf_dir}/events.parquet", build)
+    frag, compact = f"{base}/frag", f"{base}/compact"
     frag_files = _part_files(frag)
-    total_bytes = sum(_os.path.getsize(f) for f in frag_files)
-    target = 8 * 1024 * 1024
-    n_out = max(1, _math.ceil(total_bytes / target))
-    spark.read.parquet(frag).repartition(n_out).write.mode(
-        "overwrite"
-    ).parquet(compact)
+    n_out = _n_out(frag)
     n_after = len(_part_files(compact))
     return (
         spark.read.parquet(compact)
@@ -2953,6 +2951,21 @@ def b64_column_profiler(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- b65: hive-partitioned layout + partition-pruned scan
 
 
+def _events_by_date(spark: SparkSession, sf_dir: str) -> str:
+    """``events`` hive-partitioned by ``event_date`` (yyyy-MM-dd), written
+    once per source file and shared by b65, b89 and b105. Returns its
+    directory."""
+    ev = load(spark, sf_dir, "events")
+    return derived(
+        "b65",
+        f"{sf_dir}/events.parquet",
+        lambda d: ev.withColumn("event_date", F.date_format("ts", "yyyy-MM-dd"))
+        .write.mode("overwrite")
+        .partitionBy("event_date")
+        .parquet(d),
+    )
+
+
 @query(
     "b65_partition_pruned_scan",
     oracle="""
@@ -2982,18 +2995,7 @@ def b65_partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata — the NameNode/manifest answers it. The failure mode to
     avoid is over-partitioning (small files per partition) — which is
     exactly what b63's compaction fixes, run per-partition."""
-    import os as _os
-
-    from ..io import derived_cache_dir
-
-    ev = load(spark, sf_dir, "events")
-    out = derived_cache_dir("b65", f"{sf_dir}/events.parquet")
-    marker = _os.path.join(out, "_SUCCESS")
-    if not _os.path.exists(marker):
-        ev.withColumn(
-            "event_date", F.date_format("ts", "yyyy-MM-dd")
-        ).write.mode("overwrite").partitionBy("event_date").parquet(out)
-    part = spark.read.parquet(out)
+    part = spark.read.parquet(_events_by_date(spark, sf_dir))
     return part.filter(F.col("event_date") == F.lit("2024-01-03")).agg(
         F.count("*").alias("n_events"),
         F.sum("event_id").alias("sum_ids"),
@@ -4554,24 +4556,17 @@ def b89_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame
     The partitioned rewrite and the calendar dim are lossless
     derivations of `events`, so the raw-table oracle (Monday events)
     must match exactly."""
-    import os as _os
-    import tempfile as _tmp
-
-    from ..io import derived_cache_dir
-
     ev = load(spark, sf_dir, "events")
-    tag = _os.path.basename(sf_dir.rstrip("/"))
-    out = derived_cache_dir("b65", f"{sf_dir}/events.parquet")
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
-        ev.withColumn(
-            "event_date", F.date_format("ts", "yyyy-MM-dd")
-        ).write.mode("overwrite").partitionBy("event_date").parquet(out)
-    dim_dir = derived_cache_dir("b89dim", f"{sf_dir}/events.parquet")
-    if not _os.path.exists(_os.path.join(dim_dir, "_SUCCESS")):
-        ev.select(
-            F.date_format("ts", "yyyy-MM-dd").alias("d")
-        ).distinct().coalesce(1).write.mode("overwrite").parquet(dim_dir)
-    fact = spark.read.parquet(out)
+    dim_dir = derived(
+        "b89dim",
+        f"{sf_dir}/events.parquet",
+        lambda d: ev.select(F.date_format("ts", "yyyy-MM-dd").alias("d"))
+        .distinct()
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(d),
+    )
+    fact = spark.read.parquet(_events_by_date(spark, sf_dir))
     dim = spark.read.parquet(dim_dir).filter(
         F.dayofweek(F.to_date("d")) == 2  # Monday (Spark: 1=Sunday)
     )
@@ -5570,17 +5565,7 @@ def b105_incremental_partition_processing(
     as b41/b69's sketches-at-rest — and the result must equal a full
     recompute EXACTLY (the oracle). The incremental scan's pruned
     PartitionFilters are pinned in tests/test_plans.py."""
-    import os as _os
-
-    from ..io import derived_cache_dir
-
-    ev = load(spark, sf_dir, "events")
-    out = derived_cache_dir("b105", f"{sf_dir}/events.parquet")
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
-        ev.withColumn(
-            "event_date", F.date_format("ts", "yyyy-MM-dd")
-        ).write.mode("overwrite").partitionBy("event_date").parquet(out)
-    part = spark.read.parquet(out)
+    part = spark.read.parquet(_events_by_date(spark, sf_dir))
 
     def rollup(df: DataFrame) -> DataFrame:
         return df.groupBy("event_type").agg(
@@ -6426,20 +6411,21 @@ def b118_kll_quantile_at_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE map-side-combinable groupBy; the merged estimate reads months
     × ~1 KB sketches; the verification recount is one conditional
     aggregate pass (no sort, no window)."""
-    import os as _os
-
-    from ..io import derived_cache_dir
-
     li = load(spark, sf_dir, "lineitem").select(
         F.date_trunc("month", F.col("l_shipdate")).alias("month"),
         F.col("l_extendedprice").cast("double").alias("price"),
     )
-    out = derived_cache_dir("b118_kll", f"{sf_dir}/lineitem.parquet")
-    if not _os.path.exists(_os.path.join(out, "_SUCCESS")):
-        li.groupBy("month").agg(
+    out = derived(
+        "b118_kll",
+        f"{sf_dir}/lineitem.parquet",
+        lambda d: li.groupBy("month")
+        .agg(
             F.kll_sketch_agg_double("price").alias("sk"),
             F.count("*").alias("n_exact"),
-        ).write.mode("overwrite").parquet(out)
+        )
+        .write.mode("overwrite")
+        .parquet(d),
+    )
     at_rest = spark.read.parquet(out)
     merged = at_rest.agg(
         F.kll_merge_agg_double("sk").alias("sk_all"),

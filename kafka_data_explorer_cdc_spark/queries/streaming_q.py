@@ -10,6 +10,7 @@ micro-batching, state store, and sink semantics included.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -17,12 +18,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..cdc.envelope import ORDERS_INFO_SQL, orders_info, to_change_envelopes
-from ..io import load
+from ..io import derived, load
 from ..streaming.pipeline import ParquetStateSink, start_cdc_pipeline
 from ..streaming.windows import (
-    REPLAY_STATE_PARTITIONS,
     read_events_stream,
     run_to_memory,
+    stage_ordered,
     streaming_dedup,
 )
 from .helpers import (
@@ -44,41 +45,38 @@ def _tmp(prefix: str) -> str:
 
 def _change_log_dir(spark: SparkSession, sf_dir: str) -> str:
     """Synthesized insert→update→delete change-log envelopes for
-    (sf_dir), generated ONCE per session+SF and shared read-only by
-    every pipeline entry that replays this log (s29, s30): the input
-    files are deterministic in sf_dir, and the streaming source only
-    reads the directory — checkpoints and state stay per-run. Same
-    caching pattern as b48's format copies."""
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    indir = os.path.join(tempfile.gettempdir(), f"spark_graft_changelog_{tag}")
-    done = os.path.join(indir, "_DONE")
-    if os.path.exists(done):
-        return indir
-    os.makedirs(indir, exist_ok=True)
-    info = orders_info(load(spark, sf_dir, "orders"))
-    updated = info.filter(F.col("orderid") % 3 == 0).withColumn(
-        "amount", F.col("amount") + 100
-    )
-    deleted = info.filter(F.col("orderid") % 5 == 0)
-    for fname, env in [
-        ("0_inserts", to_change_envelopes(info, "c", 0)),
-        ("1_updates", to_change_envelopes(updated, "u", 1)),
-        ("2_deletes", to_change_envelopes(deleted, "d", 2)),
-    ]:
-        # one flat .txt per op set (the file source does not recurse):
-        # serialize in parallel, then concat the parts driver-side —
-        # coalesce(1) would funnel all JSON serialization through one
-        # task (measured 2.5x on this entry's wall at sf0.1)
-        scratch = _tmp(f"changelog_scratch_{tag}_")
-        env.select("value").write.mode("overwrite").text(scratch)
-        with open(os.path.join(indir, f"{fname}.txt"), "wb") as out:
-            for p in sorted(os.listdir(scratch)):
-                if p.startswith("part-") and p.endswith(".txt"):
-                    with open(os.path.join(scratch, p), "rb") as src:
-                        out.write(src.read())
-    with open(done, "w") as fh:
-        fh.write("ok")
-    return indir
+    (sf_dir), written once per source file (``io.derived``) and shared
+    read-only by every pipeline entry that replays this log (s29, s30):
+    the input files are deterministic in the orders table, and the
+    streaming source only reads the directory — checkpoints and state
+    stay per-run."""
+
+    def build(indir: str) -> None:
+        info = orders_info(load(spark, sf_dir, "orders"))
+        updated = info.filter(F.col("orderid") % 3 == 0).withColumn(
+            "amount", F.col("amount") + 100
+        )
+        deleted = info.filter(F.col("orderid") % 5 == 0)
+        scratch = os.path.join(indir, "_scratch")
+        for fname, env in [
+            ("0_inserts", to_change_envelopes(info, "c", 0)),
+            ("1_updates", to_change_envelopes(updated, "u", 1)),
+            ("2_deletes", to_change_envelopes(deleted, "d", 2)),
+        ]:
+            # one flat .txt per op set (the file source does not
+            # recurse): serialize in parallel, then concat the parts
+            # driver-side — coalesce(1) would funnel all JSON
+            # serialization through one task (measured 2.5x on this
+            # entry's wall at sf0.1)
+            env.select("value").write.mode("overwrite").text(scratch)
+            with open(os.path.join(indir, f"{fname}.txt"), "wb") as out:
+                for p in sorted(os.listdir(scratch)):
+                    if p.startswith("part-") and p.endswith(".txt"):
+                        with open(os.path.join(scratch, p), "rb") as src:
+                            out.write(src.read())
+        shutil.rmtree(scratch)
+
+    return derived("changelog", f"{sf_dir}/orders.parquet", build)
 
 
 @query(
@@ -96,7 +94,6 @@ def s21_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     through a real file-source stream, windowed aggregation in the state
     store, complete-mode memory sink. Must equal the batch/DuckDB result
     exactly — the unified-batch/streaming contract."""
-    name = f"s21_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     agg = (
         ev.groupBy(F.window("ts", "1 minute"), "event_type")
@@ -107,8 +104,7 @@ def s21_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table(name)
+    return run_to_memory(agg, output_mode="complete")
 
 
 @query(
@@ -131,7 +127,6 @@ def s22_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream twin): 10-minute windows sliding every 5, each event expanded
     into its two windows before the stateful aggregation; complete-mode
     memory sink, exact match to the batch/DuckDB expansion."""
-    name = f"s22_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     agg = (
         ev.groupBy(F.window("ts", "10 minutes", "5 minutes"), "event_type")
@@ -142,8 +137,7 @@ def s22_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table(name)
+    return run_to_memory(agg, output_mode="complete")
 
 
 @query(
@@ -159,15 +153,14 @@ def s23_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream (at-least-once simulation); watermarked dropDuplicates
     on event_id must collapse the duplicate delivery so per-type counts
     equal the single-copy batch result."""
-    name = f"s23_{uuid.uuid4().hex[:8]}"
     indir = _tmp("s23_in_")
     src = f"{sf_dir}/events.parquet"
     os.symlink(src, os.path.join(indir, "copy1.parquet"))
     os.symlink(src, os.path.join(indir, "copy2.parquet"))
     ev = read_events_stream(spark, indir)
-    run_to_memory(streaming_dedup(ev), name, output_mode="append", state_partitions=REPLAY_STATE_PARTITIONS)
+    drained = run_to_memory(streaming_dedup(ev), output_mode="append")
     return (
-        spark.table(name)
+        drained
         .groupBy("event_type")
         .agg(F.count("*").alias("n_unique"))
     )
@@ -222,7 +215,6 @@ def s25_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     session state machine in the state store; complete replay of the
     events table must equal the batch/DuckDB gaps-and-islands result —
     the unified-semantics contract for MERGING session windows."""
-    name = f"s25_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     agg = (
         ev.withWatermark("ts", "10 minutes")
@@ -234,8 +226,7 @@ def s25_stream_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table(name)
+    return run_to_memory(agg, output_mode="complete")
 
 
 @query(
@@ -264,11 +255,10 @@ def s26_stream_stateful_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch/streaming contract."""
     from ..streaming.stateful import streaming_funnel
 
-    name = f"s26_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    run_to_memory(streaming_funnel(ev), name, output_mode="append", state_partitions=REPLAY_STATE_PARTITIONS)
+    drained = run_to_memory(streaming_funnel(ev), output_mode="append")
     return (
-        spark.table(name)
+        drained
         .groupBy("user_id")
         .agg(F.sum("conversions").alias("conversions"))
     )
@@ -299,7 +289,6 @@ def s27_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (chaining a streaming agg after a stream-stream join stacks a
     second stateful operator for no test value). Same oracle as
     b06/s26: three execution strategies, one range-join semantics."""
-    name = f"s27_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -318,9 +307,9 @@ def s27_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AND p_ts <= c_ts + INTERVAL 10 MINUTES"
         ),
     )
-    run_to_memory(joined, name, output_mode="append", state_partitions=REPLAY_STATE_PARTITIONS)
+    drained = run_to_memory(joined, output_mode="append")
     return (
-        spark.table(name)
+        drained
         .groupBy(F.col("c_user").alias("user_id"))
         .agg(F.count("*").alias("conversions"))
     )
@@ -349,7 +338,6 @@ def s28_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins."""
     from .helpers import dsum
 
-    name = f"s28_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     cust = load(spark, sf_dir, "customer")
     enriched = ev.join(
@@ -358,8 +346,7 @@ def s28_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = enriched.groupBy("c_mktsegment").agg(
         F.count("*").alias("n_events"), dsum("value", "total_value")
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table(name)
+    return run_to_memory(agg, output_mode="complete")
 
 
 @query(
@@ -546,7 +533,6 @@ def s32_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the streaming execution exactly."""
     from ..io import SCHEMAS
 
-    name = f"s32_{uuid.uuid4().hex[:8]}"
     src = f"{sf_dir}/documents.parquet"
     d = _tmp("docs_stream_")
     os.symlink(src, os.path.join(d, "documents.parquet"))
@@ -571,9 +557,9 @@ def s32_stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
     kept = sig.dropDuplicates(["lang", "s0", "s1", "s2", "s3"])
-    run_to_memory(kept, name, output_mode="append", state_partitions=REPLAY_STATE_PARTITIONS)
+    drained = run_to_memory(kept, output_mode="append")
     return (
-        spark.table(name)
+        drained
         .groupBy("lang")
         .agg(F.count("*").alias("n_unique"))
     )
@@ -614,7 +600,6 @@ def s33_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition bound both buffers, and unmatched emission is driven by
     eviction, so state is O(events in the 40-minute horizon), not
     O(stream)."""
-    name = f"s33_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     clicks = (
         ev.filter(F.col("event_type") == "click")
@@ -634,7 +619,7 @@ def s33_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftOuter",
     )
-    run_to_memory(joined, name, output_mode="append", state_partitions=REPLAY_STATE_PARTITIONS)
+    drained = run_to_memory(joined, output_mode="append")
     evb = load(spark, sf_dir, "events")
     horizon = evb.agg(
         (
@@ -646,7 +631,7 @@ def s33_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("hz")
     )
     return (
-        spark.table(name)
+        drained
         .crossJoin(F.broadcast(horizon))
         .filter(F.col("c_ts") <= F.col("hz"))
         .groupBy(F.col("c_user").alias("user_id"))
@@ -677,7 +662,6 @@ def s34_stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     event volume, the property that keeps the state store flat at
     100 TB/day. Complete-mode memory sink; exact batch-equivalence is
     the unified-engine contract (same plan family as s21)."""
-    name = f"s34_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     bucket = F.least(
         F.floor(F.col("value") / F.lit(25.0)).cast("bigint"),
@@ -691,8 +675,7 @@ def s34_stream_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("win_start"), "bucket", "n_events"
         )
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table(name)
+    return run_to_memory(agg, output_mode="complete")
 
 
 @query(
@@ -722,7 +705,6 @@ def s35_stream_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB-rate streams this is THE live-dashboard cardinality
     operator: mergeable sketch state, watermark-evictable, constant
     memory per (window, type)."""
-    name = f"s35_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     agg = (
         ev.groupBy(F.window("ts", "1 hour"), "event_type")
@@ -731,8 +713,7 @@ def s35_stream_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("win_start"), "event_type", "n_approx"
         )
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    approx = spark.table(name)
+    approx = run_to_memory(agg, output_mode="complete")
     exact = (
         load(spark, sf_dir, "events")
         .groupBy(
@@ -838,13 +819,13 @@ def s37_hybrid_backfill_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate (with b65's layout, at listing time); the stream
     carries only post-cutoff rows; the union is a plan-level concat —
     no shuffle until the final aggregate."""
-    name = f"s37_{uuid.uuid4().hex[:8]}"
     cutoff = "2024-01-03 00:00:00"
     live = read_events_stream(spark, f"{sf_dir}/events.parquet").filter(
         F.col("ts") >= F.lit(cutoff).cast("timestamp")
     )
-    run_to_memory(live, name, output_mode="append", state_partitions=REPLAY_STATE_PARTITIONS)
-    live_tbl = spark.table(name).withColumn("side", F.lit("live"))
+    live_tbl = run_to_memory(live, output_mode="append").withColumn(
+        "side", F.lit("live")
+    )
     hist = (
         load(spark, sf_dir, "events")
         .filter(F.col("ts") < F.lit(cutoff).cast("timestamp"))
@@ -893,15 +874,13 @@ def s38_stream_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Deterministic tiebreak on user_id pins both engines."""
     from pyspark.sql import Window
 
-    name = f"s38_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     agg = (
         ev.groupBy(F.window("ts", "6 hours"), "user_id")
         .agg(F.count("*").alias("n_events"))
         .select(F.col("window.start").alias("win_start"), "user_id", "n_events")
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    counts = spark.table(name)
+    counts = run_to_memory(agg, output_mode="complete")
     w = Window.partitionBy("win_start").orderBy(
         F.col("n_events").desc(), F.col("user_id").asc()
     )
@@ -932,7 +911,6 @@ def s39_stream_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the guaranteed band ±max(n/10000, 1) (+1 discrete slack) around
     the target rank — booleans vs an all-TRUE oracle, so a sketch or
     windowing bug flips the driver hash."""
-    name = f"s39_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     agg = (
         ev.groupBy(F.window("ts", "1 day"))
@@ -945,8 +923,7 @@ def s39_stream_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("win_start"), "n_events", "a50", "a95"
         )
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    sk = spark.table(name)
+    sk = run_to_memory(agg, output_mode="complete")
     batch = load(spark, sf_dir, "events").select(
         F.window("ts", "1 day").start.alias("win_start"), "value"
     )
@@ -1039,7 +1016,6 @@ def s40_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference histogram is integer counts broadcast once. Oracle =
     the identical computation on the batch table — the unified-engine
     batch-equivalence contract."""
-    name = f"s40_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     bucket = F.least(
         F.floor(F.col("value") / F.lit(25.0)).cast("bigint"),
@@ -1051,8 +1027,7 @@ def s40_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("window.start").alias("win_start"), "bucket", "n")
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    tbl = spark.table(name)
+    tbl = run_to_memory(agg, output_mode="complete")
 
     # serve-time read: dense 8-bucket grid per observed window. The
     # grid derives from the same memory table, so its columns are
@@ -1141,7 +1116,6 @@ def s41_stream_expectations_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     report (stack unpivot) runs on the serve-time read, s38's
     state/serve split. Batch-equivalence oracle — the unified-engine
     contract."""
-    name = f"s41_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     v_range = F.when(
         F.col("value").isNull()
@@ -1179,8 +1153,7 @@ def s41_stream_expectations_audit(spark: SparkSession, sf_dir: str) -> DataFrame
             "v_kv",
         )
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    tbl = spark.table(name)
+    tbl = run_to_memory(agg, output_mode="complete")
     return tbl.select(
         "win_start",
         F.expr(
@@ -1224,7 +1197,6 @@ def s42_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full key set — the reason s35 exists). Batch-equivalence
     oracle: the streamed bitmap answer must equal the raw-scan
     COUNT(DISTINCT)."""
-    name = f"s42_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     agg = (
         ev.select(
@@ -1241,9 +1213,9 @@ def s42_stream_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("window.start").alias("win_start"), "event_type", "word"
         )
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
+    drained = run_to_memory(agg, output_mode="complete")
     return (
-        spark.table(name)
+        drained
         .groupBy("win_start", "event_type")
         .agg(F.sum(F.bit_count("word")).cast("bigint").alias("distinct_users"))
     )
@@ -1269,11 +1241,10 @@ def s43_stream_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import streaming_last_touch
     from .helpers import dsum
 
-    name = f"s43_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    run_to_memory(streaming_last_touch(ev), name, output_mode="append", state_partitions=REPLAY_STATE_PARTITIONS)
+    drained = run_to_memory(streaming_last_touch(ev), output_mode="append")
     return (
-        spark.table(name)
+        drained
         .groupBy("channel")
         .agg(
             F.count("*").alias("n_purchases"),
@@ -1300,7 +1271,6 @@ def s44_stream_ab_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout can never drift from the offline scorecard."""
     from .helpers import welch_from_power_sums
 
-    name = f"s44_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     x = F.col("value").cast("decimal(18,2)")
     g = F.col("user_id") % 2
@@ -1312,8 +1282,7 @@ def s44_stream_ab_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(g == 0, x * x)).alias("sxxa_dec"),
         F.sum(F.when(g == 1, x * x)).alias("sxxb_dec"),
     )
-    run_to_memory(agg, name, output_mode="complete", state_partitions=REPLAY_STATE_PARTITIONS)
-    s = spark.table(name).select(
+    s = run_to_memory(agg, output_mode="complete").select(
         "event_type",
         "na",
         "nb",
@@ -1375,8 +1344,7 @@ def s45_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: state is one (user, open-session) accumulator bounded by
     the watermark horizon — O(active users), not O(stream); the
     shuffle is one hash exchange on user_id sized by
-    ``state_partitions`` (thousands on a real cluster)."""
-    name = f"s45_{uuid.uuid4().hex[:8]}"
+    the state partition count (thousands on a real cluster)."""
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     sess = (
         ev.withWatermark("ts", "30 minutes")
@@ -1391,12 +1359,12 @@ def s45_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    run_to_memory(sess, name, output_mode="append", state_partitions=REPLAY_STATE_PARTITIONS)
+    drained = run_to_memory(sess, output_mode="append")
     hz = load(spark, sf_dir, "events").agg(
         (F.max("ts") - F.expr("INTERVAL 51 MINUTES")).alias("hz")
     )
     return (
-        spark.table(name)
+        drained
         .crossJoin(F.broadcast(hz))
         .filter(F.col("session_end") <= F.col("hz"))
         .drop("hz")
@@ -1429,7 +1397,6 @@ def s47_stream_dedup_within_watermark(
     The events file is delivered twice (at-least-once simulation, both
     copies inside one horizon); per-type counts and id sums must equal
     the single-copy batch aggregate exactly."""
-    name = f"s47_{uuid.uuid4().hex[:8]}"
     indir = _tmp("s47_in_")
     src = f"{sf_dir}/events.parquet"
     os.symlink(src, os.path.join(indir, "copy1.parquet"))
@@ -1438,9 +1405,9 @@ def s47_stream_dedup_within_watermark(
     deduped = ev.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    run_to_memory(deduped, name, output_mode="append", state_partitions=REPLAY_STATE_PARTITIONS)
+    drained = run_to_memory(deduped, output_mode="append")
     return (
-        spark.table(name)
+        drained
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_unique"),
@@ -1523,20 +1490,7 @@ def s48_stream_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     indir = _tmp("s48_in_")
     state_root = _tmp("s48_state_")
     cp = _tmp("s48_cp_")
-    for i, b in enumerate([batch1, batch2]):
-        # the file source does NOT recurse into directories: land each
-        # batch as one FLAT parquet file, with mtimes pinned (the
-        # source orders micro-batches by mtime and both writes can
-        # land in the same clock tick)
-        scratch = _tmp(f"s48_scratch_{i}_")
-        b.coalesce(1).write.mode("overwrite").parquet(scratch)
-        part = next(
-            p for p in sorted(os.listdir(scratch))
-            if p.startswith("part-") and p.endswith(".parquet")
-        )
-        dest = os.path.join(indir, f"obs_{i}.parquet")
-        os.rename(os.path.join(scratch, part), dest)
-        os.utime(dest, (1700000000 + i, 1700000000 + i))
+    stage_ordered(indir, [("obs_0.parquet", batch1), ("obs_1.parquet", batch2)])
 
     current.write.mode("overwrite").parquet(os.path.join(state_root, "v0"))
 
@@ -1660,54 +1614,36 @@ def _late_events_dir(spark: SparkSession, sf_dir: str) -> str:
       the final watermark past every real window so append mode emits
       them; its own window never closes, so it self-excludes.
 
-    Files are Spark-written (uniform normalized timestamps), mtime-
-    spaced so the file source replays them in exactly this order one
-    file per micro-batch."""
-    import glob
-    import shutil
-    import time as _time
+    Files are Spark-written (uniform normalized timestamps) and staged
+    in this order by ``stage_ordered``, so the file source replays them
+    one file per micro-batch."""
+    import datetime
 
-    from ..io import derived_cache_dir
+    def build(indir: str) -> None:
+        ev = load(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value"
+        )
+        mx = ev.agg(F.max("ts")).collect()[0][0]  # bounded: one scalar
+        heartbeat = spark.createDataFrame(
+            [(-1, mx, -1, "heartbeat", 0.0)], ev.schema
+        )
+        sentinel = spark.createDataFrame(
+            [(-2, mx + datetime.timedelta(days=2), -2, "sentinel", 0.0)],
+            ev.schema,
+        )
+        late = ev.filter(F.col("event_id") % 100 == 0).unionByName(
+            ev.filter(F.col("event_id") % 97 == 0).withColumn(
+                "ts", F.lit(mx) - F.expr("INTERVAL 5 MINUTES")
+            )
+        )
+        stage_ordered(indir, [
+            ("a_base.parquet", ev),
+            ("b_heartbeat.parquet", heartbeat),
+            ("c_late.parquet", late),
+            ("d_sentinel.parquet", sentinel),
+        ])
 
-    indir = derived_cache_dir("s50_late", f"{sf_dir}/events.parquet")
-    done = os.path.join(indir, "_DONE")
-    if os.path.exists(done):
-        return indir
-    os.makedirs(indir, exist_ok=True)
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    )
-    mx = ev.agg(F.max("ts")).collect()[0][0]  # bounded: one scalar
-    heartbeat = spark.createDataFrame(
-        [(-1, mx, -1, "heartbeat", 0.0)], ev.schema
-    )
-    sentinel = spark.createDataFrame(
-        [(-2, mx + __import__("datetime").timedelta(days=2), -2,
-          "sentinel", 0.0)], ev.schema
-    )
-    late = ev.filter(F.col("event_id") % 100 == 0).unionByName(
-        ev.filter(F.col("event_id") % 97 == 0).withColumn(
-            "ts", F.lit(mx) - F.expr("INTERVAL 5 MINUTES")
-        )
-    )
-    for fname, df in [
-        ("a_base.parquet", ev),
-        ("b_heartbeat.parquet", heartbeat),
-        ("c_late.parquet", late),
-        ("d_sentinel.parquet", sentinel),
-    ]:
-        scratch = _tmp("s50_scratch_")
-        df.coalesce(1).write.mode("overwrite").parquet(scratch)
-        shutil.move(
-            glob.glob(os.path.join(scratch, "part-*.parquet"))[0],
-            os.path.join(indir, fname),
-        )
-        shutil.rmtree(scratch, ignore_errors=True)
-    now = _time.time()
-    for i, f in enumerate(sorted(os.listdir(indir))):
-        os.utime(os.path.join(indir, f), (now + 10 * i, now + 10 * i))
-    open(done, "w").close()
-    return indir
+    return derived("s50_late", f"{sf_dir}/events.parquet", build)
 
 
 @query(
@@ -1755,7 +1691,6 @@ def s50_stream_late_data_watermark(
     emitted once, and evicted, so state is O(open windows x types),
     independent of stream length; the late filter is a comparison
     against a broadcast scalar, not a lookup."""
-    name = f"s50_{uuid.uuid4().hex[:8]}"
     indir = _late_events_dir(spark, sf_dir)
     schema = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -1779,8 +1714,7 @@ def s50_stream_late_data_watermark(
             "sum_value",
         )
     )
-    run_to_memory(agg, name, output_mode="append", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table(name)
+    return run_to_memory(agg, output_mode="append")
 
 
 def _time_sliced_events_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -1791,42 +1725,20 @@ def _time_sliced_events_dir(spark: SparkSession, sf_dir: str) -> str:
     micro-batches by construction (the ordering contract of the
     custom stateful operators; a Kafka topic partitioned by user with
     in-order producers gives the same guarantee)."""
-    import glob
-    import shutil
-    import time as _time
 
-    from ..io import derived_cache_dir
+    def build(indir: str) -> None:
+        ev = load(spark, sf_dir, "events")
+        lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
+        cut1 = lo + (hi - lo) / 3
+        cut2 = lo + 2 * (hi - lo) / 3
+        ts = F.col("ts")
+        stage_ordered(indir, [
+            ("a_slice.parquet", ev.filter(ts < F.lit(cut1))),
+            ("b_slice.parquet", ev.filter((ts >= F.lit(cut1)) & (ts < F.lit(cut2)))),
+            ("c_slice.parquet", ev.filter(ts >= F.lit(cut2))),
+        ])
 
-    indir = derived_cache_dir("s51_slices", f"{sf_dir}/events.parquet")
-    done = os.path.join(indir, "_DONE")
-    if os.path.exists(done):
-        return indir
-    os.makedirs(indir, exist_ok=True)
-    ev = load(spark, sf_dir, "events")
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    cut1 = lo + (hi - lo) / 3
-    cut2 = lo + 2 * (hi - lo) / 3
-    slices = [
-        ("a_slice.parquet", ev.filter(F.col("ts") < F.lit(cut1))),
-        (
-            "b_slice.parquet",
-            ev.filter((F.col("ts") >= F.lit(cut1)) & (F.col("ts") < F.lit(cut2))),
-        ),
-        ("c_slice.parquet", ev.filter(F.col("ts") >= F.lit(cut2))),
-    ]
-    for fname, df in slices:
-        scratch = _tmp("s51_scratch_")
-        df.coalesce(1).write.mode("overwrite").parquet(scratch)
-        shutil.move(
-            glob.glob(os.path.join(scratch, "part-*.parquet"))[0],
-            os.path.join(indir, fname),
-        )
-        shutil.rmtree(scratch, ignore_errors=True)
-    now = _time.time()
-    for i, f in enumerate(sorted(os.listdir(indir))):
-        os.utime(os.path.join(indir, f), (now + 10 * i, now + 10 * i))
-    open(done, "w").close()
-    return indir
+    return derived("s51_slices", f"{sf_dir}/events.parquet", build)
 
 
 @query(
@@ -1855,7 +1767,6 @@ def s51_stream_sequence_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream."""
     from ..streaming.stateful import streaming_sequence_detect
 
-    name = f"s51_{uuid.uuid4().hex[:8]}"
     indir = _time_sliced_events_dir(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     ev = (
@@ -1863,8 +1774,7 @@ def s51_stream_sequence_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(indir)
     )
-    run_to_memory(streaming_sequence_detect(ev), name, output_mode="append", state_partitions=REPLAY_STATE_PARTITIONS)
-    return spark.table(name)
+    return run_to_memory(streaming_sequence_detect(ev), output_mode="append")
 
 
 @query(
@@ -1909,7 +1819,6 @@ def s52_stream_late_shipment_monitor(
 
     from ..queries.relational import with_shipping_columns
 
-    name = f"s52_{uuid.uuid4().hex[:8]}"
     src = f"{sf_dir}/lineitem.parquet"
     schema = load(spark, sf_dir, "lineitem").schema
     d = tempfile.mkdtemp(prefix="s52_lineitem_")
@@ -1945,11 +1854,7 @@ def s52_stream_late_shipment_monitor(
             "late_lines",
         )
     )
-    run_to_memory(
-        agg, name, output_mode="complete",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
-    return spark.table(name)
+    return run_to_memory(agg, output_mode="complete")
 
 
 @query(
@@ -1974,7 +1879,6 @@ def s53_stream_new_user_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream; the reconciliation aggregates the SINK (key-cardinality,
     not event-cardinality). The oracle is the identical closed-form
     batch answer (k82's SQL)."""
-    name = f"s53_{uuid.uuid4().hex[:8]}"
     indir = _time_sliced_events_dir(spark, sf_dir)
     schema = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
@@ -1994,11 +1898,7 @@ def s53_stream_new_user_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day"), "user_id")
         .agg(F.count("*").alias("cnt"))
     )
-    run_to_memory(
-        per, name, output_mode="update",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
-    sink = spark.table(name)
+    sink = run_to_memory(per, output_mode="update")
     per_final = sink.groupBy(
         F.col("window.start").alias("day"), "user_id"
     ).agg(F.max("cnt").alias("cnt"))
@@ -2068,7 +1968,6 @@ def s54_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is one 4 KB sketch per open (day, type) window;
     the sink moves sketches, never user ids; the exact recount exists
     only to verify the sketch and is batch-side."""
-    name = f"s54_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     agg = (
         ev.groupBy(F.window("ts", "1 day"), "event_type")
@@ -2078,12 +1977,9 @@ def s54_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("window.start").alias("day"), "event_type", "sk", "n")
     )
-    run_to_memory(
-        agg, name, output_mode="complete",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
+    drained = run_to_memory(agg, output_mode="complete")
     streamed = (
-        spark.table(name)
+        drained
         .groupBy("event_type")
         .agg(
             F.sum("n").alias("n_events"),
@@ -2152,7 +2048,6 @@ def s55_stream_space_saving_topk(
     the replay's luck."""
     from ..streaming.stateful import streaming_space_saving
 
-    name = f"s55_{uuid.uuid4().hex[:8]}"
     indir = _time_sliced_events_dir(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     ev = (
@@ -2160,13 +2055,7 @@ def s55_stream_space_saving_topk(
         .option("maxFilesPerTrigger", "1")
         .parquet(indir)
     )
-    run_to_memory(
-        streaming_space_saving(ev, m=64),
-        name,
-        output_mode="append",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
-    sink = spark.table(name)
+    sink = run_to_memory(streaming_space_saving(ev, m=64), output_mode="append")
     latest = sink.withColumn(
         "__mx",
         F.max("n_seen").over(Window.partitionBy("event_type")),
@@ -2251,7 +2140,6 @@ def s56_stream_kll_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: state and sink move sketches, never values; the
     recount exists only to verify."""
-    name = f"s56_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
     agg = (
         ev.groupBy(F.window("ts", "1 day"), "event_type")
@@ -2261,12 +2149,9 @@ def s56_stream_kll_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("window.start").alias("day"), "event_type", "sk", "n")
     )
-    run_to_memory(
-        agg, name, output_mode="complete",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
+    drained = run_to_memory(agg, output_mode="complete")
     streamed = (
-        spark.table(name)
+        drained
         .groupBy("event_type")
         .agg(
             F.sum("n").cast("long").alias("n_events"),
@@ -2332,7 +2217,6 @@ def s57_stream_multitouch_attribution(
     micro quantization are mirrored bit-for-bit in the kernel."""
     from ..streaming.stateful import streaming_multitouch_attribution
 
-    name = f"s57_{uuid.uuid4().hex[:8]}"
     indir = _time_sliced_events_dir(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     ev = (
@@ -2340,14 +2224,9 @@ def s57_stream_multitouch_attribution(
         .option("maxFilesPerTrigger", "1")
         .parquet(indir)
     )
-    run_to_memory(
-        streaming_multitouch_attribution(ev),
-        name,
-        output_mode="append",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
+    drained = run_to_memory(streaming_multitouch_attribution(ev), output_mode="append")
     return (
-        spark.table(name)
+        drained
         .groupBy("channel")
         .agg(
             F.count("*").cast("long").alias("n_touches"),
@@ -2398,7 +2277,6 @@ def s58_stream_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes over the key's rows (no per-row Python)."""
     from ..streaming.stateful import streaming_cusum
 
-    name = f"s58_{uuid.uuid4().hex[:8]}"
     indir = _time_sliced_events_dir(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     ev = (
@@ -2406,11 +2284,7 @@ def s58_stream_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(indir)
     )
-    run_to_memory(
-        streaming_cusum(ev), name, output_mode="append",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
-    return spark.table(name)
+    return run_to_memory(streaming_cusum(ev), output_mode="append")
 
 
 @query(
@@ -2461,7 +2335,6 @@ def s59_stream_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     mod 7)."""
     from ..streaming.stateful import streaming_counter_increase
 
-    name = f"s59_{uuid.uuid4().hex[:8]}"
     indir = _time_sliced_events_dir(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     ev = (
@@ -2469,11 +2342,7 @@ def s59_stream_counter_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(indir)
     )
-    run_to_memory(
-        streaming_counter_increase(ev), name, output_mode="append",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
-    sink = spark.table(name)
+    sink = run_to_memory(streaming_counter_increase(ev), output_mode="append")
     return (
         sink.groupBy(
             F.window("ts", "7 days", startTime="4 days"), "event_type"
@@ -2545,7 +2414,6 @@ def s60_stream_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     STRICT > 20 min break, value-exact."""
     from ..streaming.stateful import streaming_timer_sessions
 
-    name = f"s60_{uuid.uuid4().hex[:8]}"
     indir = _time_sliced_events_dir(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     ev = (
@@ -2554,11 +2422,7 @@ def s60_stream_timer_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(indir)
         .withWatermark("ts", "30 minutes")
     )
-    run_to_memory(
-        streaming_timer_sessions(ev), name, output_mode="append",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
-    sink = spark.table(name)
+    sink = run_to_memory(streaming_timer_sessions(ev), output_mode="append")
     hz = (
         load(spark, sf_dir, "events")
         .agg(
@@ -2618,7 +2482,6 @@ def s61_stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import poly_hash
     from ..streaming.stateful import streaming_bottomk_sample
 
-    name = f"s61_{uuid.uuid4().hex[:8]}"
     indir = _time_sliced_events_dir(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     ev = (
@@ -2629,13 +2492,7 @@ def s61_stream_bottomk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rnk", F.expr(poly_hash("CAST(event_id AS STRING)"))
         )
     )
-    run_to_memory(
-        streaming_bottomk_sample(ev, k=32),
-        name,
-        output_mode="append",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
-    sink = spark.table(name)
+    sink = run_to_memory(streaming_bottomk_sample(ev, k=32), output_mode="append")
     latest = sink.withColumn(
         "__mx", F.max("n_seen").over(Window.partitionBy("event_type"))
     ).filter(F.col("n_seen") == F.col("__mx"))

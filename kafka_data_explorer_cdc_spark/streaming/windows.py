@@ -11,7 +11,10 @@ are finalized and evicted, which is what makes hours-long streams over
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -45,45 +48,35 @@ def streaming_dedup(events: DataFrame, watermark: str = "10 minutes") -> DataFra
     return events.withWatermark("ts", watermark).dropDuplicates(["event_id"])
 
 
-#: Bounded-replay state sizing for the registry/test path: a stateful
+#: Bounded-replay state sizing for :func:`run_to_memory`: a stateful
 #: operator opens one state-store instance PER shuffle partition per
 #: operator — a per-partition open/commit cost that dominates
 #: wall-clock on a small bounded replay (measured on the stream-stream
 #: join at sf0.1: 16 s at 32 partitions → 3 s at 8, identical
-#: results). Registry entries pass this EXPLICITLY; the function
-#: default is cluster parallelism so the scale path is the default
-#: path (round-10 verdict: s51's automaton at 20× volume was bound by
-#: the old pinned 8-way state parallelism).
+#: results). State partitioning is fixed by the first checkpoint, so a
+#: long-running stream sizes it to state volume and executor count
+#: instead.
 REPLAY_STATE_PARTITIONS = 8
 
 
-def run_to_memory(
-    df: DataFrame,
-    table_name: str,
-    output_mode: str = "append",
-    state_partitions: int | None = None,
-) -> None:
-    """Drain a bounded stream into an in-memory table (test/oracle path):
-    trigger availableNow processes the whole backlog then stops.
+def run_to_memory(df: DataFrame, output_mode: str = "append") -> DataFrame:
+    """Drain a bounded stream into an in-memory table (test/oracle path)
+    and return the drained rows as a frame: trigger availableNow
+    processes the whole backlog then stops, with
+    ``spark.sql.shuffle.partitions`` pinned to
+    :data:`REPLAY_STATE_PARTITIONS` for the query's lifetime.
 
-    ``state_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    query's lifetime (restored after). State partitioning is fixed by
-    the first checkpoint, so this is a per-query sizing decision, not
-    a tuning afterthought: size it to state volume and executor count.
-    Default (None) = ``sparkContext.defaultParallelism`` — every core
-    runs a state store, the sizing a real cluster wants. Small bounded
-    replays (this repo's registry/tests) pass
-    :data:`REPLAY_STATE_PARTITIONS` explicitly because per-partition
-    store open/commit overhead dominates their tiny state volumes."""
+    The memory sink's temp view is dropped before returning. The frame
+    still reads the sink's rows, and they are freed with it, so a sweep
+    of many drains does not hold every sink's rows in the driver."""
     spark = df.sparkSession
-    if state_partitions is None:
-        state_partitions = spark.sparkContext.defaultParallelism
+    name = f"drain_{uuid.uuid4().hex}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(REPLAY_STATE_PARTITIONS))
     try:
         q = (
             df.writeStream.format("memory")
-            .queryName(table_name)
+            .queryName(name)
             .outputMode(output_mode)
             .trigger(availableNow=True)
             .start()
@@ -91,3 +84,33 @@ def run_to_memory(
         q.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drained = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return drained
+
+
+def stage_ordered(out_dir: str, frames: list[tuple[str, DataFrame]]) -> None:
+    """Land each ``(file_name, frame)`` of ``frames`` in ``out_dir`` as
+    ONE flat parquet file (``out_dir`` must exist), with mtimes 10 s
+    apart in list order.
+
+    This is how a bounded replay delivers exactly these frames, one per
+    micro-batch and in this order, to a file source read with
+    ``maxFilesPerTrigger=1``: the source does not recurse into
+    directories, and it orders files by mtime (two writes can land in
+    the same clock tick, so the mtimes are set, not left to the
+    writes)."""
+    now = time.time()
+    for i, (fname, df) in enumerate(frames):
+        scratch = tempfile.mkdtemp(prefix="_stage_", dir=out_dir)
+        try:
+            df.coalesce(1).write.mode("overwrite").parquet(scratch)
+            part = next(
+                p for p in sorted(os.listdir(scratch))
+                if p.startswith("part-") and p.endswith(".parquet")
+            )
+            dest = os.path.join(out_dir, fname)
+            os.rename(os.path.join(scratch, part), dest)
+        finally:
+            shutil.rmtree(scratch, ignore_errors=True)
+        os.utime(dest, (now + 10 * i, now + 10 * i))

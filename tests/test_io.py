@@ -13,7 +13,6 @@ tests make the next unit change fail loudly:
 from __future__ import annotations
 
 import datetime
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -100,9 +99,7 @@ def test_events_loader_unit_chaos(spark, tmp_path, unit, as_int64, stream):
     through the batch loader and through the file stream."""
     path = _write_fixture(tmp_path, unit, as_int64)
     if stream:
-        name = f"chaos_{unit}_{int(as_int64)}_{uuid.uuid4().hex[:8]}"
-        run_to_memory(read_events_stream(spark, path), name)
-        events = spark.table(name)
+        events = run_to_memory(read_events_stream(spark, path))
     else:
         events = _load_events(spark.read, path)
     got = sorted(r.ts for r in events.select("ts").collect())
@@ -154,3 +151,147 @@ def test_non_events_tables_reject_exotic_timestamp_units(spark, tmp_path):
     pq.write_table(ns, str(d / "orders.parquet"))
     with pytest.raises(ValueError, match="o_orderdate"):
         load(spark, str(d), "orders").collect()
+
+
+# -- io.derived: the write-once store for derived layouts
+
+
+@pytest.fixture
+def store(tmp_path, monkeypatch):
+    """A private temp dir for ``io.derived`` and a one-table SF dir
+    holding a copy of ``orders``."""
+    import tempfile
+
+    cache = tmp_path / "cache"
+    cache.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(cache))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pq.read_table("/root/testdata/sf0.001/orders.parquet"),
+        str(sf / "orders.parquet"),
+    )
+    return cache, sf
+
+
+def _a20_rows(tbl: pa.Table) -> int:
+    keys = tbl.column("o_orderkey").to_pylist()
+    return sum(1 for k in keys if k % 4 in (1, 2))
+
+
+def test_derived_rebuilds_when_source_changes(spark, store):
+    """A rewritten source file gets a new directory, and the entries
+    built on the store serve the new rows, not the old derivation."""
+    from kafka_data_explorer_cdc_spark.io import derived
+    from kafka_data_explorer_cdc_spark.queries.reference import (
+        a20_schema_evolution_ingest,
+    )
+    from kafka_data_explorer_cdc_spark.queries.streaming_q import _change_log_dir
+
+    _, sf = store
+    src = str(sf / "orders.parquet")
+
+    def n_inserts(d: str) -> int:
+        with open(f"{d}/0_inserts.txt") as fh:
+            return sum(1 for _ in fh)
+
+    def built(d: str) -> None:
+        with open(f"{d}/rows", "w") as fh:
+            fh.write(str(pq.read_metadata(src).num_rows))
+
+    full = pq.read_table(src)
+    d1 = derived("t", src, built)
+    assert a20_schema_evolution_ingest(spark, str(sf)).count() == _a20_rows(full)
+    assert n_inserts(_change_log_dir(spark, str(sf))) == full.num_rows
+
+    half = full.slice(0, full.num_rows // 2)
+    pq.write_table(half, src)
+    d2 = derived("t", src, built)
+    assert d2 != d1
+    assert open(f"{d2}/rows").read() == str(half.num_rows)
+    assert a20_schema_evolution_ingest(spark, str(sf)).count() == _a20_rows(half)
+    assert n_inserts(_change_log_dir(spark, str(sf))) == half.num_rows
+
+
+def test_derived_failed_build_publishes_nothing(spark, store, monkeypatch):
+    """A build that raises leaves no directory behind, and the next call
+    builds again: b48 must recover after its JSON copy failed once."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from kafka_data_explorer_cdc_spark.io import derived
+    from kafka_data_explorer_cdc_spark.queries.relational import (
+        b48_multiformat_scan,
+    )
+
+    cache, sf = store
+    src = str(sf / "orders.parquet")
+
+    def boom(d: str) -> None:
+        open(f"{d}/partial", "w").close()
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        derived("t", src, boom)
+    assert list(cache.iterdir()) == []
+    d = derived("t", src, lambda d: open(f"{d}/ok", "w").close())
+    assert sorted(p.name for p in cache.iterdir()) == [d.rsplit("/", 1)[1]]
+
+    with monkeypatch.context() as m:
+        def no_json(self, path, *a, **k):
+            raise RuntimeError("json write failed")
+
+        m.setattr(DataFrameWriter, "json", no_json)
+        with pytest.raises(RuntimeError, match="json write failed"):
+            b48_multiformat_scan(spark, str(sf))
+    n = pq.read_metadata(src).num_rows
+    got = {r["fmt"]: r["n_rows"] for r in b48_multiformat_scan(spark, str(sf)).collect()}
+    assert got == {"parquet": n, "csv": n, "json": n}
+
+
+def test_derived_reuses_published_dir(spark, store, sf_dir):
+    """A second call returns the published directory as it is, without
+    calling ``build``; the shared s29/s30 change log is not rewritten."""
+    import os
+
+    from kafka_data_explorer_cdc_spark.io import derived
+    from kafka_data_explorer_cdc_spark.queries.streaming_q import _change_log_dir
+
+    _, sf = store
+    src = str(sf / "orders.parquet")
+    calls = []
+
+    def build(d: str) -> None:
+        calls.append(d)
+        open(f"{d}/ok", "w").close()
+
+    d1 = derived("t", src, build)
+    assert derived("t", src, build) == d1
+    assert len(calls) == 1 and os.listdir(d1) == ["ok"]
+
+    c1 = _change_log_dir(spark, sf_dir)
+    stamp = {f: os.path.getmtime(os.path.join(c1, f)) for f in sorted(os.listdir(c1))}
+    assert _change_log_dir(spark, sf_dir) == c1
+    assert {
+        f: os.path.getmtime(os.path.join(c1, f)) for f in sorted(os.listdir(c1))
+    } == stamp
+
+
+def test_derived_concurrent_publisher_wins(store):
+    """If another builder publishes first, this build's copy is dropped
+    and the published directory returned."""
+    import os
+
+    from kafka_data_explorer_cdc_spark.io import derived
+
+    cache, sf = store
+
+    def build(d: str) -> None:
+        open(f"{d}/mine", "w").close()
+        # the key is the temp name without its leading dot and random suffix
+        other = os.path.join(cache, os.path.basename(d)[1:].rsplit(".", 1)[0])
+        os.mkdir(other)
+        open(f"{other}/theirs", "w").close()
+
+    d = derived("t", str(sf / "orders.parquet"), build)
+    assert os.listdir(d) == ["theirs"]
+    assert [p.name for p in cache.iterdir()] == [os.path.basename(d)]

@@ -107,7 +107,8 @@ def test_watermark_drops_late_rows_in_windowed_agg(spark):
 
 def test_streaming_dedup_collapses_duplicates(spark):
     """dropDuplicates within the watermark horizon: the same event_ids
-    delivered twice in one stream yield exactly one output row each."""
+    delivered twice in one stream yield exactly one output row each;
+    the drained frame outlives the memory sink's dropped temp view."""
     indir = _tmp("dd_in_")
     rows = [(i, "2024-01-01 12:00:00", 1, "view", 1.0, "{}") for i in range(25)]
     df = spark.createDataFrame(
@@ -117,12 +118,8 @@ def test_streaming_dedup_collapses_duplicates(spark):
     df.coalesce(1).write.parquet(os.path.join(indir, "a"))
     df.coalesce(1).write.parquet(os.path.join(indir, "b"))
     stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(indir + "/*")
-    name = f"dd_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        streaming_dedup(stream, watermark="10 minutes"), name,
-        state_partitions=8,
-    )
-    out = spark.table(name)
+    out = run_to_memory(streaming_dedup(stream, watermark="10 minutes"))
+    assert not [t for t in spark.catalog.listTables() if t.name.startswith("drain_")]
     assert out.count() == 25
     assert out.select("event_id").distinct().count() == 25
 
@@ -1033,14 +1030,12 @@ def test_transform_with_state_totals_matches_batch(spark, tmp_path):
 
     sf_dir = "/root/testdata/sf0.001"
     ev = read_events_stream(spark, f"{sf_dir}/events.parquet")
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        transform_with_state_totals(ev), name, output_mode="update",
-        state_partitions=8,
+    drained = run_to_memory(
+        transform_with_state_totals(ev), output_mode="update"
     )
     got = {
         r["user_id"]: (r["n_events"], round(r["total_value"], 6))
-        for r in spark.table(name)
+        for r in drained
         .groupBy("user_id")
         .agg(F.max("n_events").alias("n_events"),
              F.max("total_value").alias("total_value"))
@@ -1537,37 +1532,15 @@ def test_left_outer_stream_join_flushes_unmatched_on_final_batch(spark, tmp_path
         ),
         "leftOuter",
     )
-    run_to_memory(
-        joined, "t_s33_flush", output_mode="append", state_partitions=8
-    )
     out = {
         (r["c_user"], r["p_ts"] is not None)
-        for r in spark.table("t_s33_flush").collect()
+        for r in run_to_memory(joined, output_mode="append").collect()
     }
     assert (1, True) in out, "matched click must emit the joined row"
     assert (2, False) in out, (
         "unmatched click must be flushed null-padded by the final "
         "availableNow watermark batch"
     )
-
-
-def test_change_log_dir_generates_once(spark, sf_dir):
-    """The shared s29/s30 change-log synthesis must be idempotent per
-    session+SF: a second call returns the same directory without
-    regenerating (the _DONE marker gates the Spark jobs)."""
-    import os
-
-    from kafka_data_explorer_cdc_spark.queries.streaming_q import _change_log_dir
-
-    d1 = _change_log_dir(spark, sf_dir)
-    stamp = {
-        f: os.path.getmtime(os.path.join(d1, f)) for f in sorted(os.listdir(d1))
-    }
-    d2 = _change_log_dir(spark, sf_dir)
-    assert d2 == d1
-    assert {
-        f: os.path.getmtime(os.path.join(d1, f)) for f in sorted(os.listdir(d1))
-    } == stamp
 
 
 def test_streaming_last_touch_state_spans_microbatches(spark, tmp_path):
@@ -1828,10 +1801,7 @@ def test_streaming_space_saving_eviction_and_guarantee(spark):
     from kafka_data_explorer_cdc_spark.streaming.stateful import (
         streaming_space_saving,
     )
-    from kafka_data_explorer_cdc_spark.streaming.windows import (
-        REPLAY_STATE_PARTITIONS,
-        run_to_memory,
-    )
+    from kafka_data_explorer_cdc_spark.streaming.windows import run_to_memory
 
     # heavy user 7: 200 events; 200 light users: 2 events each
     rows = []
@@ -1863,14 +1833,9 @@ def test_streaming_space_saving_eviction_and_guarantee(spark):
         .option("maxFilesPerTrigger", "1")
         .parquet(d + "/*")
     )
-    name = "ss_unit"
-    run_to_memory(
-        streaming_space_saving(ev, m=16),
-        name,
-        output_mode="append",
-        state_partitions=REPLAY_STATE_PARTITIONS,
-    )
-    sink = spark.table(name).toPandas()
+    sink = run_to_memory(
+        streaming_space_saving(ev, m=16), output_mode="append"
+    ).toPandas()
     final = sink[sink["n_seen"] == sink["n_seen"].max()]
     assert final["n_seen"].iloc[0] == n  # Σ counters == events processed
     assert len(final) == 16  # eviction kept exactly m counters
@@ -2067,15 +2032,12 @@ def test_bottomk_sample_split_invariant(spark, sf_dir):
     under ANY micro-batch split — replaying with a DIFFERENT trigger
     size (2 files/batch vs the entry's 1) must yield exactly the batch
     engine's bottom-k, element for element."""
-    import uuid as _uuid
-
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from kafka_data_explorer_cdc_spark.io import load
     from kafka_data_explorer_cdc_spark.operators.text import poly_hash
     from kafka_data_explorer_cdc_spark.queries.streaming_q import (
-        REPLAY_STATE_PARTITIONS,
         _time_sliced_events_dir,
         run_to_memory,
     )
@@ -2083,7 +2045,6 @@ def test_bottomk_sample_split_invariant(spark, sf_dir):
         streaming_bottomk_sample,
     )
 
-    name = f"s61test_{_uuid.uuid4().hex[:8]}"
     indir = _time_sliced_events_dir(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     ev = (
@@ -2092,13 +2053,9 @@ def test_bottomk_sample_split_invariant(spark, sf_dir):
         .parquet(indir)
         .withColumn("rnk", F.expr(poly_hash("CAST(event_id AS STRING)")))
     )
-    run_to_memory(
-        streaming_bottomk_sample(ev, k=32),
-        name,
-        output_mode="append",
-        state_partitions=REPLAY_STATE_PARTITIONS,
+    sink = run_to_memory(
+        streaming_bottomk_sample(ev, k=32), output_mode="append"
     )
-    sink = spark.table(name)
     latest = sink.withColumn(
         "__mx", F.max("n_seen").over(Window.partitionBy("event_type"))
     ).filter(F.col("n_seen") == F.col("__mx"))
